@@ -431,10 +431,10 @@ private[graft] object Batch84 {
              |    (x, y) -> x + y) AS log_weight
              |  FROM terms GROUP BY doc_id)
              |SELECT doc_id AS id,
-             |  CAST(log_weight AS DECIMAL(28,4)) AS log_weight,
-             |  CAST(log_weight - ln(-ln(
+             |  CAST(CAST(log_weight AS DECIMAL(28,4)) AS DOUBLE) AS log_weight,
+             |  CAST(CAST(log_weight - ln(-ln(
              |    (CAST(CAST('0x' || substr(md5('dsir' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) AS DOUBLE) + 0.5)
-             |      / 4294967296.0)) AS DECIMAL(28,4)) AS key
+             |      / 4294967296.0)) AS DECIMAL(28,4)) AS DOUBLE) AS key
              |FROM ell
              |ORDER BY key DESC, id LIMIT 50""".stripMargin)),
 

@@ -352,8 +352,10 @@ object Bench {
       s"""{"load_avg":${fmt(os.getSystemLoadAverage)},"cpus":${os.getAvailableProcessors}}"""
     }
     // average executor task-seconds per timed pass, per line (see the
-    // listener above; listener events are async — drain briefly first)
-    Thread.sleep(500)
+    // listener above). Listener events are async: drain the bus first;
+    // a drain timeout flags the map as partial (task_time_complete)
+    // rather than undercounting it silently
+    val taskTimeComplete = Diagnostics.drainListenerBus(spark.sparkContext)
     val taskTime = results.filter(_.ok).flatMap { r =>
       Option(taskTimeMs.get(r.name)).map(ms =>
         "\"" + r.name + "\":" + fmt(ms.toDouble / 1000.0 / iters))
@@ -362,7 +364,7 @@ object Bench {
     // its embedded "med" copies) must stay LAST among the big maps so
     // it survives the driver's front-truncating tail capture (r13/r14)
     val payload =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"task_time":$taskTime,"spread":$spread,"iters":$iters,"warmup_excluded":true,"interleaved":true,"host":$host,"sanity":$sanity,"errors":$errors,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"task_time":$taskTime,"task_time_complete":$taskTimeComplete,"spread":$spread,"iters":$iters,"warmup_excluded":true,"interleaved":true,"host":$host,"sanity":$sanity,"errors":$errors,"sf":"$sfDir"}"""
     println(payload)
     // ALSO drop the payload as a bare file: the driver scrapes stdout
     // through sbt, whose [info] prefix has left BENCH_r{N}.json with

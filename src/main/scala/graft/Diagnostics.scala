@@ -167,9 +167,7 @@ object Diagnostics {
       // listener bus — drain it before reading what the listeners saw. A
       // drain timeout (busy shared bus) must NOT throw away the block's
       // already-computed result: return it with partial, flagged timings.
-      val drained =
-        try { GraftListenerShim.waitUntilListenerBusEmpty(spark.sparkContext, 30000); true }
-        catch { case _: java.util.concurrent.TimeoutException => false }
+      val drained = drainListenerBus(spark.sparkContext)
       (res, Timings(actions.asScala.toSeq,
         TaskTotals(tasks.sum, runTime.sum, gcTime.sum, shRead.sum, shWrite.sum,
           spilled.sum, maxTask.get),
@@ -179,6 +177,16 @@ object Diagnostics {
       spark.sparkContext.removeSparkListener(sl)
     }
   }
+
+  /** Waits (up to 30 s) until every event posted so far has reached
+    * every listener — task metrics and job/stage ends ride the ASYNC
+    * listener bus, so a listener read right after an action can miss
+    * them. False on timeout: the caller reports its numbers as partial
+    * instead of silently undercounting. */
+  private[graft] def drainListenerBus(sc: org.apache.spark.SparkContext)
+      : Boolean =
+    try { GraftListenerShim.waitUntilListenerBusEmpty(sc, 30000); true }
+    catch { case _: java.util.concurrent.TimeoutException => false }
 
   /** One-pass column profiler — the `describe`-style EDA table (count /
     * nulls / exact distinct / min / max per column) as ONE aggregate:

@@ -54,12 +54,14 @@ object Profile {
       val t1 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val t2 = System.nanoTime()
-      // listener events are async; give the bus a moment to drain
-      Thread.sleep(300)
+      // listener events are async: drain the bus before reading the
+      // job list, and say so when the drain timed out
+      val drained = Diagnostics.drainListenerBus(spark.sparkContext)
       if (print) {
         println(f"[$label] construct ${(t1 - t0) / 1e9}%.3f s  " +
           f"materialize ${(t2 - t1) / 1e9}%.3f s  " +
-          f"total ${(t2 - t0) / 1e9}%.3f s")
+          f"total ${(t2 - t0) / 1e9}%.3f s" +
+          (if (drained) "" else "  [listener drain timed out: jobs incomplete]"))
         val js = done.toArray(Array.empty[(Int, Long, Long, String, Int)])
           .sortBy(_._1)
         js.foreach { case (id, s, e, desc, nt) =>

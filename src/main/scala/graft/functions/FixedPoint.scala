@@ -123,15 +123,27 @@ object FixedPoint {
     * reproduce (r19 ADVICE, q200's mvSlice). Here the long total casts
     * to decimal and divides by 10^scale in DECIMAL arithmetic — exact
     * at every step (the quotient has exactly `scale` fractional
-    * digits), enforced rather than stated. */
+    * digits), enforced rather than stated. A total the 2^63 tripwire
+    * admits can still exceed decimal(precision, scale) (an unscaled
+    * total in [10^precision, 2^63)): the final cast would NULL it in an
+    * ANSI-off session, so a non-null long total with a null decimal
+    * FAILS LOUDLY instead (ANSI on raises at the cast itself). */
   def sumFixedDecimal(c: Column, scale: Int, precision: Int): Column = {
     require(scale >= 0 && scale <= 9, s"scale must be in [0, 9], got $scale")
     require(precision >= scale + 1 && precision <= 38,
       s"precision must be in [${scale + 1}, 38], got $precision")
     val m = math.pow(10, scale)
-    guardedLongSum(c, scale, m)
+    val total = guardedLongSum(c, scale, m)
+    val dec = total
       .cast("decimal(20,0)")./(lit(m.toLong).cast("decimal(10,0)"))
       .cast(s"decimal($precision,$scale)")
+    // the guard is coalesce's FIRST child (see guardedLongSum): NULL on
+    // pass, so the decimal falls through bit-identically
+    val guard = assert_true(total.isNull || dec.isNotNull,
+      concat(lit(s"FixedPoint.sumFixedDecimal(scale=$scale, " +
+        s"precision=$precision): unscaled total "), total.cast("string"),
+        lit(s" exceeds decimal($precision,$scale); widen the precision")))
+    coalesce(guard.cast(s"decimal($precision,$scale)"), dec)
   }
 
   /** The shared guarded LONG accumulator behind both sum forms: snap,

@@ -741,7 +741,8 @@ object Sampling {
     * never a global sort. Output: k rows — (id, log_weight, key),
     * both log_weight and key quantized at decimal(28,4) (the
     * engine-portable grid; ulp-exact doubles do not survive two ln()
-    * chains across engines), ordered by (key DESC, id). */
+    * chains across engines) and emitted as double, ordered by
+    * (key DESC, id). */
   def dsirSample(df: DataFrame, idCol: String, textCol: String,
                  target: DataFrame, targetTextCol: String, k: Int,
                  n: Int = 2, buckets: Int = 4096,
@@ -787,17 +788,18 @@ object Sampling {
       .withColumn("log_weight", aggregate(col("__ts"), lit(0.0),
         (acc, x) => acc + x.getField("__term")))
     val u = (d(hashU32(col("id"), salt)) + 0.5) / lit(4294967296.0)
+    // both emitted columns are quantized through the decimal(28,4)
+    // grid and emitted as DOUBLE: the raw double is two ln() chains
+    // deep, and a one-ulp libm divergence between engines flips an
+    // exact output hash with rows and ranks still matching (round-19
+    // driver verify, q462); a DECIMAL output column in turn reads back
+    // as Decimal objects on one side of a pandas compare and float64 on
+    // the other. The key is built from the RAW double first —
+    // quantizing the emitted log_weight cannot move ranks.
+    def quantize(c: Column) = c.cast("decimal(28,4)").cast("double")
     ell
-      .withColumn("key",
-        (col("log_weight") - log(-log(u))).cast("decimal(28,4)"))
-      // the EMITTED log_weight is quantized at the same decimal(28,4)
-      // grid as the ranking key: the raw double is two ln() chains
-      // deep, and a one-ulp libm divergence between engines flips an
-      // exact output hash with rows and ranks still matching (round-19
-      // driver verify, q462). The key above is built from the RAW
-      // double first — quantizing the emitted column cannot move ranks.
-      .select(col("id"),
-        col("log_weight").cast("decimal(28,4)").as("log_weight"),
+      .withColumn("key", quantize(col("log_weight") - log(-log(u))))
+      .select(col("id"), quantize(col("log_weight")).as("log_weight"),
         col("key"))
       .orderBy(col("key").desc, col("id"))
       .limit(k)

@@ -572,50 +572,8 @@ object Analytics {
   /** EAGER: builds on the pinned-execution bridge, so Spark jobs
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
-  def spearman(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    // the pair table feeds THREE consumers (both marginals' prefix
-    // passes — each a separate bridged plan — and the final join);
-    // pin it so the corpus scan + pair aggregation run ONCE (round 16:
-    // the marginals' bridges compile their own plans, so ReuseExchange
-    // could never dedupe the second and third executions)
-    val pairs = org.apache.spark.sql.graftbridge.RddShareBridge
-      .sharedExecution(df
-        .groupBy(col(xCol).as("__x"), col(yCol).as("__y"))
-        .agg(count(lit(1)).as("__c")))
-    def marginal(key: String, out: String): DataFrame = {
-      val cv = pairs.groupBy(col(key).as("__v")).agg(sum(col("__c")).as("__cv"))
-      prefixBefore(cv, "__v", col("__cv"))
-        .withColumn(out, lit(2) * col("__cum") + col("__cv") + 1)
-        .select(col("__v").as(key), col(out))
-    }
-    def d(c: org.apache.spark.sql.Column) = c.cast("decimal(20,0)")
-    pairs
-      .join(marginal("__x", "__rx").withColumnRenamed("__x", "__kx"),
-        col("__x") <=> col("__kx"))
-      .join(marginal("__y", "__ry").withColumnRenamed("__y", "__ky"),
-        col("__y") <=> col("__ky"))
-      .agg(sum(col("__c")).as("n"),
-        sum(d(col("__c")) * d(col("__rx"))).cast("decimal(38,0)").as("__sx"),
-        sum(d(col("__c")) * d(col("__ry"))).cast("decimal(38,0)").as("__sy"),
-        sum(d(col("__c")) * d(col("__rx")) * d(col("__ry")))
-          .cast("decimal(38,0)").as("__sxy"),
-        sum(d(col("__c")) * d(col("__rx")) * d(col("__rx")))
-          .cast("decimal(38,0)").as("__sxx"),
-        sum(d(col("__c")) * d(col("__ry")) * d(col("__ry")))
-          .cast("decimal(38,0)").as("__syy"))
-      .withColumn("__vx",
-        col("n").cast("double") * col("__sxx").cast("double") -
-          col("__sx").cast("double") * col("__sx").cast("double"))
-      .withColumn("__vy",
-        col("n").cast("double") * col("__syy").cast("double") -
-          col("__sy").cast("double") * col("__sy").cast("double"))
-      .withColumn("rho",
-        when(col("__vx") > 0 && col("__vy") > 0,
-          (col("n").cast("double") * col("__sxy").cast("double") -
-            col("__sx").cast("double") * col("__sy").cast("double")) /
-            (sqrt(col("__vx")) * sqrt(col("__vy")))))
-      .select("n", "rho")
-  }
+  def spearman(df: DataFrame, xCol: String, yCol: String): DataFrame =
+    spearmanBy(df, Nil, xCol, yCol)
 
   /** Per-GROUP Spearman ρ — [[spearman]] sliced by key columns (per
     * language, per source: does doc length still track quality inside
@@ -633,9 +591,12 @@ object Analytics {
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def spearmanBy(df: DataFrame, keyCols: Seq[String], xCol: String,
                  yCol: String): DataFrame = {
-    require(keyCols.nonEmpty, "spearmanBy needs key columns; use spearman")
     val keys = keyCols.map(col)
-    // pinned for the same three-consumer reason as the global form
+    // the pair table feeds THREE consumers (both marginals' prefix
+    // passes — each a separate bridged plan — and the final join);
+    // pin it so the corpus scan + pair aggregation run ONCE (round 16:
+    // the marginals' bridges compile their own plans, so ReuseExchange
+    // could never dedupe the second and third executions)
     val pairs = org.apache.spark.sql.graftbridge.RddShareBridge
       .sharedExecution(df
         .groupBy(keys ++ Seq(col(xCol).as("__x"), col(yCol).as("__y")): _*)
@@ -652,12 +613,8 @@ object Analytics {
           col(c).as(s"__$tag$i") } ++
           Seq(col("__v").as(s"__k$tag"), col(out)): _*)
     }
-    val condX = keyCols.zipWithIndex.map { case (c, i) =>
-      col(c) <=> col(s"__mx$i") }.reduce(_ && _) &&
-      (col("__x") <=> col("__kmx"))
-    val condY = keyCols.zipWithIndex.map { case (c, i) =>
-      col(c) <=> col(s"__my$i") }.reduce(_ && _) &&
-      (col("__y") <=> col("__kmy"))
+    val condX = keyEq(keyCols, "mx") && (col("__x") <=> col("__kmx"))
+    val condY = keyEq(keyCols, "my") && (col("__y") <=> col("__kmy"))
     def d(c: org.apache.spark.sql.Column) = c.cast("decimal(20,0)")
     pairs
       .join(marginal("__x", "__rx", "mx"), condX)
@@ -738,35 +695,8 @@ object Analytics {
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def ksTest(df: DataFrame, groupCol: String, valueCol: String,
-             groupA: String, groupB: String): DataFrame = {
-    val counts = df.filter(col(groupCol).isin(groupA, groupB))
-      .groupBy(col(valueCol).as("__v"))
-      .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-    // both groups' inclusive cumulatives from ONE distributed prefix
-    // pass ([[prefixBeforeMulti]] — no single-task window over the
-    // distinct values); totals and the global max ride tiny one-row
-    // aggregates broadcast back, computed from the PINNED ranged frame
-    // (a second reference to counts would re-run its aggregation —
-    // the bridge compiles per-plan, ReuseExchange can't span plans)
-    val (cShared, cumPre) = prefixBeforeMultiByShared(counts, Seq.empty,
-      "__v", Seq("a" -> col("__ca"), "b" -> col("__cb")))
-    val cum = cumPre
-      .crossJoin(broadcast(cShared.agg(sum(col("__ca")).as("__na"),
-        sum(col("__cb")).as("__nb"))))
-      .withColumn("__cuma", col("__cum_a") + col("__ca"))
-      .withColumn("__cumb", col("__cum_b") + col("__cb"))
-      .withColumn("__num",
-        abs(col("__cuma").cast("decimal(38,0)") * col("__nb") -
-          col("__cumb").cast("decimal(38,0)") * col("__na")))
-    cum.crossJoin(broadcast(cum.agg(max(col("__num")).as("__mx"))))
-      .filter(col("__num") === col("__mx"))
-      .groupBy(col("__na").as("n_a"), col("__nb").as("n_b"))
-      .agg(min(col("__v")).as("d_at"), max(col("__mx")).as("__m"))
-      .withColumn("d", col("__m").cast("double") /
-        (col("n_a").cast("double") * col("n_b").cast("double")))
-      .drop("__m")
-  }
+             groupA: String, groupB: String): DataFrame =
+    ksTestBy(df, Nil, groupCol, valueCol, groupA, groupB)
 
   /** Per-GROUP two-sample KS — [[ksTest]] sliced by key columns (per
     * language, per source, per day): the drift monitor's per-slice form,
@@ -786,7 +716,6 @@ object Analytics {
   def ksTestBy(df: DataFrame, keyCols: Seq[String], groupCol: String,
                valueCol: String, groupA: String, groupB: String)
       : DataFrame = {
-    require(keyCols.nonEmpty, "ksTestBy needs key columns; use ksTest")
     val keys = keyCols.map(col)
     val counts = df.filter(col(groupCol).isin(groupA, groupB))
       .groupBy(keys :+ col(valueCol).as("__v"): _*)
@@ -800,23 +729,14 @@ object Analytics {
     val cum = cumPre
       .withColumn("__cuma", col("__cum_a") + col("__ca"))
       .withColumn("__cumb", col("__cum_b") + col("__cb"))
-    def keyJoin(right: DataFrame, tag: String): Column =
-      keyCols.zipWithIndex.map { case (c, i) =>
-        col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
-    def renameKeys(d: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(d) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    val tot = renameKeys(cShared.groupBy(keys: _*)
-      .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb")), "t")
-    val scored = cum.join(tot, keyJoin(tot, "t"))
-      .drop(keyCols.indices.map(i => s"__t$i"): _*)
+    val tot = cShared.groupBy(keys: _*)
+      .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb"))
+    val scored = joinTotals(cum, tot, keyCols)
       .withColumn("__num",
         abs(col("__cuma").cast("decimal(38,0)") * col("__nb") -
           col("__cumb").cast("decimal(38,0)") * col("__na")))
-    val mx = renameKeys(scored.groupBy(keys: _*)
-      .agg(max(col("__num")).as("__mx")), "m")
-    scored.join(mx, keyJoin(mx, "m"))
-      .drop(keyCols.indices.map(i => s"__m$i"): _*)
+    joinTotals(scored,
+        scored.groupBy(keys: _*).agg(max(col("__num")).as("__mx")), keyCols)
       .filter(col("__num") === col("__mx"))
       .groupBy(keys :+ col("__na").as("n_a") :+ col("__nb").as("n_b"): _*)
       .agg(min(col("__v")).as("d_at"), max(col("__mx")).as("__m"))
@@ -1150,51 +1070,8 @@ object Analytics {
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def wasserstein1(df: DataFrame, groupCol: String, valueCol: String,
                    groupA: String, groupB: String,
-                   share: Boolean = true): DataFrame = {
-    val counts = df.filter(col(groupCol).isin(groupA, groupB))
-      .groupBy(col(valueCol).as("__v"))
-      .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-    // `share` (default true) lazily localCheckpoints the cum frame
-    // (the minhashLSH signature-sharing pattern): the successor branch
-    // prunes to (__v, __cum_i), which makes its subtree canonicalize
-    // UNEQUAL to the cumulative branch's — ReuseExchange cannot dedupe
-    // them, so WITHOUT sharing the counts aggregate (a full corpus
-    // scan) + range exchange + prefix pipeline run TWICE
-    // (plan-verified: 45 exchanges → 12 with the checkpoint). At the
-    // 100 TB design point — distinct values ≪ rows — one corpus scan
-    // + a small materialized frame is the only sane plan. The knob
-    // exists for the OPPOSITE regime: |distinct| ≈ |rows| makes the
-    // checkpoint itself row-scale (StressBench wasserstein_50m:
-    // share=false 28.3 s vs share=true 37.8 s at 50M all-distinct,
-    // where the frame spills and rescanning a cheap source wins).
-    val (wShared, cumRaw0) = prefixBeforeMultiByShared(counts, Seq.empty,
-      "__v", Seq("a" -> col("__ca"), "b" -> col("__cb"), "i" -> lit(1L)))
-    val cumRaw = cumRaw0
-      .withColumn("__cuma", col("__cum_a") + col("__ca"))
-      .withColumn("__cumb", col("__cum_b") + col("__cb"))
-    val cum = if (share) cumRaw.localCheckpoint(false) else cumRaw
-    val nxt = cum.select(col("__cum_i").as("__pidx"), col("__v").as("__nv"))
-    // share=true: totals off the checkpointed cum; share=false: off the
-    // PINNED ranged frame (never a second run of the counts aggregate)
-    val tot = (if (share) cum else wShared)
-      .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb"))
-    val sums = cum.join(nxt, col("__cum_i") + 1 === col("__pidx"))
-      .crossJoin(broadcast(tot))
-      .withColumn("__term", when(col("__na") > 0 && col("__nb") > 0,
-        ((abs(col("__cuma").cast("decimal(38,0)") * col("__nb") -
-            col("__cumb").cast("decimal(38,0)") * col("__na"))
-          .cast("double") /
-          (col("__na").cast("double") * col("__nb").cast("double"))) *
-          (col("__nv").cast("double") - col("__v").cast("double")))
-          .cast("decimal(28,12)")))
-      .agg(sum(col("__term")).as("__s"))
-    tot.crossJoin(broadcast(sums))
-      .select(col("__na").as("n_a"), col("__nb").as("n_b"),
-        when(col("__na") > 0 && col("__nb") > 0,
-          coalesce(col("__s"), lit(0).cast("decimal(28,12)"))
-            .cast("double")).as("w1"))
-  }
+                   share: Boolean = true): DataFrame =
+    wasserstein1By(df, Nil, groupCol, valueCol, groupA, groupB, share)
 
   /** Per-GROUP [[wasserstein1]] — the sliced integral drift (per
     * language, per source, per day), where a tail stretch hiding in
@@ -1211,35 +1088,40 @@ object Analytics {
   def wasserstein1By(df: DataFrame, keyCols: Seq[String], groupCol: String,
                      valueCol: String, groupA: String, groupB: String,
                      share: Boolean = true): DataFrame = {
-    require(keyCols.nonEmpty, "wasserstein1By needs key columns; use wasserstein1")
     val keys = keyCols.map(col)
     val counts = df.filter(col(groupCol).isin(groupA, groupB))
       .groupBy(keys :+ col(valueCol).as("__v"): _*)
       .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
         sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-    // same share rationale and regime tradeoff as the global form
+    // `share` (default true) lazily localCheckpoints the cum frame
+    // (the minhashLSH signature-sharing pattern): the successor branch
+    // prunes to (__v, __cum_i), which makes its subtree canonicalize
+    // UNEQUAL to the cumulative branch's — ReuseExchange cannot dedupe
+    // them, so WITHOUT sharing the counts aggregate (a full corpus
+    // scan) + range exchange + prefix pipeline run TWICE
+    // (plan-verified: 45 exchanges → 12 with the checkpoint). At the
+    // 100 TB design point — distinct values ≪ rows — one corpus scan
+    // + a small materialized frame is the only sane plan. The knob
+    // exists for the OPPOSITE regime: |distinct| ≈ |rows| makes the
+    // checkpoint itself row-scale (StressBench wasserstein_50m:
+    // share=false 28.3 s vs share=true 37.8 s at 50M all-distinct,
+    // where the frame spills and rescanning a cheap source wins).
     val (wShared, cumRaw0) = prefixBeforeMultiByShared(counts, keyCols,
       "__v", Seq("a" -> col("__ca"), "b" -> col("__cb"), "i" -> lit(1L)))
     val cumRaw = cumRaw0
       .withColumn("__cuma", col("__cum_a") + col("__ca"))
       .withColumn("__cumb", col("__cum_b") + col("__cb"))
     val cum = if (share) cumRaw.localCheckpoint(false) else cumRaw
-    def renameKeys(d: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(d) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def keyJoin(tag: String): Column =
-      keyCols.zipWithIndex.map { case (c, i) =>
-        col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
-    val nxt = renameKeys(cum.select(
-      keys :+ col("__cum_i").as("__pidx") :+ col("__v").as("__nv"): _*), "n")
+    val nxt = renKeys(cum.select(
+      keys :+ col("__cum_i").as("__pidx") :+ col("__v").as("__nv"): _*),
+      keyCols, "n")
+    // share=true: totals off the checkpointed cum; share=false: off the
+    // PINNED ranged frame (never a second run of the counts aggregate)
     val tot = (if (share) cum else wShared).groupBy(keys: _*)
       .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb"))
-    val totR = renameKeys(tot, "t")
-    val sums = cum
-      .join(nxt, keyJoin("n") && col("__cum_i") + 1 === col("__pidx"))
-      .drop(keyCols.indices.map(i => s"__n$i"): _*)
-      .join(totR, keyJoin("t"))
-      .drop(keyCols.indices.map(i => s"__t$i"): _*)
+    val sums = joinTotals(dropTag(cum.join(nxt,
+        keyEq(keyCols, "n") && col("__cum_i") + 1 === col("__pidx")),
+        keyCols, "n"), tot, keyCols)
       .withColumn("__term", when(col("__na") > 0 && col("__nb") > 0,
         ((abs(col("__cuma").cast("decimal(38,0)") * col("__nb") -
             col("__cumb").cast("decimal(38,0)") * col("__na"))
@@ -1248,8 +1130,7 @@ object Analytics {
           (col("__nv").cast("double") - col("__v").cast("double")))
           .cast("decimal(28,12)")))
       .groupBy(keys: _*).agg(sum(col("__term")).as("__s"))
-    tot.join(renameKeys(sums, "s"), keyJoin("s"), "left")
-      .drop(keyCols.indices.map(i => s"__s$i"): _*)
+    joinTotals(tot, sums, keyCols, "left")
       .select(keys ++ Seq(col("__na").as("n_a"), col("__nb").as("n_b"),
         when(col("__na") > 0 && col("__nb") > 0,
           coalesce(col("__s"), lit(0).cast("decimal(28,12)"))
@@ -1288,51 +1169,8 @@ object Analytics {
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def energyDistance(df: DataFrame, groupCol: String, valueCol: String,
-                     groupA: String, groupB: String): DataFrame = {
-    def d(c: Column) = c.cast("double")
-    val counts = df.filter(col(groupCol).isin(groupA, groupB) &&
-        col(valueCol).isNotNull)
-      .groupBy(col(valueCol).cast("double").as("__v"))
-      .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-      .withColumn("__vq",
-        (col("__v").cast("decimal(28,12)") * lit(1000000000000L))
-          .cast("decimal(38,0)"))
-    val dec38 = (c: Column) => c.cast("decimal(38,0)")
-    val (eShared, pre) = prefixBeforeMultiByShared(counts, Seq.empty,
-      "__v", Seq("a" -> col("__ca"), "b" -> col("__cb"),
-        "sa" -> (dec38(col("__vq")) * col("__ca")),
-        "sb" -> (dec38(col("__vq")) * col("__cb"))))
-    val tot = eShared.agg(sum(col("__ca")).as("__na"),
-      sum(col("__cb")).as("__nb"))
-    val dec3812 = (c: Column) => c.cast("decimal(38,12)")
-    val terms = pre
-      .withColumn("__ga",
-        d(dec38(col("__vq")) * col("__cum_a") - col("__cum_sa")))
-      .withColumn("__gb",
-        d(dec38(col("__vq")) * col("__cum_b") - col("__cum_sb")))
-    terms
-      .crossJoin(broadcast(tot))
-      .groupBy(col("__na").as("n_a"), col("__nb").as("n_b"))
-      .agg(
-        sum(dec3812((col("__ga") * d(col("__cb")) +
-          col("__gb") * d(col("__ca"))) / lit(1e12)))
-          .cast("double").as("__sab"),
-        sum(dec3812(lit(2.0) * col("__ga") * d(col("__ca")) / lit(1e12)))
-          .cast("double").as("__saa"),
-        sum(dec3812(lit(2.0) * col("__gb") * d(col("__cb")) / lit(1e12)))
-          .cast("double").as("__sbb"))
-      .withColumn("m_ab",
-        when(col("n_a") > 0 && col("n_b") > 0,
-          col("__sab") / (d(col("n_a")) * d(col("n_b")))))
-      .withColumn("m_aa",
-        when(col("n_a") > 0, col("__saa") / (d(col("n_a")) * d(col("n_a")))))
-      .withColumn("m_bb",
-        when(col("n_b") > 0, col("__sbb") / (d(col("n_b")) * d(col("n_b")))))
-      .withColumn("energy",
-        lit(2.0) * col("m_ab") - col("m_aa") - col("m_bb"))
-      .drop("__sab", "__saa", "__sbb")
-  }
+                     groupA: String, groupB: String): DataFrame =
+    energyDistanceBy(df, Nil, groupCol, valueCol, groupA, groupB)
 
   /** Per-GROUP [[energyDistance]] — the sliced form (per language, per
     * source, per day: a shape drift inside one slice dilutes out of the
@@ -1350,8 +1188,6 @@ object Analytics {
   def energyDistanceBy(df: DataFrame, keyCols: Seq[String],
                        groupCol: String, valueCol: String,
                        groupA: String, groupB: String): DataFrame = {
-    require(keyCols.nonEmpty,
-      "energyDistanceBy needs key columns; use energyDistance")
     def d(c: Column) = c.cast("double")
     val keys = keyCols.map(col)
     val counts = df.filter(col(groupCol).isin(groupA, groupB) &&
@@ -1367,21 +1203,15 @@ object Analytics {
       "__v", Seq("a" -> col("__ca"), "b" -> col("__cb"),
         "sa" -> (dec38(col("__vq")) * col("__ca")),
         "sb" -> (dec38(col("__vq")) * col("__cb"))))
-    def renameKeys(df2: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(df2) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def keyJoin(tag: String): Column = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
-    val tot = renameKeys(eShared.groupBy(keys: _*)
-      .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb")), "t")
+    val tot = eShared.groupBy(keys: _*)
+      .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb"))
     val dec3812 = (c: Column) => c.cast("decimal(38,12)")
-    pre
+    joinTotals(pre
       .withColumn("__ga",
         d(dec38(col("__vq")) * col("__cum_a") - col("__cum_sa")))
       .withColumn("__gb",
-        d(dec38(col("__vq")) * col("__cum_b") - col("__cum_sb")))
-      .join(tot, keyJoin("t"))
-      .drop(keyCols.indices.map(i => s"__t$i"): _*)
+        d(dec38(col("__vq")) * col("__cum_b") - col("__cum_sb"))),
+      tot, keyCols)
       .groupBy(keys :+ col("__na").as("n_a") :+ col("__nb").as("n_b"): _*)
       .agg(
         sum(dec3812((col("__ga") * d(col("__cb")) +
@@ -1422,37 +1252,8 @@ object Analytics {
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def cramerVonMises(df: DataFrame, groupCol: String, valueCol: String,
-                     groupA: String, groupB: String): DataFrame = {
-    val counts = df.filter(col(groupCol).isin(groupA, groupB))
-      .groupBy(col(valueCol).as("__v"))
-      .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-    def d(c: Column) = c.cast("double")
-    val (cShared, cumPre) = prefixBeforeMultiByShared(counts, Seq.empty,
-      "__v", Seq("a" -> col("__ca"), "b" -> col("__cb")))
-    val tot = cShared.agg(sum(col("__ca")).as("__na"),
-      sum(col("__cb")).as("__nb"))
-    val sums = cumPre
-      .crossJoin(broadcast(tot))
-      .withColumn("__cuma", col("__cum_a") + col("__ca"))
-      .withColumn("__cumb", col("__cum_b") + col("__cb"))
-      .withColumn("__dd", when(col("__na") > 0 && col("__nb") > 0,
-        (col("__cuma").cast("decimal(38,0)") * col("__nb") -
-          col("__cumb").cast("decimal(38,0)") * col("__na")).cast("double") /
-          (d(col("__na")) * d(col("__nb")))))
-      .withColumn("__term",
-        (d(col("__ca") + col("__cb")) * col("__dd") * col("__dd"))
-          .cast("decimal(28,12)"))
-      .agg(sum(col("__term")).as("__s"))
-    tot.crossJoin(broadcast(sums))
-      .select(col("__na").as("n_a"), col("__nb").as("n_b"),
-        when(col("__na") > 0 && col("__nb") > 0,
-          d(col("__na")) * d(col("__nb")) /
-            ((d(col("__na")) + d(col("__nb"))) *
-              (d(col("__na")) + d(col("__nb")))) *
-            d(coalesce(col("__s"), lit(0).cast("decimal(28,12)"))))
-          .as("cvm"))
-  }
+                     groupA: String, groupB: String): DataFrame =
+    cramerVonMisesBy(df, Nil, groupCol, valueCol, groupA, groupB)
 
   /** Per-GROUP [[cramerVonMises]] — the sliced weighted-L2 drift.
     * Keyed distributed prefix + keys-sized totals joined back
@@ -1465,25 +1266,17 @@ object Analytics {
   def cramerVonMisesBy(df: DataFrame, keyCols: Seq[String],
                        groupCol: String, valueCol: String,
                        groupA: String, groupB: String): DataFrame = {
-    require(keyCols.nonEmpty, "cramerVonMisesBy needs key columns; use cramerVonMises")
     val keys = keyCols.map(col)
     val counts = df.filter(col(groupCol).isin(groupA, groupB))
       .groupBy(keys :+ col(valueCol).as("__v"): _*)
       .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
         sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-    def renameKeys(dv: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(dv) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def keyJoin(tag: String): Column = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
     def d(c: Column) = c.cast("double")
     val (cShared, cumPre) = prefixBeforeMultiByShared(counts, keyCols,
       "__v", Seq("a" -> col("__ca"), "b" -> col("__cb")))
     val tot = cShared.groupBy(keys: _*)
       .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb"))
-    cumPre
-      .join(renameKeys(tot, "t"), keyJoin("t"))
-      .drop(keyCols.indices.map(i => s"__t$i"): _*)
+    joinTotals(cumPre, tot, keyCols)
       .withColumn("__cuma", col("__cum_a") + col("__ca"))
       .withColumn("__cumb", col("__cum_b") + col("__cb"))
       .withColumn("__dd", when(col("__na") > 0 && col("__nb") > 0,
@@ -1493,13 +1286,17 @@ object Analytics {
       .withColumn("__term",
         (d(col("__ca") + col("__cb")) * col("__dd") * col("__dd"))
           .cast("decimal(28,12)"))
-      .groupBy(keys :+ col("__na").as("n_a") :+ col("__nb").as("n_b"): _*)
-      .agg(sum(col("__term")).as("__s"))
+      // totals ride max(), not the grouping, so the key-less form still
+      // emits its one (NULL) row on empty input
+      .groupBy(keys: _*)
+      .agg(max(col("__na")).as("n_a"), max(col("__nb")).as("n_b"),
+        sum(col("__term")).as("__s"))
       .select(keys ++ Seq(col("n_a"), col("n_b"),
         when(col("n_a") > 0 && col("n_b") > 0,
           d(col("n_a")) * d(col("n_b")) /
             ((d(col("n_a")) + d(col("n_b"))) *
-              (d(col("n_a")) + d(col("n_b")))) * d(col("__s")))
+              (d(col("n_a")) + d(col("n_b")))) *
+            d(coalesce(col("__s"), lit(0).cast("decimal(28,12)"))))
           .as("cvm")): _*)
   }
 
@@ -1515,14 +1312,8 @@ object Analytics {
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def cliffsDelta(df: DataFrame, groupCol: String, valueCol: String,
-                  groupA: String, groupB: String): DataFrame = {
-    def d(c: Column) = c.cast("double")
-    mannWhitneyU(df, groupCol, valueCol, groupA, groupB)
-      .select(col("n_a"), col("n_b"),
-        when(col("n_a") > 0 && col("n_b") > 0,
-          (lit(2.0) * col("u_a") - d(col("n_a")) * d(col("n_b"))) /
-            (d(col("n_a")) * d(col("n_b")))).as("delta"))
-  }
+                  groupA: String, groupB: String): DataFrame =
+    cliffsDeltaBy(df, Nil, groupCol, valueCol, groupA, groupB)
 
   /** Per-GROUP [[cliffsDelta]] over [[mannWhitneyUBy]]'s statistics.
     * Output: key columns + (n_a, n_b, delta).
@@ -1532,7 +1323,6 @@ object Analytics {
   def cliffsDeltaBy(df: DataFrame, keyCols: Seq[String], groupCol: String,
                     valueCol: String, groupA: String, groupB: String)
       : DataFrame = {
-    require(keyCols.nonEmpty, "cliffsDeltaBy needs key columns; use cliffsDelta")
     def d(c: Column) = c.cast("double")
     mannWhitneyUBy(df, keyCols, groupCol, valueCol, groupA, groupB)
       .select(keyCols.map(col) ++ Seq(col("n_a"), col("n_b"),
@@ -1560,15 +1350,8 @@ object Analytics {
     * 100 TB: one map-side-combined scan, nothing shuffles but one
     * row. */
   def cohenD(df: DataFrame, groupCol: String, valueCol: String,
-             groupA: String, groupB: String, scale: Int = 2): DataFrame = {
-    val v = col(valueCol).cast(s"decimal(18,$scale)")
-    def side(g: String, suffix: String) = Seq(
-      sum(when(col(groupCol) === g, 1L).otherwise(0L)).as(s"n_$suffix"),
-      sum(when(col(groupCol) === g, v)).cast("double").as(s"__s_$suffix"),
-      sum(when(col(groupCol) === g, v * v)).cast("double").as(s"__ss_$suffix"))
-    val aggs = side(groupA, "a") ++ side(groupB, "b")
-    cohenChain(df.agg(aggs.head, aggs.tail: _*))
-  }
+             groupA: String, groupB: String, scale: Int = 2): DataFrame =
+    cohenDBy(df, Nil, groupCol, valueCol, groupA, groupB, scale)
 
   /** Per-GROUP [[cohenD]] — the sliced effect size (which slice's mean
     * moved, and by how many SDs — the report beside [[welchTBy]]'s
@@ -1577,7 +1360,6 @@ object Analytics {
   def cohenDBy(df: DataFrame, keyCols: Seq[String], groupCol: String,
                valueCol: String, groupA: String, groupB: String,
                scale: Int = 2): DataFrame = {
-    require(keyCols.nonEmpty, "cohenDBy needs key columns; use cohenD")
     val v = col(valueCol).cast(s"decimal(18,$scale)")
     def side(g: String, suffix: String) = Seq(
       sum(when(col(groupCol) === g, 1L).otherwise(0L)).as(s"n_$suffix"),
@@ -1870,9 +1652,7 @@ object Analytics {
   def propTest(df: DataFrame, groupCol: String,
                success: Column, groupA: String, groupB: String)
       : DataFrame =
-    propChain(df.filter(col(groupCol).isin(groupA, groupB)).agg(
-      propAggs(col(groupCol), success, groupA, groupB).head,
-      propAggs(col(groupCol), success, groupA, groupB).tail: _*))
+    propTestBy(df, Nil, groupCol, success, groupA, groupB)
 
   /** Per-GROUP [[propTest]] — per-slice A/B rate tests (the pooled z
     * hides a slice whose effect runs opposite: Simpson's screen for
@@ -1880,7 +1660,6 @@ object Analytics {
   def propTestBy(df: DataFrame, keyCols: Seq[String], groupCol: String,
                  success: Column, groupA: String, groupB: String)
       : DataFrame = {
-    require(keyCols.nonEmpty, "propTestBy needs key columns; use propTest")
     propChain(df.filter(col(groupCol).isin(groupA, groupB))
       .groupBy(keyCols.map(col): _*).agg(
         propAggs(col(groupCol), success, groupA, groupB).head,
@@ -1923,15 +1702,12 @@ object Analytics {
   def oddsRatio(df: DataFrame, groupCol: String,
                 success: Column, groupA: String, groupB: String)
       : DataFrame =
-    orChain(df.filter(col(groupCol).isin(groupA, groupB)).agg(
-      propAggs(col(groupCol), success, groupA, groupB).head,
-      propAggs(col(groupCol), success, groupA, groupB).tail: _*))
+    oddsRatioBy(df, Nil, groupCol, success, groupA, groupB)
 
   /** Per-GROUP [[oddsRatio]]. Output: key columns + the same row. */
   def oddsRatioBy(df: DataFrame, keyCols: Seq[String], groupCol: String,
                   success: Column, groupA: String, groupB: String)
       : DataFrame = {
-    require(keyCols.nonEmpty, "oddsRatioBy needs key columns; use oddsRatio")
     orChain(df.filter(col(groupCol).isin(groupA, groupB))
       .groupBy(keyCols.map(col): _*).agg(
         propAggs(col(groupCol), success, groupA, groupB).head,
@@ -2439,32 +2215,18 @@ object Analytics {
     * level — map it upstream if it should be one). k = 1 →
     * norm_entropy NULL (a one-level mix has no normalized diversity).
     * Output: one row (n, k, entropy, norm_entropy, hhi). */
-  def categoricalProfile(df: DataFrame, catCol: String): DataFrame = {
-    val counts = df.filter(col(catCol).isNotNull).groupBy(col(catCol))
-      .agg(count(lit(1)).as("__c"))
-    val tot = counts.agg(sum(col("__c")).as("__n"))
-    catProfileChain(counts.crossJoin(broadcast(tot))
-      .agg(count(lit(1)).as("k"),
-        (Seq(max(col("__n")).as("n")) ++ catProfileTerms): _*))
-  }
+  def categoricalProfile(df: DataFrame, catCol: String): DataFrame =
+    categoricalProfileBy(df, Nil, catCol)
 
   /** Per-GROUP [[categoricalProfile]] — the sliced mix profile (per
     * day, per source). Output: key columns + the same row. */
   def categoricalProfileBy(df: DataFrame, keyCols: Seq[String],
                            catCol: String): DataFrame = {
-    require(keyCols.nonEmpty, "categoricalProfileBy needs key columns; use categoricalProfile")
     val keys = keyCols.map(col)
-    def renameKeys(d: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(d) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def keyJoin(tag: String): Column = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
     val counts = df.filter(col(catCol).isNotNull)
       .groupBy(keys :+ col(catCol): _*).agg(count(lit(1)).as("__c"))
-    val tot = renameKeys(counts.groupBy(keys: _*)
-      .agg(sum(col("__c")).as("__n")), "t")
-    catProfileChain(counts.join(tot, keyJoin("t"))
-      .drop(keyCols.indices.map(i => s"__t$i"): _*)
+    val tot = counts.groupBy(keys: _*).agg(sum(col("__c")).as("__n"))
+    catProfileChain(joinTotals(counts, tot, keyCols)
       .groupBy(keys: _*)
       .agg(count(lit(1)).as("k"),
         (Seq(max(col("__n")).as("n")) ++ catProfileTerms): _*))
@@ -2643,15 +2405,8 @@ object Analytics {
     * t, t2, dof). Groups with n < 2 yield null variance columns (the
     * test is undefined). */
   def welchT(df: DataFrame, groupCol: String, valueCol: String,
-             groupA: String, groupB: String, scale: Int = 2): DataFrame = {
-    val v = col(valueCol).cast(s"decimal(18,$scale)")
-    def side(g: String, suffix: String) = Seq(
-      sum(when(col(groupCol) === g, 1L).otherwise(0L)).as(s"n_$suffix"),
-      sum(when(col(groupCol) === g, v)).cast("double").as(s"__s_$suffix"),
-      sum(when(col(groupCol) === g, v * v)).cast("double").as(s"__ss_$suffix"))
-    val aggs = side(groupA, "a") ++ side(groupB, "b")
-    welchChain(df.agg(aggs.head, aggs.tail: _*))
-  }
+             groupA: String, groupB: String, scale: Int = 2): DataFrame =
+    welchTBy(df, Nil, groupCol, valueCol, groupA, groupB, scale)
 
   /** CUPED-adjusted A/B comparison — variance reduction from
     * pre-experiment data (Deng–Xu–Kohavi–Walker, WSDM 2013: the
@@ -2870,31 +2625,8 @@ object Analytics {
     * (engine-replayable). n = 0 → NULL chi2. Output: one row —
     * (n, n_other, k, chi2, dof). */
   def srmTest(df: DataFrame, groupCol: String,
-              expected: Seq[(String, Double)]): DataFrame = {
-    require(expected.nonEmpty, "srmTest needs the designed ratios")
-    require(expected.map(_._1).distinct.length == expected.length,
-      s"duplicate groups in $expected")
-    require(expected.forall(_._2 > 0), s"weights must be > 0: $expected")
-    def d(c: Column) = c.cast("double")
-    val groups = expected.map(_._1)
-    val wTot = expected.map(_._2).sum
-    val aggs = expected.map { case (g, _) =>
-      sum(when(col(groupCol) === g, 1L).otherwise(0L)).as(s"__o_$g") } :+
-      sum(when(col(groupCol).isin(groups: _*), 0L).otherwise(1L))
-        .as("n_other")
-    val one = df.agg(aggs.head, aggs.tail: _*)
-      .withColumn("n", expected.map { case (g, _) =>
-        col(s"__o_$g") }.reduce(_ + _))
-    val chi2 = expected.map { case (g, w) =>
-      val e = d(col("n")) * lit(w / wTot)
-      (d(col(s"__o_$g")) - e) * (d(col(s"__o_$g")) - e) / e
-    }.reduce(_ + _)
-    one
-      .withColumn("chi2", when(col("n") > 0, chi2))
-      .select(col("n"), col("n_other"),
-        lit(expected.length.toLong).as("k"), col("chi2"),
-        lit(expected.length - 1L).as("dof"))
-  }
+              expected: Seq[(String, Double)]): DataFrame =
+    srmTestBy(df, Nil, groupCol, expected)
 
   /** Per-SEGMENT [[srmTest]] — the sliced split-health sweep (the
     * Fabijan et al. taxonomy's most common root causes — a crashing
@@ -2910,8 +2642,6 @@ object Analytics {
     * per key group, ordered — keys + (n, n_other, k, chi2, dof). */
   def srmTestBy(df: DataFrame, keyCols: Seq[String], groupCol: String,
                 expected: Seq[(String, Double)]): DataFrame = {
-    require(keyCols.nonEmpty,
-      "srmTestBy needs key columns; use srmTest")
     require(expected.nonEmpty, "srmTestBy needs the designed ratios")
     require(expected.map(_._1).distinct.length == expected.length,
       s"duplicate groups in $expected")
@@ -3417,7 +3147,6 @@ object Analytics {
   def welchTBy(df: DataFrame, keyCols: Seq[String], groupCol: String,
                valueCol: String, groupA: String, groupB: String,
                scale: Int = 2): DataFrame = {
-    require(keyCols.nonEmpty, "welchTBy needs key columns; use welchT")
     val v = col(valueCol).cast(s"decimal(18,$scale)")
     def side(g: String, suffix: String) = Seq(
       sum(when(col(groupCol) === g, 1L).otherwise(0L)).as(s"n_$suffix"),
@@ -3485,93 +3214,31 @@ object Analytics {
     * p = (c+1)/(n+bins) so empty bins are defined, and
     * PSI = Σ_bins (p_a − p_b)·ln(p_a/p_b). Exact to the formula: bin
     * counts are ONE map-side-combined aggregate (never a per-row
-    * window), the bin spine is a generated `bins`-row frame so silent
-    * bin dropout cannot skew the sum, each per-bin double term is
-    * pinned arithmetic, and terms accumulate through decimal(28,12)
+    * window), every one of the `bins` bins enters the sum (the empty
+    * ones in closed form, see [[binnedDivergenceBy]]) so silent bin
+    * dropout cannot skew it, each per-bin double term is pinned
+    * arithmetic, and terms accumulate through decimal(28,12)
     * (order-independent — the chiSquareDrift precedent). Output: one
     * row (n_a, n_b, psi). */
   def psi(df: DataFrame, groupCol: String, valueCol: String,
           groupA: String, groupB: String,
-          lo: Double, hi: Double, bins: Int): DataFrame = {
-    require(bins >= 1 && hi > lo, "need bins >= 1 and hi > lo")
-    // Binning expression is (v−lo)/(hi−lo)·bins truncated — the SAME
-    // double tree as the streaming twin's HistAgg (Sketches.scala), not
-    // the algebraically-equal (v−lo)/width form whose division-first
-    // rounding can disagree by one ulp at bin boundaries and make batch
-    // and streaming PSI differ on identical data.
-    val bin = least(greatest(
-      floor((col(valueCol) - lo) / (hi - lo) * bins).cast("long"), lit(0L)),
-      lit(bins.toLong - 1))
-    val counts = df.filter(col(groupCol).isin(groupA, groupB))
-      .groupBy(bin.as("bin"))
-      .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-    val spine = df.sparkSession.range(bins).select(col("id").as("bin"))
-    val full = spine.join(counts, Seq("bin"), "left")
-      .select(col("bin"),
-        coalesce(col("__ca"), lit(0L)).as("__ca"),
-        coalesce(col("__cb"), lit(0L)).as("__cb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(1)).rowsBetween(Long.MinValue, Long.MaxValue)
-    val pa = (col("__ca") + 1).cast("double") /
-      (col("__na") + bins).cast("double")
-    val pb = (col("__cb") + 1).cast("double") /
-      (col("__nb") + bins).cast("double")
-    full
-      .withColumn("__na", sum(col("__ca")).over(w))
-      .withColumn("__nb", sum(col("__cb")).over(w))
-      .withColumn("__term", (pa - pb) * log(pa / pb))
-      .groupBy(col("__na").as("n_a"), col("__nb").as("n_b"))
-      .agg(sum(col("__term").cast("decimal(28,12)")).cast("double").as("psi"))
-  }
+          lo: Double, hi: Double, bins: Int): DataFrame =
+    psiBy(df, Nil, groupCol, valueCol, groupA, groupB, lo, hi, bins)
 
   /** Per-GROUP PSI — [[psi]] sliced by key columns (per-language /
     * per-source drift: a shift confined to one slice dilutes into
     * noise in the pooled statistic — the ksTestBy argument, applied to
     * the binned-PSI gauge). Same fixed grid, Laplace smoothing, pinned
     * double terms and exact decimal(28,12) term sum, evaluated per
-    * group over a (groups × bins) spine — bounded by construction, the
-    * windowedPsi state-size argument in batch form. Per-group totals
-    * are a keys-sized aggregate joined back null-safe (a NULL group is
-    * its own slice). Output: key columns + (n_a, n_b, psi). */
+    * group ([[binnedDivergenceBy]]; a NULL group is its own slice).
+    * Output: key columns + (n_a, n_b, psi). */
   def psiBy(df: DataFrame, keyCols: Seq[String], groupCol: String,
             valueCol: String, groupA: String, groupB: String,
-            lo: Double, hi: Double, bins: Int): DataFrame = {
-    require(keyCols.nonEmpty, "psiBy needs key columns; use psi")
-    require(bins >= 1 && hi > lo, "need bins >= 1 and hi > lo")
-    val keys = keyCols.map(col)
-    val bin = least(greatest(
-      floor((col(valueCol) - lo) / (hi - lo) * bins).cast("long"), lit(0L)),
-      lit(bins.toLong - 1))
-    val counts = df.filter(col(groupCol).isin(groupA, groupB))
-      .groupBy(keys :+ bin.as("bin"): _*)
-      .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-    def renameKeys(d: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(d) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def keyCond(tag: String): Column = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
-    val spine = counts.select(keys: _*).distinct()
-      .crossJoin(df.sparkSession.range(bins).select(col("id").as("bin")))
-    val cR = renameKeys(counts, "c").withColumnRenamed("bin", "__cbin")
-    val full = spine
-      .join(cR, keyCond("c") && col("bin") === col("__cbin"), "left")
-      .select(keys ++ Seq(col("bin"),
-        coalesce(col("__ca"), lit(0L)).as("__ca"),
-        coalesce(col("__cb"), lit(0L)).as("__cb")): _*)
-    val tot = renameKeys(full.groupBy(keys: _*)
-      .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb")), "t")
-    val pa = (col("__ca") + 1).cast("double") /
-      (col("__na") + bins).cast("double")
-    val pb = (col("__cb") + 1).cast("double") /
-      (col("__nb") + bins).cast("double")
-    full.join(tot, keyCond("t"))
-      .drop(keyCols.indices.map(i => s"__t$i"): _*)
-      .withColumn("__term", (pa - pb) * log(pa / pb))
-      .groupBy(keys :+ col("__na").as("n_a") :+ col("__nb").as("n_b"): _*)
-      .agg(sum(col("__term").cast("decimal(28,12)")).cast("double").as("psi"))
-  }
+            lo: Double, hi: Double, bins: Int): DataFrame =
+    binnedDivergenceBy(df, keyCols, groupCol, valueCol, groupA, groupB,
+        lo, hi, bins) { (pa, pb) => (pa - pb) * log(pa / pb) }
+      .withColumn("psi", col("__s").cast("double"))
+      .drop("__s")
 
   /** Jensen–Shannon divergence between two groups of a continuous
     * column — the SYMMETRIC, BOUNDED drift score beside [[psi]]
@@ -3586,77 +3253,20 @@ object Analytics {
     * decimal(28,12). Output: one row (n_a, n_b, jsd). */
   def jsDivergence(df: DataFrame, groupCol: String, valueCol: String,
                    groupA: String, groupB: String,
-                   lo: Double, hi: Double, bins: Int): DataFrame = {
-    require(bins >= 1 && hi > lo, "need bins >= 1 and hi > lo")
-    val bin = least(greatest(
-      floor((col(valueCol) - lo) / (hi - lo) * bins).cast("long"), lit(0L)),
-      lit(bins.toLong - 1))
-    val counts = df.filter(col(groupCol).isin(groupA, groupB))
-      .groupBy(bin.as("bin"))
-      .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-    val spine = df.sparkSession.range(bins).select(col("id").as("bin"))
-    val full = spine.join(counts, Seq("bin"), "left")
-      .select(col("bin"),
-        coalesce(col("__ca"), lit(0L)).as("__ca"),
-        coalesce(col("__cb"), lit(0L)).as("__cb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(1)).rowsBetween(Long.MinValue, Long.MaxValue)
-    val pa = (col("__ca") + 1).cast("double") /
-      (col("__na") + bins).cast("double")
-    val pb = (col("__cb") + 1).cast("double") /
-      (col("__nb") + bins).cast("double")
-    val m = (pa + pb) / 2
-    full
-      .withColumn("__na", sum(col("__ca")).over(w))
-      .withColumn("__nb", sum(col("__cb")).over(w))
-      .withColumn("__term", (pa * log(pa / m) + pb * log(pb / m)) * 0.5)
-      .groupBy(col("__na").as("n_a"), col("__nb").as("n_b"))
-      .agg(sum(col("__term").cast("decimal(28,12)")).cast("double").as("jsd"))
-  }
+                   lo: Double, hi: Double, bins: Int): DataFrame =
+    jsDivergenceBy(df, Nil, groupCol, valueCol, groupA, groupB, lo, hi, bins)
 
-  /** Per-GROUP [[jsDivergence]] — the sliced symmetric drift over the
-    * same bounded (groups × bins) spine as [[psiBy]]. Output: key
-    * columns + (n_a, n_b, jsd). */
+  /** Per-GROUP [[jsDivergence]] — the sliced symmetric drift, the same
+    * per-group machinery as [[psiBy]]. Output: key columns +
+    * (n_a, n_b, jsd). */
   def jsDivergenceBy(df: DataFrame, keyCols: Seq[String], groupCol: String,
                      valueCol: String, groupA: String, groupB: String,
-                     lo: Double, hi: Double, bins: Int): DataFrame = {
-    require(keyCols.nonEmpty, "jsDivergenceBy needs key columns; use jsDivergence")
-    require(bins >= 1 && hi > lo, "need bins >= 1 and hi > lo")
-    val keys = keyCols.map(col)
-    val bin = least(greatest(
-      floor((col(valueCol) - lo) / (hi - lo) * bins).cast("long"), lit(0L)),
-      lit(bins.toLong - 1))
-    val counts = df.filter(col(groupCol).isin(groupA, groupB))
-      .groupBy(keys :+ bin.as("bin"): _*)
-      .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-    def renameKeys(d: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(d) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def keyCond(tag: String): Column = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
-    val spine = counts.select(keys: _*).distinct()
-      .crossJoin(df.sparkSession.range(bins).select(col("id").as("bin")))
-    val cR = renameKeys(counts, "c").withColumnRenamed("bin", "__cbin")
-    val full = spine
-      .join(cR, keyCond("c") && col("bin") === col("__cbin"), "left")
-      .select(keys ++ Seq(col("bin"),
-        coalesce(col("__ca"), lit(0L)).as("__ca"),
-        coalesce(col("__cb"), lit(0L)).as("__cb")): _*)
-    val tot = renameKeys(full.groupBy(keys: _*)
-      .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb")), "t")
-    val pa = (col("__ca") + 1).cast("double") /
-      (col("__na") + bins).cast("double")
-    val pb = (col("__cb") + 1).cast("double") /
-      (col("__nb") + bins).cast("double")
-    val m = (pa + pb) / 2
-    full.join(tot, keyCond("t"))
-      .drop(keyCols.indices.map(i => s"__t$i"): _*)
-      .withColumn("__term", (pa * log(pa / m) + pb * log(pb / m)) * 0.5)
-      .groupBy(keys :+ col("__na").as("n_a") :+ col("__nb").as("n_b"): _*)
-      .agg(sum(col("__term").cast("decimal(28,12)")).cast("double").as("jsd"))
-  }
+                     lo: Double, hi: Double, bins: Int): DataFrame =
+    binnedDivergenceBy(df, keyCols, groupCol, valueCol, groupA, groupB,
+        lo, hi, bins) { (pa, pb) =>
+      val m = (pa + pb) / 2
+      (pa * log(pa / m) + pb * log(pb / m)) * 0.5
+    }.withColumn("jsd", col("__s").cast("double")).drop("__s")
 
   /** Hellinger distance between two groups of a continuous column —
     * the METRIC member of the binned-divergence trio ([[psi]] is the
@@ -3675,47 +3285,49 @@ object Analytics {
     * (n_a, n_b, bc, hellinger). */
   def hellingerDistance(df: DataFrame, groupCol: String, valueCol: String,
                         groupA: String, groupB: String,
-                        lo: Double, hi: Double, bins: Int): DataFrame = {
-    require(bins >= 1 && hi > lo, "need bins >= 1 and hi > lo")
-    val bin = least(greatest(
-      floor((col(valueCol) - lo) / (hi - lo) * bins).cast("long"), lit(0L)),
-      lit(bins.toLong - 1))
-    val counts = df.filter(col(groupCol).isin(groupA, groupB))
-      .groupBy(bin.as("bin"))
-      .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-    val spine = df.sparkSession.range(bins).select(col("id").as("bin"))
-    val full = spine.join(counts, Seq("bin"), "left")
-      .select(col("bin"),
-        coalesce(col("__ca"), lit(0L)).as("__ca"),
-        coalesce(col("__cb"), lit(0L)).as("__cb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(1)).rowsBetween(Long.MinValue, Long.MaxValue)
-    val pa = (col("__ca") + 1).cast("double") /
-      (col("__na") + bins).cast("double")
-    val pb = (col("__cb") + 1).cast("double") /
-      (col("__nb") + bins).cast("double")
-    full
-      .withColumn("__na", sum(col("__ca")).over(w))
-      .withColumn("__nb", sum(col("__cb")).over(w))
-      .withColumn("__term", sqrt(pa * pb))
-      .groupBy(col("__na").as("n_a"), col("__nb").as("n_b"))
-      .agg(sum(col("__term").cast("decimal(28,12)")).cast("double").as("bc"))
-      .withColumn("hellinger",
-        sqrt(greatest(lit(1.0) - col("bc"), lit(0.0))))
-  }
+                        lo: Double, hi: Double, bins: Int): DataFrame =
+    hellingerDistanceBy(df, Nil, groupCol, valueCol, groupA, groupB, lo, hi,
+      bins)
 
-  /** Per-GROUP [[hellingerDistance]] — the sliced metric drift over
-    * the same bounded (groups × bins) spine as [[psiBy]]. Output: key
-    * columns + (n_a, n_b, bc, hellinger). */
+  /** Per-GROUP [[hellingerDistance]] — the sliced metric drift, the
+    * same per-group machinery as [[psiBy]]. Output: key columns +
+    * (n_a, n_b, bc, hellinger). */
   def hellingerDistanceBy(df: DataFrame, keyCols: Seq[String],
                           groupCol: String, valueCol: String,
                           groupA: String, groupB: String,
-                          lo: Double, hi: Double, bins: Int): DataFrame = {
-    require(keyCols.nonEmpty,
-      "hellingerDistanceBy needs key columns; use hellingerDistance")
+                          lo: Double, hi: Double, bins: Int): DataFrame =
+    binnedDivergenceBy(df, keyCols, groupCol, valueCol, groupA, groupB,
+        lo, hi, bins) { (pa, pb) => sqrt(pa * pb) }
+      .withColumn("bc", col("__s").cast("double"))
+      .withColumn("hellinger",
+        sqrt(greatest(lit(1.0) - col("bc"), lit(0.0))))
+      .drop("__s")
+
+  /** The per-group binned-divergence sum shared by [[psiBy]],
+    * [[jsDivergenceBy]] and [[hellingerDistanceBy]]: equal-width bins
+    * over [lo, hi) with edge clamping, per-(group, bin) counts of both
+    * sides in ONE map-side-combined aggregate, per-group totals as a
+    * window over that bins-bounded frame, Laplace-smoothed shares
+    * p = (c+1)/(n+bins), and `__s` = Σ over ALL `bins` bins of the
+    * pinned double `term(p_a, p_b)` snapped to decimal(28,12). Bins no
+    * row fell in are not materialized: they all share the term at
+    * c_a = c_b = 0, so they enter as (bins − present)·term₀ — the same
+    * decimal sum a zero-filled bin spine would give, exactly (|term| <
+    * 50 for shares in (0, 1], so decimal(18,12) holds term₀ and the
+    * sum stays inside 31 digits). With no keys the frame collapses to
+    * one row, also on empty input (n_a = n_b = 0). Output: key columns
+    * + (n_a, n_b, __s). */
+  private def binnedDivergenceBy(df: DataFrame, keyCols: Seq[String],
+      groupCol: String, valueCol: String, groupA: String, groupB: String,
+      lo: Double, hi: Double, bins: Int)(
+      term: (Column, Column) => Column): DataFrame = {
     require(bins >= 1 && hi > lo, "need bins >= 1 and hi > lo")
     val keys = keyCols.map(col)
+    // Binning expression is (v−lo)/(hi−lo)·bins truncated — the SAME
+    // double tree as the streaming twin's HistAgg (Sketches.scala), not
+    // the algebraically-equal (v−lo)/width form whose division-first
+    // rounding can disagree by one ulp at bin boundaries and make batch
+    // and streaming PSI differ on identical data.
     val bin = least(greatest(
       floor((col(valueCol) - lo) / (hi - lo) * bins).cast("long"), lit(0L)),
       lit(bins.toLong - 1))
@@ -3723,32 +3335,26 @@ object Analytics {
       .groupBy(keys :+ bin.as("bin"): _*)
       .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
         sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-    def renameKeys(d: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(d) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def keyCond(tag: String): Column = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
-    val spine = counts.select(keys: _*).distinct()
-      .crossJoin(df.sparkSession.range(bins).select(col("id").as("bin")))
-    val cR = renameKeys(counts, "c").withColumnRenamed("bin", "__cbin")
-    val full = spine
-      .join(cR, keyCond("c") && col("bin") === col("__cbin"), "left")
-      .select(keys ++ Seq(col("bin"),
-        coalesce(col("__ca"), lit(0L)).as("__ca"),
-        coalesce(col("__cb"), lit(0L)).as("__cb")): _*)
-    val tot = renameKeys(full.groupBy(keys: _*)
-      .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb")), "t")
-    val pa = (col("__ca") + 1).cast("double") /
-      (col("__na") + bins).cast("double")
-    val pb = (col("__cb") + 1).cast("double") /
-      (col("__nb") + bins).cast("double")
-    full.join(tot, keyCond("t"))
-      .drop(keyCols.indices.map(i => s"__t$i"): _*)
-      .withColumn("__term", sqrt(pa * pb))
-      .groupBy(keys :+ col("__na").as("n_a") :+ col("__nb").as("n_b"): _*)
-      .agg(sum(col("__term").cast("decimal(28,12)")).cast("double").as("bc"))
-      .withColumn("hellinger",
-        sqrt(greatest(lit(1.0) - col("bc"), lit(0.0))))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(keys: _*)
+    def binTerm(ca: Column, cb: Column, na: Column, nb: Column): Column =
+      term((ca + 1).cast("double") / (na + bins).cast("double"),
+        (cb + 1).cast("double") / (nb + bins).cast("double"))
+        .cast("decimal(28,12)")
+    counts
+      .select(col("*"), sum(col("__ca")).over(w).as("__na"),
+        sum(col("__cb")).over(w).as("__nb"))
+      .groupBy(keys: _*)
+      .agg(coalesce(max(col("__na")), lit(0L)).as("n_a"),
+        coalesce(max(col("__nb")), lit(0L)).as("n_b"),
+        count(lit(1)).as("__k"),
+        sum(binTerm(col("__ca"), col("__cb"), col("__na"), col("__nb")))
+          .as("__s0"))
+      .withColumn("__s",
+        coalesce(col("__s0"), lit(0)).cast("decimal(30,12)") +
+          binTerm(lit(0L), lit(0L), col("n_a"), col("n_b"))
+            .cast("decimal(18,12)") *
+            (lit(bins.toLong) - col("__k")).cast("decimal(10,0)"))
+      .drop("__k", "__s0")
   }
 
   /** Pearson correlation matrix of p numeric columns in ONE pass — the
@@ -3819,10 +3425,7 @@ object Analytics {
     * (constant) sides yield NULL. Output: one row
     * (n, mi, h_x, h_y, u_x_given_y, u_y_given_x). */
   def theilsU(df: DataFrame, xCol: String, yCol: String): DataFrame =
-    mutualInformation(df, xCol, yCol)
-      .select(col("n"), col("mi"), col("h_x"), col("h_y"),
-        when(col("h_x") > 0, col("mi") / col("h_x")).as("u_x_given_y"),
-        when(col("h_y") > 0, col("mi") / col("h_y")).as("u_y_given_x"))
+    theilsUBy(df, Nil, xCol, yCol)
 
   /** First-order PARTIAL correlation r_{xy·z} — the association between
     * x and y with the confounder z held fixed:
@@ -3869,17 +3472,32 @@ object Analytics {
   }
 
   /** Key-columns rename/join helpers for the By-family's null-safe
-    * self-joins (marginals, totals, argmaxes joined back per group). */
+    * self-joins (marginals, totals, argmaxes joined back per group).
+    * All three accept empty keys: no rename, a `true` condition (the
+    * optimizer folds `true && c` to `c`), nothing to drop. */
   private def renKeys(d: DataFrame, keyCols: Seq[String],
       tag: String): DataFrame =
     keyCols.zipWithIndex.foldLeft(d) { case (acc, (c, i)) =>
       acc.withColumnRenamed(c, s"__$tag$i") }
   private def keyEq(keyCols: Seq[String], tag: String): Column =
-    keyCols.zipWithIndex.map { case (c, i) =>
-      col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
+    keyCols.zipWithIndex.foldLeft(lit(true)) { case (acc, (c, i)) =>
+      acc && (col(c) <=> col(s"__$tag$i")) }
   private def dropTag(d: DataFrame, keyCols: Seq[String],
       tag: String): DataFrame =
     d.drop(keyCols.indices.map(i => s"__$tag$i"): _*)
+
+  /** Joins `tot`, a frame with one row per key group (totals, maxima,
+    * tie sums), onto `d` null-safe on the key columns. With no keys
+    * `tot` is ONE row and rides a broadcast hint: under auto-broadcast
+    * off (the 100 TB regime) that hint is what keeps a grand-total join
+    * bounded instead of planning a cartesian. Keyed totals are
+    * groups-sized and get no hint — the planner picks the strategy. */
+  private def joinTotals(d: DataFrame, tot: DataFrame, keyCols: Seq[String],
+      how: String = "inner"): DataFrame = {
+    val t = renKeys(tot, keyCols, "t")
+    dropTag(d.join(if (keyCols.isEmpty) broadcast(t) else t,
+      keyEq(keyCols, "t"), how), keyCols, "t")
+  }
 
   /** Per-GROUP mutual information / NMI — [[mutualInformation]] sliced
     * by key columns (does language still predict the length profile
@@ -3891,8 +3509,6 @@ object Analytics {
     * (n, mi, h_x, h_y, nmi). */
   def mutualInformationBy(df: DataFrame, keyCols: Seq[String],
                           xCol: String, yCol: String): DataFrame = {
-    require(keyCols.nonEmpty,
-      "mutualInformationBy needs key columns; use mutualInformation")
     val keys = keyCols.map(col)
     val pairs = df
       .groupBy(keys ++ Seq(col(xCol).as("__x"), col(yCol).as("__y")): _*)
@@ -3901,10 +3517,10 @@ object Analytics {
       .agg(sum("__c").as("__cx"))
     val my0 = pairs.groupBy(keys :+ col("__y").as("__ky"): _*)
       .agg(sum("__c").as("__cy"))
-    val tot = renKeys(pairs.groupBy(keys: _*)
-      .agg(sum(col("__c")).as("__n")), keyCols, "t")
-    def withN(d: DataFrame): DataFrame =
-      dropTag(d.join(tot, keyEq(keyCols, "t")), keyCols, "t")
+    // n appears inside every term, so compute it first and join it
+    // back in (a broadcast one-row frame with no keys)
+    val tot = pairs.groupBy(keys: _*).agg(sum(col("__c")).as("__n"))
+    def withN(d: DataFrame): DataFrame = joinTotals(d, tot, keyCols)
     def d(c: Column) = c.cast("double")
     def entropyBy(m: DataFrame, cnt: String, out: String,
         tag: String): DataFrame =
@@ -3953,7 +3569,6 @@ object Analytics {
     * (n, r_x, r_y, chi2, v). */
   def cramersVBy(df: DataFrame, keyCols: Seq[String], xCol: String,
                  yCol: String): DataFrame = {
-    require(keyCols.nonEmpty, "cramersVBy needs key columns; use cramersV")
     val keys = keyCols.map(col)
     val pairs = df
       .groupBy(keys ++ Seq(col(xCol).as("__x"), col(yCol).as("__y")): _*)
@@ -3962,21 +3577,27 @@ object Analytics {
       .agg(sum("__c").as("__cx")), keyCols, "x")
     val my = renKeys(pairs.groupBy(keys :+ col("__y").as("__ky"): _*)
       .agg(sum("__c").as("__cy")), keyCols, "y")
-    val tot = renKeys(pairs.groupBy(keys: _*)
+    // struct wrapper: a NULL level is a real row of the table (the
+    // chi2 sum includes its cells), so r_x/r_y must count it too -
+    // bare countDistinct drops NULL and would mis-normalize V
+    val tot = pairs.groupBy(keys: _*)
       .agg(sum(col("__c")).as("__n"),
         countDistinct(struct(col("__x"))).as("__rx"),
-        countDistinct(struct(col("__y"))).as("__ry")), keyCols, "t")
+        countDistinct(struct(col("__y"))).as("__ry"))
     def d(c: Column) = c.cast("double")
-    pairs
+    joinTotals(pairs
       .join(mx, keyEq(keyCols, "x") && col("__x") <=> col("__kx"))
-      .join(my, keyEq(keyCols, "y") && col("__y") <=> col("__ky"))
-      .join(tot, keyEq(keyCols, "t"))
+      .join(my, keyEq(keyCols, "y") && col("__y") <=> col("__ky")),
+      tot, keyCols)
       .groupBy(keys: _*)
       .agg(sum(col("__c")).as("n"),
         first(col("__rx")).as("r_x"), first(col("__ry")).as("r_y"),
         sum((d(col("__c")) * d(col("__c")) /
           (d(col("__cx")) * d(col("__cy"))))
           .cast("decimal(28,12)")).as("__s"))
+      // χ² ≥ 0 mathematically; the decimal rounding of Σc²/(cx·cy) can
+      // leave an O(ulp) negative residue at exact independence, which
+      // sqrt would turn into NaN — clamp (the oracle replays the clamp)
       .withColumn("chi2",
         greatest(col("n").cast("double") * col("__s").cast("double") -
           col("n").cast("double"), lit(0.0)))
@@ -4001,35 +3622,8 @@ object Analytics {
     * inputs give H = 0 → NMI is NULL. Output: one row
     * (n, mi, h_x, h_y, nmi). */
   def mutualInformation(df: DataFrame, xCol: String, yCol: String)
-      : DataFrame = {
-    val pairs = df.groupBy(col(xCol).as("__x"), col(yCol).as("__y"))
-      .agg(count(lit(1)).as("__c"))
-    val mx = pairs.groupBy(col("__x").as("__kx")).agg(sum("__c").as("__cx"))
-    val my = pairs.groupBy(col("__y").as("__ky")).agg(sum("__c").as("__cy"))
-    val joined = pairs
-      .join(mx, col("__x") <=> col("__kx"))
-      .join(my, col("__y") <=> col("__ky"))
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    // n appears inside every term, so compute it first and broadcast it
-    // back in: one-row frame, driver-free
-    val tot = pairs.agg(sum(col("__c")).as("__n"))
-    def entropy(m: DataFrame, cnt: String, out: String): DataFrame =
-      m.crossJoin(broadcast(tot))
-        .agg((-sum(((d(col(cnt)) / d(col("__n"))) *
-          log(d(col(cnt)) / d(col("__n")))).cast("decimal(28,12)")))
-          .cast("double").as(out))
-    val mi = joined.crossJoin(broadcast(tot))
-      .agg(sum(col("__c")).as("n"),
-        sum(((d(col("__c")) / d(col("__n"))) *
-          log(d(col("__n")) * d(col("__c")) /
-            (d(col("__cx")) * d(col("__cy")))))
-          .cast("decimal(28,12)")).cast("double").as("mi"))
-    mi.crossJoin(entropy(mx, "__cx", "h_x"))
-      .crossJoin(entropy(my, "__cy", "h_y"))
-      .withColumn("nmi",
-        when(col("h_x") > 0 && col("h_y") > 0,
-          col("mi") / sqrt(col("h_x") * col("h_y"))))
-  }
+      : DataFrame =
+    mutualInformationBy(df, Nil, xCol, yCol)
 
   /** Cramér's V association between two categorical columns — the
     * bounded-[0,1] effect size chi² lacks: χ² over the FULL contingency
@@ -4039,39 +3633,8 @@ object Analytics {
     * distinct-bounded plan as [[mutualInformation]]; r and k ride the
     * marginal aggregates. 1×m tables give V = NULL (undefined).
     * Output: one row (n, r_x, r_y, chi2, v). */
-  def cramersV(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val pairs = df.groupBy(col(xCol).as("__x"), col(yCol).as("__y"))
-      .agg(count(lit(1)).as("__c"))
-    val mx = pairs.groupBy(col("__x").as("__kx")).agg(sum("__c").as("__cx"))
-    val my = pairs.groupBy(col("__y").as("__ky")).agg(sum("__c").as("__cy"))
-    // struct wrapper: a NULL level is a real row of the table (the
-    // chi2 sum includes its cells), so r_x/r_y must count it too -
-    // bare countDistinct drops NULL and would mis-normalize V
-    val tot = pairs.agg(sum(col("__c")).as("__n"),
-      countDistinct(struct(col("__x"))).as("__rx"),
-      countDistinct(struct(col("__y"))).as("__ry"))
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    pairs
-      .join(mx, col("__x") <=> col("__kx"))
-      .join(my, col("__y") <=> col("__ky"))
-      .crossJoin(broadcast(tot))
-      .agg(sum(col("__c")).as("n"),
-        first(col("__rx")).as("r_x"), first(col("__ry")).as("r_y"),
-        sum((d(col("__c")) * d(col("__c")) /
-          (d(col("__cx")) * d(col("__cy"))))
-          .cast("decimal(28,12)")).as("__s"))
-      // χ² ≥ 0 mathematically; the decimal rounding of Σc²/(cx·cy) can
-      // leave an O(ulp) negative residue at exact independence, which
-      // sqrt would turn into NaN — clamp (the oracle replays the clamp)
-      .withColumn("chi2",
-        greatest(col("n").cast("double") * col("__s").cast("double") -
-          col("n").cast("double"), lit(0.0)))
-      .withColumn("v",
-        when(least(col("r_x"), col("r_y")) > 1,
-          sqrt(col("chi2") / (col("n").cast("double") *
-            (least(col("r_x"), col("r_y")) - 1).cast("double")))))
-      .drop("__s")
-  }
+  def cramersV(df: DataFrame, xCol: String, yCol: String): DataFrame =
+    cramersVBy(df, Nil, xCol, yCol)
 
   /** G-test (likelihood-ratio χ²) of independence between two
     * categorical columns — [[cramersV]]'s Pearson χ² made
@@ -4128,40 +3691,8 @@ object Analytics {
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def mannWhitneyU(df: DataFrame, groupCol: String, valueCol: String,
-                   groupA: String, groupB: String): DataFrame = {
-    val counts = df.filter(col(groupCol).isin(groupA, groupB))
-      .groupBy(col(valueCol).as("__v"))
-      .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-      .withColumn("__t", col("__ca") + col("__cb"))
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-    val agg = prefixBefore(counts, "__v", col("__t"))
-      .withColumnRenamed("__cum", "__before")
-      .agg(sum(col("__ca")).as("n_a"), sum(col("__cb")).as("n_b"),
-        sum(dec(col("__ca")) *
-          (lit(2) * col("__before") + col("__t") + 1)).as("__r2a"),
-        sum(dec(col("__t")) * dec(col("__t")) * dec(col("__t")) -
-          dec(col("__t"))).as("__ties"))
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    agg
-      // 2R_a = __r2a (doubled rank-sum); U_a = R_a − n_a(n_a+1)/2, so
-      // U_a = (2R_a − n_a(n_a+1))/2 — one pinned double chain
-      .withColumn("u_a",
-        (d(col("__r2a")) - d(col("n_a")) * (d(col("n_a")) + 1)) / 2.0)
-      .withColumn("u_b",
-        d(col("n_a")) * d(col("n_b")) - col("u_a"))
-      .withColumn("__nn", d(col("n_a")) + d(col("n_b")))
-      .withColumn("__var",
-        when(col("n_a") > 0 && col("n_b") > 0 && col("__nn") > 1,
-          d(col("n_a")) * d(col("n_b")) / 12.0 *
-            ((col("__nn") + 1) - d(col("__ties")) /
-              (col("__nn") * (col("__nn") - 1)))))
-      .withColumn("z",
-        when(col("__var") > 0,
-          (col("u_a") - d(col("n_a")) * d(col("n_b")) / 2.0) /
-            sqrt(col("__var"))))
-      .select("n_a", "n_b", "u_a", "u_b", "z")
-  }
+                   groupA: String, groupB: String): DataFrame =
+    mannWhitneyUBy(df, Nil, groupCol, valueCol, groupA, groupB)
 
   /** Per-GROUP Mann–Whitney U — [[mannWhitneyU]] sliced by key columns:
     * the rank-sum LOCATION test per slice, completing the sliced
@@ -4180,7 +3711,6 @@ object Analytics {
   def mannWhitneyUBy(df: DataFrame, keyCols: Seq[String], groupCol: String,
                      valueCol: String, groupA: String, groupB: String)
       : DataFrame = {
-    require(keyCols.nonEmpty, "mannWhitneyUBy needs key columns; use mannWhitneyU")
     val keys = keyCols.map(col)
     val counts = df.filter(col(groupCol).isin(groupA, groupB))
       .groupBy(keys :+ col(valueCol).as("__v"): _*)
@@ -4198,6 +3728,8 @@ object Analytics {
           dec(col("__t"))).as("__ties"))
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
     agg
+      // 2R_a = __r2a (doubled rank-sum); U_a = R_a − n_a(n_a+1)/2, so
+      // U_a = (2R_a − n_a(n_a+1))/2 — one pinned double chain
       .withColumn("u_a",
         (d(col("__r2a")) - d(col("n_a")) * (d(col("n_a")) + 1)) / 2.0)
       .withColumn("u_b",
@@ -4340,44 +3872,8 @@ object Analytics {
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def kruskalWallis(df: DataFrame, groupCol: String, valueCol: String)
-      : DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
-    def d(c: Column) = c.cast("double")
-    val pairs = df.filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
-      .groupBy(col(valueCol).as("__v"), col(groupCol).as("__g"))
-      .agg(count(lit(1)).as("__c"))
-    val vt = pairs.groupBy(col("__v")).agg(sum(col("__c")).as("__t"))
-    val (vtShared, cum) = prefixBeforeShared(vt, "__v", col("__t"))
-    val ties = vtShared.agg(
-      sum(dec(col("__t")) * dec(col("__t")) * dec(col("__t")) -
-        dec(col("__t"))).as("__ties"))
-    val ranked = pairs.join(
-      cum.select(col("__v").as("__kv"), col("__cum"), col("__t")),
-      col("__v") <=> col("__kv"))
-    val g = ranked.groupBy(col("__g"))
-      .agg(sum(col("__c")).as("__ng"),
-        sum(dec(col("__c")) *
-          (lit(2) * col("__cum") + col("__t") + 1)).as("__r2g"))
-    g.select(col("__ng"),
-        struct(col("__g").as("g"),
-          (d(col("__r2g")) * d(col("__r2g")) / d(col("__ng"))).as("bt"))
-          .as("__t"))
-      .agg(count(lit(1)).as("k"), sum(col("__ng")).as("n"),
-        sort_array(collect_list(col("__t"))).as("__gs"))
-      .crossJoin(broadcast(ties))
-      .withColumn("__s", aggregate(col("__gs"), lit(0.0),
-        (acc, x) => acc + x.getField("bt")))
-      // Σ R_g²/n_g = (Σ R2_g²/n_g)/4; correction 1 − Σ(t³−t)/(N³−N)
-      .withColumn("__hraw",
-        lit(12.0) / (d(col("n")) * (d(col("n")) + 1.0)) *
-          (col("__s") / 4.0) - lit(3.0) * (d(col("n")) + 1.0))
-      .withColumn("__corr",
-        lit(1.0) - d(col("__ties")) /
-          (d(col("n")) * d(col("n")) * d(col("n")) - d(col("n"))))
-      .select(col("k"), col("n"),
-        when(col("k") > 1 && col("n") > 1 && col("__corr") > 0,
-          col("__hraw") / col("__corr")).as("h"))
-  }
+      : DataFrame =
+    kruskalWallisBy(df, Nil, groupCol, valueCol)
 
   /** Per-GROUP [[kruskalWallis]] — the k-sample rank screen per slice
     * (per language: did ANY source's length profile shift inside this
@@ -4390,7 +3886,6 @@ object Analytics {
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def kruskalWallisBy(df: DataFrame, keyCols: Seq[String], groupCol: String,
                       valueCol: String): DataFrame = {
-    require(keyCols.nonEmpty, "kruskalWallisBy needs key columns; use kruskalWallis")
     def dec(c: Column) = c.cast("decimal(38,0)")
     def d(c: Column) = c.cast("double")
     val keys = keyCols.map(col)
@@ -4403,30 +3898,25 @@ object Analytics {
     val ties = vtShared.groupBy(keys: _*).agg(
       sum(dec(col("__t")) * dec(col("__t")) * dec(col("__t")) -
         dec(col("__t"))).as("__ties"))
-    def renameKeys(dd: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(dd) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def keyEq(tag: String): Column =
-      keyCols.zipWithIndex.map { case (c, i) =>
-        col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
-    val cumR = renameKeys(cum.select(
-      keys :+ col("__v").as("__kv") :+ col("__cum") :+ col("__t"): _*), "c")
-    val ranked = pairs.join(cumR, keyEq("c") && col("__v") <=> col("__kv"))
+    val cumR = renKeys(cum.select(
+      keys :+ col("__v").as("__kv") :+ col("__cum") :+ col("__t"): _*),
+      keyCols, "c")
+    val ranked = pairs.join(cumR,
+      keyEq(keyCols, "c") && col("__v") <=> col("__kv"))
     val g = ranked.groupBy(keys :+ col("__g"): _*)
       .agg(sum(col("__c")).as("__ng"),
         sum(dec(col("__c")) *
           (lit(2) * col("__cum") + col("__t") + 1)).as("__r2g"))
-    val tiesR = renameKeys(ties, "t")
-    g.select(keys ++ Seq(col("__ng"),
+    joinTotals(g.select(keys ++ Seq(col("__ng"),
         struct(col("__g").as("g"),
           (d(col("__r2g")) * d(col("__r2g")) / d(col("__ng"))).as("bt"))
           .as("__t")): _*)
       .groupBy(keys: _*)
       .agg(count(lit(1)).as("k"), sum(col("__ng")).as("n"),
-        sort_array(collect_list(col("__t"))).as("__gs"))
-      .join(tiesR, keyEq("t"))
+        sort_array(collect_list(col("__t"))).as("__gs")), ties, keyCols)
       .withColumn("__s", aggregate(col("__gs"), lit(0.0),
         (acc, x) => acc + x.getField("bt")))
+      // Σ R_g²/n_g = (Σ R2_g²/n_g)/4; correction 1 − Σ(t³−t)/(N³−N)
       .withColumn("__hraw",
         lit(12.0) / (d(col("n")) * (d(col("n")) + 1.0)) *
           (col("__s") / 4.0) - lit(3.0) * (d(col("n")) + 1.0))
@@ -5362,37 +4852,8 @@ object Analytics {
     * O(|pairs| log) without manufacturing ties the way pre-bucketing
     * would. Output: one row (n, nc, nd, tau_b); all-tied axes give
     * NULL. */
-  def kendallTau(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val pairs = df.groupBy(col(xCol).as("__x"), col(yCol).as("__y"))
-      .agg(count(lit(1)).as("__c"))
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-    val a = pairs.select(col("__x").as("__xa"), col("__y").as("__ya"),
-      col("__c").as("__ca"))
-    val b = pairs.select(col("__x").as("__xb"), col("__y").as("__yb"),
-      col("__c").as("__cb"))
-    val cd = a.join(b, col("__xb") > col("__xa"))
-      .agg(
-        sum(when(col("__yb") > col("__ya"), dec(col("__ca")) * col("__cb"))
-          .otherwise(dec(lit(0)))).as("__nc"),
-        sum(when(col("__yb") < col("__ya"), dec(col("__ca")) * col("__cb"))
-          .otherwise(dec(lit(0)))).as("__nd"))
-    def tieSum(key: String) = pairs.groupBy(col(key))
-      .agg(sum(col("__c")).as("__s"))
-      .agg(sum(dec(col("__s")) * (col("__s") - 1)).as("__t"))
-    val tx = tieSum("__x").select(col("__t").as("__tx"))
-    val ty = tieSum("__y").select(col("__t").as("__ty"))
-    val tot = pairs.agg(sum(col("__c")).as("n"))
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    cd.crossJoin(broadcast(tx)).crossJoin(broadcast(ty))
-      .crossJoin(broadcast(tot))
-      .withColumn("__n0", d(col("n")) * (d(col("n")) - 1) / 2.0)
-      .withColumn("__d1", col("__n0") - d(col("__tx")) / 2.0)
-      .withColumn("__d2", col("__n0") - d(col("__ty")) / 2.0)
-      .select(col("n"), d(col("__nc")).as("nc"), d(col("__nd")).as("nd"),
-        when(col("__d1") > 0 && col("__d2") > 0,
-          (d(col("__nc")) - d(col("__nd"))) /
-            sqrt(col("__d1") * col("__d2"))).as("tau_b"))
-  }
+  def kendallTau(df: DataFrame, xCol: String, yCol: String): DataFrame =
+    kendallTauBy(df, Nil, xCol, yCol)
 
   /** Ordinal-association summary — Goodman–Kruskal γ and BOTH Somers'
     * D directions beside [[kendallTau]]'s τ-b, all from ONE
@@ -5473,21 +4934,18 @@ object Analytics {
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def kendallTauBy(df: DataFrame, keyCols: Seq[String], xCol: String,
                    yCol: String): DataFrame = {
-    require(keyCols.nonEmpty, "kendallTauBy needs key columns; use kendallTau")
     val keys = keyCols.map(col)
     def dec(c: Column) = c.cast("decimal(38,0)")
     def d(c: Column) = c.cast("double")
-    def renameKeys(dv: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(dv) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def keyJoin(tag: String): Column = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
     val pairs = df
       .groupBy(keys :+ col(xCol).as("__x") :+ col(yCol).as("__y"): _*)
       .agg(count(lit(1)).as("__c"))
-    val bSide = renameKeys(pairs.select(keys :+ col("__x").as("__xb") :+
-      col("__y").as("__yb") :+ col("__c").as("__cb"): _*), "b")
-    val cd = pairs.join(bSide, keyJoin("b") && col("__xb") > col("__x"))
+    val bSide = renKeys(pairs.select(keys :+ col("__x").as("__xb") :+
+      col("__y").as("__yb") :+ col("__c").as("__cb"): _*), keyCols, "b")
+    // the strictly-x-ordered self-join is NOT a totals join: it keeps
+    // no broadcast hint (it is |pairs|-sized on both sides)
+    val cd = pairs.join(bSide,
+        keyEq(keyCols, "b") && col("__xb") > col("__x"))
       .groupBy(keys: _*)
       .agg(
         sum(when(col("__yb") > col("__y"), dec(col("__c")) * col("__cb"))
@@ -5498,15 +4956,10 @@ object Analytics {
       .groupBy(keys :+ col(key): _*).agg(sum(col("__c")).as("__s"))
       .groupBy(keys: _*)
       .agg(sum(dec(col("__s")) * (col("__s") - 1)).as(out))
-    val tx = renameKeys(tieSum("__x", "__tx"), "x")
-    val ty = renameKeys(tieSum("__y", "__ty"), "y")
     val tot = pairs.groupBy(keys: _*).agg(sum(col("__c")).as("n"))
-    tot.join(renameKeys(cd, "c"), keyJoin("c"), "left")
-      .drop(keyCols.indices.map(i => s"__c$i"): _*)
-      .join(tx, keyJoin("x"))
-      .drop(keyCols.indices.map(i => s"__x$i"): _*)
-      .join(ty, keyJoin("y"))
-      .drop(keyCols.indices.map(i => s"__y$i"): _*)
+    Seq(tieSum("__x", "__tx"), tieSum("__y", "__ty"))
+      .foldLeft(joinTotals(tot, cd, keyCols, "left"))(
+        joinTotals(_, _, keyCols))
       .withColumn("__n0", d(col("n")) * (d(col("n")) - 1) / 2.0)
       .withColumn("__d1", col("__n0") - d(col("__tx")) / 2.0)
       .withColumn("__d2", col("__n0") - d(col("__ty")) / 2.0)
@@ -5515,6 +4968,51 @@ object Analytics {
         when(col("__d1") > 0 && col("__d2") > 0,
           (d(col("__nc")) - d(col("__nd"))) /
             sqrt(col("__d1") * col("__d2"))).as("tau_b")): _*)
+  }
+
+  /** Runs two independent driver-side constructions (each may launch
+    * Spark jobs) on a two-thread pool and returns both results. Pool
+    * threads inherit the caller's Spark local properties (job group,
+    * description, tags) via InheritableThreadLocal; each side adds its
+    * own job tag on top (a tag, not a job group, so the caller's group
+    * stays in force). BOTH sides are always awaited — no side's jobs
+    * outlive the call. When one side fails, the other side's running
+    * jobs are cancelled (interrupting their tasks) instead of left
+    * running, and the first failure is rethrown with the other side's
+    * error, if any, attached as suppressed. */
+  private[graft] def concurrently[A, B](sc: org.apache.spark.SparkContext)(
+      a: => A, b: => B): (A, B) = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    import scala.util.Try
+    val tag = s"graft-concurrent-${java.util.UUID.randomUUID()}"
+    val first = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    def side[T](name: String, sibling: String, body: => T): Future[T] =
+      Future {
+        sc.addJobTag(s"$tag-$name")
+        sc.setInterruptOnCancel(true)
+        try body
+        catch { case e: Throwable =>
+          first.compareAndSet(null, e)
+          sc.cancelJobsWithTag(s"$tag-$sibling")
+          throw e
+        }
+      }
+    try {
+      val fa = side("a", "b", a)
+      val fb = side("b", "a", b)
+      val ra = Try(Await.result(fa, Duration.Inf))
+      val rb = Try(Await.result(fb, Duration.Inf))
+      val errs = Seq(ra, rb).flatMap(_.failed.toOption)
+      if (errs.isEmpty) (ra.get, rb.get)
+      else {
+        val root = errs.find(_ eq first.get).getOrElse(errs.head)
+        errs.filterNot(_ eq root).foreach(root.addSuppressed)
+        throw root
+      }
+    } finally pool.shutdown()
   }
 
   /** Exact Kendall τ-b at scale — Knight's O(n log n) inversion-count
@@ -5626,19 +5124,9 @@ object Analytics {
     // pair frame (shuffle-file re-fetches — no racing lineage), each
     // pin is its own SQL execution, and values are position-independent
     // (dense ranks from distinct-value tables) — the ONLY effect is
-    // overlapped fixed cost. Pool threads inherit the caller's Spark
-    // local properties (job group/description) via InheritableThreadLocal.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val ((rxShared, rx0), (ryShared, ry0)) = try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val fx = scala.concurrent.Future(rankTable("__x", "__rx"))
-      val fy = scala.concurrent.Future(rankTable("__y", "__ry"))
-      (scala.concurrent.Await.result(fx,
-        scala.concurrent.duration.Duration.Inf),
-        scala.concurrent.Await.result(fy,
-          scala.concurrent.duration.Duration.Inf))
-    } finally pool.shutdown()
+    // overlapped fixed cost.
+    val ((rxShared, rx0), (ryShared, ry0)) = concurrently(spark.sparkContext)(
+      rankTable("__x", "__rx"), rankTable("__y", "__ry"))
     val rx = rx0.withColumnRenamed("__x", "__kx")
     val ry = ry0.withColumnRenamed("__y", "__ky")
     val nx = rxShared.agg(count(lit(1)).as("__nx"))
@@ -5870,26 +5358,8 @@ object Analytics {
     * EAGER: builds on the pinned-execution bridge, so Spark jobs
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
-  def gini(df: DataFrame, valueCol: String, scale: Int = 2): DataFrame = {
-    val counts = df.filter(col(valueCol).isNotNull)
-      .groupBy(col(valueCol).cast(s"decimal(18,$scale)").as("__v"))
-      .agg(count(lit(1)).as("__c"))
-    prefixBefore(counts, "__v", col("__c"))
-      .withColumnRenamed("__cum", "__b")
-      .agg(sum(col("__c")).as("n"),
-        sum(col("__v").cast(s"decimal(20,$scale)") *
-          col("__c").cast("decimal(19,0)") *
-          (lit(2) * col("__b") + col("__c") + 1).cast("decimal(19,0)"))
-          .as("__s1"),
-        sum(col("__v").cast(s"decimal(20,$scale)") *
-          col("__c").cast("decimal(19,0)")).as("__sv"))
-      .withColumn("gini",
-        when(col("__sv").cast("double") =!= 0.0,
-          (col("__s1").cast("double") -
-            (col("n").cast("double") + 1.0) * col("__sv").cast("double")) /
-            (col("n").cast("double") * col("__sv").cast("double"))))
-      .select("n", "gini")
-  }
+  def gini(df: DataFrame, valueCol: String, scale: Int = 2): DataFrame =
+    giniBy(df, Nil, valueCol, scale)
 
   /** Per-GROUP Gini coefficient — [[gini]] sliced by key columns (per
     * domain/language token-mass concentration: one slice collapsing
@@ -5908,7 +5378,6 @@ object Analytics {
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def giniBy(df: DataFrame, keyCols: Seq[String], valueCol: String,
              scale: Int = 2): DataFrame = {
-    require(keyCols.nonEmpty, "giniBy needs key columns; use gini")
     val keys = keyCols.map(col)
     val counts = df.filter(col(valueCol).isNotNull)
       .groupBy(keys :+ col(valueCol).cast(s"decimal(18,$scale)").as("__v"): _*)
@@ -6027,28 +5496,8 @@ object Analytics {
     * All-equal values give exactly T = L = 0 up to the pinned chain.
     * Output: one row (n, n_excluded, mean, theil_t, theil_l). */
   def theilIndex(df: DataFrame, valueCol: String, scale: Int = 2)
-      : DataFrame = {
-    def d(c: Column) = c.cast("double")
-    val v = col(valueCol)
-    val dec28 = (c: Column) => c.cast("decimal(28,12)")
-    df.filter(v.isNotNull)
-      .agg(
-        sum(when(v > 0, 1L).otherwise(0L)).as("n"),
-        sum(when(v <= 0, 1L).otherwise(0L)).as("n_excluded"),
-        sum(when(v > 0, v.cast(s"decimal(18,$scale)"))).as("__s"),
-        sum(when(v > 0, dec28(d(v) * log(d(v)))))
-          .cast("double").as("__sxlx"),
-        sum(when(v > 0, dec28(log(d(v))))).cast("double").as("__slx"))
-      .withColumn("mean",
-        when(col("n") > 0, col("__s").cast("double") / d(col("n"))))
-      .withColumn("theil_t",
-        when(col("n") > 0 && col("mean") > 0,
-          col("__sxlx") / (d(col("n")) * col("mean")) - log(col("mean"))))
-      .withColumn("theil_l",
-        when(col("n") > 0 && col("mean") > 0,
-          log(col("mean")) - col("__slx") / d(col("n"))))
-      .select("n", "n_excluded", "mean", "theil_t", "theil_l")
-  }
+      : DataFrame =
+    theilIndexBy(df, Nil, valueCol, scale)
 
   /** Per-GROUP [[theilIndex]] — the within-slice inequality profile
     * (per-domain token-mass inequality, per-language spend
@@ -6058,7 +5507,6 @@ object Analytics {
     * theil_l). */
   def theilIndexBy(df: DataFrame, keyCols: Seq[String], valueCol: String,
                    scale: Int = 2): DataFrame = {
-    require(keyCols.nonEmpty, "theilIndexBy needs key columns; use theilIndex")
     def d(c: Column) = c.cast("double")
     val v = col(valueCol)
     val dec28 = (c: Column) => c.cast("decimal(28,12)")
@@ -6145,30 +5593,8 @@ object Analytics {
     * effective_k). */
   def herfindahl(df: DataFrame, groupCol: String,
                  weightCol: Option[String] = None, scale: Int = 2)
-      : DataFrame = {
-    def d(c: Column) = c.cast("double")
-    val dec28 = (c: Column) => c.cast("decimal(28,12)")
-    val mass = weightCol match {
-      case Some(w) => sum(col(w).cast(s"decimal(18,$scale)"))
-        .cast("decimal(38,6)").as("__m")
-      case None => count(lit(1)).cast("decimal(38,6)").as("__m")
-    }
-    val g = df.filter(col(groupCol).isNotNull &&
-        weightCol.map(w => col(w) > 0).getOrElse(lit(true)))
-      .groupBy(col(groupCol)).agg(mass)
-    val tot = g.agg(sum(col("__m")).as("__t"))
-    g.crossJoin(broadcast(tot))
-      .agg(count(lit(1)).as("k"),
-        sum(dec28((d(col("__m")) / d(col("__t"))) *
-          (d(col("__m")) / d(col("__t")))))
-          .cast("double").as("hhi"))
-      .withColumn("hhi_norm",
-        when(col("k") > 1,
-          (col("hhi") - lit(1.0) / d(col("k"))) /
-            (lit(1.0) - lit(1.0) / d(col("k")))))
-      .withColumn("effective_k",
-        when(col("hhi") > 0, lit(1.0) / col("hhi")))
-  }
+      : DataFrame =
+    herfindahlBy(df, Nil, groupCol, weightCol, scale)
 
   /** Per-SLICE [[herfindahl]] — concentration within each key group
     * (per-language domain concentration: one language collapsing onto
@@ -6181,7 +5607,6 @@ object Analytics {
   def herfindahlBy(df: DataFrame, keyCols: Seq[String], groupCol: String,
                    weightCol: Option[String] = None, scale: Int = 2)
       : DataFrame = {
-    require(keyCols.nonEmpty, "herfindahlBy needs key columns; use herfindahl")
     def d(c: Column) = c.cast("double")
     val dec28 = (c: Column) => c.cast("decimal(28,12)")
     val keys = keyCols.map(col)
@@ -6193,15 +5618,8 @@ object Analytics {
     val g = df.filter(col(groupCol).isNotNull &&
         weightCol.map(w => col(w) > 0).getOrElse(lit(true)))
       .groupBy(keys :+ col(groupCol): _*).agg(mass)
-    def renameKeys(df2: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(df2) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def keyJoin(tag: String): Column = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
-    val tot = renameKeys(g.groupBy(keys: _*)
-      .agg(sum(col("__m")).as("__t")), "t")
-    g.join(tot, keyJoin("t"))
-      .drop(keyCols.indices.map(i => s"__t$i"): _*)
+    val tot = g.groupBy(keys: _*).agg(sum(col("__m")).as("__t"))
+    joinTotals(g, tot, keyCols)
       .groupBy(keys: _*)
       .agg(count(lit(1)).as("k"),
         sum(dec28((d(col("__m")) / d(col("__t"))) *
@@ -6513,39 +5931,8 @@ object Analytics {
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def adTest(df: DataFrame, groupCol: String, valueCol: String,
-             groupA: String, groupB: String): DataFrame = {
-    def d(c: Column) = c.cast("double")
-    val counts = df.filter(col(groupCol).isin(groupA, groupB))
-      .groupBy(col(valueCol).as("__v"))
-      .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-    val (cShared, cumPre) = prefixBeforeMultiByShared(counts, Seq.empty,
-      "__v", Seq("a" -> col("__ca"), "b" -> col("__cb")))
-    val cum = cumPre
-      .crossJoin(broadcast(cShared.agg(sum(col("__ca")).as("__na"),
-        sum(col("__cb")).as("__nb"))))
-    val nD = d(col("__na")) + d(col("__nb"))
-    val l = d(col("__ca")) + d(col("__cb"))
-    val b = d(col("__cum_a")) + d(col("__cum_b")) + l / 2.0
-    val den = b * (nD - b) - nD * l / 4.0
-    def t(cumI: Column, cI: Column, nI: Column): Column = {
-      val m = d(cumI) + d(cI) / 2.0
-      val z = nD * m - b * d(nI)
-      l / nD * (z * z) / den / d(nI)
-    }
-    val term = when(col("__ca") + col("__cb") < col("__na") + col("__nb"),
-      (t(col("__cum_a"), col("__ca"), col("__na")) +
-        t(col("__cum_b"), col("__cb"), col("__nb")))
-        .cast("decimal(28,12)"))
-    cum.withColumn("__t", term)
-      .groupBy(col("__na").as("n_a"), col("__nb").as("n_b"))
-      .agg(count(lit(1)).as("__rows"), sum(col("__t")).as("__s"),
-        count(col("__t")).as("__nonnull"))
-      .withColumn("a2", when(col("__nonnull") === col("__rows"),
-        (d(col("n_a")) + d(col("n_b")) - 1.0) /
-          (d(col("n_a")) + d(col("n_b"))) * d(col("__s"))))
-      .select("n_a", "n_b", "a2")
-  }
+             groupA: String, groupB: String): DataFrame =
+    adTestBy(df, Nil, groupCol, valueCol, groupA, groupB)
 
   /** Per-GROUP [[adTest]] — the sliced tail-weighted drift gauge
     * (which SLICE's tails moved: the AD member of the per-slice family
@@ -6563,25 +5950,17 @@ object Analytics {
   def adTestBy(df: DataFrame, keyCols: Seq[String], groupCol: String,
                valueCol: String, groupA: String, groupB: String)
       : DataFrame = {
-    require(keyCols.nonEmpty, "adTestBy needs key columns; use adTest")
     def d(c: Column) = c.cast("double")
     val keys = keyCols.map(col)
-    def kJoin(tag: String): Column = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
-    def kRename(dd: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(dd) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
     val counts = df.filter(col(groupCol).isin(groupA, groupB))
       .groupBy(keys :+ col(valueCol).as("__v"): _*)
       .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
         sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
     val (cShared, cumPre) = prefixBeforeMultiByShared(counts, keyCols,
       "__v", Seq("a" -> col("__ca"), "b" -> col("__cb")))
-    val tot = kRename(cShared.groupBy(keys: _*)
-      .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb")), "t")
-    val cum = cumPre
-      .join(tot, kJoin("t"))
-      .drop(keyCols.indices.map(i => s"__t$i"): _*)
+    val cum = joinTotals(cumPre, cShared.groupBy(keys: _*)
+      .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb")),
+      keyCols)
     val nD = d(col("__na")) + d(col("__nb"))
     val l = d(col("__ca")) + d(col("__cb"))
     val b = d(col("__cum_a")) + d(col("__cum_b")) + l / 2.0
@@ -7032,15 +6411,13 @@ object Analytics {
 
   def mcNemar(df: DataFrame, aCorrect: Column, bCorrect: Column)
       : DataFrame =
-    mcNemarChain(df.agg(mcNemarAggs(aCorrect, bCorrect).head,
-      mcNemarAggs(aCorrect, bCorrect).tail: _*))
+    mcNemarBy(df, Nil, aCorrect, bCorrect)
 
   /** Per-GROUP [[mcNemar]] — the sliced paired comparison (does B beat
     * A on every language, or only in aggregate?). Output: key columns
     * + the same row. */
   def mcNemarBy(df: DataFrame, keyCols: Seq[String], aCorrect: Column,
                 bCorrect: Column): DataFrame = {
-    require(keyCols.nonEmpty, "mcNemarBy needs key columns; use mcNemar")
     mcNemarChain(df.groupBy(keyCols.map(col): _*)
       .agg(mcNemarAggs(aCorrect, bCorrect).head,
         mcNemarAggs(aCorrect, bCorrect).tail: _*))
@@ -7061,8 +6438,7 @@ object Analytics {
     * (n, mean_diff, sd_diff, t, dof). */
   def pairedT(df: DataFrame, xCol: String, yCol: String,
               scale: Int = 2): DataFrame =
-    pairedTChain(df.agg(pairedTAggs(xCol, yCol, scale).head,
-      pairedTAggs(xCol, yCol, scale).tail: _*))
+    pairedTBy(df, Nil, xCol, yCol, scale)
 
   /** Per-GROUP [[pairedT]] — the sliced paired comparison. Output: key
     * columns + the same row.
@@ -7071,7 +6447,6 @@ object Analytics {
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def pairedTBy(df: DataFrame, keyCols: Seq[String], xCol: String,
                 yCol: String, scale: Int = 2): DataFrame = {
-    require(keyCols.nonEmpty, "pairedTBy needs key columns; use pairedT")
     pairedTChain(df.groupBy(keyCols.map(col): _*)
       .agg(pairedTAggs(xCol, yCol, scale).head,
         pairedTAggs(xCol, yCol, scale).tail: _*))
@@ -7122,44 +6497,8 @@ object Analytics {
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def wilcoxonSignedRank(df: DataFrame, xCol: String, yCol: String)
-      : DataFrame = {
-    def d(c: Column) = c.cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
-    val diff = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
-      .select((d(col(xCol)) - d(col(yCol))).as("__d"))
-    val zeroRow = diff.agg(
-      sum(when(col("__d") === 0.0, 1L).otherwise(0L)).as("n_zero"))
-    val counts = diff.filter(col("__d") =!= 0.0)
-      .groupBy(abs(col("__d")).as("__ad"))
-      .agg(count(lit(1)).as("__c"),
-        sum(when(col("__d") > 0, 1L).otherwise(0L)).as("__cp"))
-    val (shared, cum) = prefixBeforeShared(counts, "__ad", col("__c"))
-    val tot = shared.agg(sum(col("__c")).as("n"),
-      sum(dec(col("__c")) * col("__c") * col("__c") - col("__c"))
-        .as("__ties"))
-    val wRow = cum
-      .agg(sum(dec(col("__cp")) *
-        (lit(2) * col("__cum") + col("__c") + 1)).as("__w2p"))
-    val base = zeroRow
-      .join(broadcast(tot), lit(true), "left")
-      .join(broadcast(wRow), lit(true), "left")
-      .withColumn("n", coalesce(col("n"), lit(0L)))
-      .withColumn("n_zero", coalesce(col("n_zero"), lit(0L)))
-      .withColumn("w_plus",
-        coalesce(d(col("__w2p")) / 2.0, lit(0.0)))
-      .withColumn("w_minus",
-        d(col("n")) * (d(col("n")) + 1.0) / 2.0 - col("w_plus"))
-    base
-      .withColumn("__var",
-        d(col("n")) * (d(col("n")) + 1.0) *
-          (lit(2.0) * d(col("n")) + 5.0) / 24.0 -
-          coalesce(d(col("__ties")), lit(0.0)) / 48.0)
-      .withColumn("z", when(col("__var") > 0,
-        (col("w_plus") - d(col("n")) * (d(col("n")) + 1.0) / 4.0) /
-          sqrt(col("__var"))))
-      .select(col("n"), col("n_zero"), col("w_plus"), col("w_minus"),
-        col("z"))
-  }
+      : DataFrame =
+    wilcoxonSignedRankBy(df, Nil, xCol, yCol)
 
   /** Per-GROUP [[wilcoxonSignedRank]] — the sliced paired rank test
     * (did the pipeline change move THIS language's scores?): the rank
@@ -7174,18 +6513,9 @@ object Analytics {
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def wilcoxonSignedRankBy(df: DataFrame, keyCols: Seq[String],
                            xCol: String, yCol: String): DataFrame = {
-    require(keyCols.nonEmpty,
-      "wilcoxonSignedRankBy needs key columns; use wilcoxonSignedRank")
     def d(c: Column) = c.cast("double")
     def dec(c: Column) = c.cast("decimal(38,0)")
     val keys = keyCols.map(col)
-    def kJoin(tag: String): Column = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
-    def kRename(dd0: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(dd0) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def kDrop(dd0: DataFrame, tag: String): DataFrame =
-      dd0.drop(keyCols.indices.map(i => s"__$tag$i"): _*)
     val diff = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(keys :+ (d(col(xCol)) - d(col(yCol))).as("__d"): _*)
     val zeroRow = diff.groupBy(keys: _*).agg(
@@ -7196,17 +6526,19 @@ object Analytics {
         sum(when(col("__d") > 0, 1L).otherwise(0L)).as("__cp"))
     val (shared, cum) = prefixBeforeByShared(counts, keyCols, "__ad",
       col("__c"))
-    val tot = kRename(shared.groupBy(keys: _*)
+    val tot = shared.groupBy(keys: _*)
       .agg(sum(col("__c")).as("n"),
         sum(dec(col("__c")) * col("__c") * col("__c") - col("__c"))
-          .as("__ties")), "t")
-    val wRow = kRename(cum.groupBy(keys: _*)
+          .as("__ties"))
+    val wRow = cum.groupBy(keys: _*)
       .agg(sum(dec(col("__cp")) *
-        (lit(2) * col("__cum") + col("__c") + 1)).as("__w2p")), "w")
-    kDrop(kDrop(
-      zeroRow.join(tot, kJoin("t"), "left"), "t")
-        .join(wRow, kJoin("w"), "left"), "w")
+        (lit(2) * col("__cum") + col("__c") + 1)).as("__w2p"))
+    // the zero-count row is the group spine: a group whose differences
+    // are all zero (and, with no keys, empty input) still reports
+    joinTotals(joinTotals(zeroRow, tot, keyCols, "left"), wRow, keyCols,
+        "left")
       .withColumn("n", coalesce(col("n"), lit(0L)))
+      .withColumn("n_zero", coalesce(col("n_zero"), lit(0L)))
       .withColumn("w_plus", coalesce(d(col("__w2p")) / 2.0, lit(0.0)))
       .withColumn("w_minus",
         d(col("n")) * (d(col("n")) + 1.0) / 2.0 - col("w_plus"))

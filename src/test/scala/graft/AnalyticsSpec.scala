@@ -6363,4 +6363,97 @@ class AnalyticsSpec extends SparkSpec {
         "a", "b").collect().map(_.toSeq).toSeq
     }
   }
+
+  // ---- the key-less path of the By-family: every global below is its
+  // XBy with no keys, so these pin the two shapes where a grouped and a
+  // global aggregate part ways — empty input (a global aggregate still
+  // emits its one row) and an all-NULL key column (one NULL slice that
+  // must equal the global statistic).
+
+  private def edgeCases(name: String,
+      global: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      keyed: (org.apache.spark.sql.DataFrame, Seq[String]) =>
+        org.apache.spark.sql.DataFrame,
+      data: org.apache.spark.sql.DataFrame,
+      emptyRow: Seq[Any]): Unit = {
+    val empty = data.limit(0)
+    assert(global(empty).collect().map(_.toSeq).toSeq == Seq(emptyRow),
+      s"$name: the global form on empty input")
+    assert(keyed(empty.withColumn("slice", lit("s")), Seq("slice")).isEmpty,
+      s"$name: no slice exists on empty input")
+    val nullKey = data.withColumn("slice", lit(null).cast("string"))
+    val by = keyed(nullKey, Seq("slice")).collect()
+    assert(by.length == 1 && by.head.isNullAt(0),
+      s"$name: an all-NULL key is ONE slice: ${by.toSeq}")
+    assert(by.head.toSeq.tail == global(data).collect().head.toSeq,
+      s"$name: the NULL slice equals the global statistic")
+  }
+
+  test("key-less edge cases: psi / jsDivergence / hellingerDistance on " +
+    "empty input emit the n_a = n_b = 0 row; an all-NULL key slice " +
+    "equals the global form") {
+    val df = Seq(("a", 1.0), ("a", 2.5), ("a", 9.0), ("b", 2.0), ("b", 7.5),
+      ("b", 7.6), ("a", -3.0), ("b", 12.0)).toDF("g", "v")
+    edgeCases("psi", Analytics.psi(_, "g", "v", "a", "b", 0.0, 10.0, 4),
+      Analytics.psiBy(_, _, "g", "v", "a", "b", 0.0, 10.0, 4), df,
+      Seq(0L, 0L, 0.0))
+    edgeCases("jsDivergence",
+      Analytics.jsDivergence(_, "g", "v", "a", "b", 0.0, 10.0, 4),
+      Analytics.jsDivergenceBy(_, _, "g", "v", "a", "b", 0.0, 10.0, 4), df,
+      Seq(0L, 0L, 0.0))
+    // four empty bins with shares 1/4 each: bc = 4 · 0.25 = 1, h = 0
+    edgeCases("hellingerDistance",
+      Analytics.hellingerDistance(_, "g", "v", "a", "b", 0.0, 10.0, 4),
+      Analytics.hellingerDistanceBy(_, _, "g", "v", "a", "b", 0.0, 10.0, 4),
+      df, Seq(0L, 0L, 1.0, 0.0))
+  }
+
+  test("key-less edge cases: kendallTau / wilcoxonSignedRank / " +
+    "categoricalProfile / herfindahl on empty input and an all-NULL key") {
+    val xy = Seq((1, 2), (2, 1), (3, 3), (3, 4), (4, 4), (5, 2))
+      .toDF("x", "y")
+    edgeCases("kendallTau", Analytics.kendallTau(_, "x", "y"),
+      Analytics.kendallTauBy(_, _, "x", "y"), xy, Seq(null, null, null, null))
+    val paired = Seq((1.0, 1.0), (2.0, 3.5), (4.0, 1.0), (3.0, 3.0),
+      (7.0, 2.0), (0.5, 2.0)).toDF("x", "y")
+    edgeCases("wilcoxonSignedRank",
+      Analytics.wilcoxonSignedRank(_, "x", "y"),
+      Analytics.wilcoxonSignedRankBy(_, _, "x", "y"), paired,
+      Seq(0L, 0L, 0.0, 0.0, null))
+    val cats = Seq("en", "en", "de", "fr", "en", null).toDF("c")
+    edgeCases("categoricalProfile", Analytics.categoricalProfile(_, "c"),
+      Analytics.categoricalProfileBy(_, _, "c"), cats,
+      Seq(null, 0L, null, null, null))
+    val hosts = Seq(("h1", 2.0), ("h1", 1.0), ("h2", 3.0), ("h3", 0.5))
+      .toDF("h", "w")
+    edgeCases("herfindahl", Analytics.herfindahl(_, "h", Some("w")),
+      Analytics.herfindahlBy(_, _, "h", Some("w")), hosts,
+      Seq(0L, null, null, null))
+  }
+
+  test("concurrently: one side failing cancels the other side's Spark " +
+    "jobs, both sides are awaited, and both errors surface") {
+    ConcurrentlyDoll.reset()
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      Analytics.concurrently(spark.sparkContext)(
+        { ConcurrentlyDoll.started.await(); throw new IllegalStateException("side a") },
+        spark.range(0, 2, 1, 2).foreach { _ =>
+          ConcurrentlyDoll.started.countDown(); Thread.sleep(120000L) })
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage == "side a")
+    assert(e.getSuppressed.length == 1,
+      "the cancelled sibling's own error must surface beside the cause")
+    assert(secs < 60.0, s"the sibling's job ran on for $secs s after the failure")
+    // and a clean pair returns both results
+    assert(Analytics.concurrently(spark.sparkContext)(1, "two") == (1, "two"))
+  }
+}
+
+/** Cross-thread latch for the `concurrently` doll: local-mode tasks run
+  * in the test JVM, so a task can signal the driver-side thunk. */
+private object ConcurrentlyDoll {
+  @volatile var started = new java.util.concurrent.CountDownLatch(1)
+  def reset(): Unit = started = new java.util.concurrent.CountDownLatch(1)
 }

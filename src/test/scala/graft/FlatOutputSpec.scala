@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Registry-wide FLAT-OUTPUT lint — the driver-gate contract the q199
@@ -29,20 +30,47 @@ class FlatOutputSpec extends SparkSpec {
     case _ => true
   }
 
+  /** The q462 incident (rounds 19-20): pandas reads a DECIMAL parquet
+    * column as `Decimal` objects while DuckDB's `.df()` returns the
+    * same column as float64, so the driver's hash differs even when
+    * every value is equal. Registry outputs quantize through a decimal
+    * cast and emit DOUBLE (the `SparkEntry` header convention). */
+  private def isDecimal(dt: DataType): Boolean = dt.isInstanceOf[DecimalType]
+
+  /** (column, type, rule) for every output column that breaks the
+    * driver's pandas oracle compare. */
+  private def offenders(schema: StructType): Seq[(String, String, String)] =
+    schema.fields.toSeq.collect {
+      case f if !isAtomic(f.dataType) => (f.name, f.dataType.sql, "nested")
+      case f if isDecimal(f.dataType) => (f.name, f.dataType.sql, "decimal")
+    }
+
   test("every registry query emits only atomic (driver-hashable) columns") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         val schema =
           try fn(spark, sf).schema
           catch { case e: Throwable =>
             fail(s"$name failed to build at sf0.001: ${e.getMessage}", e)
           }
-        schema.fields.collect {
-          case f if !isAtomic(f.dataType) => (name, f.name, f.dataType.sql)
-        }
+        offenders(schema).map { case (c, t, rule) => (name, c, t, rule) }
     }
-    assert(offenders.isEmpty,
-      s"nested output columns break the driver's pandas oracle compare:\n" +
-        offenders.map { case (q, c, t) => s"  $q.$c: $t" }.mkString("\n"))
+    assert(bad.isEmpty,
+      s"nested or decimal output columns break the driver's pandas " +
+        "oracle compare (reduce nested payloads to scalars; cast " +
+        "decimals to double):\n" +
+        bad.map { case (q, c, t, r) => s"  $q.$c: $t ($r)" }.mkString("\n"))
+  }
+
+  test("doll: the rule flags a DECIMAL output column and a nested one, " +
+    "and passes their double/scalar replacements") {
+    import spark.implicits._
+    val df = Seq((1L, 2.5)).toDF("id", "x")
+      .select(col("id"), col("x").cast("decimal(28,4)").as("q"),
+        array(col("x")).as("arr"),
+        col("x").cast("decimal(28,4)").cast("double").as("q_ok"))
+    assert(offenders(df.schema) == Seq(
+      ("q", "DECIMAL(28,4)", "decimal"), ("arr", "ARRAY<DOUBLE>", "nested")))
+    assert(offenders(df.select("id", "q_ok").schema).isEmpty)
   }
 }

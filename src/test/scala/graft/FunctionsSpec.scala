@@ -132,6 +132,35 @@ class FunctionsSpec extends SparkSpec {
       .head().getDouble(0) == 0.0)
   }
 
+  test("FixedPoint.sumFixedDecimal: a total past decimal(18,2) but " +
+    "inside the long tripwire raises in both ANSI modes, never NULL") {
+    import graft.functions.FixedPoint
+    import spark.implicits._
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    // total 1.2e16 > 10^16: unscaled 1.2e18 fits a long (n·max =
+    // 1.2e18 < 2^63, so sumFixed's tripwire passes) but not
+    // decimal(18,2), whose ANSI-off cast would return NULL
+    val big = Seq(6.0e15, 6.0e15).toDF("v")
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    for (ansi <- Seq("false", "true")) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try {
+        val e = intercept[Exception] {
+          big.agg(FixedPoint.sumFixedDecimal(col("v"), 2, 18)).head()
+        }
+        assert(messages(e).exists(m => m.contains("sumFixedDecimal") ||
+            m.contains("NUMERIC_VALUE_OUT_OF_RANGE")),
+          s"ansi=$ansi: expected a loud failure, got: ${messages(e).mkString(" | ")}")
+        // just inside the bound the exact decimal comes back
+        val ok = Seq(4.0e15, 5.0e15).toDF("v")
+          .agg(FixedPoint.sumFixedDecimal(col("v"), 2, 18)).head()
+        assert(ok.getDecimal(0).compareTo(
+          new java.math.BigDecimal("9000000000000000.00")) == 0)
+      } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+    }
+  }
+
   test("FixedPoint: ANSI-off snap saturation trips loudly (round-9 hole)") {
     import graft.functions.FixedPoint
     import spark.implicits._
@@ -3155,12 +3184,11 @@ class FunctionsSpec extends SparkSpec {
     assert(r.length == 3)
     assert(r.map(_.getAs[Long]("id")).toSeq == model.map(_._1))
     r.zip(model).foreach { case (row, (_, ell, key)) =>
-      // emitted log_weight is quantized at the key's decimal(28,4) grid
+      // both columns are quantized at the decimal(28,4) grid, emitted
+      // as the double nearest the quantized value
       val ellQ = BigDecimal(ell).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-      assert(row.getAs[java.math.BigDecimal]("log_weight")
-        .compareTo(ellQ.bigDecimal) == 0)
-      assert(row.getAs[java.math.BigDecimal]("key")
-        .compareTo(key.bigDecimal) == 0)
+      assert(row.getAs[Double]("log_weight") == ellQ.toDouble)
+      assert(row.getAs[Double]("key") == key.toDouble)
     }
     // the ineligible one-token doc never surfaces even at k = 99
     val all = Sampling.dsirSample(raw, "doc_id", "text", tgt, "t",

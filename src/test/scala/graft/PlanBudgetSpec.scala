@@ -135,6 +135,70 @@ class PlanBudgetSpec extends SparkSpec {
     }
   }
 
+  /** Plan shape of every registry query that calls one of the global
+    * statistics now written as its `XBy` with no keys (ksTest = ksTestBy
+    * with `Nil`, …): (shuffles, broadcasts, unbounded cartesians,
+    * unbounded unpartitioned windows), measured under the same regime.
+    * The key-less path must keep the broadcast of every one-row total
+    * (the `joinTotals` hint) and add no exchange. The binned
+    * divergences (q226/q287/q352) need no bin-spine join, hence 2
+    * shuffles where the former global bodies paid 3, and
+    * cramerVonMises needs no second one-row join (2 broadcasts, was
+    * 3); every other count equals the former global body's. The four
+    * cartesians were there before: kendallTau's strictly-x-ordered
+    * self-join (its low-cardinality contract), mutualInformation's
+    * pairing of three one-row aggregates (q227/q266 — the walker does
+    * not see through the first cartesian), and q257's cross join of
+    * its exact and sketch KS rows (the exact row is a grouped
+    * aggregate, which the walker does not count as one row). */
+  private case class Twin(shuffles: Int, broadcasts: Int, cartesians: Int,
+                          windows: Int)
+  private val keylessPlans: Map[String, Twin] = Map(
+    "q198_welch_ttest" -> Twin(1, 0, 0, 0),
+    "q217_ks_test" -> Twin(1, 5, 0, 0),
+    "q223_spearman" -> Twin(5, 2, 0, 0),
+    "q226_psi_drift" -> Twin(2, 0, 0, 1),
+    "q227_mutual_info" -> Twin(22, 3, 1, 0),
+    "q228_cramers_v" -> Twin(12, 1, 0, 0),
+    "q229_mann_whitney" -> Twin(0, 1, 0, 0),
+    "q238_gini" -> Twin(0, 1, 0, 0),
+    "q244_kendall_tau" -> Twin(21, 3, 1, 0),
+    "q257_ks_sketch_compressed" -> Twin(1, 5, 1, 0),
+    "q266_theils_u" -> Twin(22, 3, 1, 0),
+    "q281_wasserstein1" -> Twin(5, 2, 0, 0),
+    "q283_welch_t_drift" -> Twin(1, 0, 0, 0),
+    "q287_js_divergence" -> Twin(2, 0, 0, 1),
+    "q290_cramer_von_mises" -> Twin(0, 2, 0, 0),
+    "q292_cliffs_delta" -> Twin(0, 1, 0, 0),
+    "q303_prop_test" -> Twin(1, 0, 0, 0),
+    "q305_odds_ratio" -> Twin(1, 0, 0, 0),
+    "q308_categorical_profile" -> Twin(4, 1, 0, 0),
+    "q313_kruskal_wallis" -> Twin(5, 2, 0, 0),
+    "q333_mcnemar" -> Twin(1, 0, 0, 0),
+    "q345_ad_test" -> Twin(1, 2, 0, 0),
+    "q348_cohen_d" -> Twin(1, 0, 0, 0),
+    "q352_hellinger" -> Twin(2, 0, 0, 1),
+    "q355_paired_t" -> Twin(1, 0, 0, 0),
+    "q357_wilcoxon" -> Twin(1, 3, 0, 0),
+    "q364_energy" -> Twin(1, 2, 0, 0),
+    "q366_theil" -> Twin(1, 0, 0, 0),
+    "q369_hhi" -> Twin(4, 1, 0, 0),
+    "q434_srm" -> Twin(1, 0, 0, 0))
+
+  test("key-less By path: every collapsed global's registry query keeps " +
+    "its measured shuffle, broadcast, cartesian and window counts") {
+    PlanWalk.withNoAutoBroadcast(spark) {
+      val bad = keylessPlans.toSeq.sortBy(_._1).flatMap { case (name, want) =>
+        val p = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
+        val got = Twin(PlanWalk.shuffleCount(p), PlanWalk.broadcastCount(p),
+          PlanWalk.unboundedCartesians(p).size,
+          PlanWalk.unboundedUnpartWindows(p).size)
+        if (got == want) None else Some(s"$name: $got, expected $want")
+      }
+      assert(bad.isEmpty, bad.mkString("\n  ", "\n  ", ""))
+    }
+  }
+
   // ---- dolls: each detector demonstrated red on the failure shape it
   // exists to catch, and green on the corrected shape.
 

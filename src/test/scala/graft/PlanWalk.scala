@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, BroadcastQueryStageExec, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.WindowExec
 
@@ -39,6 +39,15 @@ object PlanWalk {
   def shuffleCount(p: SparkPlan): Int = allNodes(p).count {
     case _: ShuffleExchangeExec => true
     case s: ShuffleQueryStageExec => !s.plan.isInstanceOf[ReusedExchangeExec]
+    case _ => false
+  }
+
+  /** Broadcast exchanges the plan pays for (excluding reused ones) —
+    * not part of the shuffle budget, but a dropped or added one-row
+    * totals hint shows here. */
+  def broadcastCount(p: SparkPlan): Int = allNodes(p).count {
+    case _: BroadcastExchangeExec => true
+    case s: BroadcastQueryStageExec => !s.plan.isInstanceOf[ReusedExchangeExec]
     case _ => false
   }
 
