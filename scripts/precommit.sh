@@ -8,14 +8,16 @@
 #   scripts/precommit.sh graft.AnalyticsSpec graft.FunctionsSpec
 #                                        # compile + FlatOutputSpec +
 #                                        # the touched specs
-#   scripts/precommit.sh --full          # the whole suite (session end)
+#   scripts/precommit.sh --full          # the whole suite (session end),
+#                                        # with each test's and suite's
+#                                        # wall time (ScalaTest -oD)
 #
 # Every session's LAST commit must follow a --full run; record the run
 # in NOTES_r{N}.md.
 set -e
 cd "$(dirname "$0")/.."
 if [ "$1" = "--full" ]; then
-  exec sbt -batch test
+  exec sbt -batch 'set Test / testOptions += Tests.Argument("-oD")' test
 fi
 SPECS="graft.FlatOutputSpec $*"
 exec sbt -batch compile "testOnly $SPECS"

@@ -618,7 +618,7 @@ object StressBench {
       // 90% of 50M all-distinct values (the per-language profile where
       // one language is most of the corpus). A per-key window would
       // serialize the hot group's ~45M distinct values through ONE
-      // task; the keyed prefix (prefixBeforeMultiBy — range exchange on
+      // task; the keyed prefix (prefixBefore — range exchange on
       // (group, value) compound) splits it across slices, so this arm
       // must land near the un-keyed pctl_distinct_50m above.
       "pctl_by_hotslice_50m" -> (() => graft.operators.Aggregations.quantilesContBy(

@@ -5,6 +5,7 @@ import org.apache.spark.ml.feature.{Imputer, OneHotEncoder, StandardScaler, Stri
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{NumericType, StringType}
+import graft.operators.Analytics.{dropTag, joinTotals, keyEq, renKeys}
 
 /** ML featurization (reference `ML.schema` / `ML.featuremat`,
   * `src/ml.jl:9-178`): per-column stats → standardized continuous +
@@ -60,12 +61,37 @@ object ML {
     * scale. Hash-partitioning on the id (not round-robin) avoids the
     * sort-before-repartition pass and is retry-deterministic
     * (guide §2.5); values are unchanged — every downstream aggregate
-    * is order-independent by the fixed-point/decimal contracts. */
+    * is order-independent by the fixed-point/decimal contracts. The
+    * input parallelism is read from the PLAN, never by executing it:
+    * `df.rdd.getNumPartitions` would, under AQE, run every upstream
+    * exchange as a throwaway job at construction time. */
   private def spreadToCores(df: DataFrame, keyCol: String): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target)
+    if (plannedPartitions(df.queryExecution.executedPlan) < target)
       df.repartition(target, col(keyCol))
     else df
+  }
+
+  /** Output partition count of a physical plan, without executing it:
+    * AQE's initial plan (before any runtime coalescing), then any node
+    * with a known partitioning (an exchange, a single partition) gives
+    * its own count, a leaf its RDD's split count (file splits for a
+    * scan — computed on the driver, no job), a union the sum of its
+    * children, and any other node its widest child. */
+  private def plannedPartitions(
+      p: org.apache.spark.sql.execution.SparkPlan): Int = {
+    import org.apache.spark.sql.execution._
+    p match {
+      case a: adaptive.AdaptiveSparkPlanExec => plannedPartitions(a.inputPlan)
+      case u: UnionExec => u.children.map(plannedPartitions).sum
+      case _ if p.outputPartitioning.numPartitions > 0 =>
+        p.outputPartitioning.numPartitions
+      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+      case _ if p.children.isEmpty =>
+        if (p.supportsColumnar) p.executeColumnar().getNumPartitions
+        else p.execute().getNumPartitions
+      case _ => p.children.map(plannedPartitions).max
+    }
   }
 
   private def contCatOf(df: DataFrame, hints: Map[String, Hint]): (Seq[String], Seq[String]) = {
@@ -339,32 +365,15 @@ object ML {
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def aucRoc(df: DataFrame, scoreCol: String,
-             label: org.apache.spark.sql.Column): DataFrame = {
-    val counts = df
-      .groupBy(col(scoreCol).as("__s"))
-      .agg(sum(when(label, 1L).otherwise(0L)).as("__pos"),
-        count(lit(1)).as("__tot"))
-    graft.operators.Analytics.prefixBefore(counts, "__s", col("__tot"))
-      .withColumnRenamed("__cum", "__before")
-      .agg(
-        sum(col("__pos")).as("n_pos"),
-        (sum(col("__tot")) - sum(col("__pos"))).as("n_neg"),
-        sum(col("__pos").cast("decimal(38,0)") *
-          (lit(2) * col("__before") + col("__tot") + 1)).as("__r2"))
-      .withColumn("auc",
-        when(col("n_pos") > 0 && col("n_neg") > 0,
-          (col("__r2") - col("n_pos").cast("decimal(38,0)") * (col("n_pos") + 1))
-            .cast("double") /
-            (lit(2.0) * col("n_pos").cast("double") * col("n_neg").cast("double"))))
-      .drop("__r2")
-  }
+             label: org.apache.spark.sql.Column): DataFrame =
+    aucRocBy(df, Nil, scoreCol, label)
 
   /** Per-GROUP exact AUC-ROC — [[aucRoc]] sliced by key columns (per
     * language, per source: a quality filter that ranks well pooled can
     * rank poorly inside one slice, and the pooled AUC hides it). Same
     * integer rank-sum model with average-rank ties, but the
     * distinct-score cumulative rides the KEYED distributed prefix
-    * ([[graft.operators.Analytics.prefixBeforeMultiBy]] — a hot slice's
+    * ([[graft.operators.Analytics.prefixBefore]] — a hot slice's
     * score set splits across range partitions instead of serializing
     * through one window task) and the rank sums aggregate per group.
     * Single-class slices emit NULL auc. Output: key columns +
@@ -374,15 +383,14 @@ object ML {
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def aucRocBy(df: DataFrame, keyCols: Seq[String], scoreCol: String,
                label: org.apache.spark.sql.Column): DataFrame = {
-    require(keyCols.nonEmpty, "aucRocBy needs key columns; use aucRoc")
     val keys = keyCols.map(col)
     val counts = df
       .groupBy(keys :+ col(scoreCol).as("__s"): _*)
       .agg(sum(when(label, 1L).otherwise(0L)).as("__pos"),
         count(lit(1)).as("__tot"))
-    graft.operators.Analytics.prefixBeforeBy(counts, keyCols, "__s",
-        col("__tot"))
-      .withColumnRenamed("__cum", "__before")
+    graft.operators.Analytics.prefixBefore(counts, keyCols, "__s",
+        Seq("w" -> col("__tot")))._2
+      .withColumnRenamed("__cum_w", "__before")
       .groupBy(keys: _*)
       .agg(
         sum(col("__pos")).as("n_pos"),
@@ -417,59 +425,30 @@ object ML {
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def avgPrecision(df: DataFrame, scoreCol: String,
-                   label: org.apache.spark.sql.Column): DataFrame = {
-    val counts = df
-      .groupBy(col(scoreCol).as("__s"))
-      .agg(sum(when(label, 1L).otherwise(0L)).as("__pos"),
-        count(lit(1)).as("__tot"))
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    // totals off the PINNED ranged frame (not a second counts pass)
-    val (cShared, cumPre) = graft.operators.Analytics
-      .prefixBeforeMultiByShared(counts, Seq.empty, "__s",
-        Seq("p" -> col("__pos"), "t" -> col("__tot")))
-    cumPre
-      .crossJoin(broadcast(cShared.agg(sum(col("__pos")).as("__np"),
-        sum(col("__tot")).as("__nt"))))
-      .withColumn("__term", when(col("__np") > 0, // ANSI: no 0/0
-        ((d(col("__pos")) / d(col("__np"))) *
-          (d(col("__np") - col("__cum_p")) /
-            d(col("__nt") - col("__cum_t")))).cast("decimal(28,12)")))
-      .agg(max(col("__np")).as("n_pos"),
-        (max(col("__nt")) - max(col("__np"))).as("n_neg"),
-        sum(col("__term")).cast("double").as("__ap"))
-      .select(col("n_pos"), col("n_neg"),
-        when(col("n_pos") > 0, col("__ap")).as("ap"))
-  }
+                   label: org.apache.spark.sql.Column): DataFrame =
+    avgPrecisionBy(df, Nil, scoreCol, label)
 
   /** Per-GROUP [[avgPrecision]] — the sliced PR-AUC (per-language
     * filter precision: exactly where class balance differs BETWEEN
     * slices, the pooled AP is dominated by the majority slice). Keyed
-    * distributed prefix + keys-sized totals joined back null-safe.
+    * distributed prefix; the per-group totals ride the same pass.
     * Output: key columns + (n_pos, n_neg, ap).
     * EAGER: builds on the pinned-execution bridge, so Spark jobs
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def avgPrecisionBy(df: DataFrame, keyCols: Seq[String], scoreCol: String,
                      label: org.apache.spark.sql.Column): DataFrame = {
-    require(keyCols.nonEmpty, "avgPrecisionBy needs key columns; use avgPrecision")
     val keys = keyCols.map(col)
     val counts = df
       .groupBy(keys :+ col(scoreCol).as("__s"): _*)
       .agg(sum(when(label, 1L).otherwise(0L)).as("__pos"),
         count(lit(1)).as("__tot"))
-    val (cShared, cumPre) = graft.operators.Analytics
-      .prefixBeforeMultiByShared(counts, keyCols, "__s",
-        Seq("p" -> col("__pos"), "t" -> col("__tot")))
-    val tot = cShared.groupBy(keys: _*)
-      .agg(sum(col("__pos")).as("__np"), sum(col("__tot")).as("__nt"))
-    val totR = keyCols.zipWithIndex.foldLeft(tot) { case (acc, (c, i)) =>
-      acc.withColumnRenamed(c, s"__tk$i") }
-    val cond = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__tk$i") }.reduce(_ && _)
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    cumPre
-      .join(totR, cond)
-      .drop(keyCols.indices.map(i => s"__tk$i"): _*)
+    graft.operators.Analytics
+      .prefixBefore(counts, keyCols, "__s",
+        Seq("p" -> col("__pos"), "t" -> col("__tot")), withTotals = true)._2
+      .withColumnRenamed("__tot_p", "__np")
+      .withColumnRenamed("__tot_t", "__nt")
       .withColumn("__term", when(col("__np") > 0, // ANSI: no 0/0
         ((d(col("__pos")) / d(col("__np"))) *
           (d(col("__np") - col("__cum_p")) /
@@ -499,30 +478,8 @@ object ML {
     * (n, brier, ece). */
   def calibration(df: DataFrame, probCol: String,
                   label: org.apache.spark.sql.Column,
-                  bins: Int = 10): DataFrame = {
-    require(bins > 0, "calibration needs at least one bin")
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    val base = df.select(col(probCol).as("__p"),
-      when(label, 1.0).otherwise(0.0).as("__y"),
-      least(greatest(floor(col(probCol) * bins).cast("long"), lit(0L)),
-        lit(bins - 1L)).as("__bin"))
-    val g = base.agg(count(lit(1)).as("__n"),
-      sum(((col("__p") - col("__y")) * (col("__p") - col("__y")))
-        .cast("decimal(28,12)")).as("__sbr"))
-    val ece = base.groupBy("__bin")
-      .agg(count(lit(1)).as("__nb"),
-        sum(col("__y").cast("decimal(28,12)")).as("__sy"),
-        sum(col("__p").cast("decimal(28,12)")).as("__sp"))
-      .crossJoin(broadcast(g))
-      .withColumn("__term", ((d(col("__nb")) / d(col("__n"))) *
-        abs(d(col("__sy")) / d(col("__nb")) -
-          d(col("__sp")) / d(col("__nb")))).cast("decimal(28,12)"))
-      .agg(sum(col("__term")).as("__e"))
-    g.crossJoin(broadcast(ece))
-      .select(col("__n").as("n"),
-        when(col("__n") > 0, d(col("__sbr")) / d(col("__n"))).as("brier"),
-        when(col("__n") > 0, d(col("__e"))).as("ece"))
-  }
+                  bins: Int = 10): DataFrame =
+    calibrationBy(df, Nil, probCol, label, bins)
 
   /** Per-GROUP [[calibration]] — per-language/per-source calibration
     * audit (a score calibrated in aggregate is routinely miscalibrated
@@ -533,15 +490,9 @@ object ML {
   def calibrationBy(df: DataFrame, keyCols: Seq[String], probCol: String,
                     label: org.apache.spark.sql.Column,
                     bins: Int = 10): DataFrame = {
-    require(keyCols.nonEmpty, "calibrationBy needs key columns; use calibration")
     require(bins > 0, "calibration needs at least one bin")
     val keys = keyCols.map(col)
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    def renameKeys(dv: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(dv) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def keyJoin(tag: String) = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
     val base = df.select(keys ++ Seq(col(probCol).as("__p"),
       when(label, 1.0).otherwise(0.0).as("__y"),
       least(greatest(floor(col(probCol) * bins).cast("long"), lit(0L)),
@@ -549,18 +500,16 @@ object ML {
     val g = base.groupBy(keys: _*).agg(count(lit(1)).as("__n"),
       sum(((col("__p") - col("__y")) * (col("__p") - col("__y")))
         .cast("decimal(28,12)")).as("__sbr"))
-    val ece = base.groupBy(keys :+ col("__bin"): _*)
+    val ece = joinTotals(base.groupBy(keys :+ col("__bin"): _*)
       .agg(count(lit(1)).as("__nb"),
         sum(col("__y").cast("decimal(28,12)")).as("__sy"),
-        sum(col("__p").cast("decimal(28,12)")).as("__sp"))
-      .join(renameKeys(g.select(keys :+ col("__n"): _*), "g"), keyJoin("g"))
-      .drop(keyCols.indices.map(i => s"__g$i"): _*)
+        sum(col("__p").cast("decimal(28,12)")).as("__sp")),
+        g.select(keys :+ col("__n"): _*), keyCols)
       .withColumn("__term", ((d(col("__nb")) / d(col("__n"))) *
         abs(d(col("__sy")) / d(col("__nb")) -
           d(col("__sp")) / d(col("__nb")))).cast("decimal(28,12)"))
       .groupBy(keys: _*).agg(sum(col("__term")).as("__e"))
-    g.join(renameKeys(ece, "e"), keyJoin("e"), "left")
-      .drop(keyCols.indices.map(i => s"__e$i"): _*)
+    joinTotals(g, ece, keyCols, "left")
       .select(keys ++ Seq(col("__n").as("n"),
         when(col("__n") > 0, d(col("__sbr")) / d(col("__n"))).as("brier"),
         when(col("__n") > 0, d(col("__e"))).as("ece")): _*)
@@ -579,9 +528,7 @@ object ML {
     * (n, tp, fp, fn, tn, precision, recall, f1, mcc). */
   def confusionStats(df: DataFrame, label: org.apache.spark.sql.Column,
                      predicted: org.apache.spark.sql.Column): DataFrame =
-    confusionChain(df.agg(
-      confusionAggs(label, predicted).head,
-      confusionAggs(label, predicted).tail: _*))
+    confusionStatsBy(df, Nil, label, predicted)
 
   /** Per-GROUP [[confusionStats]] — the sliced operating point (a
     * filter tuned on the pooled corpus routinely has slice precision
@@ -589,10 +536,9 @@ object ML {
   def confusionStatsBy(df: DataFrame, keyCols: Seq[String],
                        label: org.apache.spark.sql.Column,
                        predicted: org.apache.spark.sql.Column): DataFrame = {
-    require(keyCols.nonEmpty, "confusionStatsBy needs key columns; use confusionStats")
-    confusionChain(df.groupBy(keyCols.map(col): _*).agg(
-      confusionAggs(label, predicted).head,
-      confusionAggs(label, predicted).tail: _*))
+    val aggs = confusionAggs(label, predicted)
+    confusionChain(df.groupBy(keyCols.map(col): _*).agg(aggs.head,
+      aggs.tail: _*))
   }
 
   private def confusionAggs(label: org.apache.spark.sql.Column,
@@ -640,30 +586,8 @@ object ML {
     * — no row-scale shuffle past the first groupBy. Degenerate p_e = 1
     * (both raters constant) → NULL kappa. Output: one row
     * (n, po, pe, kappa). */
-  def cohensKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    val cell = df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
-      .groupBy(col(aCol).as("__a"), col(bCol).as("__b"))
-      .agg(count(lit(1)).as("__c"))
-    val tot = cell.agg(sum(col("__c")).as("n"),
-      sum(when(col("__a") === col("__b"), col("__c")).otherwise(0L))
-        .as("__agr"))
-    val ma = cell.groupBy(col("__a").as("__k")).agg(sum("__c").as("__na"))
-    val mb = cell.groupBy(col("__b").as("__k")).agg(sum("__c").as("__nb"))
-    val pe = ma.join(mb, "__k")
-      .agg(coalesce(sum(dec(col("__na")) * dec(col("__nb"))), lit(0L)
-        .cast("decimal(38,0)")).as("__pe2"))
-    tot.crossJoin(broadcast(pe))
-      .withColumn("__num", dec(col("n")) * dec(col("__agr")) - col("__pe2"))
-      .withColumn("__den", dec(col("n")) * dec(col("n")) - col("__pe2"))
-      .select(col("n"),
-        when(col("n") > 0, d(col("__agr")) / d(col("n"))).as("po"),
-        when(col("n") > 0,
-          d(col("__pe2")) / (d(col("n")) * d(col("n")))).as("pe"),
-        when(col("__den") > 0,
-          d(col("__num")) / d(col("__den"))).as("kappa"))
-  }
+  def cohensKappa(df: DataFrame, aCol: String, bCol: String): DataFrame =
+    cohensKappaBy(df, Nil, aCol, bCol)
 
   /** Pairwise κ matrix over an m-rater panel — WHICH annotator
     * disagrees with whom ([[fleissKappa]] gives one pooled number; the
@@ -721,15 +645,9 @@ object ML {
     * Output: key columns + (n, po, pe, kappa). */
   def cohensKappaBy(df: DataFrame, keyCols: Seq[String], aCol: String,
                     bCol: String): DataFrame = {
-    require(keyCols.nonEmpty, "cohensKappaBy needs key columns; use cohensKappa")
     def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
     val keys = keyCols.map(col)
-    def renameKeys(dv: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(dv) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def keyEq(tag: String) = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
     val cell = df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(keys :+ col(aCol).as("__a") :+ col(bCol).as("__b"): _*)
       .agg(count(lit(1)).as("__c"))
@@ -738,14 +656,12 @@ object ML {
         .as("__agr"))
     val ma = cell.groupBy(keys :+ col("__a").as("__k"): _*)
       .agg(sum("__c").as("__na"))
-    val mb = renameKeys(cell.groupBy(keys :+ col("__b").as("__mk"): _*)
-      .agg(sum("__c").as("__nb")), "m")
-    val pe = ma.join(mb, keyEq("m") && col("__k") === col("__mk"),
-        "inner")
+    val mb = renKeys(cell.groupBy(keys :+ col("__b").as("__mk"): _*)
+      .agg(sum("__c").as("__nb")), keyCols, "m")
+    val pe = ma.join(mb, keyEq(keyCols, "m") && col("__k") === col("__mk"))
       .groupBy(keys: _*)
       .agg(sum(dec(col("__na")) * dec(col("__nb"))).as("__pe2"))
-    val peR = renameKeys(pe, "p")
-    tot.join(peR, keyEq("p"), "left")
+    joinTotals(tot, pe, keyCols, "left")
       .withColumn("__pe2", coalesce(col("__pe2"),
         lit(0L).cast("decimal(38,0)")))
       .withColumn("__num", dec(col("n")) * dec(col("__agr")) - col("__pe2"))
@@ -1432,55 +1348,14 @@ object ML {
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def liftTable(df: DataFrame, idCol: String, scoreCol: String,
                 label: org.apache.spark.sql.Column,
-                buckets: Int = 10): DataFrame = {
-    require(buckets >= 1, "liftTable needs buckets >= 1")
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    val base = df.select(col(idCol).as("__id"),
-      (-col(scoreCol).cast("double")).as("__ns"),
-      when(label, 1L).otherwise(0L).as("__y"))
-    val counts = base.groupBy(col("__ns")).agg(count(lit(1)).as("__c"))
-    val starts = graft.operators.Analytics
-      .prefixBeforeMulti(counts, "__ns", Seq("c" -> col("__c")))
-      .select(col("__ns").as("__ns2"), col("__cum_c").as("__start"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__ns")).orderBy(col("__id"))
-    val ranked = base.join(starts, col("__ns") === col("__ns2"))
-      .withColumn("__r", col("__start") + row_number().over(w) - 1)
-    // totals from base, not ranked: ranked re-runs the rank join +
-    // window per consumer, and the totals need neither (round 16).
-    // NULL scores drop out of ranked via the null-unequal join — the
-    // filter replays that.
-    val tot = base.filter(col("__ns").isNotNull)
-      .agg(count(lit(1)).as("__n"), sum(col("__y")).as("__p"))
-    val perBucket = ranked.crossJoin(broadcast(tot))
-      .groupBy(expr(s"(__r * $buckets) div __n").as("bucket"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("__y")).as("pos"))
-    val spine = df.sparkSession.range(buckets)
-      .select(col("id").as("bucket"))
-      .join(perBucket, Seq("bucket"), "left")
-      .select(col("bucket"),
-        coalesce(col("n_rows"), lit(0L)).as("n_rows"),
-        coalesce(col("pos"), lit(0L)).as("pos"))
-    val cw = org.apache.spark.sql.expressions.Window
-      .orderBy(col("bucket"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    spine.withColumn("__cum", sum(col("pos")).over(cw))
-      .crossJoin(broadcast(tot))
-      .select(col("bucket"), col("n_rows"), col("pos"),
-        when(col("n_rows") > 0, d(col("pos")) / d(col("n_rows"))).as("rate"),
-        col("__cum").as("cum_pos"),
-        when(col("__p") > 0, d(col("__cum")) / d(col("__p"))).as("capture"),
-        when(col("n_rows") > 0 && col("__p") > 0,
-          (d(col("pos")) / d(col("n_rows"))) /
-            (d(col("__p")) / d(col("__n")))).as("lift"))
-      .orderBy("bucket")
-  }
+                buckets: Int = 10): DataFrame =
+    liftTableBy(df, Nil, idCol, scoreCol, label, buckets)
 
   /** Per-GROUP [[liftTable]] — one cumulative-gains report per slice
     * (per language, per source: a score that targets well pooled is
     * routinely flat on one slice). Same rank construction with every
     * stage keyed: block starts from the KEYED distributed prefix
-    * ([[graft.operators.Analytics.prefixBeforeMultiBy]] — a hot
+    * ([[graft.operators.Analytics.prefixBefore]] — a hot
     * slice's score column splits across range partitions), within-
     * block row_numbers partitioned by (keys, score), per-key totals
     * joined back (keys-sized, never assumed broadcastable), a
@@ -1493,44 +1368,42 @@ object ML {
   def liftTableBy(df: DataFrame, keyCols: Seq[String], idCol: String,
                   scoreCol: String, label: org.apache.spark.sql.Column,
                   buckets: Int = 10): DataFrame = {
-    require(keyCols.nonEmpty, "liftTableBy needs key columns; use liftTable")
-    require(buckets >= 1, "liftTableBy needs buckets >= 1")
+    require(buckets >= 1, "liftTable needs buckets >= 1")
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
     val keys = keyCols.map(col)
-    def renameKeys(dv: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(dv) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def keyEq(tag: String) = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
     val base = df.select(keys ++ Seq(col(idCol).as("__id"),
       (-col(scoreCol).cast("double")).as("__ns"),
       when(label, 1L).otherwise(0L).as("__y")): _*)
     val counts = base.groupBy(keys :+ col("__ns"): _*)
       .agg(count(lit(1)).as("__c"))
-    val starts = renameKeys(graft.operators.Analytics
-      .prefixBeforeMultiBy(counts, keyCols, "__ns", Seq("c" -> col("__c")))
+    val starts = renKeys(graft.operators.Analytics
+      .prefixBefore(counts, keyCols, "__ns", Seq("c" -> col("__c")))._2
       .select(keys :+ col("__ns").as("__ns2") :+
-        col("__cum_c").as("__start"): _*), "s")
+        col("__cum_c").as("__start"): _*), keyCols, "s")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keys :+ col("__ns"): _*).orderBy(col("__id"))
-    val ranked = base.join(starts,
-        keyEq("s") && col("__ns") === col("__ns2"))
+    val ranked = dropTag(base.join(starts,
+        keyEq(keyCols, "s") && col("__ns") === col("__ns2")), keyCols, "s")
       .withColumn("__r", col("__start") + row_number().over(w) - 1)
-    // per-key totals from base (the global form's round-16 rationale);
-    // the null-score filter replays the rank join's null-unequal drop
+    // totals from base, not ranked: ranked re-runs the rank join +
+    // window per consumer, and the totals need neither (round 16).
+    // NULL scores drop out of ranked via the null-unequal join — the
+    // filter replays that.
     val tot = base.filter(col("__ns").isNotNull).groupBy(keys: _*)
       .agg(count(lit(1)).as("__n"), sum(col("__y")).as("__p"))
-    val totR = renameKeys(tot, "t")
-    val perBucket = ranked.join(totR, keyEq("t"))
+    val perBucket = joinTotals(ranked, tot, keyCols)
       .groupBy(keys :+ expr(s"(__r * $buckets) div __n").as("bucket"): _*)
       .agg(count(lit(1)).as("n_rows"), sum(col("__y")).as("pos"))
-    val spine = tot.select(keys: _*).distinct()
-      .crossJoin(df.sparkSession.range(buckets).select(col("id").as("bucket")))
-    // renameKeys only renames the key columns; rename the joined bucket
-    // manually to avoid ambiguity
-    val filled = spine.join(
-      renameKeys(perBucket.withColumnRenamed("bucket", "__bkt"), "b"),
-      keyEq("b") && col("bucket") === col("__bkt"), "left")
+    // empty buckets surface through a (groups × buckets) spine; with
+    // no keys the spine is the bucket range itself
+    val range = df.sparkSession.range(buckets).select(col("id").as("bucket"))
+    val spine =
+      if (keyCols.isEmpty) range
+      else tot.select(keys: _*).distinct().crossJoin(range)
+    val filled = dropTag(spine.join(
+      renKeys(perBucket.withColumnRenamed("bucket", "__bkt"), keyCols, "b"),
+      keyEq(keyCols, "b") && col("bucket") === col("__bkt"), "left"),
+      keyCols, "b")
       .select(keys ++ Seq(col("bucket"),
         coalesce(col("n_rows"), lit(0L)).as("n_rows"),
         coalesce(col("pos"), lit(0L)).as("pos")): _*)
@@ -1538,8 +1411,8 @@ object ML {
       .partitionBy(keys: _*).orderBy(col("bucket"))
       .rowsBetween(org.apache.spark.sql.expressions.Window
         .unboundedPreceding, 0)
-    filled.withColumn("__cum", sum(col("pos")).over(cw))
-      .join(totR, keyEq("t"))
+    joinTotals(filled.withColumn("__cum", sum(col("pos")).over(cw)), tot,
+        keyCols)
       .select(keys ++ Seq(col("bucket"), col("n_rows"), col("pos"),
         when(col("n_rows") > 0, d(col("pos")) / d(col("n_rows"))).as("rate"),
         col("__cum").as("cum_pos"),
@@ -2091,8 +1964,8 @@ object ML {
     val vc = hashed.groupBy(col("__v")).agg(vcAggs.head, vcAggs.tail: _*)
     val weights = ("orig" -> col("__corig")) +:
       (0 until b).map(j => s"c$j" -> col(s"__c$j"))
-    val (shared, pre) = Analytics.prefixBeforeMultiByShared(
-      vc, Seq.empty, "__v", weights.toSeq)
+    val (shared, pre) = Analytics.prefixBefore(
+      vc, Nil, "__v", weights.toSeq)
     val totAggs = sum(col("__corig")).as("__norig") +:
       (0 until b).map(j => sum(col(s"__c$j")).as(s"__n$j"))
     val tot = shared.agg(totAggs.head, totAggs.tail: _*)
@@ -2127,7 +2000,7 @@ object ML {
     // 19): lo/hi are the max(1,⌈ci·b_eff⌉)-th order statistics of ≤ 64
     // replicate quantiles — the [[bootstrapRatioCI]] sort_array pick.
     // The previous form routed these ≤ B rows through a second
-    // prefixBeforeMultiByShared pass, whose pinned-execution bridge
+    // prefixBefore pass, whose pinned-execution bridge
     // costs several plan compilations + range/offset jobs per call —
     // measured ~25% of q431's wall for a 24-row input. Values are
     // identical: the prefix form picked min{v : cum ≥ k} over the
@@ -2214,8 +2087,8 @@ object ML {
         (0 until b).map(j =>
           s"c${armTag(isA)}$j" -> col(s"__c${armTag(isA)}$j"))
     }
-    val (shared, pre) = Analytics.prefixBeforeMultiByShared(
-      vc, Seq.empty, "__v", weights)
+    val (shared, pre) = Analytics.prefixBefore(
+      vc, Nil, "__v", weights)
     val names = arms.flatMap { isA =>
       (armTag(isA), -1, s"c${armTag(isA)}orig") +:
         (0 until b).map(j => (armTag(isA), j, s"c${armTag(isA)}$j"))
@@ -2305,8 +2178,8 @@ object ML {
     val rc = base.groupBy(col("__r"))
       .agg(sum(when(col("__cal"), 1L).otherwise(0L)).as("__cc"),
         sum(when(!col("__cal"), 1L).otherwise(0L)).as("__ce"))
-    val (shared, pre) = Analytics.prefixBeforeMultiByShared(
-      rc, Seq.empty, "__r", Seq("cc" -> col("__cc")))
+    val (shared, pre) = Analytics.prefixBefore(
+      rc, Nil, "__r", Seq("cc" -> col("__cc")))
     val tot = shared.agg(sum(col("__cc")).as("n_cal"),
       sum(col("__ce")).as("n_eval"))
       .withColumn("k", ceil((d(col("n_cal")) + 1.0) * lit(1.0 - alpha)))

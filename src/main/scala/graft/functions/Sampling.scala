@@ -339,8 +339,8 @@ object Sampling {
         .otherwise(lit(0L))
     val sc = base.groupBy((-col("__sc")).as("__k"))
       .agg(sum(col("__tk")).as("__gt"))
-    val (_, pre) = Analytics.prefixBeforeMultiByShared(
-      sc, Seq.empty, "__k", Seq("t" -> col("__gt")))
+    val (_, pre) = Analytics.prefixBefore(
+      sc, Nil, "__k", Seq("t" -> col("__gt")))
     val higher = pre.select((-col("__k")).as("__hs"),
       coalesce(col("__cum_t"), lit(0L)).as("__above"))
     val cumulated = tieBreakSalt match {
@@ -368,8 +368,8 @@ object Sampling {
           .withColumn("__bk", shiftright(col("__tb"), 20))
         val stb = salted.groupBy(col("__sc"), col("__bk"))
           .agg(sum(col("__tk")).as("__gt2"))
-        val pre2 = Analytics.prefixBeforeMultiBy(
-          stb, Seq("__sc"), "__bk", Seq("t2" -> col("__gt2")))
+        val pre2 = Analytics.prefixBefore(
+          stb, Seq("__sc"), "__bk", Seq("t2" -> col("__gt2")))._2
           .select(col("__sc").as("__s2"), col("__bk").as("__bk2"),
             coalesce(col("__cum_t2"), lit(0L)).as("__atBk"))
         // a duplicate (score, id) shares tb AND bucket, so equal ids
@@ -443,8 +443,8 @@ object Sampling {
         col(tokensCol).cast("long").as("__tk"))
     val sc = base.groupBy(col("__dom").as("__d2"), (-col("__sc")).as("__k"))
       .agg(sum(col("__tk")).as("__gt"))
-    val pre = Analytics.prefixBeforeMultiBy(
-      sc, Seq("__d2"), "__k", Seq("t" -> col("__gt")))
+    val pre = Analytics.prefixBefore(
+      sc, Seq("__d2"), "__k", Seq("t" -> col("__gt")))._2
       .select(col("__d2"), (-col("__k")).as("__hs"),
         coalesce(col("__cum_t"), lit(0L)).as("__above"))
     val wKey = org.apache.spark.sql.expressions.Window

@@ -685,8 +685,8 @@ object Text {
     val classes = tf.groupBy(col("__f")).agg(count(lit(1)).as("__m"))
       .withColumn("__nf", -col("__f"))
     val ranked = graft.operators.Analytics
-      .prefixBefore(classes, "__nf", col("__m"))
-      .withColumn("__x", log(d(col("__cum")) + (d(col("__m")) + 1.0) / 2.0))
+      .prefixBefore(classes, Nil, "__nf", Seq("w" -> col("__m")))._2
+      .withColumn("__x", log(d(col("__cum_w")) + (d(col("__m")) + 1.0) / 2.0))
       .withColumn("__y", log(d(col("__f"))))
     ranked
       .select(col("__f"), col("__m"),

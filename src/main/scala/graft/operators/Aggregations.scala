@@ -3,6 +3,7 @@ package graft.operators
 import graft.core.{JTable, Sel}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Analytics.{dropTag, joinTotals, keyEq, renKeys}
 
 /** Aggregation surface (reference §2.4: `reduce`, `groupreduce`, `groupby`,
   * `summarize`, `reducedim`).
@@ -205,7 +206,6 @@ object Aggregations {
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def modeExact(df: org.apache.spark.sql.DataFrame, keyCols: Seq[String],
                 valueCol: String): org.apache.spark.sql.DataFrame = {
-    require(keyCols.nonEmpty, "modeExact needs key columns")
     val counts = df.groupBy((keyCols :+ valueCol).map(col): _*)
       .agg(count(lit(1)).as("n_mode"))
     val w = org.apache.spark.sql.expressions.Window
@@ -248,31 +248,8 @@ object Aggregations {
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def trimmedMean(df: org.apache.spark.sql.DataFrame, valueCol: String,
                   alpha: Double, scale: Int = 2)
-      : org.apache.spark.sql.DataFrame = {
-    require(alpha >= 0.0 && alpha < 0.5, s"alpha $alpha must be in [0, 0.5)")
-    val counts = df.filter(col(valueCol).isNotNull)
-      .groupBy(col(valueCol).cast(s"decimal(18,$scale)").as("__v"))
-      .agg(count(lit(1)).as("__c"))
-    val k = floor(lit(alpha) * col("__n").cast("double")).cast("long")
-    // distributed distinct-value prefix; the total RIDES the prefix
-    // result (round 20, prefixBeforeSharedTot — the old broadcast
-    // shared.agg was one more plan compile + job + broadcast per call)
-    val (_, cum) = graft.operators.Analytics
-      .prefixBeforeSharedTot(counts, "__v", col("__c"))
-    cum.withColumnRenamed("__cum", "__s")
-      .withColumnRenamed("__tot", "__n")
-      .drop("__keymin", "__keymax")
-      .withColumn("__w", greatest(lit(0L),
-        least(col("__s") + col("__c"), col("__n") - k) -
-          greatest(col("__s"), k)))
-      .filter(col("__w") > 0)
-      .agg(max(col("__n")).as("n"),
-        (max(col("__n")) - lit(2) * max(k)).as("n_kept"),
-        sum(col("__w").cast("decimal(19,0)") * col("__v")).as("__sum"))
-      .withColumn("mean",
-        col("__sum").cast("double") / col("n_kept").cast("double"))
-      .select("n", "n_kept", "mean")
-  }
+      : org.apache.spark.sql.DataFrame =
+    trimmedMeanBy(df, Nil, valueCol, alpha, scale)
 
   /** Exact α-winsorized mean — [[trimmedMean]]'s clamp-at-the-fences
     * sibling: the k = ⌊α·n⌋ most extreme rows on EACH tail are REPLACED
@@ -292,48 +269,18 @@ object Aggregations {
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def winsorizedMean(df: org.apache.spark.sql.DataFrame, valueCol: String,
                      alpha: Double, scale: Int = 2)
-      : org.apache.spark.sql.DataFrame = {
-    require(alpha >= 0.0 && alpha < 0.5, s"alpha $alpha must be in [0, 0.5)")
-    val counts = df.filter(col(valueCol).isNotNull)
-      .groupBy(col(valueCol).cast(s"decimal(18,$scale)").as("__v"))
-      .agg(count(lit(1)).as("__c"))
-    // total rides the prefix result (round 20, prefixBeforeSharedTot)
-    val (_, cum0) = graft.operators.Analytics
-      .prefixBeforeSharedTot(counts, "__v", col("__c"))
-    val cum = cum0.withColumnRenamed("__cum", "__s")
-      .withColumnRenamed("__tot", "__n")
-      .drop("__keymin", "__keymax")
-    val k = floor(lit(alpha) * col("__n").cast("double")).cast("long")
-    val rHi = col("__n") - k - 1
-    val lo = cum.filter(col("__s") <= k && k < col("__s") + col("__c"))
-      .select(col("__v").as("__flo"))
-    val hi = cum.filter(col("__s") <= rHi && rHi < col("__s") + col("__c"))
-      .select(col("__v").as("__fhi"))
-    def dk = col("__k").cast("decimal(19,0)")
-    cum
-      .withColumn("__w", greatest(lit(0L),
-        least(col("__s") + col("__c"), col("__n") - k) -
-          greatest(col("__s"), k)))
-      .filter(col("__w") > 0)
-      .agg(max(col("__n")).as("n"), max(k).as("__k"),
-        sum(col("__w").cast("decimal(19,0)") * col("__v")).as("__sum"))
-      .crossJoin(broadcast(lo)).crossJoin(broadcast(hi))
-      .select(col("n"), col("__k").as("k"),
-        col("__flo").cast("double").as("fence_lo"),
-        col("__fhi").cast("double").as("fence_hi"),
-        ((col("__sum") + dk * col("__flo") + dk * col("__fhi"))
-          .cast("double") / col("n").cast("double")).as("mean"))
-  }
+      : org.apache.spark.sql.DataFrame =
+    winsorizedMeanBy(df, Nil, valueCol, alpha, scale)
 
   /** Per-GROUP exact α-trimmed mean — [[trimmedMean]] sliced by key
     * columns (per-language/per-source robust token-length means): k =
     * ⌊α·n_g⌋ computed per group, rank-interval overlap per distinct
     * value within its group, decimal kept-mass sum, one pinned division
     * per group. The distinct-value cumulative rides the KEYED
-    * distributed prefix ([[graft.operators.Analytics.prefixBeforeMultiBy]]
+    * distributed prefix ([[graft.operators.Analytics.prefixBefore]]
     * — a hot group splits across range slices instead of serializing
-    * through one window task; per-group totals are a keys-sized
-    * aggregate joined back; no row sort anywhere). Output: key columns
+    * through one window task; per-group totals ride the same prefix
+    * pass; no row sort anywhere). Output: key columns
     * + (n, n_kept, mean).
     * EAGER: builds on the pinned-execution bridge, so Spark jobs
     * launch AT CALL time and the input is snapshotted then
@@ -341,16 +288,13 @@ object Aggregations {
   def trimmedMeanBy(df: org.apache.spark.sql.DataFrame, keyCols: Seq[String],
                     valueCol: String, alpha: Double, scale: Int = 2)
       : org.apache.spark.sql.DataFrame = {
-    require(keyCols.nonEmpty, "trimmedMeanBy needs keys; use trimmedMean")
     require(alpha >= 0.0 && alpha < 0.5, s"alpha $alpha must be in [0, 0.5)")
     val keys = keyCols.map(col)
     val counts = df.filter(col(valueCol).isNotNull)
       .groupBy(keys :+ col(valueCol).cast(s"decimal(18,$scale)").as("__v"): _*)
       .agg(count(lit(1)).as("__c"))
     val k = floor(lit(alpha) * col("__n").cast("double")).cast("long")
-    val (shared, cum0) = graft.operators.Analytics
-      .prefixBeforeByShared(counts, keyCols, "__v", col("__c"))
-    joinGroupTotals(cum0.withColumnRenamed("__cum", "__s"), shared, keyCols)
+    valueRanks(counts, keyCols)
       .withColumn("__w", greatest(lit(0L),
         least(col("__s") + col("__c"), col("__n") - k) -
           greatest(col("__s"), k)))
@@ -379,7 +323,6 @@ object Aggregations {
                        keyCols: Seq[String], valueCol: String,
                        alpha: Double, scale: Int = 2)
       : org.apache.spark.sql.DataFrame = {
-    require(keyCols.nonEmpty, "winsorizedMeanBy needs keys; use winsorizedMean")
     require(alpha >= 0.0 && alpha < 0.5, s"alpha $alpha must be in [0, 0.5)")
     val keys = keyCols.map(col)
     val counts = df.filter(col(valueCol).isNotNull)
@@ -387,16 +330,11 @@ object Aggregations {
       .agg(count(lit(1)).as("__c"))
     val k = floor(lit(alpha) * col("__n").cast("double")).cast("long")
     val rHi = col("__n") - k - 1
-    val (shared, cum0) = graft.operators.Analytics
-      .prefixBeforeByShared(counts, keyCols, "__v", col("__c"))
-    val cum = joinGroupTotals(
-      cum0.withColumnRenamed("__cum", "__s"), shared, keyCols)
+    val cum = valueRanks(counts, keyCols)
     val lo = cum.filter(col("__s") <= k && k < col("__s") + col("__c"))
-      .select(keyCols.zipWithIndex.map { case (c, i) =>
-        col(c).as(s"__kl$i") } :+ col("__v").as("__flo"): _*)
+      .select(keys :+ col("__v").as("__flo"): _*)
     val hi = cum.filter(col("__s") <= rHi && rHi < col("__s") + col("__c"))
-      .select(keyCols.zipWithIndex.map { case (c, i) =>
-        col(c).as(s"__kh$i") } :+ col("__v").as("__fhi"): _*)
+      .select(keys :+ col("__v").as("__fhi"): _*)
     def dk = col("__k").cast("decimal(19,0)")
     val kept = cum
       .withColumn("__w", greatest(lit(0L),
@@ -406,11 +344,7 @@ object Aggregations {
       .groupBy(keys: _*)
       .agg(max(col("__n")).as("n"), max(k).as("__k"),
         sum(col("__w").cast("decimal(19,0)") * col("__v")).as("__sum"))
-    val loCond = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__kl$i") }.reduce(_ && _)
-    val hiCond = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__kh$i") }.reduce(_ && _)
-    kept.join(lo, loCond).join(hi, hiCond)
+    joinTotals(joinTotals(kept, lo, keyCols), hi, keyCols)
       .select(keys ++ Seq(col("n"), col("__k").as("k"),
         col("__flo").cast("double").as("fence_lo"),
         col("__fhi").cast("double").as("fence_hi"),
@@ -462,10 +396,7 @@ object Aggregations {
       .agg(count(lit(1)).as("__c"))
     val k = floor(lit(alpha) * col("__n").cast("double")).cast("long")
     val rHi = col("__n") - k - 1
-    val (shared, cum0) = graft.operators.Analytics
-      .prefixBeforeByShared(counts, keyCols, "__v", col("__c"))
-    val cum = joinGroupTotals(
-      cum0.withColumnRenamed("__cum", "__s"), shared, keyCols)
+    val cum = valueRanks(counts, keyCols)
     val lo = cum.filter(col("__s") <= k && k < col("__s") + col("__c"))
       .select(col("__g").as("__kl0"), col("__v").as("__flo"))
     val hi = cum.filter(col("__s") <= rHi && rHi < col("__s") + col("__c"))
@@ -536,49 +467,8 @@ object Aggregations {
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def quantilesCont(df: org.apache.spark.sql.DataFrame, valueCol: String,
-                    ps: Seq[Double]): org.apache.spark.sql.DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"percentiles $ps must be in [0,1]")
-    require(ps.distinct.length == ps.length, s"duplicate percentiles in $ps")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val counts = df.filter(col(valueCol).isNotNull)
-      .groupBy(col(valueCol).cast("double").as("__v"))
-      .agg(count(lit(1)).as("__c"))
-    // the trimmedMean plan shape: distributed prefix + broadcast total
-    // (total from the PINNED frame — not a second pass over counts).
-    // ONE containment join against a (p, side) spine (round 16): the
-    // old lower/upper pair consumed the cum frame twice, which ran the
-    // |distinct|-row window sort twice — at 50M distinct values that
-    // doubled the operator's dominant stage. 2·|ps| spine rows
-    // broadcast; side 0 targets rank k = ⌊p(n−1)⌋, side 1 the
-    // interpolation partner min(k+1, n−1); one group-by-p collapse.
-    // total rides the prefix result (round 20, prefixBeforeSharedTot):
-    // the old broadcast shared.agg was one more plan compile + job +
-    // broadcast per call for a number the offset branch already folded
-    val (_, cum0) = graft.operators.Analytics
-      .prefixBeforeSharedTot(counts, "__v", col("__c"))
-    val cum = cum0.withColumnRenamed("__cum", "__s")
-      .withColumnRenamed("__tot", "__n")
-      .drop("__keymin", "__keymax")
-    val spine = ps.toDF("p").crossJoin(
-      Seq(0, 1).toDF("__side"))
-    val t = col("p") * (col("__n") - 1).cast("double")
-    val k = floor(t).cast("long")
-    val tgt = when(col("__side") === 0, k)
-      .otherwise(least(k + 1, col("__n") - 1))
-    cum.join(broadcast(spine),
-        col("__s") <= tgt && tgt < col("__s") + col("__c"))
-      .groupBy(col("p"))
-      .agg(max(col("__n")).as("n"),
-        min(when(col("__side") === 0, col("__v"))).as("__vlo"),
-        min(when(col("__side") === 1, col("__v"))).as("__vhi"),
-        max(when(col("__side") === 0, t - floor(t))).as("__frac"))
-      .select(col("p"), col("n"),
-        (col("__vlo") + col("__frac") * (col("__vhi") - col("__vlo")))
-          .as("value"))
-      .orderBy("p")
-  }
+                    ps: Seq[Double]): org.apache.spark.sql.DataFrame =
+    quantilesContBy(df, Nil, valueCol, ps)
 
   /** Exact continuous MAD — median absolute deviation, the robust
     * scale the outlier family should be normalized by (SD explodes
@@ -599,21 +489,8 @@ object Aggregations {
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def madCont(df: org.apache.spark.sql.DataFrame, valueCol: String)
-      : org.apache.spark.sql.DataFrame = {
-    val med = quantilesCont(df, valueCol, Seq(0.5))
-      .select(col("n"), col("value").as("median"))
-    val dev = df.filter(col(valueCol).isNotNull)
-      .crossJoin(broadcast(med))
-      .select(abs(col(valueCol).cast("double") - col("median"))
-        .as("__dev"))
-    quantilesCont(dev, "__dev", Seq(0.5))
-      .select(col("value").as("mad"))
-      .crossJoin(broadcast(med))
-      // 1.4826 = 1/qnorm(0.75), the classical normal-consistency
-      // constant (a fixed literal, not an inverse-CDF evaluation)
-      .select(col("n"), col("median"), col("mad"),
-        (col("mad") * lit(1.4826)).as("mad_normal"))
-  }
+      : org.apache.spark.sql.DataFrame =
+    madContBy(df, Nil, valueCol)
 
   /** Per-GROUP [[madCont]] — the robust scale per slice (per-language
     * length MAD, per-source latency MAD: the slice whose outliers
@@ -629,53 +506,45 @@ object Aggregations {
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def madContBy(df: org.apache.spark.sql.DataFrame, keyCols: Seq[String],
                 valueCol: String): org.apache.spark.sql.DataFrame = {
-    require(keyCols.nonEmpty, "madContBy needs key columns; use madCont")
     val keys = keyCols.map(col)
-    def ren(d: org.apache.spark.sql.DataFrame, tag: String) =
-      keyCols.zipWithIndex.foldLeft(d) { case (a, (c, i)) =>
-        a.withColumnRenamed(c, s"__$tag$i") }
-    def eq(tag: String) = keyCols.zipWithIndex.map { case (c, i) =>
-      col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
     val med = quantilesContBy(df, keyCols, valueCol, Seq(0.5))
       .select(keys :+ col("n") :+ col("value").as("median"): _*)
-    val dev = df.filter(col(valueCol).isNotNull)
-      .join(ren(med.select(keys :+ col("median"): _*), "m"), eq("m"))
+    val dev = joinTotals(df.filter(col(valueCol).isNotNull),
+        med.select(keys :+ col("median"): _*), keyCols)
       .select(keys :+ abs(col(valueCol).cast("double") - col("median"))
         .as("__dev"): _*)
-    val mad = ren(quantilesContBy(dev, keyCols, "__dev", Seq(0.5))
-      .select(keys :+ col("value").as("mad"): _*), "d")
-    med.join(mad, eq("d"))
-      .drop(keyCols.indices.map(i => s"__d$i"): _*)
+    val mad = quantilesContBy(dev, keyCols, "__dev", Seq(0.5))
+      .select(keys :+ col("value").as("mad"): _*)
+    joinTotals(mad, med, keyCols)
+      // 1.4826 = 1/qnorm(0.75), the classical normal-consistency
+      // constant (a fixed literal, not an inverse-CDF evaluation)
       .select(keys ++ Seq(col("n"), col("median"), col("mad"),
         (col("mad") * lit(1.4826)).as("mad_normal")): _*)
   }
 
-  /** Per-group total Σ `__c` as `__n`, joined back null-safe on the
-    * keys — the keyed analog of the global forms' broadcast one-row
-    * total (keys-sized aggregate; the planner broadcasts small group
-    * sets and shuffles large ones). `counts` should be the prefix
-    * call's PINNED shared frame, so the total re-fetches the range
-    * shuffle instead of re-running the distinct aggregation. */
-  private def joinGroupTotals(cum: DataFrame, counts: DataFrame,
-      keyCols: Seq[String]): DataFrame = {
-    val tot = counts.groupBy(keyCols.map(col): _*)
-      .agg(sum(col("__c")).as("__n"))
-      .select(keyCols.zipWithIndex.map { case (c, i) =>
-        col(c).as(s"__tk$i") } :+ col("__n"): _*)
-    val cond = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__tk$i") }.reduce(_ && _)
-    cum.join(tot, cond).drop(keyCols.indices.map(i => s"__tk$i"): _*)
-  }
+  /** Distinct-value ranks of `counts` (key columns, `__v`, `__c`) per
+    * key group: appends `__s` = rows strictly below `__v` and `__n` =
+    * the group's row total. Both ride ONE distributed prefix pass
+    * ([[graft.operators.Analytics.prefixBefore]] with totals): the
+    * group total is a fold of the offset table, so it costs no
+    * aggregate or join of its own. */
+  private def valueRanks(counts: DataFrame,
+      keyCols: Seq[String]): DataFrame =
+    graft.operators.Analytics.prefixBefore(counts, keyCols, "__v",
+        Seq("w" -> col("__c")), withTotals = true)._2
+      .withColumnRenamed("__cum_w", "__s")
+      .withColumnRenamed("__tot_w", "__n")
+      .drop("__keymin", "__keymax")
 
   /** Per-GROUP exact percentiles — [[quantilesCont]] sliced by key
     * columns (per-language / per-source token-length percentiles, the
     * daily pipeline ask): SQL `percentile_cont` semantics per group,
     * WITHOUT a row sort. Same plan as the global form: the
     * distinct-value cumulative rides the KEYED distributed prefix
-    * ([[graft.operators.Analytics.prefixBeforeMultiBy]] — the range
+    * ([[graft.operators.Analytics.prefixBefore]] — the range
     * exchange is on (keys, value) compound, so a HOT group splits
     * across slices instead of serializing through one window task; the
-    * per-group totals are a keys-sized aggregate joined back). The
+    * per-group totals ride the same prefix pass). The
     * rank-interval containment joins carry the keys, so each group
     * interpolates independently; a group with one distinct value emits
     * that value at every p. Output: key columns + (p, n, value), one
@@ -686,7 +555,6 @@ object Aggregations {
   def quantilesContBy(df: org.apache.spark.sql.DataFrame,
                       keyCols: Seq[String], valueCol: String,
                       ps: Seq[Double]): org.apache.spark.sql.DataFrame = {
-    require(keyCols.nonEmpty, "quantilesContBy needs keys; use quantilesCont")
     require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
       s"percentiles $ps must be in [0,1]")
     require(ps.distinct.length == ps.length, s"duplicate percentiles in $ps")
@@ -696,12 +564,14 @@ object Aggregations {
     val counts = df.filter(col(valueCol).isNotNull)
       .groupBy(keys :+ col(valueCol).cast("double").as("__v"): _*)
       .agg(count(lit(1)).as("__c"))
-    val (shared, cum0) = graft.operators.Analytics
-      .prefixBeforeByShared(counts, keyCols, "__v", col("__c"))
-    val cum = joinGroupTotals(
-      cum0.withColumnRenamed("__cum", "__s"), shared, keyCols)
-    // ONE containment join against the (p, side) spine — the global
-    // form's round-16 single-window-pass shape, grouped by (keys, p)
+    val cum = valueRanks(counts, keyCols)
+    // ONE containment join against a (p, side) spine (round 16): the
+    // old lower/upper pair consumed the cum frame twice, which ran the
+    // |distinct|-row window sort twice — at 50M distinct values that
+    // doubled the operator's dominant stage. 2·|ps| spine rows
+    // broadcast; side 0 targets rank k = ⌊p(n−1)⌋, side 1 the
+    // interpolation partner min(k+1, n−1); one group-by-(keys, p)
+    // collapse.
     val spine = ps.toDF("p").crossJoin(Seq(0, 1).toDF("__side"))
     val t = col("p") * (col("__n") - 1).cast("double")
     val k = floor(t).cast("long")
@@ -766,19 +636,8 @@ object Aggregations {
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def quantileBin(df: org.apache.spark.sql.DataFrame, valueCol: String,
-                  bins: Int): org.apache.spark.sql.DataFrame = {
-    require(bins >= 1, s"bins must be >= 1, got $bins")
-    val counts = df.filter(col(valueCol).isNotNull)
-      .groupBy(col(valueCol).as("__v")).agg(count(lit(1)).as("__c"))
-    // total rides the prefix result (round 20, prefixBeforeSharedTot)
-    val (_, pre) = graft.operators.Analytics
-      .prefixBeforeSharedTot(counts, "__v", col("__c"))
-    val binned = pre
-      .withColumnRenamed("__tot", "__n")
-      .select(col("__v"),
-        expr(s"(__cum * ${bins}L) div __n").as("bin"))
-    df.join(binned, col(valueCol) === col("__v"), "left").drop("__v")
-  }
+                  bins: Int): org.apache.spark.sql.DataFrame =
+    quantileBinBy(df, Nil, valueCol, bins)
 
   /** Per-GROUP [[quantileBin]] — equal-frequency binning WITHIN each
     * slice (per-language length deciles: one language's "long" is
@@ -787,8 +646,8 @@ object Aggregations {
     * distinct-value table, tied values share a bin, each group's bins
     * are as equal as its tie structure allows. The cumulative rides
     * the KEYED distributed prefix (a hot group splits across range
-    * slices — no per-key window task), group totals read the PINNED
-    * frame, and the (keys, value) → bin table joins back onto the
+    * slices — no per-key window task), group totals ride the same
+    * prefix pass, and the (keys, value) → bin table joins back onto the
     * rows null-safe (distinct-value-bounded build side). NULL values
     * keep a NULL bin. Output: input columns + `bin`.
     * EAGER: builds on the pinned-execution bridge, so Spark jobs
@@ -797,23 +656,17 @@ object Aggregations {
   def quantileBinBy(df: org.apache.spark.sql.DataFrame,
                     keyCols: Seq[String], valueCol: String,
                     bins: Int): org.apache.spark.sql.DataFrame = {
-    require(keyCols.nonEmpty, "quantileBinBy needs key columns; use quantileBin")
     require(bins >= 1, s"bins must be >= 1, got $bins")
     val keys = keyCols.map(col)
     val counts = df.filter(col(valueCol).isNotNull)
       .groupBy(keys :+ col(valueCol).as("__v"): _*)
       .agg(count(lit(1)).as("__c"))
-    val (shared, pre) = graft.operators.Analytics
-      .prefixBeforeByShared(counts, keyCols, "__v", col("__c"))
-    val binned = joinGroupTotals(pre, shared, keyCols)
-      .select(keyCols.zipWithIndex.map { case (c, i) =>
-        col(c).as(s"__bk$i") } ++
-        Seq(col("__v"), expr(s"(__cum * ${bins}L) div __n").as("bin")): _*)
-    val cond = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__bk$i") }
-      .reduce(_ && _) && col(valueCol) === col("__v")
-    df.join(binned, cond, "left")
-      .drop(keyCols.indices.map(i => s"__bk$i") :+ "__v": _*)
+    val binned = renKeys(valueRanks(counts, keyCols)
+      .select(keys ++ Seq(col("__v"),
+        expr(s"(__s * ${bins}L) div __n").as("bin")): _*), keyCols, "b")
+    dropTag(df.join(binned,
+        keyEq(keyCols, "b") && col(valueCol) === col("__v"), "left"),
+      keyCols, "b").drop("__v")
   }
 
   /** Winsorize TRANSFORM with percentile_cont fences — the row-level
@@ -840,31 +693,16 @@ object Aggregations {
     require(pLo >= 0 && pHi <= 1 && pLo < pHi,
       s"need 0 <= pLo < pHi <= 1, got ($pLo, $pHi)")
     val out = s"${valueCol}_winsorized"
-    if (keyCols.isEmpty) {
-      val f = quantilesCont(df, valueCol, Seq(pLo, pHi))
-        .agg(min(when(col("p") === pLo, col("value"))).as("__flo"),
-          min(when(col("p") === pHi, col("value"))).as("__fhi"))
-      df.crossJoin(broadcast(f))
-        .withColumn(out,
-          // greatest/least SKIP nulls - guard so NULL values stay NULL
-          when(col(valueCol).isNotNull,
-            least(greatest(col(valueCol).cast("double"), col("__flo")),
-              col("__fhi"))))
-        .drop("__flo", "__fhi")
-    } else {
-      val fences = quantilesContBy(df, keyCols, valueCol, Seq(pLo, pHi))
-        .groupBy(keyCols.zipWithIndex.map { case (c, i) =>
-          col(c).as(s"__wk$i") }: _*)
-        .agg(min(when(col("p") === pLo, col("value"))).as("__flo"),
-          min(when(col("p") === pHi, col("value"))).as("__fhi"))
-      val cond = keyCols.zipWithIndex
-        .map { case (c, i) => col(c) <=> col(s"__wk$i") }.reduce(_ && _)
-      df.join(fences, cond, "left")
-        .withColumn(out,
-          when(col(valueCol).isNotNull,
-            least(greatest(col(valueCol).cast("double"), col("__flo")),
-              col("__fhi"))))
-        .drop(keyCols.indices.map(i => s"__wk$i") :+ "__flo" :+ "__fhi": _*)
-    }
+    val fences = quantilesContBy(df, keyCols, valueCol, Seq(pLo, pHi))
+      .groupBy(keyCols.map(col): _*)
+      .agg(min(when(col("p") === pLo, col("value"))).as("__flo"),
+        min(when(col("p") === pHi, col("value"))).as("__fhi"))
+    joinTotals(df, fences, keyCols, "left")
+      .withColumn(out,
+        // greatest/least SKIP nulls - guard so NULL values stay NULL
+        when(col(valueCol).isNotNull,
+          least(greatest(col(valueCol).cast("double"), col("__flo")),
+            col("__fhi"))))
+      .drop("__flo", "__fhi")
   }
 }

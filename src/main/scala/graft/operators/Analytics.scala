@@ -264,58 +264,38 @@ object Analytics {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** Spearman rank correlation of two columns — the monotone-association
-    * complement of olsFit's Pearson r, exact up to the final formula:
-    * average ranks for ties are kept as INTEGER doubled-ranks
-    * r2(v) = 2·cum_before(v) + tied(v) + 1 (the ×2 cancels in ρ), the
-    * five sufficient statistics accumulate in decimal, and
-    * ρ = (n·Σxy − Σx·Σy) / (√(n·Σx² − (Σx)²)·√(n·Σy² − (Σy)²)) is a
-    * pinned double chain (IEEE sqrt). DISTINCT-VALUE-BOUNDED plan (the
-    * ksTest/aucRoc contract): one (x,y)-pair count aggregate over the
-    * corpus, one DISTRIBUTED cumulative count over the distinct values
-    * of EACH marginal ([[prefixBefore]] — range slices in parallel, no
-    * single-task sort), two key joins back onto the pair counts, one final
-    * map-side-combined fold of the weighted statistics — no row-level
-    * global window anywhere. Each decimal factor is cast BEFORE the
-    * multiply (decimal(20,0)·decimal(20,0)·decimal(20,0) → the Σ c·r·r
-    * accumulator holds exactly to n ≈ 3·10¹¹ rows, vs Long overflow at
-    * n ≈ 1.5·10⁹ in the row-window form). Bit-identical to the
-    * row-level-window formulation (AnalyticsSpec pins it). NULL for
-    * degenerate (constant) columns. */
-  /** Strictly-before prefix sum over a DISTINCT-key table, distributed —
+  /** Strictly-before prefix sums over a DISTINCT-key table, distributed —
     * the rank machinery of the exact-statistics family ([[spearman]],
-    * [[kendallTauExact]]): appends `__cum` = Σ weight over rows whose
-    * key sorts strictly earlier (NULLS FIRST, matching `orderBy(asc)`
-    * window semantics). The single-task global window this replaces
-    * serialized |distinct| values through one task — fine at 5M, a
-    * ceiling at 1e9+ raw continuous values. Plan: repartitionByRange on
-    * the key (contiguous ascending slices, ascending partition ids), a
-    * PARTITIONED cumulative window per slice (parallel across slices),
-    * and a #partitions-row offset table broadcast back. The sampled
-    * range bounds affect only WHERE a key lands, never its prefix mass
-    * (slices are contiguous and keys distinct), so the output is
-    * deterministic. Cost: two exchanges of the distinct-key table (one
-    * range, one pid-hash for the window) + a broadcast of #partitions
-    * rows — every stage bounded by |distinct| / #partitions. */
-  private[graft] def prefixBefore(dv: DataFrame, key: String,
-                                  weight: Column): DataFrame =
-    prefixBeforeMulti(dv, key, Seq("w" -> weight))
-      .withColumnRenamed("__cum_w", "__cum")
-
-  /** [[prefixBefore]] returning ALSO the pinned ranged frame — see
-    * [[prefixBeforeMultiByShared]]. */
-  private[graft] def prefixBeforeShared(dv: DataFrame, key: String,
-      weight: Column): (DataFrame, DataFrame) = {
-    val (shared, res) =
-      prefixBeforeMultiByShared(dv, Seq.empty, key, Seq("w" -> weight))
-    (shared, res.withColumnRenamed("__cum_w", "__cum"))
-  }
-
-  /** [[prefixBefore]] for SEVERAL weights in one pass (ksTest needs both
-    * groups' prefixes on the same distinct-value rows): appends
-    * `__cum_<name>` = Σ weight_<name> over strictly-preceding keys. One
-    * range exchange + one per-slice window + one broadcast offset table
-    * however many weights ride along.
+    * [[kendallTauExact]], the quantile/trim/AUC/Pettitt operators):
+    * returns `(shared, result)`, where `result` is `dv` plus, for each
+    * `(name, weight)`, `__cum_<name>` = Σ weight over rows of the SAME
+    * `keyCols` group whose `key` sorts strictly earlier (NULLS FIRST,
+    * matching `orderBy(asc)` window semantics). `keyCols = Nil` is the
+    * global prefix — one implementation, one contract, one guard.
+    *
+    * PLAN. The single-task global window this replaces serialized
+    * |distinct| values through one task — fine at 5M, a ceiling at 1e9+
+    * raw continuous values. Here: repartitionByRange on (keys..., key)
+    * (contiguous ascending slices, ascending partition ids), a
+    * PARTITIONED cumulative window per (slice, group) — parallel across
+    * slices — and an offset table aggregated per (pid, keys) and
+    * prefix-summed per keys over pid order (group slices are contiguous
+    * in pid by construction), joined back. The range exchange is
+    * COMPOUND for the keyed form, so a hot group splits across
+    * contiguous slices like the global form's values do: a plain
+    * per-key window (partitionBy keys, orderBy value) would serialize
+    * each group through one task — fine for many small slices, the r13
+    * single-task ceiling all over again the moment ONE slice holds 1e8+
+    * distinct values (a per-language length profile where one language
+    * is 80% of the corpus). The sampled range bounds affect only WHERE
+    * a key lands, never its prefix mass (slices are contiguous and keys
+    * distinct), so the output is deterministic. Cost: two exchanges of
+    * the distinct-key table (one range, one pid-hash for the window) +
+    * the offset join (for the global form a broadcast of #partitions
+    * rows) — every stage bounded by |distinct| / #partitions.
+    * Any number of weights rides the one range exchange, one per-slice
+    * window and one offset table (ksTest needs both groups' prefixes on
+    * the same distinct-value rows).
     *
     * CONSISTENCY CONTRACT: the offset-table branch and the local-window
     * branch each derive `spark_partition_id()` over the ranged frame,
@@ -331,109 +311,47 @@ object Analytics {
     * pinned to ONE RDD lineage via
     * [[org.apache.spark.sql.graftbridge.RddShareBridge]] (one
     * ShuffleDependency — both branches fetch the same shuffle files;
-    * the localCheckpoint alternative was measured 2.3× slower, it
-    * writes the frame to block storage). Note the bridge executes
-    * EAGERLY at operator-construction time (AQE materializes the range
-    * exchange inside `toRdd`) — see the bridge's scaladoc. The guard
+    * the localCheckpoint alternative is structural too but WRITES the
+    * frame to block storage, measured 2.3× slower on the 50M
+    * percentile arm). Note the bridge executes EAGERLY at
+    * operator-construction time (AQE materializes the range exchange
+    * inside `toRdd`) — see the bridge's scaladoc. The guard
     * stays as the backstop: the offset table records each slice's
     * (min,max) key range from ITS execution, and every output row's
-    * cumulative is guarded by `key ∈ [min,max]` of the slice it
+    * cumulative is guarded by `key ∈ [min,max]` of the (slice, group) it
     * joined — any future divergence (a bridge regression on a Spark
     * upgrade, an edit reintroducing the double execution) FAILS LOUDLY
     * via raise_error instead of returning a silently-wrong prefix.
     * NULL keys skip the range check (they sort first into slice 0
-    * under every sampling; min/max ignore them). */
-  private[graft] def prefixBeforeMulti(dv: DataFrame, key: String,
-      weights: Seq[(String, Column)]): DataFrame =
-    prefixBeforeMultiBy(dv, Seq.empty, key, weights)
-
-  /** Single-weight per-group prefix ([[prefixBeforeMultiBy]]). */
-  private[graft] def prefixBeforeBy(dv: DataFrame, keyCols: Seq[String],
-      key: String, weight: Column): DataFrame =
-    prefixBeforeMultiBy(dv, keyCols, key, Seq("w" -> weight))
-      .withColumnRenamed("__cum_w", "__cum")
-
-  /** [[prefixBeforeBy]] returning ALSO the pinned ranged frame — see
-    * [[prefixBeforeMultiByShared]]. */
-  private[graft] def prefixBeforeByShared(dv: DataFrame,
-      keyCols: Seq[String], key: String, weight: Column)
-      : (DataFrame, DataFrame) = {
-    val (shared, res) =
-      prefixBeforeMultiByShared(dv, keyCols, key, Seq("w" -> weight))
-    (shared, res.withColumnRenamed("__cum_w", "__cum"))
-  }
-
-  /** [[prefixBeforeMulti]] PER GROUP — the By-family's rank machinery
-    * (quantilesContBy, trimmedMeanBy, winsorizedMeanBy, giniBy,
-    * spearmanBy marginals, ksTestBy): appends `__cum_<name>` =
-    * Σ weight_<name> over rows of the SAME key-columns group whose
-    * `key` sorts strictly earlier. A plain per-key window (partitionBy
-    * keys, orderBy value) would serialize each group through one task —
-    * fine for many small slices, the r13 single-task ceiling all over
-    * again the moment ONE slice holds 1e8+ distinct values (a
-    * per-language length profile where one language is 80% of the
-    * corpus). Here the range exchange is on (keys..., key) COMPOUND, so
-    * a hot group splits across contiguous slices like the global form's
-    * values do: the local window partitions by (pid, keys), the offset
-    * table aggregates per (pid, keys) and prefix-sums per keys over
-    * pid order (group slices are contiguous in pid by construction),
-    * and the same (min,max)-range tripwire guards branch consistency
-    * per (pid, group). keys = empty IS [[prefixBeforeMulti]] — one
-    * implementation, one contract, one guard. */
-  private[graft] def prefixBeforeMultiBy(dv: DataFrame, keyCols: Seq[String],
-      key: String, weights: Seq[(String, Column)]): DataFrame =
-    prefixBeforeMultiByShared(dv, keyCols, key, weights)._2
-
-  /** [[prefixBeforeMultiBy]] returning `(shared, result)` — `shared` is
-    * the PINNED ranged frame (dv's columns, one row per input row, the
-    * very execution both prefix branches read). Callers that ALSO need
-    * an aggregate of `dv` (a broadcast grand total, a per-group total,
-    * a max key) must derive it from `shared`, not from `dv`: the bridge
-    * compiles a separate physical plan, so a second reference to `dv`
-    * RE-EXECUTES dv's whole lineage (scan + distinct aggregation —
-    * ReuseExchange cannot dedupe across plan compilations), while an
-    * aggregate of `shared` merely re-fetches the already-written range
-    * shuffle files (round 16; quantilesCont's total was a full second
-    * pass over the corpus before this). */
-  private[graft] def prefixBeforeMultiByShared(dv: DataFrame,
-      keyCols: Seq[String], key: String,
-      weights: Seq[(String, Column)]): (DataFrame, DataFrame) =
-    prefixBeforeMultiBySharedImpl(dv, keyCols, key, weights,
-      withTotals = false)
-
-  /** [[prefixBeforeMultiByShared]] whose result ADDITIONALLY carries,
-    * on every row, `__tot_<name>` = the grand total of each weight
-    * (per group for the keyed form) and `__keymin`/`__keymax` = the
-    * min/max of `key` — computed as unordered windows over the
+    * under every sampling; min/max ignore them).
+    *
+    * `shared` is the PINNED ranged frame (dv's columns, one row per
+    * input row, the very execution both prefix branches read). Callers
+    * that ALSO need an aggregate of `dv` (a broadcast grand total, a
+    * per-group total, a max key) must derive it from `shared`, not from
+    * `dv`: the bridge compiles a separate physical plan, so a second
+    * reference to `dv` RE-EXECUTES dv's whole lineage (scan + distinct
+    * aggregation — ReuseExchange cannot dedupe across plan
+    * compilations), while an aggregate of `shared` merely re-fetches the
+    * already-written range shuffle files (round 16; quantilesCont's
+    * total was a full second pass over the corpus before this).
+    *
+    * TOTALS RIDING (`withTotals`): `result` ADDITIONALLY carries, on
+    * every row, `__tot_<name>` = the total of each weight and
+    * `__keymin`/`__keymax` = the min/max of `key` (all per group for
+    * the keyed form) — computed as unordered windows over the
     * ALREADY-BUILT offset table (a #partitions- or groups-sized frame)
     * and delivered by the SAME broadcast/join the offsets ride
-    * (round 20). Callers that need a broadcast grand total used to run
-    * a separate `shared.agg(...)` — one more plan compilation, one
-    * more job, one more broadcast, and one more scan of the pinned
-    * shuffle files per call; the totals are a windowed fold of numbers
-    * the offset branch has already aggregated, so they are free here
-    * and identical by associativity (long/decimal sums of per-slice
-    * sums). */
-  private[graft] def prefixBeforeMultiBySharedTot(dv: DataFrame,
-      keyCols: Seq[String], key: String,
-      weights: Seq[(String, Column)]): (DataFrame, DataFrame) =
-    prefixBeforeMultiBySharedImpl(dv, keyCols, key, weights,
-      withTotals = true)
-
-  /** Single-weight [[prefixBeforeMultiBySharedTot]]: result carries
-    * `__cum`, `__tot`, `__keymin`, `__keymax`. */
-  private[graft] def prefixBeforeSharedTot(dv: DataFrame, key: String,
-      weight: Column): (DataFrame, DataFrame) = {
-    val (shared, res) = prefixBeforeMultiBySharedImpl(dv, Seq.empty, key,
-      Seq("w" -> weight), withTotals = true)
-    (shared, res.withColumnRenamed("__cum_w", "__cum")
-      .withColumnRenamed("__tot_w", "__tot"))
-  }
-
-  private def prefixBeforeMultiBySharedImpl(dv: DataFrame,
-      keyCols: Seq[String], key: String,
-      weights: Seq[(String, Column)],
-      withTotals: Boolean): (DataFrame, DataFrame) = {
+    * (round 20). A separate
+    * `shared.agg(...)` costs one more plan compilation, one more job,
+    * one more broadcast (or, keyed, a groups-sized aggregate joined
+    * back), and one more scan of the pinned shuffle files per call; the
+    * totals are a windowed fold of numbers the offset branch has
+    * already aggregated, so they are free here and identical by
+    * associativity (long/decimal sums of per-slice sums). */
+  private[graft] def prefixBefore(dv: DataFrame, keyCols: Seq[String],
+      key: String, weights: Seq[(String, Column)],
+      withTotals: Boolean = false): (DataFrame, DataFrame) = {
     require(weights.nonEmpty, "need at least one weight")
     val keys = keyCols.map(col)
     // width discipline (round 16): a weight that is ALREADY a plain
@@ -462,21 +380,8 @@ object Analytics {
       case (d, (n, w, None)) => d.withColumn(s"__w_$n", w)
       case (d, _) => d
     }
-    // STRUCTURAL single-execution (round 15, session 4): the offset
-    // branch and the window branch both consume the ranged+pid frame,
-    // and RangePartitioner samples its bounds per EXECUTION — their
-    // agreement used to lean on ReuseExchange deduping the identical
-    // subtree, which the r14 advisor flagged as optimizer-dependent
-    // and which the 50M pettitt stress arm then broke FOR REAL (the
-    // guard below fired: with another prefix pass + joins upstream,
-    // AQE's runtime decisions diverged between the two executions and
-    // the branches sliced differently). The frame is pinned to ONE
-    // RDD lineage ([[org.apache.spark.sql.graftbridge.RddShareBridge]]
-    // — one ShuffleDependency, so the exchange's map stage runs once
-    // and both branches fetch the same shuffle files; localCheckpoint
-    // would also be structural but WRITES the frame to block storage,
-    // measured 2.3× on the 50M percentile arm). The guard below is
-    // the backstop it was always meant to be, not the contract.
+    // single execution of the ranged+pid frame: see the CONSISTENCY
+    // CONTRACT above.
     //
     // GLOBAL path (round 16): the pinned leaf additionally CLAIMS
     // clustering on __pid (every row of partition i carries pid = i by
@@ -569,7 +474,25 @@ object Analytics {
     (shared, result)
   }
 
-  /** EAGER: builds on the pinned-execution bridge, so Spark jobs
+  /** Spearman rank correlation of two columns — the monotone-association
+    * complement of olsFit's Pearson r, exact up to the final formula:
+    * average ranks for ties are kept as INTEGER doubled-ranks
+    * r2(v) = 2·cum_before(v) + tied(v) + 1 (the ×2 cancels in ρ), the
+    * five sufficient statistics accumulate in decimal, and
+    * ρ = (n·Σxy − Σx·Σy) / (√(n·Σx² − (Σx)²)·√(n·Σy² − (Σy)²)) is a
+    * pinned double chain (IEEE sqrt). DISTINCT-VALUE-BOUNDED plan (the
+    * ksTest/aucRoc contract): one (x,y)-pair count aggregate over the
+    * corpus, one DISTRIBUTED cumulative count over the distinct values
+    * of EACH marginal ([[prefixBefore]] — range slices in parallel, no
+    * single-task sort), two key joins back onto the pair counts, one final
+    * map-side-combined fold of the weighted statistics — no row-level
+    * global window anywhere. Each decimal factor is cast BEFORE the
+    * multiply (decimal(20,0)·decimal(20,0)·decimal(20,0) → the Σ c·r·r
+    * accumulator holds exactly to n ≈ 3·10¹¹ rows, vs Long overflow at
+    * n ≈ 1.5·10⁹ in the row-window form). Bit-identical to the
+    * row-level-window formulation (AnalyticsSpec pins it). NULL for
+    * degenerate (constant) columns.
+    * EAGER: builds on the pinned-execution bridge, so Spark jobs
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def spearman(df: DataFrame, xCol: String, yCol: String): DataFrame =
@@ -581,7 +504,7 @@ object Analytics {
     * Simpson's-paradox screening, the reason the sliced form exists).
     * Same doubled-average-rank model and pinned ρ chain, but the
     * marginal cumulatives ride the KEYED distributed prefix
-    * ([[prefixBeforeMultiBy]] — a hot slice's marginal splits across
+    * ([[prefixBefore]] — a hot slice's marginal splits across
     * range partitions instead of serializing through one window task)
     * and the five decimal sufficient statistics aggregate per group.
     * Degenerate (constant-column) groups emit NULL rho. Output: key
@@ -602,13 +525,13 @@ object Analytics {
         .groupBy(keys ++ Seq(col(xCol).as("__x"), col(yCol).as("__y")): _*)
         .agg(count(lit(1)).as("__c")))
     def marginal(key: String, out: String, tag: String): DataFrame = {
-      // keyed distributed prefix ([[prefixBeforeMultiBy]]): a hot
+      // keyed distributed prefix ([[prefixBefore]]): a hot
       // group's marginal splits across range slices instead of
       // serializing through one per-key window task
       val cv = pairs.groupBy(keys :+ col(key).as("__v"): _*)
         .agg(sum(col("__c")).as("__cv"))
-      prefixBeforeBy(cv, keyCols, "__v", col("__cv"))
-        .withColumn(out, lit(2) * col("__cum") + col("__cv") + 1)
+      prefixBefore(cv, keyCols, "__v", Seq("w" -> col("__cv")))._2
+        .withColumn(out, lit(2) * col("__cum_w") + col("__cv") + 1)
         .select(keyCols.zipWithIndex.map { case (c, i) =>
           col(c).as(s"__$tag$i") } ++
           Seq(col("__v").as(s"__k$tag"), col(out)): _*)
@@ -687,7 +610,7 @@ object Analytics {
     * argmax), then ONE division for D. `d_at` reports the smallest
     * value attaining the max (deterministic tie-break). Plan: one
     * (value)-grouped count aggregate, then the DISTRIBUTED prefix pass
-    * over the distinct values ([[prefixBeforeMulti]] — range slices in
+    * over the distinct values ([[prefixBefore]] — range slices in
     * parallel, no single-task sort even at unbounded cardinality; the
     * KHist-sketch ECDF remains the bounded-STATE path when even the
     * distinct table is too big to exchange).
@@ -703,7 +626,7 @@ object Analytics {
     * where a distribution shift hiding inside one slice is invisible to
     * the pooled statistic. Same exact integer cross-product argmax, but
     * per group: the dual cumulatives ride the KEYED distributed prefix
-    * ([[prefixBeforeMultiBy]] — the range exchange is on (keys, value)
+    * ([[prefixBefore]] — the range exchange is on (keys, value)
     * compound, so a HOT slice splits across range partitions instead of
     * serializing through one window task, the r15 generalization of the
     * prefixBefore contract), and the per-group totals/argmax are
@@ -724,7 +647,7 @@ object Analytics {
     // INCLUSIVE cumulatives = strictly-before prefix + own count;
     // per-group totals from the PINNED ranged frame (not a second
     // execution of the counts aggregation)
-    val (cShared, cumPre) = prefixBeforeMultiByShared(counts, keyCols,
+    val (cShared, cumPre) = prefixBefore(counts, keyCols,
       "__v", Seq("a" -> col("__ca"), "b" -> col("__cb")))
     val cum = cumPre
       .withColumn("__cuma", col("__cum_a") + col("__ca"))
@@ -771,15 +694,15 @@ object Analytics {
     val counts = df.filter(col(valueCol).isNotNull)
       .groupBy(col(valueCol).cast("double").as("__v"))
       .agg(count(lit(1)).as("__c"))
-    val (shared, pre) = prefixBeforeShared(counts, "__v", col("__c"))
+    val (shared, pre) = prefixBefore(counts, Nil, "__v", Seq("w" -> col("__c")))
     val n = shared.agg(sum(col("__c")).as("__n"))
     pre.crossJoin(broadcast(n))
       .withColumn("__f0", least(greatest(
         (col("__v") - lit(lo)) / lit(hi - lo), lit(0.0)), lit(1.0)))
       .agg(max(col("__n")).as("n"),
-        max(d(col("__cum") + col("__c")) / d(col("__n")) - col("__f0"))
+        max(d(col("__cum_w") + col("__c")) / d(col("__n")) - col("__f0"))
           .as("__dp"),
-        max(col("__f0") - d(col("__cum")) / d(col("__n"))).as("__dm"))
+        max(col("__f0") - d(col("__cum_w")) / d(col("__n"))).as("__dm"))
       .select(col("n"),
         greatest(col("__dp"), lit(0.0)).as("d_plus"),
         greatest(col("__dm"), lit(0.0)).as("d_minus"))
@@ -812,7 +735,7 @@ object Analytics {
     val counts = df.filter(col(valueCol).isNotNull)
       .groupBy(col(valueCol).cast("double").as("__v"))
       .agg(count(lit(1)).as("__c"))
-    val (shared, pre) = prefixBeforeShared(counts, "__v", col("__c"))
+    val (shared, pre) = prefixBefore(counts, Nil, "__v", Seq("w" -> col("__c")))
     val n = shared.agg(sum(col("__c")).as("__n"))
     // S1(m) = Σ_{i≤m} (2i−1) = m²; 3·S2(m) = 3·Σ_{i≤m} (2i−1)² =
     // m(2m−1)(2m+1) — block pieces are exact integer differences in
@@ -825,9 +748,9 @@ object Analytics {
       .withColumn("__f0", least(greatest(
         (col("__v") - lit(lo)) / lit(hi - lo), lit(0.0)), lit(1.0)))
       .withColumn("__b1",
-        d(s1(col("__cum") + col("__c")) - s1(col("__cum"))))
+        d(s1(col("__cum_w") + col("__c")) - s1(col("__cum_w"))))
       .withColumn("__b2",
-        d(s2x3(col("__cum") + col("__c")) - s2x3(col("__cum"))) / 3.0)
+        d(s2x3(col("__cum_w") + col("__c")) - s2x3(col("__cum_w"))) / 3.0)
       .withColumn("__term",
         d(col("__c")) * col("__f0") * col("__f0") -
           col("__f0") * col("__b1") / d(col("__n")) +
@@ -876,17 +799,17 @@ object Analytics {
       .filter(col("__v") <= lit(lo) || col("__v") >= lit(hi))
       .agg(coalesce(sum(col("__c")), lit(0L)).as("n_boundary"))
     val counts = all.filter(col("__v") > lit(lo) && col("__v") < lit(hi))
-    val (shared, pre) = prefixBeforeShared(counts, "__v", col("__c"))
+    val (shared, pre) = prefixBefore(counts, Nil, "__v", Seq("w" -> col("__c")))
     val n = shared.agg(sum(col("__c")).as("__n"))
     pre.crossJoin(broadcast(n))
       .withColumn("__f0", (col("__v") - lit(lo)) / lit(hi - lo))
       // Σ(2i−1) over the block = (a+c)² − a²; Σ(2(n−i)+1) =
       // c(2n+1) − [(a+c)(a+c+1) − a(a+1)]
-      .withColumn("__b1", d(dec(col("__cum") + col("__c")) *
-        (col("__cum") + col("__c")) - dec(col("__cum")) * col("__cum")))
+      .withColumn("__b1", d(dec(col("__cum_w") + col("__c")) *
+        (col("__cum_w") + col("__c")) - dec(col("__cum_w")) * col("__cum_w")))
       .withColumn("__b2", d(dec(col("__c")) * (lit(2) * col("__n") + 1) -
-        (dec(col("__cum") + col("__c")) * (col("__cum") + col("__c") + 1) -
-          dec(col("__cum")) * (col("__cum") + 1))))
+        (dec(col("__cum_w") + col("__c")) * (col("__cum_w") + col("__c") + 1) -
+          dec(col("__cum_w")) * (col("__cum_w") + 1))))
       .withColumn("__term",
         (col("__b1") * log(col("__f0")) +
           col("__b2") * log(lit(1.0) - col("__f0"))) / d(col("__n")))
@@ -950,7 +873,7 @@ object Analytics {
       .groupBy(col(valueCol).cast("double").as("__v"))
       .agg(gAggs.head, gAggs.tail: _*)
     val weights = groups.indices.map(i => s"c$i" -> col(s"__c$i"))
-    val (shared, pre) = prefixBeforeMultiByShared(counts, Seq.empty,
+    val (shared, pre) = prefixBefore(counts, Nil,
       "__v", weights)
     val totAggs = groups.indices.map(i =>
       sum(col(s"__c$i")).as(s"__n$i"))
@@ -1001,8 +924,8 @@ object Analytics {
     val spine = spark.range(1, nTotal)
       .select(col("id").as("__i"))
     // scale 18 throughout the harmonic spine (see the g-term comment)
-    val (sShared, sPre) = prefixBeforeShared(spine, "__i",
-      (lit(1.0) / d(col("__i"))).cast("decimal(38,18)"))
+    val (sShared, sPre) = prefixBefore(spine, Nil, "__i",
+      Seq("w" -> (lit(1.0) / d(col("__i"))).cast("decimal(38,18)")))
     val hRow = sShared.agg(sum((lit(1.0) / d(col("__i")))
       .cast("decimal(38,18)")).cast("double").as("__h"))
     // the g terms sum at scale 18, NOT the usual dec(28,12): g ~ O(1)
@@ -1013,7 +936,7 @@ object Analytics {
     // At 1e-18 the disagreement is harmless; terms < 10 never overflow.
     val gRow = sPre.crossJoin(broadcast(hRow))
       .filter(col("__i") <= nTotal - 2)
-      .select(((col("__h") - (col("__cum").cast("double") +
+      .select(((col("__h") - (col("__cum_w").cast("double") +
         lit(1.0) / d(col("__i")))) / (lit(nTotal).cast("double") -
           d(col("__i")))).as("__gt"))
       .agg(sum(col("__gt").cast("decimal(38,18)"))
@@ -1057,7 +980,7 @@ object Analytics {
     *   W1 = Σ_i |F_a(v_i) − F_b(v_i)| · (v_{i+1} − v_i)
     * over consecutive distinct values — distinct-value-bounded like
     * the rest of the family. The inclusive dual cumulatives AND a
-    * dense 0-based value index ride ONE [[prefixBeforeMulti]] pass
+    * dense 0-based value index ride ONE [[prefixBefore]] pass
     * (the index is the same prefix with weight 1); the "next value"
     * is an equi-JOIN on index+1 — no single-task lead window, the
     * join shuffles on an integer key. |F_a − F_b| is an exact integer
@@ -1076,7 +999,7 @@ object Analytics {
   /** Per-GROUP [[wasserstein1]] — the sliced integral drift (per
     * language, per source, per day), where a tail stretch hiding in
     * one slice is invisible to the pooled statistic. Keyed distributed
-    * prefix ([[prefixBeforeMultiBy]]), next-value equi-join on
+    * prefix ([[prefixBefore]]), next-value equi-join on
     * (keys, index+1) null-safe, keys-sized totals as the output spine
     * (a single-distinct-value group has ZERO gap terms but must still
     * emit w1 = 0, so the per-group term sums LEFT-join the totals, not
@@ -1106,7 +1029,7 @@ object Analytics {
     // checkpoint itself row-scale (StressBench wasserstein_50m:
     // share=false 28.3 s vs share=true 37.8 s at 50M all-distinct,
     // where the frame spills and rescanning a cheap source wins).
-    val (wShared, cumRaw0) = prefixBeforeMultiByShared(counts, keyCols,
+    val (wShared, cumRaw0) = prefixBefore(counts, keyCols,
       "__v", Seq("a" -> col("__ca"), "b" -> col("__cb"), "i" -> lit(1L)))
     val cumRaw = cumRaw0
       .withColumn("__cuma", col("__cum_a") + col("__ca"))
@@ -1151,7 +1074,7 @@ object Analytics {
     *   Σᵢⱼ cxᵢ·cyⱼ·|vᵢ−vⱼ| = Σⱼ cyⱼ·(vⱼ·CXⱼ − SXⱼ)
     *                        + Σⱼ cxⱼ·(vⱼ·CYⱼ − SYⱼ),
     * with CX/SX the strictly-before count/value-mass prefixes — so all
-    * three means ride ONE [[prefixBeforeMulti]] pass (four weights:
+    * three means ride ONE [[prefixBefore]] pass (four weights:
     * both counts, both value masses) over the distinct values; totals
     * broadcast from the PINNED ranged frame. Exactness: values
     * quantize to 1e-12 integer quanta held in decimal(38,0)
@@ -1199,7 +1122,7 @@ object Analytics {
         (col("__v").cast("decimal(28,12)") * lit(1000000000000L))
           .cast("decimal(38,0)"))
     val dec38 = (c: Column) => c.cast("decimal(38,0)")
-    val (eShared, pre) = prefixBeforeMultiByShared(counts, keyCols,
+    val (eShared, pre) = prefixBefore(counts, keyCols,
       "__v", Seq("a" -> col("__ca"), "b" -> col("__cb"),
         "sa" -> (dec38(col("__vq")) * col("__ca")),
         "sb" -> (dec38(col("__vq")) * col("__cb"))))
@@ -1272,7 +1195,7 @@ object Analytics {
       .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
         sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
     def d(c: Column) = c.cast("double")
-    val (cShared, cumPre) = prefixBeforeMultiByShared(counts, keyCols,
+    val (cShared, cumPre) = prefixBefore(counts, keyCols,
       "__v", Seq("a" -> col("__ca"), "b" -> col("__cb")))
     val tot = cShared.groupBy(keys: _*)
       .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb"))
@@ -1451,7 +1374,7 @@ object Analytics {
     * distinct-value count tables (|Va|, |Vb| rows) cross-join into the
     * |Va|·|Vb| difference cells with weight ca·cb, per-distinct-diff
     * weights aggregate, and the WEIGHTED median rides the distributed
-    * prefix ([[prefixBeforeShared]] — no single-task window even when
+    * prefix ([[prefixBefore]] — no single-task window even when
     * the diff table is wide): rank t = (n_a·n_b − 1)/2, the two
     * containment rows interpolate exactly as percentile_cont does
     * (even pair count → midpoint, scipy's median of the flattened
@@ -1848,7 +1771,7 @@ object Analytics {
     * D₂ = 2·before_pooled + t − 2·before_own − c is an INTEGER per
     * block, and Σc·D₂, Σc·D₂² accumulate in decimal(38,0) (bounded by
     * 4N³ < 10³⁸ to N ≈ 10¹²). Both cumulatives ride ONE
-    * [[prefixBeforeMulti]] pass (the ksTest dual-weight machinery);
+    * [[prefixBefore]] pass (the ksTest dual-weight machinery);
     * totals read the pinned frame. Degenerate (both rank variances 0
     * — complete separation) → NULL w (report p̂ = 0 or 1 instead).
     * Output: one row (n_a, n_b, p_hat, w, dof).
@@ -1864,7 +1787,7 @@ object Analytics {
       .groupBy(col(valueCol).as("__v"))
       .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
         sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-    val (shared, pre) = prefixBeforeMultiByShared(counts, Seq.empty,
+    val (shared, pre) = prefixBefore(counts, Nil,
       "__v", Seq("a" -> col("__ca"), "b" -> col("__cb")))
     val agg = pre
       .withColumn("__t", col("__ca") + col("__cb"))
@@ -2154,7 +2077,7 @@ object Analytics {
           .as("__db"),
         sum(when(col(groupCol) === groupB && !event, 1L).otherwise(0L))
           .as("__cb"))
-    val (lrShared, pre) = prefixBeforeMultiByShared(counts, strataCols,
+    val (lrShared, pre) = prefixBefore(counts, strataCols,
       "__t", Seq("a" -> (col("__da") + col("__ca")),
         "b" -> (col("__db") + col("__cb"))))
     def renameKeys(df2: DataFrame, tag: String): DataFrame =
@@ -2795,7 +2718,7 @@ object Analytics {
         sum(when(col(groupCol) === groupC, 1L).otherwise(0L)).as("__nc"),
         sum(when(col(groupCol) === groupT, y).otherwise(zero)).as("__yt"),
         sum(when(col(groupCol) === groupC, y).otherwise(zero)).as("__yc"))
-    val (shared, pre) = prefixBeforeMultiByShared(sc, Seq.empty, "__k",
+    val (shared, pre) = prefixBefore(sc, Nil, "__k",
       Seq("nt" -> col("__nt"), "nc" -> col("__nc"),
         "yt" -> col("__yt"), "yc" -> col("__yc")))
     val tot = shared.agg(
@@ -2985,7 +2908,7 @@ object Analytics {
     val counts = df.filter(col(valueCol).isNotNull)
       .groupBy(col(valueCol).cast("double").as("__v"))
       .agg(count(lit(1)).as("__c"))
-    val (shared, pre) = prefixBeforeShared(counts, "__v", col("__c"))
+    val (shared, pre) = prefixBefore(counts, Nil, "__v", Seq("w" -> col("__c")))
     val n = shared.agg(sum(col("__c")).as("__n"))
     val cum = pre.crossJoin(broadcast(n))
       .withColumn("__l", greatest(lit(1L),
@@ -2997,15 +2920,15 @@ object Analytics {
       .withColumn("__k", expr("(__n - 1) div 2"))
     cum.agg(max(col("__n")).as("n"),
         max(col("__l")).as("rank_lo"), max(col("__u")).as("rank_hi"),
-        min(when(col("__cum") <= col("__k") &&
-          col("__k") < col("__cum") + col("__c"), col("__v"))).as("__mlo"),
-        min(when(col("__cum") <= col("__k") + 1 &&
-          col("__k") + 1 < col("__cum") + col("__c"), col("__v")))
+        min(when(col("__cum_w") <= col("__k") &&
+          col("__k") < col("__cum_w") + col("__c"), col("__v"))).as("__mlo"),
+        min(when(col("__cum_w") <= col("__k") + 1 &&
+          col("__k") + 1 < col("__cum_w") + col("__c"), col("__v")))
           .as("__mhi0"),
-        min(when(col("__cum") < col("__l") &&
-          col("__l") <= col("__cum") + col("__c"), col("__v"))).as("ci_lo"),
-        min(when(col("__cum") < col("__u") &&
-          col("__u") <= col("__cum") + col("__c"), col("__v"))).as("ci_hi"),
+        min(when(col("__cum_w") < col("__l") &&
+          col("__l") <= col("__cum_w") + col("__c"), col("__v"))).as("ci_lo"),
+        min(when(col("__cum_w") < col("__u") &&
+          col("__u") <= col("__cum_w") + col("__c"), col("__v"))).as("ci_hi"),
         max(when((d(col("__n")) - lit(z) * sqrt(d(col("__n")))) / 2.0 <
           lit(1.0), lit(true)).otherwise(lit(false))).as("clamped"))
       .withColumn("__mhi", coalesce(col("__mhi0"), col("__mlo")))
@@ -3475,14 +3398,14 @@ object Analytics {
     * self-joins (marginals, totals, argmaxes joined back per group).
     * All three accept empty keys: no rename, a `true` condition (the
     * optimizer folds `true && c` to `c`), nothing to drop. */
-  private def renKeys(d: DataFrame, keyCols: Seq[String],
+  private[graft] def renKeys(d: DataFrame, keyCols: Seq[String],
       tag: String): DataFrame =
     keyCols.zipWithIndex.foldLeft(d) { case (acc, (c, i)) =>
       acc.withColumnRenamed(c, s"__$tag$i") }
-  private def keyEq(keyCols: Seq[String], tag: String): Column =
+  private[graft] def keyEq(keyCols: Seq[String], tag: String): Column =
     keyCols.zipWithIndex.foldLeft(lit(true)) { case (acc, (c, i)) =>
       acc && (col(c) <=> col(s"__$tag$i")) }
-  private def dropTag(d: DataFrame, keyCols: Seq[String],
+  private[graft] def dropTag(d: DataFrame, keyCols: Seq[String],
       tag: String): DataFrame =
     d.drop(keyCols.indices.map(i => s"__$tag$i"): _*)
 
@@ -3492,8 +3415,8 @@ object Analytics {
     * off (the 100 TB regime) that hint is what keeps a grand-total join
     * bounded instead of planning a cartesian. Keyed totals are
     * groups-sized and get no hint — the planner picks the strategy. */
-  private def joinTotals(d: DataFrame, tot: DataFrame, keyCols: Seq[String],
-      how: String = "inner"): DataFrame = {
+  private[graft] def joinTotals(d: DataFrame, tot: DataFrame,
+      keyCols: Seq[String], how: String = "inner"): DataFrame = {
     val t = renKeys(tot, keyCols, "t")
     dropTag(d.join(if (keyCols.isEmpty) broadcast(t) else t,
       keyEq(keyCols, "t"), how), keyCols, "t")
@@ -3700,7 +3623,7 @@ object Analytics {
     * anywhere in this slice", MW-U asks "did the slice's location
     * shift"). Same doubled rank-sums, tie correction Σ(t³−t), and
     * pinned z chain, with the cumulative on the KEYED distributed
-    * prefix ([[prefixBeforeMultiBy]] — a hot slice splits across range
+    * prefix ([[prefixBefore]] — a hot slice splits across range
     * partitions instead of serializing through one window task) and the
     * four sufficient statistics aggregated per group. Slices missing a
     * group or with n ≤ 1 emit NULL z. Output: key columns +
@@ -3718,8 +3641,8 @@ object Analytics {
         sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
       .withColumn("__t", col("__ca") + col("__cb"))
     def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-    val agg = prefixBeforeBy(counts, keyCols, "__v", col("__t"))
-      .withColumnRenamed("__cum", "__before")
+    val agg = prefixBefore(counts, keyCols, "__v", Seq("w" -> col("__t")))._2
+      .withColumnRenamed("__cum_w", "__before")
       .groupBy(keys: _*)
       .agg(sum(col("__ca")).as("n_a"), sum(col("__cb")).as("n_b"),
         sum(dec(col("__ca")) *
@@ -3815,16 +3738,16 @@ object Analytics {
       .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
         sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
     val (cShared, cum) =
-      prefixBeforeShared(counts, "__u", col("__ca") + col("__cb"))
+      prefixBefore(counts, Nil, "__u", Seq("w" -> (col("__ca") + col("__cb"))))
     val tot = cShared.agg(sum(col("__ca")).as("n_a"),
       sum(col("__cb")).as("n_b"))
     val scored = cum.crossJoin(broadcast(tot))
       .withColumn("__n", col("n_a") + col("n_b"))
       // normalized squared mid-rank: s = ((2·cum + t + 1) / (2N))²
       .withColumn("__s",
-        (d(lit(2) * col("__cum") + col("__ca") + col("__cb") + 1) /
+        (d(lit(2) * col("__cum_w") + col("__ca") + col("__cb") + 1) /
           (d(col("__n")) * 2.0)) *
-        (d(lit(2) * col("__cum") + col("__ca") + col("__cb") + 1) /
+        (d(lit(2) * col("__cum_w") + col("__ca") + col("__cb") + 1) /
           (d(col("__n")) * 2.0)))
     scored
       .groupBy(col("n_a"), col("n_b"), col("__n"))
@@ -3878,7 +3801,7 @@ object Analytics {
   /** Per-GROUP [[kruskalWallis]] — the k-sample rank screen per slice
     * (per language: did ANY source's length profile shift inside this
     * language). Ranks ride the KEYED distributed prefix
-    * ([[prefixBeforeBy]] — hot slices split across range partitions),
+    * ([[prefixBefore]] — hot slices split across range partitions),
     * per-(slice, group) decimal rank sums, per-slice ordered fold.
     * Output: key columns + (k, n, h).
     * EAGER: builds on the pinned-execution bridge, so Spark jobs
@@ -3894,19 +3817,20 @@ object Analytics {
       .agg(count(lit(1)).as("__c"))
     val vt = pairs.groupBy(keys :+ col("__v"): _*)
       .agg(sum(col("__c")).as("__t"))
-    val (vtShared, cum) = prefixBeforeByShared(vt, keyCols, "__v", col("__t"))
+    val (vtShared, cum) =
+      prefixBefore(vt, keyCols, "__v", Seq("w" -> col("__t")))
     val ties = vtShared.groupBy(keys: _*).agg(
       sum(dec(col("__t")) * dec(col("__t")) * dec(col("__t")) -
         dec(col("__t"))).as("__ties"))
     val cumR = renKeys(cum.select(
-      keys :+ col("__v").as("__kv") :+ col("__cum") :+ col("__t"): _*),
+      keys :+ col("__v").as("__kv") :+ col("__cum_w") :+ col("__t"): _*),
       keyCols, "c")
     val ranked = pairs.join(cumR,
       keyEq(keyCols, "c") && col("__v") <=> col("__kv"))
     val g = ranked.groupBy(keys :+ col("__g"): _*)
       .agg(sum(col("__c")).as("__ng"),
         sum(dec(col("__c")) *
-          (lit(2) * col("__cum") + col("__t") + 1)).as("__r2g"))
+          (lit(2) * col("__cum_w") + col("__t") + 1)).as("__r2g"))
     joinTotals(g.select(keys ++ Seq(col("__ng"),
         struct(col("__g").as("g"),
           (d(col("__r2g")) * d(col("__r2g")) / d(col("__ng"))).as("bt"))
@@ -3954,18 +3878,18 @@ object Analytics {
       .groupBy(col(valueCol).as("__v"), col(groupCol).as("__g"))
       .agg(count(lit(1)).as("__c"))
     val vt = pairs.groupBy(col("__v")).agg(sum(col("__c")).as("__t"))
-    val (vtShared, cum) = prefixBeforeShared(vt, "__v", col("__t"))
+    val (vtShared, cum) = prefixBefore(vt, Nil, "__v", Seq("w" -> col("__t")))
     val tn = vtShared.agg(
       sum(dec(col("__t")) * dec(col("__t")) * dec(col("__t")) -
         dec(col("__t"))).as("__ties"),
       sum(col("__t")).as("__n"))
     val ranked = pairs.join(
-      cum.select(col("__v").as("__kv"), col("__cum"), col("__t")),
+      cum.select(col("__v").as("__kv"), col("__cum_w"), col("__t")),
       col("__v") <=> col("__kv"))
     val g = ranked.groupBy(col("__g"))
       .agg(sum(col("__c")).as("__ng"),
         sum(dec(col("__c")) *
-          (lit(2) * col("__cum") + col("__t") + 1)).as("__r2g"))
+          (lit(2) * col("__cum_w") + col("__t") + 1)).as("__r2g"))
     val a = g.select(col("__g").as("g_a"), col("__ng").as("n_a"),
       col("__r2g").as("__r2a"))
     val b = g.select(col("__g").as("g_b"), col("__ng").as("n_b"),
@@ -4026,12 +3950,12 @@ object Analytics {
     // per-judge mid-ranks over the KEYED distributed prefix
     val vt = kept.groupBy(col("__j"), col("__v"))
       .agg(count(lit(1)).as("__t"))
-    val cum = prefixBeforeBy(vt, Seq("__j"), "__v", col("__t"))
+    val cum = prefixBefore(vt, Seq("__j"), "__v", Seq("w" -> col("__t")))._2
     val ranked = kept.join(
       cum.select(col("__j").as("__kj"), col("__v").as("__kv"),
-        col("__cum"), col("__t")),
+        col("__cum_w"), col("__t")),
       col("__j") <=> col("__kj") && col("__v") <=> col("__kv"))
-      .withColumn("__r2", lit(2) * col("__cum") + col("__t") + 1)
+      .withColumn("__r2", lit(2) * col("__cum_w") + col("__t") + 1)
     val ties = vt.agg(
       coalesce(sum(dec(col("__t")) * dec(col("__t")) * dec(col("__t")) -
         dec(col("__t"))), dec(lit(0))).as("__tj"))
@@ -4096,12 +4020,12 @@ object Analytics {
     // within-block mid-ranks over the keyed distributed prefix
     val vt = kept.groupBy(col("__b"), col("__v"))
       .agg(count(lit(1)).as("__t"))
-    val cum = prefixBeforeBy(vt, Seq("__b"), "__v", col("__t"))
+    val cum = prefixBefore(vt, Seq("__b"), "__v", Seq("w" -> col("__t")))._2
     val ranked = kept.join(
       cum.select(col("__b").as("__kb"), col("__v").as("__kv"),
-        col("__cum"), col("__t")),
+        col("__cum_w"), col("__t")),
       col("__b") <=> col("__kb") && col("__v") <=> col("__kv"))
-      .withColumn("__r2", lit(2) * col("__cum") + col("__t") + 1)
+      .withColumn("__r2", lit(2) * col("__cum_w") + col("__t") + 1)
     val ties = vt.join(keptBlocks, Seq("__b")).agg(
       coalesce(sum(dec(col("__t")) * dec(col("__t")) * dec(col("__t")) -
         dec(col("__t"))), dec(lit(0))).as("__tj"))
@@ -4173,12 +4097,12 @@ object Analytics {
     val m = kept.select(col("__b")).distinct().count()
     val vt = kept.groupBy(col("__b"), col("__v"))
       .agg(count(lit(1)).as("__t"))
-    val cum = prefixBeforeBy(vt, Seq("__b"), "__v", col("__t"))
+    val cum = prefixBefore(vt, Seq("__b"), "__v", Seq("w" -> col("__t")))._2
     val ranked = kept.join(
       cum.select(col("__b").as("__kb"), col("__v").as("__kv"),
-        col("__cum"), col("__t")),
+        col("__cum_w"), col("__t")),
       col("__b") <=> col("__kb") && col("__v") <=> col("__kv"))
-      .withColumn("__r2", lit(2) * col("__cum") + col("__t") + 1)
+      .withColumn("__r2", lit(2) * col("__cum_w") + col("__t") + 1)
     val l2 = ranked.join(broadcast(pos), Seq("__tr"))
       .agg(coalesce(sum(dec(col("__pos")) * col("__r2")), dec(lit(0)))
         .as("__l2"))
@@ -4253,12 +4177,12 @@ object Analytics {
     * [[bhAdjust]]: appends `__rmin` = min(value) over rows whose key
     * sorts at-or-after (key DESC, so "this row and everything with a
     * larger key"). Same three-step structure and branch-consistency
-    * tripwire as [[prefixBeforeMultiBy]] (range exchange on key DESC →
+    * tripwire as [[prefixBefore]] (range exchange on key DESC →
     * per-slice inclusive window min → #partitions-row offset table of
     * strictly-preceding-slice mins, broadcast back), min instead of
     * sum. NULL keys sort LAST under desc and skip the range check.
     * Round 16 (r15 advisor): the ranged+pid frame is PINNED exactly as
-    * prefixBeforeMultiBy's — this operator had kept the
+    * prefixBefore's — this operator had kept the
     * optimizer-courtesy double execution the pettitt arm proved can
     * diverge; with complex upstream lineage (bhAdjust feeds it a
     * prefix + joins) the guard could abort here too. Global form, offs
@@ -4320,10 +4244,10 @@ object Analytics {
     def d(c: Column) = c.cast("double")
     val dp = df.filter(col(pCol).isNotNull)
       .groupBy(col(pCol).as("__p")).agg(count(lit(1)).as("__c"))
-    val (dpShared, pre) = prefixBeforeShared(dp, "__p", col("__c"))
+    val (dpShared, pre) = prefixBefore(dp, Nil, "__p", Seq("w" -> col("__c")))
     val n = dpShared.agg(sum(col("__c")).as("__n"))
     val ranked = pre
-      .withColumn("__r", col("__cum") + col("__c"))
+      .withColumn("__r", col("__cum_w") + col("__c"))
       .crossJoin(broadcast(n))
       .withColumn("__q", d(col("__p")) * d(col("__n")) / d(col("__r")))
     // projected to exactly (key, value) before the suffix-cummin pass:
@@ -4359,13 +4283,13 @@ object Analytics {
     def d(c: Column) = c.cast("double")
     val dp = df.filter(col(pCol).isNotNull)
       .groupBy(col(pCol).as("__p")).agg(count(lit(1)).as("__c"))
-    val (dpShared, pre) = prefixBeforeShared(dp, "__p", col("__c"))
+    val (dpShared, pre) = prefixBefore(dp, Nil, "__p", Seq("w" -> col("__c")))
     val n = dpShared.agg(sum(col("__c")).as("__n"))
     val ranked = pre
       .crossJoin(broadcast(n))
       // smallest rank in the tie block is __cum + 1, so the Holm
       // factor m − rank + 1 = m − __cum
-      .withColumn("__q", (d(col("__n")) - d(col("__cum"))) * d(col("__p")))
+      .withColumn("__q", (d(col("__n")) - d(col("__cum_w"))) * d(col("__p")))
     val adj = runningMinDescIncl(
         ranked.select((-col("__p")).as("__np"), (-col("__q")).as("__nq")),
         "__np", col("__nq"))
@@ -4431,14 +4355,14 @@ object Analytics {
     def d(c: Column) = c.cast("double")
     val dp = df.filter(col(pCol).isNotNull)
       .groupBy(col(pCol).as("__p")).agg(count(lit(1)).as("__c"))
-    val (dpShared, pre) = prefixBeforeShared(dp, "__p", col("__c"))
+    val (dpShared, pre) = prefixBefore(dp, Nil, "__p", Seq("w" -> col("__c")))
     val n = dpShared.agg(sum(col("__c")).as("__n"),
       coalesce(sum(when(col("__p") > lambda, col("__c"))
         .otherwise(0L)), lit(0L)).as("__ntail"))
       .withColumn("pi0", least(lit(1.0),
         d(col("__ntail")) / (lit(1.0 - lambda) * d(col("__n")))))
     val ranked = pre
-      .withColumn("__r", col("__cum") + col("__c"))
+      .withColumn("__r", col("__cum_w") + col("__c"))
       .crossJoin(broadcast(n))
       .withColumn("__q", d(col("__p")) * d(col("__n")) / d(col("__r")))
     val adj = runningMinDescIncl(ranked.select(col("__p"), col("__q")),
@@ -4506,12 +4430,12 @@ object Analytics {
     def d(c: Column) = c.cast("double")
     val de = df.filter(col(eCol).isNotNull)
       .groupBy(col(eCol).as("__e")).agg(count(lit(1)).as("__c"))
-    val (deShared, pre) = prefixBeforeShared(de, "__e", col("__c"))
+    val (deShared, pre) = prefixBefore(de, Nil, "__e", Seq("w" -> col("__c")))
     val n = deShared.agg(sum(col("__c")).as("__n"))
     val ranked = pre
       .crossJoin(broadcast(n))
       // largest descending rank of the tie block = m − #strictly-less
-      .withColumn("__q", (d(col("__n")) - d(col("__cum"))) * d(col("__e")))
+      .withColumn("__q", (d(col("__n")) - d(col("__cum_w"))) * d(col("__e")))
     val adj = runningMinDescIncl(
         ranked.select((-col("__e")).as("__ne"), (-col("__q")).as("__nq")),
         "__ne", col("__nq"))
@@ -4576,12 +4500,12 @@ object Analytics {
       .agg(sum(when(event, 1L).otherwise(0L)).as("__d"),
         sum(when(event, 0L).otherwise(1L)).as("__c"))
     val (kmShared, atRisk0) =
-      prefixBeforeShared(counts, "__t", col("__d") + col("__c"))
+      prefixBefore(counts, Nil, "__t", Seq("w" -> (col("__d") + col("__c"))))
     val n = kmShared.agg(sum(col("__d") + col("__c")).as("__n"))
     val atRisk = atRisk0
       .crossJoin(broadcast(n))
-      .withColumn("__risk", col("__n") - col("__cum"))
-      .drop("__cum", "__n")
+      .withColumn("__risk", col("__n") - col("__cum_w"))
+      .drop("__cum_w", "__n")
     val terms = atRisk
       .withColumn("__q",
         when(col("__d") > 0 && col("__d") < col("__risk"),
@@ -4591,8 +4515,8 @@ object Analytics {
       .withColumn("__z",
         when(col("__d") > 0 && col("__d") === col("__risk"), 1L)
           .otherwise(0L))
-    (prefixBeforeMulti(terms, "__t",
-      Seq("q" -> col("__q"), "z" -> col("__z"))), n)
+    (prefixBefore(terms, Nil, "__t",
+      Seq("q" -> col("__q"), "z" -> col("__z")))._2, n)
   }
 
   /** KM SURVIVAL QUANTILE — "median time to convert" and its
@@ -4638,7 +4562,7 @@ object Analytics {
     * computed in LOG SPACE so the running product is a prefix SUM:
     * each event time's ln(1 − dᵢ/nᵢ) is a pinned double cast to
     * decimal(28,12) (order-independent accumulation, the repo's sum
-    * contract), the inclusive prefix rides [[prefixBeforeMulti]] over
+    * contract), the inclusive prefix rides [[prefixBefore]] over
     * the DISTINCT-duration table, and S = exp(sum) — every step
     * engine-replayable. A time where dᵢ = nᵢ (everyone remaining dies)
     * sends S to EXACT 0 from that point (flagged via a prefix count of
@@ -4738,12 +4662,12 @@ object Analytics {
       .agg(sum(when(event, 1L).otherwise(0L)).as("__d"),
         sum(when(event, 0L).otherwise(1L)).as("__c"))
     val (naShared, atRisk0) =
-      prefixBeforeShared(counts, "__t", col("__d") + col("__c"))
+      prefixBefore(counts, Nil, "__t", Seq("w" -> (col("__d") + col("__c"))))
     val n = naShared.agg(sum(col("__d") + col("__c")).as("__n"))
     val atRisk = atRisk0
       .crossJoin(broadcast(n))
-      .withColumn("__risk", col("__n") - col("__cum"))
-      .drop("__cum", "__n")
+      .withColumn("__risk", col("__n") - col("__cum_w"))
+      .drop("__cum_w", "__n")
     def quanta(x: Column) =
       (x.cast("decimal(28,12)") * lit(1000000000000L)).cast("long")
     val terms = atRisk
@@ -4754,8 +4678,8 @@ object Analytics {
         when(col("__d") > 0,
           quanta(d(col("__d")) / (d(col("__risk")) * d(col("__risk")))))
           .otherwise(0L))
-    val cum = prefixBeforeMulti(terms, "__t",
-      Seq("h" -> col("__h"), "v" -> col("__v")))
+    val cum = prefixBefore(terms, Nil, "__t",
+      Seq("h" -> col("__h"), "v" -> col("__v")))._2
     cum.filter(col("__d") > 0)
       .select(col("__t").as("t"), col("__risk").as("n_risk"),
         col("__d").as("d"), col("__c").as("c"),
@@ -4775,7 +4699,7 @@ object Analytics {
     *   Eₐ(t) = d·nₐ/n,   V(t) = d·nₐ·n_b·(n−d) / (n²·(n−1)),
     * and Z = (Oₐ − Eₐ)/√ΣV, χ² = Z². Plan: one (duration)-grouped
     * count aggregate with per-group event/censor counts, BOTH groups'
-    * at-risk prefixes from ONE [[prefixBeforeMulti]] pass over the
+    * at-risk prefixes from ONE [[prefixBefore]] pass over the
     * pooled distinct durations (totals broadcast from the PINNED
     * ranged frame — never a second counts execution), then one final
     * one-row aggregate: Oₐ is an exact long sum, Eₐ and V accumulate
@@ -4805,7 +4729,7 @@ object Analytics {
           .as("__db"),
         sum(when(col(groupCol) === groupB && !event, 1L).otherwise(0L))
           .as("__cb"))
-    val (lrShared, pre) = prefixBeforeMultiByShared(counts, Seq.empty,
+    val (lrShared, pre) = prefixBefore(counts, Nil,
       "__t", Seq("a" -> (col("__da") + col("__ca")),
         "b" -> (col("__db") + col("__cb"))))
     val tot = lrShared.agg(
@@ -5108,10 +5032,10 @@ object Analytics {
     // values) + 1 — no single-task sort anywhere; the |X|-distinct rank
     // step parallelizes across range slices
     def rankTable(key: String, out: String): (DataFrame, DataFrame) = {
-      val (sh, pre) = prefixBeforeShared(
-        pairs.select(col(key)).distinct(), key, lit(1L))
-      (sh, pre.withColumn(out, (col("__cum") + 1).cast("long"))
-        .drop("__cum"))
+      val (sh, pre) = prefixBefore(
+        pairs.select(col(key)).distinct(), Nil, key, Seq("w" -> lit(1L)))
+      (sh, pre.withColumn(out, (col("__cum_w") + 1).cast("long"))
+        .drop("__cum_w"))
     }
     // |X|/|Y| = the distinct counts, read off each rank table's PINNED
     // frame (max(rank) over the prefix RESULT would re-run its window).
@@ -5367,7 +5291,7 @@ object Analytics {
     * statistic). Same rank formulation
     * G = Σᵢ(2i − n − 1)vᵢ / (n·Σv) with average-rank tie handling and
     * exact decimal accumulation, but the distinct-value cumulative
-    * rides the KEYED distributed prefix ([[prefixBeforeMultiBy]]: a hot
+    * rides the KEYED distributed prefix ([[prefixBefore]]: a hot
     * slice splits across range partitions instead of serializing
     * through one window task — no row sort, no single-task window
     * anywhere, at ANY per-slice cardinality).
@@ -5384,8 +5308,8 @@ object Analytics {
       .agg(count(lit(1)).as("__c"))
     // keyed distributed prefix: a hot group splits across range slices
     // instead of serializing through one per-key window task
-    prefixBeforeBy(counts, keyCols, "__v", col("__c"))
-      .withColumnRenamed("__cum", "__b")
+    prefixBefore(counts, keyCols, "__v", Seq("w" -> col("__c")))._2
+      .withColumnRenamed("__cum_w", "__b")
       .groupBy(keys: _*)
       .agg(sum(col("__c")).as("n"),
         sum(col("__v").cast(s"decimal(20,$scale)") *
@@ -5410,7 +5334,7 @@ object Analytics {
     * block contributes (k − cum_before)·v precisely, no row ordering
     * ambiguity. Plan: one (value, count, mass) distinct aggregate, ONE
     * distributed prefix pass over BOTH weights
-    * ([[prefixBeforeMultiByShared]] — count locates the rank-k
+    * ([[prefixBefore]] — count locates the rank-k
     * straddle, mass gives the cumulative numerator; totals read the
     * PINNED frame), one containment join against the broadcast |ps|
     * spine. The classical domain is NON-NEGATIVE values; negative
@@ -5434,7 +5358,7 @@ object Analytics {
       .agg(count(lit(1)).as("__c"))
       .withColumn("__m", col("__c").cast("decimal(19,0)") *
         col("__v").cast(s"decimal(18,$scale)"))
-    val (shared, pre) = prefixBeforeMultiByShared(counts, Seq.empty,
+    val (shared, pre) = prefixBefore(counts, Nil,
       "__v", Seq("c" -> col("__c"), "m" -> col("__m")))
     val tot = shared.agg(sum(col("__c")).as("__n"),
       sum(col("__m")).cast(s"decimal(38,$scale)").as("__t"))
@@ -5719,24 +5643,26 @@ object Analytics {
     // pass's PINNED ranged frame — a second reference to vc/st would
     // re-run the aggregation AND the upstream join (round 16; this
     // operator chains two prefixes, so the double execution compounded)
-    // totals ride the prefix result (round 20, prefixBeforeSharedTot):
-    // this operator chains TWO prefixes, each of which also ran its own
+    // totals ride the prefix result (round 20, withTotals): this
+    // operator chains TWO prefixes, each of which also ran its own
     // broadcast total/max aggregate — both folds now arrive on the
     // rows the offset join already delivers
-    val (_, vcPre) = prefixBeforeSharedTot(vc0, "__v", col("__c"))
+    val (_, vcPre) = prefixBefore(vc0, Nil, "__v", Seq("w" -> col("__c")),
+      withTotals = true)
     val vstats = vcPre
-      .withColumnRenamed("__tot", "__n")
+      .withColumnRenamed("__tot_w", "__n")
       .select(col("__v").as("__vk"),
-        (col("__n") - col("__c") - lit(2) * col("__cum")).as("__s"),
+        (col("__n") - col("__c") - lit(2) * col("__cum_w")).as("__s"),
         col("__n"))
     // rows-sized join back (|distinct|-bounded build side at worst),
     // then the time axis: per-distinct-t s-sums, inclusive prefix
     val st = base.join(vstats, col("__v") === col("__vk"))
       .groupBy(col("__t")).agg(sum(dec(col("__s"))).as("__st"),
         max(col("__n")).as("__n2"))
-    val (_, stPre) = prefixBeforeSharedTot(st, "__t", col("__st"))
+    val (_, stPre) = prefixBefore(st, Nil, "__t", Seq("w" -> col("__st")),
+      withTotals = true)
     val cum = stPre
-      .withColumn("__u", col("__cum") + col("__st"))
+      .withColumn("__u", col("__cum_w") + col("__st"))
       .filter(col("__t") < col("__keymax"))
     cum
       .withColumn("__au", abs(col("__u")))
@@ -5754,10 +5680,10 @@ object Analytics {
     * slice shifted, and when: per-event-type / per-source / per-language
     * regime changes that a global statistic averages away). Same two
     * distributed prefixes, KEYED: the value-axis and time-axis prefixes
-    * ride [[prefixBeforeBy]] (compound range exchange — a hot slice
+    * ride [[prefixBefore]] (compound range exchange — a hot slice
     * splits across contiguous slices instead of serializing through one
-    * window task), per-group n and t_max are groups-sized aggregates
-    * joined back null-safe, and the per-group argmax is ONE map-side-
+    * window task), per-group n and t_max ride each prefix pass's
+    * totals, and the per-group argmax is ONE map-side-
     * combined max over (|U|, −t, …) structs — no per-group rank window
     * anywhere. t must be NUMERIC here (the argmax tiebreak rides the
     * negated t inside the struct); a NULL group key is its own slice.
@@ -5768,41 +5694,26 @@ object Analytics {
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def pettittTestBy(df: DataFrame, keyCols: Seq[String], tCol: String,
                     valueCol: String): DataFrame = {
-    require(keyCols.nonEmpty, "pettittTestBy needs key columns; use pettittTest")
     def dec(c: Column) = c.cast("decimal(38,0)")
     def d(c: Column) = c.cast("double")
     val keys = keyCols.map(col)
-    def kJoin(tag: String): Column = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
-    def kRename(dd: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(dd) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def kDrop(dd: DataFrame, tag: String): DataFrame =
-      dd.drop(keyCols.indices.map(i => s"__$tag$i"): _*)
     val base = df.filter(col(tCol).isNotNull && col(valueCol).isNotNull)
       .select(keys :+ col(tCol).as("__t") :+ col(valueCol).as("__v"): _*)
     val vc = base.groupBy(keys :+ col("__v"): _*).agg(count(lit(1)).as("__c"))
-    // per-group totals and t_max read each pass's PINNED ranged frame
-    // (the global form's round-16 contract, keyed)
-    val (vcShared, vcPre) = prefixBeforeByShared(vc, keyCols, "__v",
-      col("__c"))
-    val tot = kRename(vcShared.groupBy(keys: _*)
-      .agg(sum(col("__c")).as("__n")), "n")
-    val vstats = kDrop(vcPre.join(tot, kJoin("n")), "n")
-      .select(keys.map(c => c) ++ Seq(col("__v").as("__vk"),
-        (col("__n") - col("__c") - lit(2) * col("__cum")).as("__s"),
-        col("__n")): _*)
-    val rows = kDrop(base.join(kRename(vstats, "v"),
-      kJoin("v") && col("__v") === col("__vk")), "v")
+    val (_, vcPre) = prefixBefore(vc, keyCols, "__v", Seq("w" -> col("__c")),
+      withTotals = true)
+    val vstats = vcPre.select(keys ++ Seq(col("__v").as("__vk"),
+      (col("__tot_w") - col("__c") - lit(2) * col("__cum_w")).as("__s"),
+      col("__tot_w").as("__n")): _*)
+    val rows = dropTag(base.join(renKeys(vstats, keyCols, "v"),
+      keyEq(keyCols, "v") && col("__v") === col("__vk")), keyCols, "v")
     val st = rows.groupBy(keys :+ col("__t"): _*)
       .agg(sum(dec(col("__s"))).as("__st"), max(col("__n")).as("__n2"))
-    val (stShared, stPre) = prefixBeforeByShared(st, keyCols, "__t",
-      col("__st"))
-    val tmax = kRename(stShared.groupBy(keys: _*)
-      .agg(max(col("__t")).as("__tmax")), "m")
-    val cand = kDrop(stPre.join(tmax, kJoin("m")), "m")
-      .withColumn("__u", col("__cum") + col("__st"))
-      .filter(col("__t") < col("__tmax"))
+    val (_, stPre) = prefixBefore(st, keyCols, "__t",
+      Seq("w" -> col("__st")), withTotals = true)
+    val cand = stPre
+      .withColumn("__u", col("__cum_w") + col("__st"))
+      .filter(col("__t") < col("__keymax"))
     cand
       .withColumn("__au", abs(col("__u")))
       .groupBy(keys: _*)
@@ -5937,7 +5848,7 @@ object Analytics {
   /** Per-GROUP [[adTest]] — the sliced tail-weighted drift gauge
     * (which SLICE's tails moved: the AD member of the per-slice family
     * beside [[ksTestBy]]): the distinct-(keys, value) counts ride ONE
-    * keyed multi-weight prefix ([[prefixBeforeMultiBy]] — hot slices
+    * keyed multi-weight prefix ([[prefixBefore]] — hot slices
     * split across range slices), per-group totals are a groups-sized
     * aggregate joined back null-safe, the per-value terms are the same
     * pinned chain snapped to decimal(28,12), and the per-group A²
@@ -5956,7 +5867,7 @@ object Analytics {
       .groupBy(keys :+ col(valueCol).as("__v"): _*)
       .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
         sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-    val (cShared, cumPre) = prefixBeforeMultiByShared(counts, keyCols,
+    val (cShared, cumPre) = prefixBefore(counts, keyCols,
       "__v", Seq("a" -> col("__ca"), "b" -> col("__cb")))
     val cum = joinTotals(cumPre, cShared.groupBy(keys: _*)
       .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb")),
@@ -6004,7 +5915,7 @@ object Analytics {
     * bounded by construction (doses, weeks, buckets). Plan: per
     * distinct VALUE a wide row of per-group counts (one map-side
     * aggregate), the per-group cumulative via ONE multi-weight
-    * distributed prefix ([[prefixBeforeMulti]] — |groups| weights ride
+    * distributed prefix ([[prefixBefore]] — |groups| weights ride
     * one range exchange), then 2J accumulates EXACTLY in decimal(38,0)
     * (2·U keeps the half-tie term integral) alongside the tie sums in
     * the same single aggregate — value cardinality unbounded, nothing
@@ -6029,8 +5940,8 @@ object Analytics {
           .as("__c0"),
         gi.tail.map(i => sum(when(col(groupCol) === groups(i), 1L)
           .otherwise(0L)).as(s"__c$i")): _*)
-    val cum = prefixBeforeMulti(vc, "__v",
-      gi.map(i => s"c$i" -> col(s"__c$i")))
+    val cum = prefixBefore(vc, Nil, "__v",
+      gi.map(i => s"c$i" -> col(s"__c$i")))._2
     // 2J contribution of one distinct value: Σ_{i<j} 2·c_j·cum_i + c_i·c_j
     val twoJTerm = (for { j <- gi; i <- gi if i < j } yield
         lit(2) * dec(col(s"__c$j")) * dec(col(s"__cum_c$i")) +
@@ -6488,7 +6399,7 @@ object Analytics {
     *   z = (W⁺ − n(n+1)/4) / √(n(n+1)(2n+5)/24 − Σ(t³−t)/48)
     * (no continuity correction; n is the NONZERO count). The rank
     * machinery is the family's distributed prefix over the DISTINCT
-    * |d| table ([[prefixBeforeShared]] — doubled average ranks
+    * |d| table ([[prefixBefore]] — doubled average ranks
     * 2R = 2·cum + c + 1, the mannWhitneyU model; no single-task sort
     * at any cardinality), with 2W⁺ exact in decimal(38,0). All-zero or
     * empty input → one row with NULL z (the r16 one-row contract).
@@ -6503,7 +6414,7 @@ object Analytics {
   /** Per-GROUP [[wilcoxonSignedRank]] — the sliced paired rank test
     * (did the pipeline change move THIS language's scores?): the rank
     * cumulative rides the KEYED distributed prefix
-    * ([[prefixBeforeByShared]] — a hot slice's |d| table splits across
+    * ([[prefixBefore]] — a hot slice's |d| table splits across
     * range partitions), per-group totals/tie terms off the pinned
     * frame, zero/total counts as the group spine (a group whose
     * differences are all zero survives with NULL z). Output: key
@@ -6524,15 +6435,15 @@ object Analytics {
       .groupBy(keys :+ abs(col("__d")).as("__ad"): _*)
       .agg(count(lit(1)).as("__c"),
         sum(when(col("__d") > 0, 1L).otherwise(0L)).as("__cp"))
-    val (shared, cum) = prefixBeforeByShared(counts, keyCols, "__ad",
-      col("__c"))
+    val (shared, cum) = prefixBefore(counts, keyCols, "__ad",
+      Seq("w" -> col("__c")))
     val tot = shared.groupBy(keys: _*)
       .agg(sum(col("__c")).as("n"),
         sum(dec(col("__c")) * col("__c") * col("__c") - col("__c"))
           .as("__ties"))
     val wRow = cum.groupBy(keys: _*)
       .agg(sum(dec(col("__cp")) *
-        (lit(2) * col("__cum") + col("__c") + 1)).as("__w2p"))
+        (lit(2) * col("__cum_w") + col("__c") + 1)).as("__w2p"))
     // the zero-count row is the group spine: a group whose differences
     // are all zero (and, with no keys, empty input) still reports
     joinTotals(joinTotals(zeroRow, tot, keyCols, "left"), wRow, keyCols,
@@ -6606,7 +6517,7 @@ object Analytics {
         col(valueCol).cast("double").as("__v"))
     val chk = s0.agg(count(lit(1)).as("__cn"),
       count_distinct(col("__t")).as("__cd"))
-    val (_, pre) = prefixBeforeMultiByShared(s0, Seq.empty, "__t",
+    val (_, pre) = prefixBefore(s0, Nil, "__t",
       Seq("c" -> lit(1L), "s" -> col("__v").cast("decimal(38,12)")))
     val nd = d(col("n"))
     val mixVar = lit(sigma2) + nd * lit(tau2)
@@ -6669,7 +6580,7 @@ object Analytics {
       count_distinct(col("__t")).as("__cd"))
     val vq = col("__v").cast("decimal(38,12)")
     val zero = lit(0).cast("decimal(38,12)")
-    val (_, pre) = prefixBeforeMultiByShared(s0, Seq.empty, "__t",
+    val (_, pre) = prefixBefore(s0, Nil, "__t",
       Seq("ca" -> when(col("__ia"), 1L).otherwise(0L),
         "sa" -> when(col("__ia"), vq).otherwise(zero),
         "cb" -> when(!col("__ia"), 1L).otherwise(0L),
@@ -6746,7 +6657,7 @@ object Analytics {
         col(valueCol).cast("double").as("__v"))
     val chk = s0.agg(count(lit(1)).as("__cn"),
       count_distinct(col("__t")).as("__cd"))
-    val (_, pre) = prefixBeforeMultiByShared(s0, Seq.empty, "__t",
+    val (_, pre) = prefixBefore(s0, Nil, "__t",
       Seq("c" -> lit(1L), "s" -> col("__v").cast("decimal(38,12)")))
     val nd = d(col("n"))
     val vt = lit(sigma2) / nd
@@ -6808,7 +6719,7 @@ object Analytics {
       count_distinct(col("__t")).as("__cd"))
     val vq = col("__v").cast("decimal(38,12)")
     val zero = lit(0).cast("decimal(38,12)")
-    val (_, pre) = prefixBeforeMultiByShared(s0, Seq.empty, "__t",
+    val (_, pre) = prefixBefore(s0, Nil, "__t",
       Seq("ca" -> when(col("__ia"), 1L).otherwise(0L),
         "sa" -> when(col("__ia"), vq).otherwise(zero),
         "cb" -> when(!col("__ia"), 1L).otherwise(0L),
@@ -7003,8 +6914,9 @@ object Analytics {
   private def weightedMedianRow(weighted: DataFrame, vCol: String,
                                 wCol: String, outCol: String): DataFrame = {
     def d(c: Column) = c.cast("double")
-    val (shared, cum0) = prefixBeforeShared(weighted, vCol, col(wCol))
-    val cum = cum0.withColumnRenamed("__cum", "__s")
+    val (shared, cum0) =
+      prefixBefore(weighted, Nil, vCol, Seq("w" -> col(wCol)))
+    val cum = cum0.withColumnRenamed("__cum_w", "__s")
       .crossJoin(broadcast(shared.agg(sum(col(wCol)).as("__n"))))
     val t = (d(col("__n")) - 1.0) / 2.0
     val k = floor(t).cast("long")
@@ -7963,7 +7875,7 @@ object Analytics {
         col(successCol).cast("int").cast("long").as("__s"))
     val chk = s0.agg(count(lit(1)).as("__cn"),
       count_distinct(col("__t")).as("__cd"))
-    val (_, pre) = prefixBeforeMultiByShared(s0, Seq.empty, "__t",
+    val (_, pre) = prefixBefore(s0, Nil, "__t",
       Seq("ca" -> when(col("__ia"), 1L).otherwise(0L),
         "xa" -> when(col("__ia"), col("__s")).otherwise(0L),
         "cb" -> when(!col("__ia"), 1L).otherwise(0L),
@@ -8191,7 +8103,7 @@ object Analytics {
         .otherwise(0L)).as("__bad"))
     val zeroX = lit(0).cast("decimal(38,0)")
     val zeroE = lit(0).cast("decimal(38,12)")
-    val (_, pre) = prefixBeforeMultiByShared(s0, Seq.empty, "__t",
+    val (_, pre) = prefixBefore(s0, Nil, "__t",
       Seq("c" -> lit(1L), "x" -> col("__x"),
         "e" -> col("__e").cast("decimal(38,12)")))
     val et = d(col("__et"))

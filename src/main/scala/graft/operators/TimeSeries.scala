@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Analytics.{dropTag, joinTotals, keyEq, renKeys}
 
 /** Regular-grid time-series operators: resample an irregular event stream
   * onto a fixed bucket grid with gap filling (last-observation-carried-
@@ -261,15 +262,9 @@ object TimeSeries {
   def maseEval(df: DataFrame, keyCols: Seq[String], tCol: String,
                actualCol: String, forecastCol: String, period: Long,
                scale: Int = 6): DataFrame = {
-    require(keyCols.nonEmpty, "maseEval needs key columns")
     require(period > 0, s"period must be positive, got $period")
     val keys = keyCols.map(col)
     def d(c: Column) = c.cast("double")
-    def renameKeys(dd: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(dd) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def keyEq(tag: String): Column = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
     val s = df.select(keys ++ Seq(col(tCol).cast("long").as("__t"),
       col(actualCol).cast("double").as("__a"),
       col(forecastCol).cast("double").as("__f")): _*)
@@ -283,17 +278,16 @@ object TimeSeries {
           .as("__sae"),
         count(col("__sm")).as("n_smape"),
         sum(col("__sm")).as("__ssm"))
-    val prev = renameKeys(s.filter(col("__a").isNotNull).select(
+    val prev = renKeys(s.filter(col("__a").isNotNull).select(
       keys :+ (col("__t") + period).as("__tp") :+
-        col("__a").as("__ap"): _*), "p")
+        col("__a").as("__ap"): _*), keyCols, "p")
     val naive = s.filter(col("__a").isNotNull)
-      .join(prev, keyEq("p") && col("__t") === col("__tp"))
+      .join(prev, keyEq(keyCols, "p") && col("__t") === col("__tp"))
       .groupBy(keys: _*)
       .agg(count(lit(1)).as("n_naive"),
         sum(abs(col("__a") - col("__ap")).cast(s"decimal(28,$scale)"))
           .as("__san"))
-    val naiveR = renameKeys(naive, "n")
-    err.join(naiveR, keyEq("n"), "left")
+    joinTotals(err, naive, keyCols, "left")
       .withColumn("mae", d(col("__sae")) / d(col("n_eval")))
       .withColumn("mae_naive",
         when(col("n_naive") > 0, d(col("__san")) / d(col("n_naive"))))
@@ -366,34 +360,8 @@ object TimeSeries {
     * Output: (lag, n_pairs, acf), lags ascending; a constant series
     * (zero variance) yields NULL acf. */
   def acf(df: DataFrame, tCol: String, valueCol: String,
-          maxLag: Int, meanScale: Int = 6): DataFrame = {
-    require(maxLag >= 1, s"maxLag must be >= 1, got $maxLag")
-    val s = df.select(col(tCol).cast("long").as("__t"),
-      col(valueCol).cast("double").as("__v"))
-      .filter(col("__t").isNotNull && col("__v").isNotNull)
-    val m = s.agg(
-      (sum(col("__v").cast(s"decimal(18,$meanScale)")).cast("double") /
-        count(lit(1)).cast("double")).as("__mean"))
-    val centered = s.crossJoin(broadcast(m))
-    val den = centered.agg(
-      sum(((col("__v") - col("__mean")) * (col("__v") - col("__mean")))
-        .cast("decimal(28,12)")).cast("double").as("__den"))
-    val lags = df.sparkSession.range(1, maxLag + 1)
-      .select(col("id").as("lag"))
-    val a = centered.select(col("__t"), col("__v"), col("__mean"))
-    val b = centered.select(col("__t").as("__tb"), col("__v").as("__vb"))
-    a.crossJoin(broadcast(lags))
-      .join(b, col("__tb") === col("__t") + col("lag"))
-      .groupBy(col("lag"))
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(((col("__v") - col("__mean")) * (col("__vb") - col("__mean")))
-          .cast("decimal(28,12)")).cast("double").as("__num"))
-      .crossJoin(broadcast(den))
-      .withColumn("acf",
-        when(col("__den") > 0, col("__num") / col("__den")))
-      .select("lag", "n_pairs", "acf")
-      .orderBy("lag")
-  }
+          maxLag: Int, meanScale: Int = 6): DataFrame =
+    acfBy(df, Nil, tCol, valueCol, maxLag, meanScale)
 
   /** Per-GROUP [[acf]] — per-slice seasonality/decay profiles (per
     * event-type, per language, per source: one slice's weekly cycle is
@@ -410,38 +378,29 @@ object TimeSeries {
   def acfBy(df: DataFrame, keyCols: Seq[String], tCol: String,
             valueCol: String, maxLag: Int, meanScale: Int = 6)
       : DataFrame = {
-    require(keyCols.nonEmpty, "acfBy needs key columns; use acf")
     require(maxLag >= 1, s"maxLag must be >= 1, got $maxLag")
     val keys = keyCols.map(col)
-    def renameKeys(d: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(d) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def keyJoin(tag: String): Column = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
     val s = df.select(keys ++ Seq(col(tCol).cast("long").as("__t"),
       col(valueCol).cast("double").as("__v")): _*)
       .filter(col("__t").isNotNull && col("__v").isNotNull)
-    val m = renameKeys(s.groupBy(keys: _*).agg(
+    val centered = joinTotals(s, s.groupBy(keys: _*).agg(
       (sum(col("__v").cast(s"decimal(18,$meanScale)")).cast("double") /
-        count(lit(1)).cast("double")).as("__mean")), "m")
-    val centered = s.join(m, keyJoin("m"))
-      .drop(keyCols.indices.map(i => s"__m$i"): _*)
-    val den = renameKeys(centered.groupBy(keys: _*).agg(
+        count(lit(1)).cast("double")).as("__mean")), keyCols)
+    val den = centered.groupBy(keys: _*).agg(
       sum(((col("__v") - col("__mean")) * (col("__v") - col("__mean")))
-        .cast("decimal(28,12)")).cast("double").as("__den")), "d")
+        .cast("decimal(28,12)")).cast("double").as("__den"))
     val lags = df.sparkSession.range(1, maxLag + 1)
       .select(col("id").as("lag"))
-    val b = renameKeys(centered.select(
-      keys :+ col("__t").as("__tb") :+ col("__v").as("__vb"): _*), "b")
-    centered.crossJoin(broadcast(lags))
-      .join(b, keyJoin("b") && col("__tb") === col("__t") + col("lag"))
-      .drop(keyCols.indices.map(i => s"__b$i"): _*)
+    val b = renKeys(centered.select(
+      keys :+ col("__t").as("__tb") :+ col("__v").as("__vb"): _*), keyCols, "b")
+    val pairs = dropTag(centered.crossJoin(broadcast(lags))
+      .join(b, keyEq(keyCols, "b") && col("__tb") === col("__t") + col("lag")),
+      keyCols, "b")
       .groupBy(keys :+ col("lag"): _*)
       .agg(count(lit(1)).as("n_pairs"),
         sum(((col("__v") - col("__mean")) * (col("__vb") - col("__mean")))
           .cast("decimal(28,12)")).cast("double").as("__num"))
-      .join(den, keyJoin("d"))
-      .drop(keyCols.indices.map(i => s"__d$i"): _*)
+    joinTotals(pairs, den, keyCols)
       .withColumn("acf",
         when(col("__den") > 0, col("__num") / col("__den")))
       .select(keys ++ Seq(col("lag"), col("n_pairs"), col("acf")): _*)
@@ -609,14 +568,14 @@ object TimeSeries {
       .select(col("__t"),
         when(col("__v") > col("__med"), 1).otherwise(-1).as("__s"))
     val (shared, ranked) = graft.operators.Analytics
-      .prefixBeforeShared(kept, "__t", lit(1L))
+      .prefixBefore(kept, Nil, "__t", Seq("w" -> lit(1L)))
     val cnts = shared.agg(count(lit(1)).as("__m"),
       coalesce(sum(when(col("__s") === 1, 1L).otherwise(0L)), lit(0L))
         .as("n_above"),
       coalesce(sum(when(col("__s") === -1, 1L).otherwise(0L)), lit(0L))
         .as("n_below"))
-    val a = ranked.select(col("__cum").as("__r"), col("__s"))
-    val b = ranked.select((col("__cum") - 1).as("__r"),
+    val a = ranked.select(col("__cum_w").as("__r"), col("__s"))
+    val b = ranked.select((col("__cum_w") - 1).as("__r"),
       col("__s").as("__s2"))
     val chg = a.join(b, "__r")
       .agg(coalesce(sum(when(col("__s") =!= col("__s2"), 1L)
@@ -667,13 +626,13 @@ object TimeSeries {
     val chk = s0.agg(count(lit(1)).as("__cn"),
       count_distinct(col("__t")).as("__cd"))
     val (shared, ranked) = graft.operators.Analytics
-      .prefixBeforeShared(s0, "__t", lit(1L))
+      .prefixBefore(s0, Nil, "__t", Seq("w" -> lit(1L)))
     val n = shared.agg(count(lit(1)).as("__m"))
-    val b = ranked.select(col("__cum").as("__rb"), col("__v").as("__v2"))
+    val b = ranked.select(col("__cum_w").as("__rb"), col("__v").as("__v2"))
     val pairs = ranked.crossJoin(broadcast(n))
       .withColumn("__half", expr("(__m + 1) div 2"))
-      .filter(col("__cum") < col("__m") - col("__half"))
-      .join(b, col("__rb") === col("__cum") + col("__half"))
+      .filter(col("__cum_w") < col("__m") - col("__half"))
+      .join(b, col("__rb") === col("__cum_w") + col("__half"))
     pairs
       .agg(coalesce(sum(when(col("__v2") > col("__v"), 1L)
           .otherwise(0L)), lit(0L)).as("s_plus"),
@@ -720,12 +679,12 @@ object TimeSeries {
     val chk = s0.agg(count(lit(1)).as("__cn"),
       count_distinct(col("__t")).as("__cd"))
     val (shared, ranked) = graft.operators.Analytics
-      .prefixBeforeShared(s0, "__t", lit(1L))
+      .prefixBefore(s0, Nil, "__t", Seq("w" -> lit(1L)))
     val n = shared.agg(count(lit(1)).as("__m"))
-    val mid = ranked.select(col("__cum").as("__r"), col("__v"))
-    val prv = ranked.select((col("__cum") + 1).as("__r"),
+    val mid = ranked.select(col("__cum_w").as("__r"), col("__v"))
+    val prv = ranked.select((col("__cum_w") + 1).as("__r"),
       col("__v").as("__vp"))
-    val nxt = ranked.select((col("__cum") - 1).as("__r"),
+    val nxt = ranked.select((col("__cum_w") - 1).as("__r"),
       col("__v").as("__vn"))
     mid.join(prv, "__r").join(nxt, "__r")
       .agg(coalesce(count(lit(1)), lit(0L)).as("n_interior"),

@@ -82,7 +82,7 @@ object RddShareBridge {
     * columns): the other side would land at hash(i) % n while this
     * side sits at i, and matches silently miss. Callers therefore only
     * use this variant when every join against the claimed frame is
-    * structurally broadcast (prefixBeforeMultiBy's GLOBAL path — the
+    * structurally broadcast (prefixBefore's GLOBAL path — the
     * #partitions-row offset table is broadcast-hinted; the KEYED path,
     * whose groups-sized offset join is planner-chosen, uses the
     * unclaimed [[sharedExecution]]). The prefix family's (min,max)

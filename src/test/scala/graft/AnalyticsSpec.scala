@@ -927,22 +927,23 @@ class AnalyticsSpec extends SparkSpec {
     val dv = Seq(Option(5.0), Option(1.0), None, Option(3.0), Option(9.0),
       Option(2.0)).toDF("v").withColumn("w", coalesce(col("v") * 10, lit(100.0))
         .cast("long"))
-    // unit weight: __cum = dense-rank − 1, NULL FIRST (asc window order)
-    val got = Analytics.prefixBefore(dv, "v", lit(1L))
-      .collect().map(r => (Option(r.get(0)), r.getAs[Long]("__cum")))
+    // unit weight: __cum_w = dense-rank − 1, NULL FIRST (asc window order)
+    val got = Analytics.prefixBefore(dv, Nil, "v", Seq("w" -> lit(1L)))._2
+      .collect().map(r => (Option(r.get(0)), r.getAs[Long]("__cum_w")))
       .sortBy(_._2).toSeq
     assert(got == Seq((None, 0L), (Some(1.0), 1L), (Some(2.0), 2L),
       (Some(3.0), 3L), (Some(5.0), 4L), (Some(9.0), 5L)))
     // weighted: cum of strictly-preceding w (null w=100 first)
-    val gw = Analytics.prefixBefore(dv, "v", col("w"))
-      .collect().map(r => (Option(r.get(0)), r.getAs[Long]("__cum"))).toMap
+    val gw = Analytics.prefixBefore(dv, Nil, "v", Seq("w" -> col("w")))._2
+      .collect().map(r => (Option(r.get(0)), r.getAs[Long]("__cum_w"))).toMap
     assert(gw(None) == 0L && gw(Some(1.0)) == 100L && gw(Some(2.0)) == 110L
       && gw(Some(3.0)) == 130L && gw(Some(5.0)) == 160L
       && gw(Some(9.0)) == 210L)
     partitionSweep { p =>
-      Analytics.prefixBefore(dv.repartition(p), "v", col("w"))
+      Analytics.prefixBefore(dv.repartition(p), Nil, "v",
+          Seq("w" -> col("w")))._2
         .collect().map(r => (Option(r.get(0)).map(_.toString).getOrElse(""),
-          r.getAs[Long]("__cum"))).sortBy(_._1).toSeq
+          r.getAs[Long]("__cum_w"))).sortBy(_._1).toSeq
     }
   }
 
@@ -1714,7 +1715,7 @@ class AnalyticsSpec extends SparkSpec {
     //    two spark_partition_id() derivations can no longer diverge,
     //    whatever AQE/ReuseExchange decide)
     val dv = spark.range(0, 100000).select(col("id").cast("double").as("v"))
-    val pb = Analytics.prefixBefore(dv, "v", lit(1L))
+    val pb = Analytics.prefixBefore(dv, Nil, "v", Seq("w" -> lit(1L)))._2
     spark.sparkContext.runJob(pb.queryExecution.toRdd,
       (it: Iterator[_]) => it.foreach(_ => ()))
     val optimized = pb.queryExecution.optimizedPlan.toString
@@ -2085,7 +2086,7 @@ class AnalyticsSpec extends SparkSpec {
     "prefix") {
     val dv = spark.range(0, 50000)
       .select(col("id").cast("double").as("v"))
-    val pb = Analytics.prefixBefore(dv, "v", lit(1L))
+    val pb = Analytics.prefixBefore(dv, Nil, "v", Seq("w" -> lit(1L)))._2
     // execute so AQE finalizes, then read the FINAL plan
     assert(pb.count() == 50000L)
     val plan = pb.queryExecution.executedPlan.toString
@@ -2095,9 +2096,9 @@ class AnalyticsSpec extends SparkSpec {
       "the window/offset branches must run ON the pinned partitions " +
         s"(clustering claim) — found a second exchange of the frame:\n$plan")
     // spot-check values against the closed form (v = 0..N-1 distinct,
-    // weight 1 → __cum = rank)
+    // weight 1 → __cum_w = rank)
     val sample = pb.filter(col("v").isin(0.0, 1.0, 25000.0, 49999.0))
-      .collect().map(r => r.getAs[Double]("v") -> r.getAs[Long]("__cum"))
+      .collect().map(r => r.getAs[Double]("v") -> r.getAs[Long]("__cum_w"))
       .toMap
     assert(sample == Map(0.0 -> 0L, 1.0 -> 1L, 25000.0 -> 25000L,
       49999.0 -> 49999L))
@@ -6375,17 +6376,19 @@ class AnalyticsSpec extends SparkSpec {
       keyed: (org.apache.spark.sql.DataFrame, Seq[String]) =>
         org.apache.spark.sql.DataFrame,
       data: org.apache.spark.sql.DataFrame,
-      emptyRow: Seq[Any]): Unit = {
+      emptyRows: Seq[Seq[Any]]): Unit = {
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toSeq).toSeq.sortBy(_.toString)
     val empty = data.limit(0)
-    assert(global(empty).collect().map(_.toSeq).toSeq == Seq(emptyRow),
+    assert(rows(global(empty)) == emptyRows,
       s"$name: the global form on empty input")
     assert(keyed(empty.withColumn("slice", lit("s")), Seq("slice")).isEmpty,
       s"$name: no slice exists on empty input")
     val nullKey = data.withColumn("slice", lit(null).cast("string"))
-    val by = keyed(nullKey, Seq("slice")).collect()
-    assert(by.length == 1 && by.head.isNullAt(0),
-      s"$name: an all-NULL key is ONE slice: ${by.toSeq}")
-    assert(by.head.toSeq.tail == global(data).collect().head.toSeq,
+    val by = keyed(nullKey, Seq("slice"))
+    assert(by.filter(col("slice").isNotNull).isEmpty,
+      s"$name: an all-NULL key is ONE slice: ${rows(by)}")
+    assert(rows(by.drop("slice")) == rows(global(data)),
       s"$name: the NULL slice equals the global statistic")
   }
 
@@ -6396,16 +6399,16 @@ class AnalyticsSpec extends SparkSpec {
       ("b", 7.6), ("a", -3.0), ("b", 12.0)).toDF("g", "v")
     edgeCases("psi", Analytics.psi(_, "g", "v", "a", "b", 0.0, 10.0, 4),
       Analytics.psiBy(_, _, "g", "v", "a", "b", 0.0, 10.0, 4), df,
-      Seq(0L, 0L, 0.0))
+      Seq(Seq(0L, 0L, 0.0)))
     edgeCases("jsDivergence",
       Analytics.jsDivergence(_, "g", "v", "a", "b", 0.0, 10.0, 4),
       Analytics.jsDivergenceBy(_, _, "g", "v", "a", "b", 0.0, 10.0, 4), df,
-      Seq(0L, 0L, 0.0))
+      Seq(Seq(0L, 0L, 0.0)))
     // four empty bins with shares 1/4 each: bc = 4 · 0.25 = 1, h = 0
     edgeCases("hellingerDistance",
       Analytics.hellingerDistance(_, "g", "v", "a", "b", 0.0, 10.0, 4),
       Analytics.hellingerDistanceBy(_, _, "g", "v", "a", "b", 0.0, 10.0, 4),
-      df, Seq(0L, 0L, 1.0, 0.0))
+      df, Seq(Seq(0L, 0L, 1.0, 0.0)))
   }
 
   test("key-less edge cases: kendallTau / wilcoxonSignedRank / " +
@@ -6413,22 +6416,66 @@ class AnalyticsSpec extends SparkSpec {
     val xy = Seq((1, 2), (2, 1), (3, 3), (3, 4), (4, 4), (5, 2))
       .toDF("x", "y")
     edgeCases("kendallTau", Analytics.kendallTau(_, "x", "y"),
-      Analytics.kendallTauBy(_, _, "x", "y"), xy, Seq(null, null, null, null))
+      Analytics.kendallTauBy(_, _, "x", "y"), xy,
+      Seq(Seq(null, null, null, null)))
     val paired = Seq((1.0, 1.0), (2.0, 3.5), (4.0, 1.0), (3.0, 3.0),
       (7.0, 2.0), (0.5, 2.0)).toDF("x", "y")
     edgeCases("wilcoxonSignedRank",
       Analytics.wilcoxonSignedRank(_, "x", "y"),
       Analytics.wilcoxonSignedRankBy(_, _, "x", "y"), paired,
-      Seq(0L, 0L, 0.0, 0.0, null))
+      Seq(Seq(0L, 0L, 0.0, 0.0, null)))
     val cats = Seq("en", "en", "de", "fr", "en", null).toDF("c")
     edgeCases("categoricalProfile", Analytics.categoricalProfile(_, "c"),
       Analytics.categoricalProfileBy(_, _, "c"), cats,
-      Seq(null, 0L, null, null, null))
+      Seq(Seq(null, 0L, null, null, null)))
     val hosts = Seq(("h1", 2.0), ("h1", 1.0), ("h2", 3.0), ("h3", 0.5))
       .toDF("h", "w")
     edgeCases("herfindahl", Analytics.herfindahl(_, "h", Some("w")),
       Analytics.herfindahlBy(_, _, "h", Some("w")), hosts,
-      Seq(0L, null, null, null))
+      Seq(Seq(0L, null, null, null)))
+    // the Aggregations / ML / TimeSeries globals written as their By
+    // form with no keys
+    import graft.operators.{Aggregations => Ag, TimeSeries => TS}
+    import graft.functions.{ML => M}
+    val v = Seq(3.0, 1.0, 4.0, 1.0, 5.0, 9.0, 2.0, 6.0, 5.0, 3.5).toDF("v")
+    edgeCases("quantilesCont", Ag.quantilesCont(_, "v", Seq(0.25, 0.5)),
+      Ag.quantilesContBy(_, _, "v", Seq(0.25, 0.5)), v, Nil)
+    edgeCases("trimmedMean", Ag.trimmedMean(_, "v", 0.2),
+      Ag.trimmedMeanBy(_, _, "v", 0.2), v, Seq(Seq(null, null, null)))
+    edgeCases("winsorizedMean", Ag.winsorizedMean(_, "v", 0.2),
+      Ag.winsorizedMeanBy(_, _, "v", 0.2), v, Nil)
+    edgeCases("madCont", Ag.madCont(_, "v"), Ag.madContBy(_, _, "v"), v, Nil)
+    edgeCases("quantileBin", Ag.quantileBin(_, "v", 3),
+      Ag.quantileBinBy(_, _, "v", 3), v, Nil)
+    edgeCases("winsorizeCont", Ag.winsorizeCont(_, Nil, "v", 0.1, 0.9),
+      Ag.winsorizeCont(_, _, "v", 0.1, 0.9), v, Nil)
+    val scored = Seq((1L, 0.9, true), (2L, 0.8, false), (3L, 0.7, true),
+      (4L, 0.7, false), (5L, 0.2, false), (6L, 0.4, true), (7L, 0.6, true))
+      .toDF("id", "s", "y")
+    edgeCases("aucRoc", M.aucRoc(_, "s", col("y")),
+      M.aucRocBy(_, _, "s", col("y")), scored, Seq(Seq(null, null, null)))
+    edgeCases("avgPrecision", M.avgPrecision(_, "s", col("y")),
+      M.avgPrecisionBy(_, _, "s", col("y")), scored,
+      Seq(Seq(null, null, null)))
+    edgeCases("calibration", M.calibration(_, "s", col("y"), 4),
+      M.calibrationBy(_, _, "s", col("y"), 4), scored,
+      Seq(Seq(0L, null, null)))
+    edgeCases("confusionStats",
+      M.confusionStats(_, col("y"), col("s") > 0.5),
+      M.confusionStatsBy(_, _, col("y"), col("s") > 0.5), scored,
+      Seq(Seq.fill(9)(null)))
+    edgeCases("liftTable", M.liftTable(_, "id", "s", col("y"), 3),
+      M.liftTableBy(_, _, "id", "s", col("y"), 3), scored,
+      (0L until 3L).map(b => Seq(b, 0L, 0L, null, 0L, null, null)))
+    val raters = Seq(("a", "a"), ("a", "b"), ("b", "b"), ("c", "c"),
+      ("b", "b"), ("c", "a")).toDF("r1", "r2")
+    edgeCases("cohensKappa", M.cohensKappa(_, "r1", "r2"),
+      M.cohensKappaBy(_, _, "r1", "r2"), raters,
+      Seq(Seq(null, null, null, null)))
+    val series = Seq((1, 2.0), (2, 4.0), (3, 3.0), (4, 5.0), (5, 4.0),
+      (6, 6.0)).toDF("t", "v")
+    edgeCases("acf", TS.acf(_, "t", "v", 2), TS.acfBy(_, _, "t", "v", 2),
+      series, Nil)
   }
 
   test("concurrently: one side failing cancels the other side's Spark " +

@@ -233,7 +233,8 @@ class BridgeContractSpec extends SparkSpec {
     "ONE pinned RDD id (one ShuffleDependency under the whole family)") {
     import spark.implicits._
     val pb = Analytics.prefixBefore(
-      (1 to 3000).map(i => (i * 7 % 61).toDouble).toDF("v"), "v", lit(1L))
+      (1 to 3000).map(i => (i * 7 % 61).toDouble).toDF("v"), Nil, "v",
+      Seq("w" -> lit(1L)))._2
     val ids = pb.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
     }

@@ -708,8 +708,8 @@ class PropertySpec extends SparkSpec {
       val expect = sorted.map(_._1).zip(cums).toMap
       val df = rows.toDF("k", "w").repartition(parts)
       val got = graft.operators.Analytics
-        .prefixBefore(df, "k", col("w"))
-        .collect().map(r => r.getDouble(0) -> r.getAs[Long]("__cum")).toMap
+        .prefixBefore(df, Nil, "k", Seq("w" -> col("w")))._2
+        .collect().map(r => r.getDouble(0) -> r.getAs[Long]("__cum_w")).toMap
       Prop(got == expect) :| s"got=$got expect=$expect parts=$parts"
     }, minTests = 25)
   }
@@ -738,9 +738,9 @@ class PropertySpec extends SparkSpec {
       }
       val df = rows.toDF("g", "k", "w").repartition(parts)
       val got = graft.operators.Analytics
-        .prefixBeforeBy(df, Seq("g"), "k", col("w"))
+        .prefixBefore(df, Seq("g"), "k", Seq("w" -> col("w")))._2
         .collect().map(r => (Option(r.getString(0)), r.getDouble(1)) ->
-          r.getAs[Long]("__cum")).toMap
+          r.getAs[Long]("__cum_w")).toMap
       Prop(got == expect) :| s"got=$got expect=$expect parts=$parts"
     }, minTests = 25)
   }
