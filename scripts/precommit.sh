@@ -8,7 +8,8 @@
 #   scripts/precommit.sh graft.AnalyticsSpec graft.FunctionsSpec
 #                                        # compile + FlatOutputSpec +
 #                                        # the touched specs
-#   scripts/precommit.sh --full          # the whole suite (session end),
+#   scripts/precommit.sh --full          # the benchmark's build, then
+#                                        # the whole suite (session end),
 #                                        # with each test's and suite's
 #                                        # wall time (ScalaTest -oD)
 #
@@ -17,6 +18,10 @@
 set -e
 cd "$(dirname "$0")/.."
 if [ "$1" = "--full" ]; then
+  # the benchmark compiles src/main with the scalac bundled in Spark's
+  # jars, which rejects some code sbt's compiler accepts; build it the
+  # same way, in a directory of its own, clear of run.py's build cache
+  perfbench/build.sh .bench_build/precommit
   exec sbt -batch 'set Test / testOptions += Tests.Argument("-oD")' test
 fi
 SPECS="graft.FlatOutputSpec $*"

@@ -83,9 +83,7 @@ private[graft] object Batch21 {
               count(lit(1)).as("cnt"),
               min(col("l_quantity")).as("min_qty"),
               max(col("l_quantity")).as("max_qty"))
-          val plan = agg.queryExecution.executedPlan.toString
-          val fired = plan.contains("graft-mv-") &&
-            !plan.contains("lineitem.parquet")
+          val fired = graft.plans.MvRewrite.rewritten(agg, raw, mvDir)
           // materialize THROUGH the rewrite (the checkpoint executes the
           // rewritten plan; the returned frame is its pinned result)
           agg.withColumn("rewritten", lit(fired))

@@ -111,9 +111,7 @@ private[graft] object Batch26 {
             .agg(sum(col("value").cast("decimal(18,4)"))
                 .cast("double").as("sum_value"),
               count(lit(1)).as("cnt"))
-          val plan = agg.queryExecution.executedPlan.toString
-          val fired = plan.contains("graft-smv-") &&
-            !plan.contains("events.parquet")
+          val fired = graft.plans.MvRewrite.rewritten(agg, raw, dirP)
           agg.withColumn("rewritten", lit(fired))
             .orderBy("event_type").localCheckpoint(true)
         } finally graft.plans.MvRewrite.deregister(raw)

@@ -110,8 +110,8 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = Diagnostics.sfDir
+    val cpus = Diagnostics.cpus
     // Per-query time is the MEDIAN of N timed runs (default 5) AFTER one
     // excluded warmup run of that same query: single-run numbers at
     // sub-3-second scales showed a ±10-30% JIT/run-order noise band across
@@ -133,36 +133,7 @@ object Bench {
     // interleaving the same burst lands on ONE sample of MANY queries:
     // each median-of-5 discards it, no single line's band jumps.
     val iters = math.max(sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "5").toInt, 1)
-    // Deliberate-noise harness test (NOT used by the driver): burn all
-    // cores for BURN_SECS starting at the top of pass K to verify the
-    // interleaving claim — see NOTES_r9. The burst is bounded-duration
-    // (default 8 s, the magnitude of the r8 q108 artifact: a host burst
-    // covering one query's ~5 contiguous sub-second iterations), NOT
-    // pass-length: saturating every core for a whole 15 s pass triggers
-    // host frequency scaling whose residue bleeds into the NEXT passes —
-    // a much bigger event than the artifact being simulated, and one no
-    // iteration ordering could absorb. -1 = off.
-    val burnPass = sys.env.getOrElse("SPARK_GRAFT_BENCH_BURN_PASS", "-1").toInt
-    val burnSecs = sys.env.getOrElse("SPARK_GRAFT_BENCH_BURN_SECS", "8").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Codegen-class cache sized for the suite (static conf, default
-      // 100 entries): 26 interleaved queries hold far more than 100
-      // generated classes, so at the default every pass RE-COMPILES
-      // every stage through Janino and the bench measures compilation,
-      // not execution — a pure artifact of round-robin ordering
-      // (measured on one host, minutes apart, at local[32] sf0.1:
-      // back-to-back r8 method 17.96 s; interleaved at default cache
-      // 24.47 s; interleaved with this setting ~r8 level — see
-      // NOTES_r9). Production sessions run plans warm (a 100 TB query's
-      // codegen is amortized over minutes, and long-lived sessions can
-      // set this conf); the bench must not charge Janino per iteration.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Diagnostics.localSession(cpus)
     val qs0 = SparkEntry.queries
     // Locale.ROOT: the f-interpolator delegates to the DEFAULT locale —
     // under a comma-decimal locale (de_DE etc.) it would print 0,8210 and
@@ -209,34 +180,14 @@ object Bench {
     val qsAll = qs0 ++ Map(canaryName ->
       ((s: SparkSession, _: String) => canary(s)))
     // Per-line executor TASK-TIME next to wall (round 20, VERDICT r19
-    // Next #8): a SparkListener sums executorRunTime per stage, mapped
-    // to the owning query via the job description set before each
-    // TIMED run (guide §1.5; warmup runs carry no description and are
-    // excluded, like their wall times). Driver-bound lines
-    // (wall ≫ task_time/cores) now separate from data-bound ones
-    // mechanically — the scaling block's ≈1 ratios at lower core
-    // counts are the expected signature of a driver-bound line, not a
-    // harness bug. Purely additive payload field.
-    val taskTimeMs = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    val stageOwner = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(
-          ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
-        val desc = Option(ss.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        if (desc.nonEmpty) stageOwner.put(ss.stageInfo.stageId, desc)
-      }
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val owner = stageOwner.get(te.stageId)
-        if (owner != null && te.taskMetrics != null) {
-          taskTimeMs.merge(owner,
-            java.lang.Long.valueOf(te.taskMetrics.executorRunTime),
-            (a, b) => java.lang.Long.valueOf(a + b))
-        }
-      }
-    })
+    // Next #8): each TIMED run is wrapped in Diagnostics.tracktime and its
+    // executorRunTime summed per line (warmup runs are excluded, like
+    // their wall times). Driver-bound lines (wall ≫ task_time/cores)
+    // separate from data-bound ones mechanically — the scaling block's
+    // ≈1 ratios at lower core counts are the expected signature of a
+    // driver-bound line, not a harness bug.
+    val taskTimeMs = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+    var taskTimeComplete = true
     val names = (canaryName +: SparkEntry.benchQueries)
       .filter(n => only.forall(_.contains(n)))
     val times = scala.collection.mutable.Map.empty[String, scala.collection.mutable.ArrayBuffer[Double]]
@@ -253,32 +204,22 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed in warmup: $e"); ok(name) = false }
     }
-    var pass = 0
-    while (pass < iters) {
-      val p0 = System.nanoTime()
-      if (pass == burnPass) {
-        val deadline = System.nanoTime() + (burnSecs * 1e9).toLong
-        (0 until Runtime.getRuntime.availableProcessors()).foreach { _ =>
-          val t = new Thread(() => {
-            var x = 0L; while (System.nanoTime() < deadline) { x += 1 }; if (x == -1) println(x)
-          })
-          t.setDaemon(true); t.start()
-        }
-        System.err.println(s"[bench] injected $burnSecs s all-core burn at top of pass $pass")
-      }
+    (1 to iters).foreach { _ =>
       names.foreach { name =>
         if (ok(name)) {
-          spark.sparkContext.setJobDescription(name)
-          val t0 = System.nanoTime()
-          try { run(qsAll(name)(spark, sfDir)); times(name) += (System.nanoTime() - t0) / 1e9 }
-          catch { case e: Throwable =>
+          try {
+            val (secs, t) = Diagnostics.tracktime(spark) {
+              val t0 = System.nanoTime()
+              run(qsAll(name)(spark, sfDir))
+              (System.nanoTime() - t0) / 1e9
+            }
+            times(name) += secs
+            taskTimeMs(name) += t.tasks.executorRunTimeMs
+            taskTimeComplete &&= t.complete
+          } catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: $e"); ok(name) = false }
-          finally spark.sparkContext.setJobDescription(null)
         }
       }
-      if (burnPass >= 0)
-        System.err.println(f"[bench] pass $pass: ${(System.nanoTime() - p0) / 1e9}%.1f s")
-      pass += 1
     }
     case class R(name: String, median: Double, min: Double, max: Double, ok: Boolean)
     val results = names.map { name =>
@@ -351,15 +292,12 @@ object Bench {
       val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       s"""{"load_avg":${fmt(os.getSystemLoadAverage)},"cpus":${os.getAvailableProcessors}}"""
     }
-    // average executor task-seconds per timed pass, per line (see the
-    // listener above). Listener events are async: drain the bus first;
-    // a drain timeout flags the map as partial (task_time_complete)
-    // rather than undercounting it silently
-    val taskTimeComplete = Diagnostics.drainListenerBus(spark.sparkContext)
-    val taskTime = results.filter(_.ok).flatMap { r =>
-      Option(taskTimeMs.get(r.name)).map(ms =>
-        "\"" + r.name + "\":" + fmt(ms.toDouble / 1000.0 / iters))
-    }.mkString("{", ",", "}")
+    // average executor task-seconds per timed pass, per line; a listener
+    // drain timeout flags the map as partial (task_time_complete) rather
+    // than undercounting it silently
+    val taskTime = results.filter(_.ok).map(r =>
+      "\"" + r.name + "\":" + fmt(taskTimeMs(r.name) / 1000.0 / iters))
+      .mkString("{", ",", "}")
     // task_time rides BETWEEN queries and spread: the spread map (with
     // its embedded "med" copies) must stay LAST among the big maps so
     // it survives the driver's front-truncating tail capture (r13/r14)

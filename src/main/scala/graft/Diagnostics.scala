@@ -1,22 +1,29 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.LongAdder
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftListenerShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** `tracktime(f)` diagnostics (reference `src/diagnostics.jl:84-98`): run a
+/** The one measurement core: the session every entry point and the test
+  * suite run on ([[localSession]]), the plan walk every count comes from
+  * ([[planNodes]], summarized by [[analyze]]), and the one listener
+  * ([[tracktime]]).
+  *
+  * `tracktime(f)` diagnostics (reference `src/diagnostics.jl:84-98`): run a
   * block and report where the time went. The reference swaps in a logging
   * Dagger context and aggregates per-(proc, event-type) timings + GC deltas;
   * the Spark-native sources for exactly those numbers are the listener
   * APIs — `QueryExecutionListener` for per-action wall time (the
-  * reference's per-`compute` events) and `SparkListener.onTaskEnd` task
+  * reference's per-`compute` events), `SparkListener` job events for the
+  * per-job spans, and `SparkListener.onTaskEnd` task
   * metrics for executor run/GC time, shuffle bytes, and spill (the
   * per-proc breakdown; Spark pre-aggregates GC per task the way the
   * reference folds `gc_diff`s). Listeners see every job the block runs,
@@ -25,8 +32,60 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * events; `tracktime` is the programmatic summary of them. */
 object Diagnostics {
 
+  /** Cores every entry point runs on: `SPARK_GRAFT_CPUS`, else the
+    * host's processor count. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** Fixture directory the entry points without a directory argument
+    * read: `SPARK_GRAFT_SF_DIR`, else `testdata/sf0.1` beside the
+    * checkout. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+    java.nio.file.Paths.get("..", "testdata", "sf0.1")
+      .toAbsolutePath.normalize.toString)
+
+  /** The one local session every entry point and the test suite build,
+    * so a timing and the plan that explains it come from the same
+    * settings:
+    *  - `local[cpus]` with `cpus` shuffle partitions;
+    *  - UTC session time zone, no UI;
+    *  - `nanosAsLong`: older testdata generations carry
+    *    TIMESTAMP(NANOS) in events.parquet, which Spark's reader rejects
+    *    without it; with it `ts` arrives as nanos-since-epoch longs
+    *    (`Tables.events` normalizes either shape to int64 nanos);
+    *  - a 4096-entry codegen-class cache (static conf, default 100): an
+    *    interleaved suite holds far more than 100 generated classes, so
+    *    at the default every pass re-compiles every stage through Janino
+    *    and a timing measures compilation, not execution (NOTES_r9:
+    *    local[32] sf0.1, interleaved passes 24.47 s at the default cache
+    *    against ~17.96 s with this setting).
+    * `conf` pairs are applied after these and may override them. */
+  def localSession(cpus: String, conf: (String, String)*): SparkSession = {
+    val shared = Seq(
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.codegen.cache.maxEntries" -> "4096")
+    val spark = (shared ++ conf)
+      .foldLeft(SparkSession.builder().master(s"local[$cpus]")) {
+        case (b, (k, v)) => b.config(k, v)
+      }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** One driver-side action (collect/count/write) with its wall time. */
   final case class ActionTiming(funcName: String, durationMs: Double)
+
+  /** One Spark job the tracked block ran: its [start, end] wall span in
+    * epoch ms (`endMs` is empty if it was still running when the block
+    * returned), its `spark.job.description`, its task count, and the
+    * `spark.sql.execution.id` it ran under (empty = a job no SQL
+    * execution owns). */
+  final case class JobTiming(jobId: Int, startMs: Long, endMs: Option[Long],
+                             description: Option[String], tasks: Int,
+                             executionId: Option[String])
 
   /** Executor-side totals over the tracked block (reference per-proc
     * aggregation, `src/diagnostics.jl:38-48`). `maxTaskMs` is the skew
@@ -40,6 +99,8 @@ object Diagnostics {
                               maxTaskMs: Long = 0L)
 
   final case class Timings(actions: Seq[ActionTiming], tasks: TaskTotals,
+                           /** every job started in the block, by id */
+                           jobs: Seq[JobTiming],
                            /** false iff the listener-bus drain timed out:
                              * totals may miss late events, but the block's
                              * RESULT is intact either way. */
@@ -87,6 +148,23 @@ object Diagnostics {
     }
   }
 
+  /** Every node of a physical plan, the one walk all plan counts come
+    * from. `plan.collect` stops at the wrappers; this walk goes through
+    * them: from the AQE root into its current plan, from a query stage
+    * into the stage's plan, and from every node into its subqueries. A
+    * stage wrapper is a node of its own but never an exchange: count
+    * the `ShuffleExchangeExec`/`BroadcastExchangeExec` inside it. A
+    * `ReusedExchangeExec` is a leaf: the walk does not enter the
+    * subtree it reuses, because it visits that exchange where it runs. */
+  def planNodes(plan: SparkPlan): Seq[SparkPlan] = {
+    val below = plan match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case p => p.children
+    }
+    plan +: (below ++ plan.subqueries).flatMap(planNodes)
+  }
+
   /** `analyze(df)` — the plan half of the diagnostics story ([[tracktime]]
     * is the runtime half): summarize the physical plan Spark chose for a
     * frame WITHOUT executing it. Use it the way the reference's docs use
@@ -94,23 +172,11 @@ object Diagnostics {
     * shuffles an operator pays, and check a dimension join broadcast
     * before paying for a full run. */
   def analyze(df: org.apache.spark.sql.DataFrame): PlanSummary = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, WholeStageCodegenExec}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
     val exec = df.queryExecution.executedPlan
-    // walk through the wrappers plan.collect stops at: the AQE root is a
-    // leaf node hiding the real plan, query stages hide their subtree,
-    // and subquery expressions hold whole side-plans
-    def flatten(p: SparkPlan): Seq[SparkPlan] = {
-      val below = p match {
-        case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-        case q: QueryStageExec => flatten(q.plan)
-        case _ => p.children.flatMap(flatten)
-      }
-      p +: (below ++ p.subqueries.flatMap(flatten))
-    }
-    val nodes = flatten(exec)
+    val nodes = planNodes(exec)
     val scans = nodes.collect { case s: FileSourceScanExec =>
       ScanInfo(s.relation.location.rootPaths.mkString(","),
         s.requiredSchema.map(_.name).mkString(", "),
@@ -132,13 +198,16 @@ object Diagnostics {
       exec.toString)
   }
 
-  /** Track the Spark work done by `f`: returns (result, timings). Nesting
-    * note: listeners are session/context-global, so concurrent queries on
-    * the same session during the block are included in the totals (the
-    * reference's context swap has the same property — it logs everything
-    * the scheduler runs while tracking is on). */
+  /** Track the Spark work done by `f`: returns (result, timings). Events
+    * posted before the block belong to earlier work, so the bus is
+    * drained before the listeners register. Nesting note: listeners are
+    * session/context-global, so concurrent queries on the same session
+    * during the block are included in the totals (the reference's context
+    * swap has the same property — it logs everything the scheduler runs
+    * while tracking is on). */
   def tracktime[T](spark: SparkSession)(f: => T): (T, Timings) = {
     val actions = new ConcurrentLinkedQueue[ActionTiming]()
+    val jobs = new ConcurrentHashMap[Int, JobTiming]()
     val tasks = new LongAdder; val runTime = new LongAdder; val gcTime = new LongAdder
     val shRead = new LongAdder; val shWrite = new LongAdder; val spilled = new LongAdder
     val maxTask = new java.util.concurrent.atomic.LongAccumulator(Math.max(_, _), 0L)
@@ -148,6 +217,14 @@ object Diagnostics {
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val sl = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(js.properties).flatMap(p => Option(p.getProperty(k)))
+        jobs.put(js.jobId, JobTiming(js.jobId, js.time, None,
+          prop("spark.job.description"), js.stageInfos.map(_.numTasks).sum,
+          prop("spark.sql.execution.id")))
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        jobs.computeIfPresent(je.jobId, (_, j) => j.copy(endMs = Some(je.time)))
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         val m = te.taskMetrics
         if (m != null) {
@@ -159,6 +236,7 @@ object Diagnostics {
         }
       }
     }
+    drainListenerBus(spark.sparkContext)
     spark.listenerManager.register(qel)
     spark.sparkContext.addSparkListener(sl)
     try {
@@ -171,6 +249,7 @@ object Diagnostics {
       (res, Timings(actions.asScala.toSeq,
         TaskTotals(tasks.sum, runTime.sum, gcTime.sum, shRead.sum, shWrite.sum,
           spilled.sum, maxTask.get),
+        jobs.values.asScala.toSeq.sortBy(_.jobId),
         complete = drained))
     } finally {
       spark.listenerManager.unregister(qel)
@@ -183,7 +262,7 @@ object Diagnostics {
     * listener bus, so a listener read right after an action can miss
     * them. False on timeout: the caller reports its numbers as partial
     * instead of silently undercounting. */
-  private[graft] def drainListenerBus(sc: org.apache.spark.SparkContext)
+  private def drainListenerBus(sc: org.apache.spark.SparkContext)
       : Boolean =
     try { GraftListenerShim.waitUntilListenerBusEmpty(sc, 30000); true }
     catch { case _: java.util.concurrent.TimeoutException => false }

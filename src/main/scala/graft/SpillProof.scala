@@ -23,24 +23,18 @@ import org.apache.spark.sql.SparkSession
   * disk instead of dying when a partition outgrows memory. */
 object SpillProof {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val cpus = Diagnostics.cpus
+    val spark = Diagnostics.localSession(cpus,
       // squeeze the unified pool so the hot window partition cannot fit:
       // the point is the spill path, not a big heap
-      .config("spark.memory.fraction", "0.1")
+      "spark.memory.fraction" -> "0.1",
       // the boundary arms must observe the STATIC plan choice: AQE's
       // skew split would re-partition the SHJ build reads and move the
       // failure point with it (that defense is measured separately in
       // CoreSpec "AQE skew split fires…") — here we demonstrate the raw
       // build-side no-spill contract itself
-      .config("spark.sql.adaptive.enabled",
-        if (args.headOption.contains("shj_boundary")) "false" else "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.adaptive.enabled" ->
+        (if (args.headOption.contains("shj_boundary")) "false" else "true"))
     val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
     System.err.println(s"[spill] heap ${heapMb} MB, memory.fraction 0.1, local[$cpus]")
     if (args.headOption.contains("shj_boundary")) { shjBoundary(spark, heapMb); return }

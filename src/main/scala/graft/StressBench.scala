@@ -498,8 +498,7 @@ object StressBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = Diagnostics.sfDir
     val iters = math.max(sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "5").toInt, 1)
     // SPARK_GRAFT_CONF="k=v;k=v" — extra session confs for one-off A/B
     // diagnosis runs (e.g. disabling AQE's skew split to attribute a
@@ -507,22 +506,14 @@ object StressBench {
     val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
       .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val spark = extraConf.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")) {
-        case (b, (k, v)) => System.err.println(s"[stress] extra conf: $k=$v")
-          b.config(k, v)
-      }
-      // deliberately NO autoBroadcastJoinThreshold override: broadcast
-      // HINTS are honored regardless of the threshold (and the 8 GB cap
-      // is hardcoded in BroadcastExchangeExec), while raising it would
-      // silently change the UN-hinted joins inside the operators (e.g.
-      // the maxDF cap's anti-join side) across every arm — the plans
-      // must be the production-default plans the comparison is about
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    extraConf.foreach { case (k, v) => System.err.println(s"[stress] extra conf: $k=$v") }
+    // deliberately NO autoBroadcastJoinThreshold override: broadcast
+    // HINTS are honored regardless of the threshold (and the 8 GB cap
+    // is hardcoded in BroadcastExchangeExec), while raising it would
+    // silently change the UN-hinted joins inside the operators (e.g.
+    // the maxDF cap's anti-join side) across every arm — the plans
+    // must be the production-default plans the comparison is about
+    val spark = Diagnostics.localSession(Diagnostics.cpus, extraConf: _*)
     buildFixtures(spark, sfDir)
 
     val docs = spark.read.parquet(s"$root/docs_stress")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,19 +10,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val nameFilter = args.lift(2)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Older testdata generations carry TIMESTAMP(NANOS) in events.parquet,
-      // which Spark's reader rejects without this flag; with it, `ts` arrives
-      // as nanos-since-epoch longs. Newer generations use TIMESTAMP(MICROS);
-      // Tables.events normalizes either shape to int64 nanos.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Diagnostics.localSession(Diagnostics.cpus)
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries

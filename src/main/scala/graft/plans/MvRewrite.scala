@@ -2,11 +2,12 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Materialized-view rewrite: transparently answer aggregates over a raw
@@ -73,6 +74,17 @@ object MvRewrite {
   }
 
   def deregister(rawPath: String): Unit = defs.remove(normalize(rawPath))
+
+  /** True iff the rewrite answered `df`: a file scan of its executed plan
+    * reads `rollupPath` and none reads `rawPath`. Decided from the scans'
+    * root paths, never from the plan string, which abbreviates every scan
+    * location past `spark.sql.maxMetadataStringLength` characters. */
+  def rewritten(df: DataFrame, rawPath: String, rollupPath: String): Boolean = {
+    val roots = graft.Diagnostics.planNodes(df.queryExecution.executedPlan)
+      .collect { case s: FileSourceScanExec => s.relation.location.rootPaths }
+      .flatten.map(p => normalize(p.toString)).toSet
+    roots(normalize(rollupPath)) && !roots(normalize(rawPath))
+  }
 
   private[plans] def lookup(path: String): Option[MvDef] =
     Option(defs.get(path))

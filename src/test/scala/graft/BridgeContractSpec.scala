@@ -41,17 +41,6 @@ import graft.operators.Analytics
   * deliberate-misuse doll proves the walker fires. */
 class BridgeContractSpec extends SparkSpec {
 
-  /** All plan nodes, descending through AQE wrappers and exchanges. */
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case other => other.children
-    }
-    p +: kids.flatMap(allNodes)
-  }
-
   /** Plan nodes reachable WITHOUT crossing a shuffle or broadcast
     * boundary — the region over which a leaf's claimed partitioning
     * still governs row placement (an exchange re-partitions honestly,
@@ -86,7 +75,7 @@ class BridgeContractSpec extends SparkSpec {
     * Returns one description per violation; empty = plan safe. Walk
     * the FINAL (post-AQE) plan, so run the query first. */
   private def shuffledJoinsAgainstClaimedLeaf(df: DataFrame): Seq[String] =
-    allNodes(df.queryExecution.executedPlan)
+    Diagnostics.planNodes(df.queryExecution.executedPlan)
       .filter(p => p.isInstanceOf[SortMergeJoinExec] ||
         p.isInstanceOf[ShuffledHashJoinExec])
       .flatMap { j =>
@@ -179,54 +168,40 @@ class BridgeContractSpec extends SparkSpec {
     "a SQL execution id") {
     val sc = spark.sparkContext
     val acc = sc.longAccumulator("bridge-contract-scans")
-    val execIds = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val id = Option(js.properties)
-          .map(_.getProperty("spark.sql.execution.id")).orNull
-        execIds.add(if (id == null) "MISSING" else id)
-      }
+    val rows = sc.parallelize(1L to 1000L, 8).map { i =>
+      acc.add(1)
+      org.apache.spark.sql.Row(i)
     }
-    sc.addSparkListener(listener)
-    try {
-      val rows = sc.parallelize(1L to 1000L, 8).map { i =>
-        acc.add(1)
-        org.apache.spark.sql.Row(i)
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.LongType)))
-      val ranged = spark.createDataFrame(rows, schema)
-        .repartitionByRange(4, col("v"))
-        .withColumn("__pid", spark_partition_id())
-      assert(acc.value == 0L, "nothing may execute before the bridge")
-      val pinned = RddShareBridge.sharedExecution(ranged)
-      org.apache.spark.GraftListenerShim
-        .waitUntilListenerBusEmpty(sc, 30000)
-      // EAGER: the range exchange ran AT CONSTRUCTION - exactly two
-      // input scans (the RangePartitioner bounds-sampling pass, then
-      // the shuffle map stage; both are the documented construction
-      // cost - a third scan here means the bridge started compiling
-      // the plan twice, a Spark bump changing 2000 means the exchange
-      // machinery itself changed shape and is worth re-auditing)
-      assert(acc.value == 2000L,
-        s"construction must scan the input exactly twice (sampling + " +
-          s"map), saw ${acc.value}")
-      // ...attributed to a SQL execution id, not dangling (contract 4)
-      assert(!execIds.isEmpty && !execIds.contains("MISSING"),
-        s"eager construction jobs must carry spark.sql.execution.id, " +
-          s"saw $execIds")
-      // ONCE: two consuming branches re-fetch the same shuffle files -
-      // the input is NEVER re-scanned
-      val c1 = pinned.filter(col("v") > 10).count()
-      val c2 = pinned.groupBy("__pid").count().count()
-      assert(c1 == 990L && c2 == 4L)
-      assert(acc.value == 2000L,
-        s"branches must NOT re-run the map stage, saw ${acc.value}")
-    } finally {
-      sc.removeSparkListener(listener)
-    }
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("v",
+        org.apache.spark.sql.types.LongType)))
+    val ranged = spark.createDataFrame(rows, schema)
+      .repartitionByRange(4, col("v"))
+      .withColumn("__pid", spark_partition_id())
+    assert(acc.value == 0L, "nothing may execute before the bridge")
+    val (pinned, timings) =
+      Diagnostics.tracktime(spark)(RddShareBridge.sharedExecution(ranged))
+    val execIds = timings.jobs.map(_.executionId.getOrElse("MISSING"))
+    // EAGER: the range exchange ran AT CONSTRUCTION - exactly two
+    // input scans (the RangePartitioner bounds-sampling pass, then
+    // the shuffle map stage; both are the documented construction
+    // cost - a third scan here means the bridge started compiling
+    // the plan twice, a Spark bump changing 2000 means the exchange
+    // machinery itself changed shape and is worth re-auditing)
+    assert(acc.value == 2000L,
+      s"construction must scan the input exactly twice (sampling + " +
+        s"map), saw ${acc.value}")
+    // ...attributed to a SQL execution id, not dangling (contract 4)
+    assert(execIds.nonEmpty && !execIds.contains("MISSING"),
+      s"eager construction jobs must carry spark.sql.execution.id, " +
+        s"saw $execIds")
+    // ONCE: two consuming branches re-fetch the same shuffle files -
+    // the input is NEVER re-scanned
+    val c1 = pinned.filter(col("v") > 10).count()
+    val c2 = pinned.groupBy("__pid").count().count()
+    assert(c1 == 990L && c2 == 4L)
+    assert(acc.value == 2000L,
+      s"branches must NOT re-run the map stage, saw ${acc.value}")
   }
 
   test("contract 2: every branch of a prefix-family plan references " +
@@ -262,10 +237,7 @@ class BridgeContractSpec extends SparkSpec {
         .rowsBetween(Long.MinValue, -1)
       val out = pinned.withColumn("c", count(lit(1)).over(w))
       out.write.format("noop").mode("overwrite").save()
-      val shuffles = allNodes(out.queryExecution.executedPlan).count(p =>
-        p.isInstanceOf[ShuffleExchangeExec] ||
-          p.isInstanceOf[ShuffleQueryStageExec])
-      (out, shuffles)
+      (out, PlanWalk.shuffleCount(out.queryExecution.executedPlan))
     }
     val (claimedOut, claimedShuffles) = windowPlan(claim = true)
     val (_, unclaimedShuffles) = windowPlan(claim = false)

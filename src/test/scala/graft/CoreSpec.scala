@@ -575,6 +575,10 @@ class CoreSpec extends SparkSpec {
     assert(p.summary.contains("pushed"))
     agg.collect()
     assert(Diagnostics.analyze(agg).codegenSpans > 0)
+    // the executed AQE plan wraps the exchange in a query stage: the
+    // stage is walked through, never counted as a second shuffle
+    assert(Diagnostics.analyze(agg).exchanges == 1)
+    assert(PlanWalk.shuffleCount(agg.queryExecution.executedPlan) == 1)
   }
 
   test("broadcastOp dimmap: excluded same-named dim stays as a (renamed) output dim") {

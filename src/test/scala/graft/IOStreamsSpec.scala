@@ -1131,14 +1131,8 @@ class IOStreamsSpec extends SparkSpec {
     * EXECUTED df — recursing through AQE roots and materialized query
     * stages, which collectLeaves treats as leaves. */
   private def scanMetrics(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case q: QueryStageExec => flatten(q.plan)
-      case other => other.children.flatMap(flatten)
-    })
-    val scans = flatten(df.queryExecution.executedPlan).collect {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val scans = Diagnostics.planNodes(df.queryExecution.executedPlan).collect {
       case f: FileSourceScanExec => f }
     (scans.map(_.metrics("numOutputRows").value).sum,
       scans.map(_.metrics("numFiles").value).sum)

@@ -26,10 +26,11 @@ class MvRewriteSpec extends SparkSpec {
     "min_qty" -> ((a, b) => least(a, b)),
     "max_qty" -> ((a, b) => greatest(a, b)))
 
-  /** Build + register a fresh rollup; run `body` with it; deregister. */
-  private def withMv[T](body: String => T): T = {
-    val mvDir = java.nio.file.Files.createTempDirectory("graft-mvspec-")
-      .toAbsolutePath.toString + "/rollup"
+  /** Build + register a fresh rollup at `mvDir`; run `body` with it;
+    * deregister. */
+  private def withMv[T](mvDir: String =
+      java.nio.file.Files.createTempDirectory("graft-mvspec-")
+        .toAbsolutePath.toString + "/rollup")(body: String => T): T = {
     val li = spark.read.parquet(raw)
     graft.sources.IO.upsertAggregate(spark, mvDir,
       mvSlice(li.filter(col("l_orderkey") % 2 === 0)),
@@ -46,10 +47,8 @@ class MvRewriteSpec extends SparkSpec {
     try body(mvDir) finally MvRewrite.deregister(raw)
   }
 
-  private def readsRollup(df: DataFrame): Boolean = {
-    val p = df.queryExecution.executedPlan.toString
-    p.contains("graft-mvspec-") && !p.contains("lineitem.parquet")
-  }
+  private def readsRollup(df: DataFrame, mvDir: String): Boolean =
+    MvRewrite.rewritten(df, raw, mvDir)
 
   private def q(df: DataFrame): DataFrame =
     df.groupBy("l_returnflag", "l_linestatus")
@@ -59,9 +58,9 @@ class MvRewriteSpec extends SparkSpec {
         max(col("l_quantity")).as("max_qty"))
 
   test("mv rewrite: fires on the declared shapes, bit-identical results") {
-    withMv { _ =>
+    withMv() { mvDir =>
       val viaMv = q(spark.read.parquet(raw))
-      assert(readsRollup(viaMv), "full-key aggregate did not rewrite")
+      assert(readsRollup(viaMv, mvDir), "full-key aggregate did not rewrite")
       val viaMvRows = viaMv.orderBy("l_returnflag", "l_linestatus").collect()
       MvRewrite.deregister(raw)
       val rawRows = q(spark.read.parquet(raw))
@@ -71,23 +70,23 @@ class MvRewriteSpec extends SparkSpec {
   }
 
   test("mv rewrite: key-subset grouping, global agg, key filter") {
-    withMv { _ =>
+    withMv() { mvDir =>
       def sub(df: DataFrame) = df.groupBy("l_returnflag")
         .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("s"),
           count(lit(1)).as("c"))
       val viaMv = sub(spark.read.parquet(raw))
-      assert(readsRollup(viaMv), "key-subset aggregate did not rewrite")
+      assert(readsRollup(viaMv, mvDir), "key-subset aggregate did not rewrite")
       val got = viaMv.orderBy("l_returnflag").collect()
 
       val glob = spark.read.parquet(raw)
         .agg(count(lit(1)).as("c"), max(col("l_quantity")).as("m"))
-      assert(readsRollup(glob), "global aggregate did not rewrite")
+      assert(readsRollup(glob, mvDir), "global aggregate did not rewrite")
       val gotGlob = glob.collect()
 
       val filt = spark.read.parquet(raw)
         .filter(col("l_linestatus") === "F")
         .groupBy("l_returnflag").agg(count(lit(1)).as("c"))
-      assert(readsRollup(filt), "key-filtered aggregate did not rewrite")
+      assert(readsRollup(filt, mvDir), "key-filtered aggregate did not rewrite")
       val gotFilt = filt.orderBy("l_returnflag").collect()
 
       MvRewrite.deregister(raw)
@@ -104,13 +103,13 @@ class MvRewriteSpec extends SparkSpec {
   }
 
   test("mv rewrite: cast-after-sum house style fires and re-wraps") {
-    withMv { _ =>
+    withMv() { mvDir =>
       def cq(df: DataFrame) = df.groupBy("l_returnflag")
         .agg(sum(col("l_quantity").cast("decimal(18,2)"))
             .cast("double").as("sum_qty"),
           count(lit(1)).cast("double").as("cnt_d"))
       val viaMv = cq(spark.read.parquet(raw))
-      assert(readsRollup(viaMv), "cast-wrapped aggregate did not rewrite")
+      assert(readsRollup(viaMv, mvDir), "cast-wrapped aggregate did not rewrite")
       val got = viaMv.orderBy("l_returnflag").collect()
       MvRewrite.deregister(raw)
       assert(got.toSeq == cq(spark.read.parquet(raw))
@@ -119,12 +118,12 @@ class MvRewriteSpec extends SparkSpec {
   }
 
   test("mv rewrite: parent operators above the aggregate still resolve") {
-    withMv { _ =>
+    withMv() { mvDir =>
       val df = q(spark.read.parquet(raw))
         .withColumn("avg_qty",
           col("sum_qty").cast("double") / col("cnt").cast("double"))
         .orderBy(col("cnt").desc, col("l_returnflag"), col("l_linestatus"))
-      assert(readsRollup(df), "aggregate under sort/project did not rewrite")
+      assert(readsRollup(df, mvDir), "aggregate under sort/project did not rewrite")
       val got = df.collect()
       MvRewrite.deregister(raw)
       val want = q(spark.read.parquet(raw))
@@ -136,8 +135,25 @@ class MvRewriteSpec extends SparkSpec {
     }
   }
 
+  test("mv rewrite: a rollup path longer than the plan string shows " +
+    "still reads as rewritten") {
+    // the plan string abbreviates each scan location to 100 characters
+    // (spark.sql.maxMetadataStringLength), so the rollup dir's last name
+    // is cut off here, as it is for q200/q216 under a long java.io.tmpdir
+    val base = java.nio.file.Files.createTempDirectory("mvspec-long-")
+      .toAbsolutePath.toString
+    val mvDir = s"$base/${"nested-level-" * 8}graft-mvspec-rollup"
+    assert(mvDir.length > 120, mvDir)
+    withMv(mvDir) { _ =>
+      val viaMv = q(spark.read.parquet(raw))
+      assert(readsRollup(viaMv, mvDir), "long-path rollup did not rewrite")
+      assert(!readsRollup(q(spark.read.parquet(raw).filter(
+        col("l_quantity") > 10)), mvDir), "a non-key filter must read raw")
+    }
+  }
+
   test("mv rewrite: undeclared shapes are left strictly untouched") {
-    withMv { _ =>
+    withMv() { _ =>
       def readsRaw(df: DataFrame) =
         df.queryExecution.executedPlan.toString.contains("lineitem.parquet")
       // avg: not a declared mergeable

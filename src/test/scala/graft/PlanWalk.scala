@@ -2,64 +2,43 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, BroadcastQueryStageExec, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.WindowExec
 
-/** Physical-plan walking shared by [[PlanBudgetSpec]] and the
+/** The plan-budget predicates shared by [[PlanBudgetSpec]] and the
   * [[PlanBudgetProbe]] diagnostic — the executable form of the PLANS.md
-  * audit. The walker descends through AQE wrappers and reused
-  * exchanges so the same counts come out whether a plan has been
-  * adaptively re-planned or not (the [[BridgeContractSpec]]
-  * convention). */
+  * audit. Every count walks [[Diagnostics.planNodes]], so the same
+  * numbers come out whether a plan has been adaptively re-planned or
+  * not: query stages are walked through and never counted as a second
+  * exchange, and a reused exchange re-reads shuffle files, it does not
+  * re-shuffle, so it is not counted again (mirrors how PLANS.md counts
+  * "exchanges the data actually pays for"). */
 object PlanWalk {
+  import Diagnostics.planNodes
 
-  /** All plan nodes, descending through AQE wrappers and exchanges.
-    * ReusedExchangeExec is NOT descended into for counting purposes —
-    * a reused exchange re-reads shuffle files, it does not re-shuffle,
-    * so its subtree must not double-count (mirrors how PLANS.md counts
-    * "exchanges the data actually pays for"). */
-  def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case _: ReusedExchangeExec => Seq.empty
-      case other => other.children
-    }
-    p +: kids.flatMap(allNodes)
-  }
+  /** Data-scale shuffles the plan pays for. Broadcast exchanges are
+    * deliberately NOT counted — shipping a dim/spine once per executor
+    * is the cheap path the budget is steering toward. */
+  def shuffleCount(p: SparkPlan): Int =
+    planNodes(p).count(_.isInstanceOf[ShuffleExchangeExec])
 
-  /** Data-scale shuffles the plan pays for: ShuffleExchangeExec nodes
-    * (or their AQE stage form), excluding reused ones. Broadcast
-    * exchanges are deliberately NOT counted — shipping a dim/spine
-    * once per executor is the cheap path the budget is steering
-    * toward. */
-  def shuffleCount(p: SparkPlan): Int = allNodes(p).count {
-    case _: ShuffleExchangeExec => true
-    case s: ShuffleQueryStageExec => !s.plan.isInstanceOf[ReusedExchangeExec]
-    case _ => false
-  }
-
-  /** Broadcast exchanges the plan pays for (excluding reused ones) —
-    * not part of the shuffle budget, but a dropped or added one-row
-    * totals hint shows here. */
-  def broadcastCount(p: SparkPlan): Int = allNodes(p).count {
-    case _: BroadcastExchangeExec => true
-    case s: BroadcastQueryStageExec => !s.plan.isInstanceOf[ReusedExchangeExec]
-    case _ => false
-  }
+  /** Broadcast exchanges the plan pays for — not part of the shuffle
+    * budget, but a dropped or added one-row totals hint shows here. */
+  def broadcastCount(p: SparkPlan): Int =
+    planNodes(p).count(_.isInstanceOf[BroadcastExchangeExec])
 
   /** True iff every leaf of the subtree is a literal in-memory table
     * or a driver-built `spark.range` — a spine (probability grid, side
     * labels, Fenwick bucket grid), bounded by construction, never
     * corpus data. */
   def localOnlyLeaves(p: SparkPlan): Boolean =
-    allNodes(p).filter(_.children.isEmpty).forall {
+    planNodes(p).filter(_.children.isEmpty).forall {
       case _: LocalTableScanExec => true
       case _: org.apache.spark.sql.execution.RangeExec => true
-      case a: AdaptiveSparkPlanExec => localOnlyLeaves(a.executedPlan)
+      case _: AdaptiveSparkPlanExec | _: QueryStageExec => true // walked through
       case _ => false
     }
 
@@ -84,7 +63,7 @@ object PlanWalk {
     * offsets frame, whose cardinality is the PARTITION COUNT (the
     * documented per-partition-totals spine), not the corpus. */
   def hasPidAggregate(p: SparkPlan): Boolean =
-    allNodes(p).exists {
+    planNodes(p).exists {
       case a: BaseAggregateExec =>
         a.groupingExpressions.exists(_.references.exists(
           _.name == "__pid"))
@@ -99,7 +78,7 @@ object PlanWalk {
     * either side with more than one row — is a missing-broadcast-hint
     * bug. */
   def unboundedCartesians(p: SparkPlan): Seq[SparkPlan] =
-    allNodes(p).filter {
+    planNodes(p).filter {
       case c: CartesianProductExec =>
         !(localOnlyLeaves(c) ||
           c.children.forall(ch => oneRowOutput(ch) || localOnlyLeaves(ch)))
@@ -115,7 +94,7 @@ object PlanWalk {
     * exactly zero of the unbounded kind (spearmanRowWindow, the one
     * library site, is a test-only bit-equality reference). */
   def unboundedUnpartWindows(p: SparkPlan): Seq[SparkPlan] =
-    allNodes(p).filter {
+    planNodes(p).filter {
       case w: WindowExec if w.partitionSpec.isEmpty =>
         !(localOnlyLeaves(w.child) || hasPidAggregate(w.child))
       case _ => false

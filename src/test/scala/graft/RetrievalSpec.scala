@@ -486,28 +486,17 @@ class RetrievalSpec extends SparkSpec {
     "a shuffle upstream launches no Spark job at construction, and a " +
     "narrow input still gets its spread") {
     import spark.implicits._
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     val plain = (1 to 200).map(i => (s"r$i", i.toDouble)).toDF("rid", "v")
     // two hash partitions behind an exchange: fewer than the session's
     // defaultParallelism (local[4]), so the gate must fire
     val shuffled = plain.repartition(2, col("rid"))
-    Diagnostics.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    val got =
-      try {
-        val o = graft.functions.ML.bootstrapMeans(shuffled, "rid", "v",
-          b = 4, salt = "t")
-        Diagnostics.drainListenerBus(sc)
-        o
-      } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 0,
-      s"construction ran ${jobs.get} Spark job(s) to count partitions")
+    val (got, timings) = Diagnostics.tracktime(spark) {
+      graft.functions.ML.bootstrapMeans(shuffled, "rid", "v", b = 4,
+        salt = "t")
+    }
+    val jobs = timings.jobs.size
+    assert(jobs == 0,
+      s"construction ran $jobs Spark job(s) to count partitions")
     val plan = got.queryExecution.executedPlan.toString
     assert("hashpartitioning\\(rid#\\d+, 4\\)".r.findFirstIn(plan).nonEmpty,
       s"expected the spread to defaultParallelism (4):\n$plan")

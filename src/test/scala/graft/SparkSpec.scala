@@ -5,18 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM, one session). */
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession =
+    Diagnostics.localSession("4", "spark.app.name" -> "graft-test")
 }
 
 trait SparkSpec extends AnyFunSuite {
