@@ -3,7 +3,7 @@
 # driver bench flagged three >2x "regressions" that were ambient host
 # drift (all 29 compared lines moved together, geomean 1.34x; this
 # round measured the same HEAD 2.4x apart hours apart). Protocol:
-#   - quiet host (no concurrent StressBench/verify/suite),
+#   - quiet host (no concurrent bench/verify/suite),
 #   - TWO back-to-back full Bench runs,
 #   - committed basis = per-query MIN of the two runs' medians
 #     (min-of-runs rejects one-run load bursts; each run's median

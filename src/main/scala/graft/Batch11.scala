@@ -226,8 +226,8 @@ private[graft] object Batch11 {
     // + partition-local sort) and the pushed range predicate's bounds.
     // The SCALE story — the sorted copy's scan reads ~1/30th of the rows
     // the unsorted one does — is pinned by scan-node metrics in
-    // IOStreamsSpec and measured at 10M rows by the StressBench
-    // scan_sorted/scan_unsorted arms; a hash gate can only see values.
+    // IOStreamsSpec and was measured at 10M rows (NOTES_r11.md
+    // "Data-skipping layouts"); a hash gate can only see values.
     Q("q131_sorted_scan",
       (s, dir) => {
         // 2024-01-15 UTC, [00:00, 24:00) in ns — ~3.3% of the 30-day span
@@ -251,8 +251,8 @@ private[graft] object Batch11 {
     // day=YYYY-MM-DD directories (ts-sorted within), and the day
     // predicate prunes STATICALLY — non-matching directories are never
     // listed, no footer opened, no row decoded (the IOStreamsSpec
-    // partition-pruning assert pins the mechanism; the StressBench hive
-    // arms measure it at 100M rows). Same oracle as q131 VERBATIM: the
+    // partition-pruning assert pins the mechanism; SCALE.md records it
+    // measured at 100M rows). Same oracle as q131 VERBATIM: the
     // day dir + in-day ts range must reproduce the plain table's answer
     // exactly — green certifies the partition derivation (UTC day from
     // int64 ns), the dynamic-partition write, and the pruned read.

@@ -24,12 +24,6 @@ object Bench {
   private[graft] def priorMedians(txt: String): Map[String, Double] = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    def num(v: JValue): Option[Double] = v match {
-      case JDouble(d) => Some(d)
-      case JInt(i) => Some(i.toDouble)
-      case JDecimal(d) => Some(d.toDouble)
-      case _ => None
-    }
     def fromPayload(j: JValue): Map[String, Double] = {
       val direct = j \ "queries" match {
         case JObject(fs) => fs.flatMap { case (n, v) => num(v).map(n -> _) }.toMap
@@ -89,12 +83,8 @@ object Bench {
     import org.json4s.jackson.JsonMethods
     val j = try JsonMethods.parse(txt) catch { case _: Throwable => org.json4s.JNothing }
     def fromSpread(j: JValue): Map[String, Double] = j \ "spread" match {
-      case JObject(fs) => fs.flatMap { case (n, o) => o \ "min" match {
-        case JDouble(d) => Some(n -> d)
-        case JInt(i) => Some(n -> i.toDouble)
-        case JDecimal(d) => Some(n -> d.toDouble)
-        case _ => None
-      } }.toMap
+      case JObject(fs) =>
+        fs.flatMap { case (n, o) => num(o \ "min").map(n -> _) }.toMap
       case _ => Map.empty
     }
     val direct = fromSpread(j)
@@ -106,6 +96,64 @@ object Bench {
         case JString(tail) => spreadField(tail, "min")
         case _ => spreadField(txt, "min")
       }
+    }
+  }
+
+  private def num(v: org.json4s.JValue): Option[Double] = v match {
+    case org.json4s.JDouble(d) => Some(d)
+    case org.json4s.JInt(i) => Some(i.toDouble)
+    case org.json4s.JDecimal(d) => Some(d.toDouble)
+    case _ => None
+  }
+
+  // Locale.ROOT: the f-interpolator delegates to the DEFAULT locale —
+  // under a comma-decimal locale (de_DE etc.) it would print 0,8210 and
+  // a json.load of the payload would reject it whole
+  private def fmt(d: Double): String =
+    String.format(java.util.Locale.ROOT, "%.4f", Double.box(d))
+
+  /** The scale factor in an sf directory's name (`…/sf0.1` → 0.1). */
+  private[graft] def sfOf(dir: String): Option[Double] = {
+    val m = java.util.regex.Pattern.compile("sf([0-9]+(?:\\.[0-9]+)?)/?$")
+      .matcher(dir)
+    if (m.find()) Some(m.group(1).toDouble) else None
+  }
+
+  /** The cross-round sanity stanza: each line's median against the
+    * prior artifact `file` (round `round`, contents `txt`), flagging
+    * >2x moves in either direction. A flag does NOT fail the bench —
+    * the r8 lesson is that a 5x one-line move on unchanged code needed
+    * a human re-run to adjudicate; the flags make such lines
+    * self-announcing. Only like is compared with like: when the prior
+    * artifact's top-level `sf` or `cpus` is missing or differs from
+    * this run's, the stanza names the baseline with `"skipped"` instead
+    * of `flags` (an sf0.001 run on 4 cores flagged against the sf0.1
+    * 32-core baseline says nothing). `cur` is (name, median, min) of
+    * every line that ran. */
+  private[graft] def sanityStanza(file: String, round: Int, txt: String,
+      sf: Option[Double], cpus: Int,
+      cur: Seq[(String, Double, Double)]): String = {
+    val j = try org.json4s.jackson.JsonMethods.parse(txt)
+      catch { case _: Throwable => org.json4s.JNothing }
+    val (priorSf, priorCpus) = (num(j \ "sf"), num(j \ "cpus").map(_.toInt))
+    val head = s""""baseline":"$file","round":$round"""
+    if (priorSf.isEmpty || priorSf != sf || !priorCpus.contains(cpus)) {
+      def show[T](o: Option[T]) = o.fold("?")(_.toString)
+      s"""{$head,"skipped":"baseline sf=${show(priorSf)} cpus=${
+        show(priorCpus)}, this run sf=${show(sf)} cpus=$cpus"}"""
+    } else {
+      // medians when the prior artifact carries them (round 14+
+      // spread "med" survives truncation); else fall back to
+      // min-vs-min bands — the only numbers pre-r14 tails kept
+      val prevMed = priorMedians(txt)
+      val (prev, basis) =
+        if (prevMed.nonEmpty) (prevMed, "median") else (priorMins(txt), "min")
+      val flags = cur.flatMap { case (name, med, mn) =>
+        val c = if (prevMed.nonEmpty) med else mn
+        prev.get(name).collect { case p if p > 0 && (c > 2 * p || c * 2 < p) =>
+          "\"" + name + "\":{\"prev\":" + fmt(p) + ",\"cur\":" + fmt(c) + "}" }
+      }
+      s"""{$head,"basis":"$basis","compared":${prev.size},"flags":${flags.mkString("{", ",", "}")}}"""
     }
   }
 
@@ -135,11 +183,6 @@ object Bench {
     val iters = math.max(sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "5").toInt, 1)
     val spark = Diagnostics.localSession(cpus)
     val qs0 = SparkEntry.queries
-    // Locale.ROOT: the f-interpolator delegates to the DEFAULT locale —
-    // under a comma-decimal locale (de_DE etc.) it would print 0,8210 and
-    // the driver's json.load would reject the whole payload
-    def fmt(d: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(d))
     // Materialize via a noop-sink WRITE, not count(): under count(),
     // Catalyst prunes every unreferenced column and EliminateSorts drops
     // the final orderBy — for project/window-shaped queries that can
@@ -233,11 +276,7 @@ object Bench {
       }
     }
     // Cross-round sanity: compare each median against the newest committed
-    // BENCH_r{N}.json in the working directory and flag >2x moves in either
-    // direction. A flag does NOT fail the bench — the r8 lesson is that a
-    // 5x one-line move on unchanged code needed a human re-run to
-    // adjudicate; this field makes such lines self-announcing so nobody
-    // anchors a round's conclusions on a burst artifact.
+    // BENCH_r{N}.json in the working directory (see sanityStanza).
     val sanity: String = {
       try {
         val cwd = java.nio.file.Paths.get(".")
@@ -250,22 +289,8 @@ object Bench {
           case None => "null"
           case Some((rn, file)) =>
             val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(file))
-            // medians when the prior artifact carries them (round 14+
-            // spread "med" survives truncation); else fall back to
-            // min-vs-min bands — the only numbers pre-r14 tails kept
-            val prevMed = priorMedians(txt)
-            val (prev, basis, cur) =
-              if (prevMed.nonEmpty)
-                (prevMed, "median", (r: R) => r.median)
-              else (priorMins(txt), "min", (r: R) => r.min)
-            val flags = results.filter(_.ok).flatMap { r =>
-              prev.get(r.name) match {
-                case Some(p) if p > 0 && (cur(r) > 2 * p || cur(r) * 2 < p) =>
-                  Some("\"" + r.name + "\":{\"prev\":" + fmt(p) + ",\"cur\":" + fmt(cur(r)) + "}")
-                case _ => None
-              }
-            }
-            s"""{"baseline":"$file","round":$rn,"basis":"$basis","compared":${prev.size},"flags":${flags.mkString("{", ",", "}")}}"""
+            sanityStanza(file, rn, txt, sfOf(sfDir), cpus.toInt,
+              results.filter(_.ok).map(r => (r.name, r.median, r.min)))
         }
       } catch { case e: Throwable =>
         System.err.println(s"[bench] sanity compare skipped: $e"); "null" }

@@ -386,8 +386,8 @@ object SparkEntry {
     // jaccard) is deliberately NOT a headline line: its gate runs at
     // q33's t=0.3 for oracle identity, far below the prefix filter's
     // design regime (high thresholds, where the prefix is short) — its
-    // measured perf story lives in the StressBench jaccard_prefix /
-    // jaccard_boiler arms at t=0.8, where regression would show
+    // measured perf story is recorded in NOTES_r11.md "Prefix-filtered
+    // set-similarity join" at t=0.8, where regression would show
     "q176_triangles", "q179_knn_join",
     // round-12 additions (VERDICT r11 #4): the iterative-fixed-point
     // graph family — PageRank (rounds of degree-normalized contribution

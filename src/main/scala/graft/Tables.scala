@@ -33,7 +33,7 @@ object Tables {
     * across testdata refreshes: TIMESTAMP(NANOS) (which, under
     * `spark.sql.legacy.parquet.nanosAsLong`, arrives as a plain LongType
     * of nanos) and TIMESTAMP(MICROS) (which arrives as TIMESTAMP_NTZ).
-    * Every query and the stress fixtures treat `ts` as int64 nanos, so
+    * Every query treats `ts` as int64 nanos, so
     * normalize here — the single choke point — instead of per query.
     * The NTZ→long conversion relies on the session timezone being UTC
     * (all entry points set `spark.sql.session.timeZone=UTC`), matching

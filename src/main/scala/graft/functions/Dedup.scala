@@ -375,7 +375,8 @@ object Dedup {
     // does NOT spill — Spark 4.x's UnsafeHashedRelation build throws
     // cannotAcquireMemoryToBuildUnsafeHashedRelationError when it can't
     // acquire pages (verified against the deployed 4.1.2 bytecode, and
-    // DEMONSTRATED round 9 — SpillProof shj_boundary, 2 GB JVM: both
+    // DEMONSTRATED round 9 — NOTES_r9.md "SHJ build-side failure
+    // boundary", 2 GB JVM: both
     // SHJ arms fail with exactly "Can't acquire ... to build hash
     // relation" while `merge` on the identical input goes green with
     // 6.8 GB spilled; the capped SHJ arm fails TOO, because the cap
@@ -521,7 +522,7 @@ object Dedup {
     * scales with Σdf². The index is `shared()` (lazy localCheckpoint):
     * unlike jaccardPairs' 2-scan shape, FOUR consumers read it (df agg,
     * rank join, both verify sides) — recomputing the explode per
-    * consumer measured slower (see StressBench prefix arms). */
+    * consumer measured slower (SCALE.md's jaccardPairsPrefix row). */
   def jaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
                          n: Int, threshold: Double,
                          hashShingles: Boolean = false,
@@ -1029,7 +1030,7 @@ object Dedup {
     * pass over the SMALL side) to size the filter; pass a known count to
     * skip it.
     *
-    * MEASURED regime (StressBench decontam arms, local[32], sparse
+    * MEASURED regime (NOTES_r11.md "Bloom decontam", local[32], sparse
     * 5k-doc bench, median of 5): the bloom path pays two bench passes +
     * the scan probe as FIXED cost, so it loses while the corpus shingle
     * shuffle is cheap — 10M-row stream: SMJ 1.04 s vs bloom 1.23 s

@@ -297,7 +297,7 @@ object Sampling {
     * bucket token mass rides a KEYED distributed prefix
     * (≤ |scores|·4096 rows) and the residual windows partition on
     * (score, bucket) — rows-per-score/4096 each, distributed however
-    * hot the score. Measured crossover (StressBench
+    * hot the score. Measured crossover (NOTES_r19.md and SCALE.md,
     * token_budget_hot6 pair, 50M rows / 6 scores / 32 cores): the
     * PLAIN form wins ~2.5× there (7.3 s vs 18.1 s) because six
     * 8.3M-row blocks still fit six cores and task memory while the

@@ -439,7 +439,7 @@ object Similarity {
     * once per table — `tables`× redundant dot products — while
     * dedup-first scores each pair once, at the price of carrying both
     * fix9 vectors through the dedup exchange. MEASURED (round 9,
-    * StressBench cosine_hot arms: 50k uniform vectors + a 2k
+    * NOTES_r9.md "cosinePairsLSH hot RHP bucket": 50k uniform vectors + a 2k
     * near-parallel cluster, ~48M cluster candidates over 24 tables):
     * score-first 39.8 s [31.1, 43.1], dedup-first 131.1 s [101.4, 171.4]
     * — the DEFAULT wins 3.3× with disjoint bands even in the regime the
@@ -468,7 +468,7 @@ object Similarity {
     * (route a representative through exact scoring / [[Dedup.clusters]]
     * instead). The count rides the already-exploded signature rows —
     * one aggregate + anti-join, no extra corpus scan (same shape as
-    * Dedup.capHotKeys). MEASURED in the hot regime (StressBench
+    * Dedup.capHotKeys). MEASURED in the hot regime (NOTES_r9.md,
     * cosine_hot_cap1000, same fixture as above): 39.8 s [31.1, 43.1]
     * uncapped → 2.57 s [2.39, 3.15] capped — 15.5×, disjoint bands; the
     * cap removes the cluster's ~48M candidate scorings for the price of

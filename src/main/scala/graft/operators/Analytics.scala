@@ -629,10 +629,11 @@ object Analytics {
     * ([[prefixBefore]] — the range exchange is on (keys, value)
     * compound, so a HOT slice splits across range partitions instead of
     * serializing through one window task, the r15 generalization of the
-    * prefixBefore contract), and the per-group totals/argmax are
-    * keys-sized aggregates joined back null-safe. Slices missing either
-    * group emit NULL d (the test is undefined there, not zero). Output:
-    * key columns + (n_a, n_b, d_at, d).
+    * prefixBefore contract), the per-group totals ride that prefix
+    * pass, and the per-group argmax is a keys-sized aggregate joined
+    * back null-safe. Slices missing either group emit NULL d (the test
+    * is undefined there, not zero). Output: key columns +
+    * (n_a, n_b, d_at, d).
     * EAGER: builds on the pinned-execution bridge, so Spark jobs
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
@@ -645,16 +646,14 @@ object Analytics {
       .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
         sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
     // INCLUSIVE cumulatives = strictly-before prefix + own count;
-    // per-group totals from the PINNED ranged frame (not a second
-    // execution of the counts aggregation)
-    val (cShared, cumPre) = prefixBefore(counts, keyCols,
-      "__v", Seq("a" -> col("__ca"), "b" -> col("__cb")))
-    val cum = cumPre
+    // per-group totals ride the prefix pass (withTotals)
+    val scored = prefixBefore(counts, keyCols,
+        "__v", Seq("a" -> col("__ca"), "b" -> col("__cb")),
+        withTotals = true)._2
       .withColumn("__cuma", col("__cum_a") + col("__ca"))
       .withColumn("__cumb", col("__cum_b") + col("__cb"))
-    val tot = cShared.groupBy(keys: _*)
-      .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb"))
-    val scored = joinTotals(cum, tot, keyCols)
+      .withColumnRenamed("__tot_a", "__na")
+      .withColumnRenamed("__tot_b", "__nb")
       .withColumn("__num",
         abs(col("__cuma").cast("decimal(38,0)") * col("__nb") -
           col("__cumb").cast("decimal(38,0)") * col("__na")))
@@ -1026,7 +1025,7 @@ object Analytics {
     // 100 TB design point — distinct values ≪ rows — one corpus scan
     // + a small materialized frame is the only sane plan. The knob
     // exists for the OPPOSITE regime: |distinct| ≈ |rows| makes the
-    // checkpoint itself row-scale (StressBench wasserstein_50m:
+    // checkpoint itself row-scale (NOTES_r15.md, wasserstein_50m:
     // share=false 28.3 s vs share=true 37.8 s at 50M all-distinct,
     // where the frame spills and rescanning a cheap source wins).
     val (wShared, cumRaw0) = prefixBefore(counts, keyCols,
@@ -1101,9 +1100,8 @@ object Analytics {
     * cumulatives ride the KEYED distributed prefix (compound range
     * exchange on (keys, value) — a hot slice splits across range
     * partitions instead of serializing through one window task), and
-    * the per-group totals are keys-sized aggregates of the PINNED
-    * frame joined back null-safe. Slices missing a group emit NULL
-    * energy. Output: key columns + (n_a, n_b, m_ab, m_aa, m_bb,
+    * the per-group totals ride the same prefix pass. Slices missing a
+    * group emit NULL energy. Output: key columns + (n_a, n_b, m_ab, m_aa, m_bb,
     * energy).
     * EAGER: builds on the pinned-execution bridge, so Spark jobs
     * launch AT CALL time and the input is snapshotted then
@@ -1122,20 +1120,17 @@ object Analytics {
         (col("__v").cast("decimal(28,12)") * lit(1000000000000L))
           .cast("decimal(38,0)"))
     val dec38 = (c: Column) => c.cast("decimal(38,0)")
-    val (eShared, pre) = prefixBefore(counts, keyCols,
+    val pre = prefixBefore(counts, keyCols,
       "__v", Seq("a" -> col("__ca"), "b" -> col("__cb"),
         "sa" -> (dec38(col("__vq")) * col("__ca")),
-        "sb" -> (dec38(col("__vq")) * col("__cb"))))
-    val tot = eShared.groupBy(keys: _*)
-      .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb"))
+        "sb" -> (dec38(col("__vq")) * col("__cb"))), withTotals = true)._2
     val dec3812 = (c: Column) => c.cast("decimal(38,12)")
-    joinTotals(pre
+    pre
       .withColumn("__ga",
         d(dec38(col("__vq")) * col("__cum_a") - col("__cum_sa")))
       .withColumn("__gb",
-        d(dec38(col("__vq")) * col("__cum_b") - col("__cum_sb"))),
-      tot, keyCols)
-      .groupBy(keys :+ col("__na").as("n_a") :+ col("__nb").as("n_b"): _*)
+        d(dec38(col("__vq")) * col("__cum_b") - col("__cum_sb")))
+      .groupBy(keys :+ col("__tot_a").as("n_a") :+ col("__tot_b").as("n_b"): _*)
       .agg(
         sum(dec3812((col("__ga") * d(col("__cb")) +
           col("__gb") * d(col("__ca"))) / lit(1e12)))
@@ -1179,8 +1174,8 @@ object Analytics {
     cramerVonMisesBy(df, Nil, groupCol, valueCol, groupA, groupB)
 
   /** Per-GROUP [[cramerVonMises]] — the sliced weighted-L2 drift.
-    * Keyed distributed prefix + keys-sized totals joined back
-    * null-safe; no spine join is needed (every group with rows has
+    * Keyed distributed prefix whose pass also carries the per-group
+    * totals; no spine join is needed (every group with rows has
     * terms — a missing side just makes them NULL). Output: key
     * columns + (n_a, n_b, cvm).
     * EAGER: builds on the pinned-execution bridge, so Spark jobs
@@ -1195,11 +1190,11 @@ object Analytics {
       .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
         sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
     def d(c: Column) = c.cast("double")
-    val (cShared, cumPre) = prefixBefore(counts, keyCols,
-      "__v", Seq("a" -> col("__ca"), "b" -> col("__cb")))
-    val tot = cShared.groupBy(keys: _*)
-      .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb"))
-    joinTotals(cumPre, tot, keyCols)
+    prefixBefore(counts, keyCols,
+        "__v", Seq("a" -> col("__ca"), "b" -> col("__cb")),
+        withTotals = true)._2
+      .withColumnRenamed("__tot_a", "__na")
+      .withColumnRenamed("__tot_b", "__nb")
       .withColumn("__cuma", col("__cum_a") + col("__ca"))
       .withColumn("__cumb", col("__cum_b") + col("__cb"))
       .withColumn("__dd", when(col("__na") > 0 && col("__nb") > 0,
@@ -2048,11 +2043,11 @@ object Analytics {
     * their evidence): per stratum the per-event-time hypergeometric
     * terms ride the KEYED distributed prefix (compound range exchange
     * on (strata, t) — a hot stratum splits across slices), per-stratum
-    * totals are keys-sized aggregates of the PINNED frame joined back,
-    * and ONE final aggregate sums O, E, V over everything. A NULL
-    * stratum is a valid slice (this repo's convention): its rows
-    * contribute to O/E/V and it counts in k_strata. Output: one
-    * row (k_strata, n_a, n_b, o_a, e_a, v, z, chi2); V = 0 → NULL.
+    * totals ride the same prefix pass, and ONE final aggregate sums O,
+    * E, V over everything. A NULL stratum is a valid slice (this
+    * repo's convention): its rows contribute to O/E/V and it counts in
+    * k_strata. Output: one row (k_strata, n_a, n_b, o_a, e_a, v, z,
+    * chi2); V = 0 → NULL.
     * EAGER: builds on the pinned-execution bridge, so Spark jobs
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
@@ -2077,22 +2072,12 @@ object Analytics {
           .as("__db"),
         sum(when(col(groupCol) === groupB && !event, 1L).otherwise(0L))
           .as("__cb"))
-    val (lrShared, pre) = prefixBefore(counts, strataCols,
-      "__t", Seq("a" -> (col("__da") + col("__ca")),
-        "b" -> (col("__db") + col("__cb"))))
-    def renameKeys(df2: DataFrame, tag: String): DataFrame =
-      strataCols.zipWithIndex.foldLeft(df2) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def keyJoin(tag: String): Column = strataCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
-    val tot = renameKeys(lrShared.groupBy(keys: _*).agg(
-      sum(col("__da") + col("__ca")).as("__na"),
-      sum(col("__db") + col("__cb")).as("__nb")), "t")
     val dec28 = (c: Column) => c.cast("decimal(28,12)")
-    pre.join(tot, keyJoin("t"))
-      .drop(strataCols.indices.map(i => s"__t$i"): _*)
-      .withColumn("__ra", col("__na") - col("__cum_a"))
-      .withColumn("__rb", col("__nb") - col("__cum_b"))
+    prefixBefore(counts, strataCols,
+        "__t", Seq("a" -> (col("__da") + col("__ca")),
+          "b" -> (col("__db") + col("__cb"))), withTotals = true)._2
+      .withColumn("__ra", col("__tot_a") - col("__cum_a"))
+      .withColumn("__rb", col("__tot_b") - col("__cum_b"))
       .withColumn("__nt", col("__ra") + col("__rb"))
       .withColumn("__dt", col("__da") + col("__db"))
       .agg(
@@ -5632,49 +5617,8 @@ object Analytics {
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def pettittTest(df: DataFrame, tCol: String, valueCol: String)
-      : DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
-    def d(c: Column) = c.cast("double")
-    val base = df.filter(col(tCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(tCol).as("__t"), col(valueCol).as("__v"))
-    val vc0 = base.groupBy(col("__v")).agg(count(lit(1)).as("__c"))
-    // value axis: per-distinct-value (#less, #eq) via distributed
-    // prefix; the grand total and (below) the time-axis max read each
-    // pass's PINNED ranged frame — a second reference to vc/st would
-    // re-run the aggregation AND the upstream join (round 16; this
-    // operator chains two prefixes, so the double execution compounded)
-    // totals ride the prefix result (round 20, withTotals): this
-    // operator chains TWO prefixes, each of which also ran its own
-    // broadcast total/max aggregate — both folds now arrive on the
-    // rows the offset join already delivers
-    val (_, vcPre) = prefixBefore(vc0, Nil, "__v", Seq("w" -> col("__c")),
-      withTotals = true)
-    val vstats = vcPre
-      .withColumnRenamed("__tot_w", "__n")
-      .select(col("__v").as("__vk"),
-        (col("__n") - col("__c") - lit(2) * col("__cum_w")).as("__s"),
-        col("__n"))
-    // rows-sized join back (|distinct|-bounded build side at worst),
-    // then the time axis: per-distinct-t s-sums, inclusive prefix
-    val st = base.join(vstats, col("__v") === col("__vk"))
-      .groupBy(col("__t")).agg(sum(dec(col("__s"))).as("__st"),
-        max(col("__n")).as("__n2"))
-    val (_, stPre) = prefixBefore(st, Nil, "__t", Seq("w" -> col("__st")),
-      withTotals = true)
-    val cum = stPre
-      .withColumn("__u", col("__cum_w") + col("__st"))
-      .filter(col("__t") < col("__keymax"))
-    cum
-      .withColumn("__au", abs(col("__u")))
-      .orderBy(col("__au").desc, col("__t").asc)
-      .limit(1)
-      .select(col("__n2").as("n"), col("__t").as("t_at"),
-        d(col("__u")).as("u_at"), d(col("__au")).as("k_stat"),
-        least(lit(1.0), lit(2.0) * exp(lit(-6.0) * d(col("__au")) *
-          d(col("__au")) /
-          (d(col("__n2")) * d(col("__n2")) * d(col("__n2")) +
-            d(col("__n2")) * d(col("__n2"))))).as("p_approx"))
-  }
+      : DataFrame =
+    pettittTestBy(df, Nil, tCol, valueCol)
 
   /** Per-GROUP [[pettittTest]] — the sliced changepoint scan (WHICH
     * slice shifted, and when: per-event-type / per-source / per-language
@@ -5684,9 +5628,10 @@ object Analytics {
     * splits across contiguous slices instead of serializing through one
     * window task), per-group n and t_max ride each prefix pass's
     * totals, and the per-group argmax is ONE map-side-
-    * combined max over (|U|, −t, …) structs — no per-group rank window
-    * anywhere. t must be NUMERIC here (the argmax tiebreak rides the
-    * negated t inside the struct); a NULL group key is its own slice.
+    * combined min over (−|U|, t, …) structs — no per-group rank window
+    * anywhere; t may be any orderable type. With no keys the argmax is
+    * a top-1 sort over the candidate splits instead (no group exchange
+    * for one group). A NULL group key is its own slice.
     * Output: key columns + [[pettittTest]]'s row, one per group with
     * ≥ 2 distinct time points (a single-t group has no split).
     * EAGER: builds on the pinned-execution bridge, so Spark jobs
@@ -5714,18 +5659,24 @@ object Analytics {
     val cand = stPre
       .withColumn("__u", col("__cum_w") + col("__st"))
       .filter(col("__t") < col("__keymax"))
-    cand
       .withColumn("__au", abs(col("__u")))
-      .groupBy(keys: _*)
-      .agg(max(struct(col("__au"), (-col("__t")).as("__negt"), col("__u"),
-        col("__n2"))).as("__m"))
-      .select(keys ++ Seq(col("__m.__n2").as("n"),
-        (-col("__m.__negt")).as("t_at"), d(col("__m.__u")).as("u_at"),
-        d(col("__m.__au")).as("k_stat")): _*)
-      .withColumn("p_approx", least(lit(1.0),
-        lit(2.0) * exp(lit(-6.0) * col("k_stat") * col("k_stat") /
-          (d(col("n")) * d(col("n")) * d(col("n")) +
-            d(col("n")) * d(col("n"))))))
+    // argmax |U|, ties to the smallest t: a top-1 sort for one group
+    // (no exchange), else min over (−|U|, t, …) structs per group
+    val argmax =
+      if (keyCols.isEmpty)
+        cand.orderBy(col("__au").desc, col("__t").asc).limit(1)
+      else cand.groupBy(keys: _*)
+        .agg(min(struct((-col("__au")).as("__nau"), col("__t"), col("__u"),
+          col("__n2"))).as("__m"))
+        .select(keys ++ Seq((-col("__m.__nau")).as("__au"),
+          col("__m.__t").as("__t"), col("__m.__u").as("__u"),
+          col("__m.__n2").as("__n2")): _*)
+    val k = d(col("__au"))
+    val n = d(col("__n2"))
+    argmax.select(keys ++ Seq(col("__n2").as("n"), col("__t").as("t_at"),
+      d(col("__u")).as("u_at"), k.as("k_stat"),
+      least(lit(1.0), lit(2.0) * exp(lit(-6.0) * k * k / (n * n * n + n * n)))
+        .as("p_approx")): _*)
   }
 
   /** Mann–Kendall trend test + Theil–Sen slope — IS a pre-aggregated
@@ -5752,67 +5703,8 @@ object Analytics {
     * launch AT CALL time and the input is snapshotted then
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def mannKendallTrend(df: DataFrame, tCol: String, valueCol: String)
-      : DataFrame = {
-    def d(c: Column) = c.cast("double")
-    val base = df.filter(col(tCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(tCol).cast("double").as("__t"), d(col(valueCol)).as("__y"))
-    val pairs = base.as("a").join(base.as("b"), col("a.__t") < col("b.__t"))
-      .select((col("b.__y") - col("a.__y")).as("__dy"),
-        (col("b.__t") - col("a.__t")).as("__dt"))
-    val sRow = pairs.agg(
-      sum(signum(col("__dy")).cast("long")).as("s"))
-    val tieRow = base.groupBy(col("__y")).agg(count(lit(1)).as("__u"))
-      .agg(sum(col("__u")).as("n"),
-        sum(col("__u") * (col("__u") - 1) * (lit(2) * col("__u") + 5))
-          .as("__ties"))
-    // series contract tripwire: a duplicated t double-counts pairs
-    // SILENTLY (every i<j pair at equal t vanishes from S but inflates
-    // the tie term) — fail loudly instead of returning a wrong test
-    val chk = base.agg(count(lit(1)).as("__cn"),
-      count_distinct(col("__t")).as("__cd"))
-    // the division is WHEN-guarded not because dt can be 0 in the
-    // output (the strict < join forbids it) but because quantilesCont's
-    // isnotnull filter folds into the join CONDITION under ANSI mode,
-    // where a bare division evaluates on equal-t candidate pairs and
-    // throws DIVIDE_BY_ZERO before the < conjunct prunes them
-    val slopeRow = graft.operators.Aggregations
-      .quantilesCont(pairs.select(
-          when(col("__dt") =!= 0.0, col("__dy") / col("__dt")).as("__sl")),
-        "__sl", Seq(0.5))
-      .select(col("value").as("sen_slope"))
-    val interceptRow = graft.operators.Aggregations
-      .quantilesCont(
-        base.crossJoin(broadcast(slopeRow))
-          .select((col("__y") - col("sen_slope") * col("__t")).as("__ic")),
-        "__ic", Seq(0.5))
-      .select(col("value").as("intercept"))
-    // slope/intercept attach via LEFT join on a TRUE condition, not
-    // crossJoin: quantilesCont emits ZERO rows on an empty pair set
-    // (n < 2), and a crossJoin against an empty frame would annihilate
-    // the aggregate row — the contract is ONE row with NULL slope
-    // (r15 advisor). sRow/tieRow/chk are grand aggregates (always one
-    // row), so their crossJoins are safe; n/s/ties coalesce to 0 for
-    // the empty-input row the same way.
-    sRow.crossJoin(broadcast(tieRow))
-      .crossJoin(broadcast(chk))
-      .join(broadcast(slopeRow), lit(true), "left")
-      .join(broadcast(interceptRow), lit(true), "left")
-      .withColumn("n", coalesce(col("n"), lit(0L)))
-      .withColumn("s", coalesce(col("s"), lit(0L)))
-      .withColumn("__ties", coalesce(col("__ties"), lit(0L)))
-      .withColumn("n", when(col("__cn") === col("__cd"), col("n"))
-        .otherwise(raise_error(lit("mannKendallTrend: input is not a " +
-          "series — duplicate t values; pre-aggregate to one row per t"))))
-      .withColumn("var_s",
-        (d(col("n")) * (d(col("n")) - 1) * (lit(2.0) * d(col("n")) + 5) -
-          d(col("__ties"))) / 18.0)
-      .withColumn("z", when(col("var_s") > 0,
-        when(col("s") > 0, (d(col("s")) - 1) / sqrt(col("var_s")))
-          .when(col("s") < 0, (d(col("s")) + 1) / sqrt(col("var_s")))
-          .otherwise(lit(0.0))))
-      .select(col("n"), col("s"), col("var_s"), col("z"),
-        col("sen_slope"), col("intercept"))
-  }
+      : DataFrame =
+    mannKendallTrendBy(df, Nil, tCol, valueCol)
 
   /** Two-sample Anderson–Darling statistic (Scholz & Stephens 1987,
     * midrank/tie-adjusted A²akN, k = 2 — numerically identical to
@@ -5849,8 +5741,8 @@ object Analytics {
     * (which SLICE's tails moved: the AD member of the per-slice family
     * beside [[ksTestBy]]): the distinct-(keys, value) counts ride ONE
     * keyed multi-weight prefix ([[prefixBefore]] — hot slices
-    * split across range slices), per-group totals are a groups-sized
-    * aggregate joined back null-safe, the per-value terms are the same
+    * split across range slices), per-group totals ride the same
+    * prefix pass, the per-value terms are the same
     * pinned chain snapped to decimal(28,12), and the per-group A²
     * closes in one keys-grouped aggregate. A NULL group key is its own
     * slice; an all-tied slice emits NULL a2. Output: key columns +
@@ -5867,11 +5759,11 @@ object Analytics {
       .groupBy(keys :+ col(valueCol).as("__v"): _*)
       .agg(sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("__ca"),
         sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("__cb"))
-    val (cShared, cumPre) = prefixBefore(counts, keyCols,
-      "__v", Seq("a" -> col("__ca"), "b" -> col("__cb")))
-    val cum = joinTotals(cumPre, cShared.groupBy(keys: _*)
-      .agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb")),
-      keyCols)
+    val cum = prefixBefore(counts, keyCols,
+        "__v", Seq("a" -> col("__ca"), "b" -> col("__cb")),
+        withTotals = true)._2
+      .withColumnRenamed("__tot_a", "__na")
+      .withColumnRenamed("__tot_b", "__nb")
     val nD = d(col("__na")) + d(col("__nb"))
     val l = d(col("__ca")) + d(col("__cb"))
     val b = d(col("__cum_a")) + d(col("__cum_b")) + l / 2.0
@@ -6115,62 +6007,60 @@ object Analytics {
     * ([[org.apache.spark.sql.graftbridge.RddShareBridge]]). */
   def mannKendallTrendBy(df: DataFrame, keyCols: Seq[String], tCol: String,
                          valueCol: String): DataFrame = {
-    require(keyCols.nonEmpty,
-      "mannKendallTrendBy needs key columns; use mannKendallTrend")
     def d(c: Column) = c.cast("double")
     val keys = keyCols.map(col)
-    def kJoin(tag: String): Column = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__$tag$i") }.reduce(_ && _)
-    def kRename(dd: DataFrame, tag: String): DataFrame =
-      keyCols.zipWithIndex.foldLeft(dd) { case (acc, (c, i)) =>
-        acc.withColumnRenamed(c, s"__$tag$i") }
-    def kDrop(dd: DataFrame, tag: String): DataFrame =
-      dd.drop(keyCols.indices.map(i => s"__$tag$i"): _*)
     val base = df.filter(col(tCol).isNotNull && col(valueCol).isNotNull)
       .select(keys :+ col(tCol).cast("double").as("__t") :+
         d(col(valueCol)).as("__y"): _*)
-    val bKeyJoin = keyCols
-      .map(c => col(s"a.$c") <=> col(s"b.$c")).reduce(_ && _)
+    val bKeyJoin = keyCols.foldLeft(lit(true)) { (acc, c) =>
+      acc && (col(s"a.$c") <=> col(s"b.$c")) }
     val pairs = base.as("a").join(base.as("b"),
         bKeyJoin && col("a.__t") < col("b.__t"))
       .select(keyCols.map(c => col(s"a.$c")) ++ Seq(
         (col("b.__y") - col("a.__y")).as("__dy"),
         (col("b.__t") - col("a.__t")).as("__dt")): _*)
-    val sRow = kRename(pairs.groupBy(keys: _*)
-      .agg(sum(signum(col("__dy")).cast("long")).as("s")), "s")
+    val sRow = pairs.groupBy(keys: _*)
+      .agg(sum(signum(col("__dy")).cast("long")).as("s"))
     val tieRow = base.groupBy(keys :+ col("__y"): _*)
       .agg(count(lit(1)).as("__u"))
       .groupBy(keys: _*)
       .agg(sum(col("__u")).as("n"),
         sum(col("__u") * (col("__u") - 1) * (lit(2) * col("__u") + 5))
           .as("__ties"))
-    val chk = kRename(base.groupBy(keys: _*)
-      .agg(count(lit(1)).as("__cn"),
-        count_distinct(col("__t")).as("__cd")), "c")
-    // same ANSI hazard as the global form: the division must not be
-    // evaluable on equal-t candidate pairs inside the join condition
+    // series contract tripwire: a duplicated t double-counts pairs
+    // SILENTLY (every i<j pair at equal t vanishes from S but inflates
+    // the tie term) — fail loudly instead of returning a wrong test
+    val chk = base.groupBy(keys: _*)
+      .agg(count(lit(1)).as("__cn"), count_distinct(col("__t")).as("__cd"))
+    // the division is WHEN-guarded not because dt can be 0 in the
+    // output (the strict < join forbids it) but because quantilesCont's
+    // isnotnull filter folds into the join CONDITION under ANSI mode,
+    // where a bare division evaluates on equal-t candidate pairs and
+    // throws DIVIDE_BY_ZERO before the < conjunct prunes them
     val slopeTbl = graft.operators.Aggregations
       .quantilesContBy(pairs.select(keys :+
           when(col("__dt") =!= 0.0, col("__dy") / col("__dt")).as("__sl"): _*),
         keyCols, "__sl", Seq(0.5))
       .select(keys :+ col("value").as("sen_slope"): _*)
-    val icBase = kDrop(base.join(kRename(slopeTbl, "sl"), kJoin("sl"),
-        "left"), "sl")
+    val icBase = joinTotals(base, slopeTbl, keyCols, "left")
       .select(keys :+ (col("__y") - col("sen_slope") * col("__t"))
         .as("__ic"): _*)
-    val interceptRow = kRename(graft.operators.Aggregations
+    val interceptRow = graft.operators.Aggregations
       .quantilesContBy(icBase, keyCols, "__ic", Seq(0.5))
-      .select(keys :+ col("value").as("intercept"): _*), "ic")
+      .select(keys :+ col("value").as("intercept"): _*)
     // tieRow is the group spine: single-point slices survive with NULL
-    // pair statistics
-    kDrop(kDrop(kDrop(kDrop(
-      tieRow.join(sRow, kJoin("s"), "left"), "s")
-        .join(chk, kJoin("c"), "left"), "c")
-        .join(kRename(slopeTbl, "s2"), kJoin("s2"), "left"), "s2")
-        .join(interceptRow, kJoin("ic"), "left"), "ic")
+    // pair statistics. slope/intercept attach by LEFT join: quantilesCont
+    // emits ZERO rows on an empty pair set (n < 2), and the contract is
+    // ONE row per slice with NULL slope (r15 advisor). With no keys the
+    // spine is one grand-aggregate row even on empty input, where
+    // n/s/ties coalesce to 0.
+    Seq(sRow, chk, slopeTbl, interceptRow)
+      .foldLeft(tieRow)(joinTotals(_, _, keyCols, "left"))
+      .withColumn("n", coalesce(col("n"), lit(0L)))
       .withColumn("s", coalesce(col("s"), lit(0L)))
+      .withColumn("__ties", coalesce(col("__ties"), lit(0L)))
       .withColumn("n", when(col("__cn") === col("__cd"), col("n"))
-        .otherwise(raise_error(lit("mannKendallTrendBy: input is not a " +
+        .otherwise(raise_error(lit("mannKendallTrend: input is not a " +
           "series — duplicate t within a slice; pre-aggregate to one " +
           "row per (keys, t)"))))
       .withColumn("var_s",

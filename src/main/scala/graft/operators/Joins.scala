@@ -55,7 +55,8 @@ object Joins {
     * join — each left row meets each matching right row in precisely its
     * one salt bucket (gated by the plain join's oracle, q155).
     *
-    * Cost model — MEASURED (StressBench equijoin arms, round 11 s4, on
+    * Cost model — MEASURED (round 11 s4, recorded in SCALE.md's
+    * measured-knob table and NOTES_r11.md "output-skew blindness", on
     * the output-skew fixture: 2M-row left with 50% on one key × 5M-row
     * unbroadcastable right with 256 rows on that key → the hot SMJ task
     * enumerates 256M pairs from ~24 MB of input, far under AQE's 256 MB
@@ -100,7 +101,8 @@ object Joins {
     * (most fact rows miss) — the canonical 100 TB fact ⋈ filtered-dim
     * shape, where the fact-side shuffle dominates everything. When most
     * fact rows match, or the dim broadcasts as rows anyway, the probe is
-    * pure overhead — measured in the StressBench decontam arms; same
+    * pure overhead — measured for decontamination (NOTES_r11.md "Bloom
+    * decontam: crossover measured from BOTH sides"); same
     * verdict here. Native codegen probe (`bloom_might_contain` on the
     * long or UTF-8 image — matching `stat.bloomFilter`'s insertion
     * domain), never a ScalaUDF. */
@@ -176,7 +178,7 @@ object Joins {
       // narrower shuffle (8 B/element flat vs per-element offset word +
       // UnsafeRow) is repaid by its second aggregation buffer and the
       // zip_with rebuild; NEGATIVE result, the direct struct list stays
-      // (StressBench groupjoin_* arms).
+      // (NOTES_r9.md "groupjoin payload shape").
       .hint("merge")
     val sparkHow = if (how == "left") "left_outer" else if (how == "outer") "full_outer" else how
     val joined = l.df.join(grouped, key, sparkHow)
@@ -433,9 +435,9 @@ object Joins {
     * Even forcing the split (4 MB threshold) only SPREADS the candidates
     * (3.3 s); width 1e7 ≈ the interval span REMOVES them (~40M true + few
     * false candidates): 1.54 s [1.47, 1.80] vs wide's 3.77 [3.37, 4.12] —
-    * 2.5×, disjoint bands (StressBench range_* arms). Intervals with
-    * hi < lo are empty and dropped (Spark's `sequence(a,b)` would DESCEND
-    * and fabricate buckets). */
+    * 2.5×, disjoint bands (NOTES_r9.md "rangeJoin bucketWidth").
+    * Intervals with hi < lo are empty and dropped (Spark's
+    * `sequence(a,b)` would DESCEND and fabricate buckets). */
   def rangeJoin(l: DataFrame, r: DataFrame, ids: Seq[String], pointCol: String,
                 loCol: String, hiCol: String, bucketWidth: Long): DataFrame = {
     require(bucketWidth > 0, s"bucketWidth must be positive, got $bucketWidth")

@@ -21,13 +21,13 @@ import org.apache.spark.sql.functions._
   * hash Exchange on the key; everything downstream reuses it (the window
   * sorts are partition-local). The per-key sort is the unavoidable cost of
   * gap semantics — order defines the gaps — and it spills via the
-  * out-of-core sort path (SpillProof's regime), so a hot key degrades to
-  * disk, not OOM. Skewed keys: the per-event pass is per-key sequential
-  * (the running index is a prefix sum), which [[sessionStatsSalted]]
-  * breaks with a two-level segmented gap-merge — partial sessions per
-  * (key, ts-bucket), then the same gap rule over the ≤ 2-per-bucket
-  * partials — spec-equal to the plain operator at any bucket width and
-  * measured 8.5× on the 50%-hot stress fixture.
+  * out-of-core sort path (SCALE.md's out-of-core window row), so a hot
+  * key degrades to disk, not OOM. Skewed keys: the per-event pass is
+  * per-key sequential (the running index is a prefix sum), which
+  * [[sessionStatsSalted]] breaks with a two-level segmented gap-merge —
+  * partial sessions per (key, ts-bucket), then the same gap rule over
+  * the ≤ 2-per-bucket partials — spec-equal to the plain operator at any
+  * bucket width and measured 8.5× on the 50%-hot stress fixture.
   */
 object Sessions {
 
@@ -108,10 +108,10 @@ object Sessions {
     * (start/end/count/decimal sum), merged exactly (decimal partials,
     * one double cast at the end — same value as the plain operator).
     * Measured: 19.3 s → 2.27 s (8.5×, disjoint bands) on the 50%-hot
-    * 10M-row stress fixture (StressBench sessions_* arms; uniform keys
-    * run 2.05 s — the salted hot key costs ≈ the unskewed workload). Fixed output schema because the
-    * merge needs each aggregate's combiner; arbitrary `aggs` stay on
-    * [[sessionStats]]. */
+    * 10M-row stress fixture (NOTES_r11.md "Salted sessionization";
+    * uniform keys run 2.05 s — the salted hot key costs ≈ the unskewed
+    * workload). Fixed output schema because the merge needs each
+    * aggregate's combiner; arbitrary `aggs` stay on [[sessionStats]]. */
   def sessionStatsSalted(df: DataFrame, keyCols: Seq[String], tsCol: String,
                          gapUs: Long, bucketUs: Long,
                          valueCol: String): DataFrame = {

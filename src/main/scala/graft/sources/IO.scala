@@ -236,8 +236,8 @@ object IO {
     * every group outside the range — the scan reads ~selectivity×data
     * instead of all of it. At 100 TB this is THE difference between a
     * time-window query costing a full-corpus scan and costing only the
-    * window (the sort is paid once at write; StressBench's
-    * scan_sorted/scan_unsorted arms measure the read-side contrast, and
+    * window (the sort is paid once at write; NOTES_r11.md "Data-skipping
+    * layouts" records the measured read-side contrast, and
     * IOStreamsSpec pins the mechanism via scan-node output-row metrics).
     * Complements [[saveBucketed]]: bucketing kills the JOIN shuffle for
     * equality keys, the range layout kills the SCAN for range keys. */
@@ -260,7 +260,7 @@ object IO {
     * on `partCols` gives one writer task per partition value — without
     * it every input task writes a file into every partition directory
     * (the small-files explosion, measured as the 256-footer cold-read
-    * tax in StressBench's scan arms).
+    * tax in NOTES_r11.md "Data-skipping layouts").
     *
     * Keep partition values low-cardinality and coarse (a DAY of events,
     * not a user id): each value is a directory, and a 100 TB table with
@@ -343,7 +343,7 @@ object IO {
     * maintenance companion of [[upsertPartitions]], whose repeated deltas
     * accumulate small files (each upsert writes ≥ 1 file per touched
     * partition; the cold-read cost of small files is MEASURED — the
-    * 256-footer arm in StressBench ≈ one full sequential scan). Only
+    * 256-file layout ≈ one full sequential scan, SCALE.md). Only
     * partitions holding more than `filesPerPartition` parquet files are
     * read and rewritten (dynamic overwrite), so steady-state compaction
     * cost follows churn, not table size. Single partition column (the

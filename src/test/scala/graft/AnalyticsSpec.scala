@@ -2509,14 +2509,19 @@ class AnalyticsSpec extends SparkSpec {
       (None, 1L, 1.0), (None, 2L, 7.0),
       (Some("c"), 5L, 3.0) // one time point: no split, absent
     ).toDF("g", "t", "v")
-    val by = Analytics.pettittTestBy(df, Seq("g"), "t", "v")
-      .collect().map(r => Option(r.getString(0)) -> r.toSeq.drop(1)).toMap
-    assert(!by.contains(Some("c")) && by.size == 3)
-    for (g <- Seq(Some("a"), Some("b"), None)) {
-      val slice = df.filter(col("g") <=> g.map(lit).getOrElse(lit(null)))
-      val global = Analytics.pettittTest(slice, "t", "v")
-        .collect().head.toSeq
-      assert(by(g) == global, s"slice $g: ${by(g)} vs $global")
+    // the argmax orders t itself, so any orderable t works: a DATE too
+    val dated = df.withColumn("t",
+      date_add(lit("2024-01-01").cast("date"), col("t").cast("int")))
+    for (d <- Seq(df, dated)) {
+      val by = Analytics.pettittTestBy(d, Seq("g"), "t", "v")
+        .collect().map(r => Option(r.getString(0)) -> r.toSeq.drop(1)).toMap
+      assert(!by.contains(Some("c")) && by.size == 3)
+      for (g <- Seq(Some("a"), Some("b"), None)) {
+        val slice = d.filter(col("g") <=> g.map(lit).getOrElse(lit(null)))
+        val global = Analytics.pettittTest(slice, "t", "v")
+          .collect().head.toSeq
+        assert(by(g) == global, s"slice $g: ${by(g)} vs $global")
+      }
     }
     partitionSweep { p =>
       Analytics.pettittTestBy(df.repartition(p), Seq("g"), "t", "v")
@@ -6476,6 +6481,15 @@ class AnalyticsSpec extends SparkSpec {
       (6, 6.0)).toDF("t", "v")
     edgeCases("acf", TS.acf(_, "t", "v", 2), TS.acfBy(_, _, "t", "v", 2),
       series, Nil)
+    val steps = Seq((1L, 0.0), (2L, 1.0), (3L, 0.0), (4L, 5.0), (5L, 6.0),
+      (6L, 5.0)).toDF("t", "v")
+    // no time point, no split: zero rows
+    edgeCases("pettittTest", Analytics.pettittTest(_, "t", "v"),
+      Analytics.pettittTestBy(_, _, "t", "v"), steps, Nil)
+    // the empty series is ONE row: n = s = 0, Var = 0, NULL z/slope
+    edgeCases("mannKendallTrend", Analytics.mannKendallTrend(_, "t", "v"),
+      Analytics.mannKendallTrendBy(_, _, "t", "v"), steps,
+      Seq(Seq(0L, 0L, 0.0, null, null, null)))
   }
 
   test("concurrently: one side failing cancels the other side's Spark " +

@@ -2001,7 +2001,7 @@ class FunctionsSpec extends SparkSpec {
         (5L, "p q", 2L, 1L),
         (6L, "z", 1L, 1L)), got.mkString("; "))
       // the aggregate+join formulation (the beyond-local-skew escape
-      // hatch; StressBench contrast arm) is semantically identical
+      // hatch; SCALE.md's dedupChunks rows) is semantically identical
       val agg = Dedup.dedupChunks(docs.repartition(n), "doc_id", "text",
           chunkSize = 2, aggFirsts = true)
         .orderBy("doc_id").collect()
@@ -2533,6 +2533,30 @@ class FunctionsSpec extends SparkSpec {
     assert(Bench.priorMedians(oldTrunc).isEmpty)
     assert(Bench.priorMins(oldTrunc) == Map("q02" -> 0.7, "q03" -> 2.0))
     assert(Bench.priorMins(bare) == Map("q01" -> 1.4, "q02" -> 0.7))
+  }
+
+  test("Bench.sanityStanza compares only like with like: a baseline at " +
+    "another sf or core count is skipped, not flagged") {
+    // the wrapped artifact's shape: top-level sf/cpus beside the payload
+    val prior = """{"n":20,"rc":0,"cpus":32,"sf":0.1,"parsed":{"queries":{"q01":1.0,"q02":1.0},"spread":{"q01":{"min":0.9,"max":1.1,"med":1.0},"q02":{"min":0.9,"max":1.1,"med":1.0}}}}"""
+    val cur = Seq(("q01", 3.0, 2.9), ("q02", 1.1, 1.0))
+    val same = Bench.sanityStanza("BENCH_r20.json", 20, prior, Some(0.1), 32,
+      cur)
+    assert(same.contains("\"flags\":{\"q01\":{\"prev\":1.0000," +
+      "\"cur\":3.0000}}") && !same.contains("skipped"), same)
+    for ((sf, cpus) <- Seq((Some(0.001), 32), (Some(0.1), 4), (None, 32))) {
+      val other = Bench.sanityStanza("BENCH_r20.json", 20, prior, sf, cpus,
+        cur)
+      assert(other.contains("\"baseline\":\"BENCH_r20.json\"") &&
+        other.contains("\"skipped\"") && !other.contains("flags"), other)
+    }
+    // an artifact without its scale cannot vouch for the compare
+    val bare = """{"queries":{"q01":1.0},"sf":"x"}"""
+    assert(Bench.sanityStanza("BENCH_r01.json", 1, bare, Some(0.1), 32, cur)
+      .contains("skipped"))
+    assert(Bench.sfOf("/data/testdata/sf0.001") == Some(0.001))
+    assert(Bench.sfOf("../testdata/sf0.1/") == Some(0.1))
+    assert(Bench.sfOf("/data/fixture").isEmpty)
   }
 
   test("zipfSlope: hand-computed weighted LS over frequency classes; " +

@@ -146,7 +146,7 @@ class PlanBudgetSpec extends SparkSpec {
     * divergences (q226/q287/q352) need no bin-spine join, hence 2
     * shuffles where the former global bodies paid 3, and
     * cramerVonMises needs no second one-row join (2 broadcasts, was
-    * 3); every other count equals the former global body's. The four
+    * 3); every other count equals the former global body's. The
     * cartesians were there before: kendallTau's strictly-x-ordered
     * self-join (its low-cardinality contract), mutualInformation's
     * pairing of three one-row aggregates (q227/q266 — the walker does
@@ -156,12 +156,17 @@ class PlanBudgetSpec extends SparkSpec {
     * Aggregations / ML / TimeSeries globals (q233 … q237) keep the
     * former global bodies' counts, except avgPrecision (q279): its
     * totals ride the prefix pass, so the broadcast one-row total
-    * aggregate is gone (2 broadcasts, now 1). */
+    * aggregate is gone (2 broadcasts, now 1). The same holds for
+    * ksTest (q217, q257: 5 broadcasts, now 3), cramerVonMises (q290),
+    * adTest (q345) and energyDistance (q364): 2 broadcasts, now 1.
+    * pettittTest (q331) keeps its top-1 sort with no exchange, and
+    * mannKendallTrend (q332) its former global body's counts; its
+    * cartesian is the series' strictly-t-ordered pair self-join. */
   private case class Twin(shuffles: Int, broadcasts: Int, cartesians: Int,
                           windows: Int)
   private val keylessPlans: Map[String, Twin] = Map(
     "q198_welch_ttest" -> Twin(1, 0, 0, 0),
-    "q217_ks_test" -> Twin(1, 5, 0, 0),
+    "q217_ks_test" -> Twin(1, 3, 0, 0),
     "q223_spearman" -> Twin(5, 2, 0, 0),
     "q226_psi_drift" -> Twin(2, 0, 0, 1),
     "q227_mutual_info" -> Twin(22, 3, 1, 0),
@@ -169,24 +174,24 @@ class PlanBudgetSpec extends SparkSpec {
     "q229_mann_whitney" -> Twin(0, 1, 0, 0),
     "q238_gini" -> Twin(0, 1, 0, 0),
     "q244_kendall_tau" -> Twin(21, 3, 1, 0),
-    "q257_ks_sketch_compressed" -> Twin(1, 5, 1, 0),
+    "q257_ks_sketch_compressed" -> Twin(1, 3, 1, 0),
     "q266_theils_u" -> Twin(22, 3, 1, 0),
     "q281_wasserstein1" -> Twin(5, 2, 0, 0),
     "q283_welch_t_drift" -> Twin(1, 0, 0, 0),
     "q287_js_divergence" -> Twin(2, 0, 0, 1),
-    "q290_cramer_von_mises" -> Twin(0, 2, 0, 0),
+    "q290_cramer_von_mises" -> Twin(0, 1, 0, 0),
     "q292_cliffs_delta" -> Twin(0, 1, 0, 0),
     "q303_prop_test" -> Twin(1, 0, 0, 0),
     "q305_odds_ratio" -> Twin(1, 0, 0, 0),
     "q308_categorical_profile" -> Twin(4, 1, 0, 0),
     "q313_kruskal_wallis" -> Twin(5, 2, 0, 0),
     "q333_mcnemar" -> Twin(1, 0, 0, 0),
-    "q345_ad_test" -> Twin(1, 2, 0, 0),
+    "q345_ad_test" -> Twin(1, 1, 0, 0),
     "q348_cohen_d" -> Twin(1, 0, 0, 0),
     "q352_hellinger" -> Twin(2, 0, 0, 1),
     "q355_paired_t" -> Twin(1, 0, 0, 0),
     "q357_wilcoxon" -> Twin(1, 3, 0, 0),
-    "q364_energy" -> Twin(1, 2, 0, 0),
+    "q364_energy" -> Twin(1, 1, 0, 0),
     "q366_theil" -> Twin(1, 0, 0, 0),
     "q369_hhi" -> Twin(4, 1, 0, 0),
     "q434_srm" -> Twin(1, 0, 0, 0),
@@ -201,7 +206,9 @@ class PlanBudgetSpec extends SparkSpec {
     "q285_calibration" -> Twin(4, 2, 0, 0),
     "q316_cohens_kappa" -> Twin(7, 1, 0, 0),
     "q307_lift_table" -> Twin(7, 3, 0, 0),
-    "q237_acf_daily" -> Twin(12, 5, 0, 0))
+    "q237_acf_daily" -> Twin(12, 5, 0, 0),
+    "q331_pettitt" -> Twin(0, 1, 0, 0),
+    "q332_trend_daily" -> Twin(11, 8, 1, 0))
 
   test("key-less By path: every collapsed global's registry query keeps " +
     "its measured shuffle, broadcast, cartesian and window counts") {
