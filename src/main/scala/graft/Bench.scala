@@ -230,6 +230,10 @@ object Bench {
     // ≈1 ratios at lower core counts are the expected signature of a
     // driver-bound line, not a harness bug.
     val taskTimeMs = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+    // generated classes compiled and their compile time, per line, over
+    // the same timed runs (Timings' codegen deltas)
+    val cgClasses = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+    val cgMs = scala.collection.mutable.Map.empty[String, Double].withDefaultValue(0.0)
     var taskTimeComplete = true
     val names = (canaryName +: SparkEntry.benchQueries)
       .filter(n => only.forall(_.contains(n)))
@@ -258,6 +262,8 @@ object Bench {
             }
             times(name) += secs
             taskTimeMs(name) += t.tasks.executorRunTimeMs
+            cgClasses(name) += t.codegenClasses
+            cgMs(name) += t.codegenCompileMs
             taskTimeComplete &&= t.complete
           } catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: $e"); ok(name) = false }
@@ -317,17 +323,20 @@ object Bench {
       val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       s"""{"load_avg":${fmt(os.getSystemLoadAverage)},"cpus":${os.getAvailableProcessors}}"""
     }
-    // average executor task-seconds per timed pass, per line; a listener
-    // drain timeout flags the map as partial (task_time_complete) rather
-    // than undercounting it silently
-    val taskTime = results.filter(_.ok).map(r =>
-      "\"" + r.name + "\":" + fmt(taskTimeMs(r.name) / 1000.0 / iters))
-      .mkString("{", ",", "}")
-    // task_time rides BETWEEN queries and spread: the spread map (with
-    // its embedded "med" copies) must stay LAST among the big maps so
-    // it survives the driver's front-truncating tail capture (r13/r14)
+    // per line, the average per timed pass: executor task-seconds (a
+    // listener drain timeout flags the map as partial, task_time_complete,
+    // rather than undercounting it silently) and the codegen deltas
+    def perPass(f: String => Double) = results.filter(_.ok).map(r =>
+      "\"" + r.name + "\":" + fmt(f(r.name) / iters)).mkString("{", ",", "}")
+    val taskTime = perPass(n => taskTimeMs(n) / 1000.0)
+    val codegenClasses = perPass(n => cgClasses(n).toDouble)
+    val codegenCompileS = perPass(n => cgMs(n) / 1000.0)
+    // task_time and the codegen maps ride BETWEEN queries and spread: the
+    // spread map (with its embedded "med" copies) must stay LAST among the
+    // big maps so it survives a front-truncating tail capture of stdout
+    // (r13/r14)
     val payload =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"task_time":$taskTime,"task_time_complete":$taskTimeComplete,"spread":$spread,"iters":$iters,"warmup_excluded":true,"interleaved":true,"host":$host,"sanity":$sanity,"errors":$errors,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"task_time":$taskTime,"task_time_complete":$taskTimeComplete,"codegen_classes":$codegenClasses,"codegen_compile_s":$codegenCompileS,"spread":$spread,"iters":$iters,"warmup_excluded":true,"interleaved":true,"host":$host,"sanity":$sanity,"errors":$errors,"sf":"$sfDir"}"""
     println(payload)
     // ALSO drop the payload as a bare file: the driver scrapes stdout
     // through sbt, whose [info] prefix has left BENCH_r{N}.json with

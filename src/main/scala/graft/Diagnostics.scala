@@ -6,9 +6,11 @@ import java.util.concurrent.atomic.LongAdder
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftListenerShim
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -104,7 +106,12 @@ object Diagnostics {
                            /** false iff the listener-bus drain timed out:
                              * totals may miss late events, but the block's
                              * RESULT is intact either way. */
-                           complete: Boolean = true) {
+                           complete: Boolean = true,
+                           /** generated classes Janino compiled in the
+                             * block (a codegen-cache miss each; JVM-wide) */
+                           codegenClasses: Long = 0L,
+                           /** wall time of those compiles */
+                           codegenCompileMs: Double = 0.0) {
     /** `show_timings` analog — a compact human-readable breakdown. */
     def summary: String = {
       val acts = actions.map(a => f"  ${a.funcName}%-12s ${a.durationMs}%10.1f ms").mkString("\n")
@@ -113,7 +120,8 @@ object Diagnostics {
          |tasks: ${tasks.tasks}, executor run ${tasks.executorRunTimeMs} ms """.stripMargin +
         s"(max task ${tasks.maxTaskMs} ms), gc ${tasks.jvmGcTimeMs} ms, " +
         s"shuffle r/w ${tasks.shuffleReadBytes}/" +
-        s"${tasks.shuffleWriteBytes} B, spilled ${tasks.spilledBytes} B"
+        s"${tasks.shuffleWriteBytes} B, spilled ${tasks.spilledBytes} B\n" +
+        f"codegen: $codegenClasses classes compiled in $codegenCompileMs%.1f ms"
     }
   }
 
@@ -239,6 +247,8 @@ object Diagnostics {
     drainListenerBus(spark.sparkContext)
     spark.listenerManager.register(qel)
     spark.sparkContext.addSparkListener(sl)
+    val classes0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     try {
       val res = f
       // both task metrics and QueryExecutionListener events ride the async
@@ -250,7 +260,10 @@ object Diagnostics {
         TaskTotals(tasks.sum, runTime.sum, gcTime.sum, shRead.sum, shWrite.sum,
           spilled.sum, maxTask.get),
         jobs.values.asScala.toSeq.sortBy(_.jobId),
-        complete = drained))
+        complete = drained,
+        codegenClasses = CodegenMetrics.METRIC_COMPILATION_TIME.getCount -
+          classes0,
+        codegenCompileMs = (CodeGenerator.compileTime - compileNs0) / 1e6))
     } finally {
       spark.listenerManager.unregister(qel)
       spark.sparkContext.removeSparkListener(sl)

@@ -33,7 +33,8 @@ object Profile {
       val ((t0, t1, t2), t) = once()
       println(f"[iter $i] construct ${(t1 - t0) / 1e9}%.3f s  " +
         f"materialize ${(t2 - t1) / 1e9}%.3f s  " +
-        f"total ${(t2 - t0) / 1e9}%.3f s" +
+        f"total ${(t2 - t0) / 1e9}%.3f s  " +
+        f"codegen ${t.codegenClasses} classes ${t.codegenCompileMs}%.1f ms" +
         (if (t.complete) "" else "  [listener drain timed out: jobs incomplete]"))
       t.jobs.foreach { j =>
         val secs = j.endMs.fold("running")(e => f"${(e - j.startMs) / 1e3}%8.3f s")

@@ -251,12 +251,13 @@ object Graphs {
     * unreached within the bound absent from the output. Classic BSP
     * frontier expansion — iteration h is ONE shuffle join
     * (frontier ⋈ edges on the node id) plus one LEFT ANTI against the
-    * settled set, so per-iteration cost ∝ |frontier|·avg-degree, never
-    * the whole graph; localCheckpoint bounds plan depth (the pageRank
-    * pattern) and keeps the settled set from re-deriving the whole
-    * prefix each round. The frontier-only expansion is what survives
+    * last two levels, so per-iteration cost ∝ |frontier|·avg-degree,
+    * never the whole graph; localCheckpoint bounds plan depth (the
+    * pageRank pattern). The frontier-only expansion is what survives
     * 100×: a saturating graph's late iterations join near-empty
-    * frontiers, not the full distance table.
+    * frontiers, not the full distance table. Every hop from the second
+    * on runs the same plan (the distance is the frontier's plus one,
+    * not a per-hop literal), so its generated code compiles once.
     *
     * Input edges are treated as UNDIRECTED (normalized + symmetric
     * closure); `seeds` is any one-column frame of node ids (duplicates
@@ -264,40 +265,40 @@ object Graphs {
   def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int,
                    iCol: String = "i", jCol: String = "j"): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val und = edges
-      .filter(col(iCol) =!= col(jCol))
-      .select(least(col(iCol), col(jCol)).as("u"),
-        greatest(col(iCol), col(jCol)).as("v"))
+    // both orientations of every edge in one pipeline
+    val u = least(col(iCol), col(jCol))
+    val v = greatest(col(iCol), col(jCol))
+    val e = edges.filter(col(iCol) =!= col(jCol))
+      .select(explode(array(struct(u.as("s"), v.as("t")),
+        struct(v.as("s"), u.as("t")))).as("__e"))
+      .select(col("__e.s").as("s"), col("__e.t").as("t"))
       .distinct()
-    val e = und.select(col("u").as("s"), col("v").as("t"))
-      .union(und.select(col("v").as("s"), col("u").as("t")))
       .localCheckpoint(false)
-    var settled = seeds.select(col(seeds.columns.head).as("node")).distinct()
+    var frontier = seeds.select(col(seeds.columns.head).as("node")).distinct()
       .withColumn("dist", lit(0L))
       .localCheckpoint(false)
-    var frontier = settled
-    var h = 1L
-    while (h <= maxHops) {
+    // settled stays a UNION of per-hop checkpointed frames (round 19):
+    // every piece is already pinned, so the union's lineage is flat —
+    // re-checkpointing it per hop rewrote the ENTIRE settled set's
+    // blocks every iteration (O(settled) extra I/O per hop, quadratic
+    // over the walk) for no plan-depth benefit. ADJUDICATED round 20
+    // (VERDICT r19 #2) with full-protocol A/B at driver conditions
+    // (BENCH_LOCAL_r20_q196_{flat,rechk}.json): flat med 2.45 s vs
+    // per-hop-recheckpoint med 2.78 s on the QUIETER window (canary
+    // 0.110 vs 0.095).
+    var settled = frontier
+    // levels h−2 and h−1: e is symmetric, so a neighbour of level h−1
+    // lies in level h−2, h−1 or h, and only these two can exclude it
+    var near = frontier
+    (1 to maxHops).foreach { _ =>
       val next = frontier.join(e, frontier("node") === e("s"))
-        .select(col("t").as("node")).distinct()
-        .join(settled, Seq("node"), "left_anti")
-        .withColumn("dist", lit(h))
+        .select(col("t").as("node"), (col("dist") + 1L).as("dist"))
+        .distinct()
+        .join(near, Seq("node"), "left_anti")
         .localCheckpoint(false)
-      // settled stays a UNION of per-hop checkpointed frames (round 19):
-      // every piece is already pinned, so the union's lineage is flat —
-      // re-checkpointing it per hop rewrote the ENTIRE settled set's
-      // blocks every iteration (O(settled) extra I/O per hop, quadratic
-      // over the walk) for no plan-depth benefit. ADJUDICATED round 20
-      // (VERDICT r19 #2) with full-protocol A/B at driver conditions
-      // (BENCH_LOCAL_r20_q196_{flat,rechk}.json): flat med 2.45 s vs
-      // per-hop-recheckpoint med 2.78 s on the QUIETER window (canary
-      // 0.110 vs 0.095) — the r19 driver's 0.74× was the shared edge
-      // build's AQE-coalesced 3-wide join stage (fixed this round in
-      // Tables.coPurchaseEdges), not this change; q196 is back inside
-      // r18's [2.29, 2.92] band.
       settled = settled.union(next)
+      near = frontier.union(next)
       frontier = next
-      h += 1L
     }
     settled
   }

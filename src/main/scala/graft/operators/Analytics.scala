@@ -6354,6 +6354,76 @@ object Analytics {
         col("w_minus"), col("z")): _*)
   }
 
+  /** The distinct-t prefix every sequential test shares. `s0` holds one
+    * row per observation: `__t` (long) plus whatever the weights read.
+    * Each row comes back with the totals of the weights up to and
+    * including its own t: a `counts` weight under its own name, a `sums`
+    * weight as `__<name>` (exact, from its `zero`). A row raises `dup`
+    * when two observations share a t, after first raising the text of
+    * any `guards` predicate that holds on some row. */
+  private def sequentialPrefix(s0: DataFrame, dup: String,
+      counts: Seq[(String, Column)], sums: Seq[(String, Column, Column)],
+      guards: Seq[(Column, String)] = Nil): DataFrame = {
+    val chk = s0.agg(count(lit(1)).as("__cn"),
+      count_distinct(col("__t")).as("__cd") +:
+        guards.zipWithIndex.map { case ((bad, _), i) =>
+          sum(when(bad, 1L).otherwise(0L)).as(s"__bad$i") }: _*)
+    val ok = guards.zipWithIndex.foldRight(
+      when(col("__cn") === col("__cd"), lit(1))
+        .otherwise(raise_error(lit(dup)))) { case (((_, msg), i), rest) =>
+      when(col(s"__bad$i") > 0, raise_error(lit(msg))).otherwise(rest)
+    }
+    val (_, pre) = prefixBefore(s0, Nil, "__t",
+      counts ++ sums.map { case (n, w, _) => n -> w })
+    val checked = pre.crossJoin(broadcast(chk))
+      .withColumn("__ok", ok).filter(col("__ok") === 1)
+    val withCounts = counts.foldLeft(checked) { case (d, (n, w)) =>
+      d.withColumn(n, col(s"__cum_$n") + w) }
+    sums.foldLeft(withCounts) { case (d, (n, w, zero)) =>
+      d.withColumn(s"__$n", coalesce(col(s"__cum_$n"), zero) + w) }
+  }
+
+  /** [[sequentialPrefix]] over one stream of (t, value) rows, NULLs in
+    * either dropped: each row gains the running count `n` and the
+    * running mean `mean_v` of an exact decimal(38,12) sum. */
+  private def meanPrefix(df: DataFrame, tCol: String, valueCol: String,
+      dup: String): DataFrame = {
+    val s0 = df.filter(col(tCol).isNotNull && col(valueCol).isNotNull)
+      .select(col(tCol).cast("long").as("__t"),
+        col(valueCol).cast("double").as("__v"))
+    val zero = lit(0).cast("decimal(38,12)")
+    sequentialPrefix(s0, dup, Seq("n" -> lit(1L)),
+        Seq(("s", col("__v").cast("decimal(38,12)"), zero)))
+      .withColumn("mean_v", col("__s").cast("double") / col("n").cast("double"))
+  }
+
+  /** [[sequentialPrefix]] over two arms: rows whose `groupCol` is
+    * `groupA` (`__ia`) or `groupB` and whose t and `valueCol` are not
+    * NULL, the value read as `v` (an exact type, summed from `zero`).
+    * Each row gains per-arm running counts `n_a`/`n_b`, running sums
+    * `__sa`/`__sb`, the means `mean_a`/`mean_b` (NULL while the arm is
+    * empty) and `__delta` = mean_a − mean_b. */
+  private def armPrefix(df: DataFrame, tCol: String, groupCol: String,
+      valueCol: String, groupA: String, groupB: String, v: Column,
+      zero: Column, dup: String): DataFrame = {
+    def d(c: Column) = c.cast("double")
+    val (ia, q) = (col("__ia"), col("__v"))
+    val s0 = df.filter(col(tCol).isNotNull && col(valueCol).isNotNull &&
+        col(groupCol).isin(groupA, groupB))
+      .select(col(tCol).cast("long").as("__t"),
+        (col(groupCol) === groupA).as("__ia"), v.as("__v"))
+    sequentialPrefix(s0, dup,
+        Seq("n_a" -> when(ia, 1L).otherwise(0L),
+          "n_b" -> when(!ia, 1L).otherwise(0L)),
+        Seq(("sa", when(ia, q).otherwise(zero), zero),
+          ("sb", when(!ia, q).otherwise(zero), zero)))
+      .withColumn("mean_a", when(col("n_a") > 0,
+        d(col("__sa")) / d(col("n_a"))))
+      .withColumn("mean_b", when(col("n_b") > 0,
+        d(col("__sb")) / d(col("n_b"))))
+      .withColumn("__delta", col("mean_a") - col("mean_b"))
+  }
+
   /** Always-valid SEQUENTIAL mean test — the mixture SPRT (mSPRT),
     * the fix for the #1 practitioner complaint about live drift
     * dashboards: a fixed-threshold monitor re-checked every batch
@@ -6401,26 +6471,11 @@ object Analytics {
     require(sigma2 > 0, s"sigma2 must be > 0, got $sigma2")
     require(tau2 > 0, s"tau2 must be > 0, got $tau2")
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
-    def d(c: Column) = c.cast("double")
-    val s0 = df.filter(col(tCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(tCol).cast("long").as("__t"),
-        col(valueCol).cast("double").as("__v"))
-    val chk = s0.agg(count(lit(1)).as("__cn"),
-      count_distinct(col("__t")).as("__cd"))
-    val (_, pre) = prefixBefore(s0, Nil, "__t",
-      Seq("c" -> lit(1L), "s" -> col("__v").cast("decimal(38,12)")))
-    val nd = d(col("n"))
+    val nd = col("n").cast("double")
     val mixVar = lit(sigma2) + nd * lit(tau2)
-    pre
-      .crossJoin(broadcast(chk))
-      .withColumn("n", when(col("__cn") === col("__cd"),
-        col("__cum_c") + lit(1L))
-        .otherwise(raise_error(lit("msprtMeanTest: duplicate t values " +
-          "— a sequential test needs an unambiguous observation " +
-          "order; pre-aggregate to one row per time point"))))
-      .withColumn("__s", coalesce(col("__cum_s"),
-        lit(0).cast("decimal(38,12)")) + col("__v").cast("decimal(38,12)"))
-      .withColumn("mean_v", d(col("__s")) / nd)
+    meanPrefix(df, tCol, valueCol, "msprtMeanTest: duplicate t values " +
+        "— a sequential test needs an unambiguous observation " +
+        "order; pre-aggregate to one row per time point")
       .withColumn("__dev", col("mean_v") - lit(mu0))
       .withColumn("e_log",
         lit(0.5) * log(lit(sigma2) / mixVar) +
@@ -6460,47 +6515,19 @@ object Analytics {
     require(sigma2 > 0, s"sigma2 must be > 0, got $sigma2")
     require(tau2 > 0, s"tau2 must be > 0, got $tau2")
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
-    def d(c: Column) = c.cast("double")
-    val s0 = df.filter(col(tCol).isNotNull && col(valueCol).isNotNull &&
-        col(groupCol).isin(groupA, groupB))
-      .select(col(tCol).cast("long").as("__t"),
-        (col(groupCol) === groupA).as("__ia"),
-        col(valueCol).cast("double").as("__v"))
-    val chk = s0.agg(count(lit(1)).as("__cn"),
-      count_distinct(col("__t")).as("__cd"))
-    val vq = col("__v").cast("decimal(38,12)")
-    val zero = lit(0).cast("decimal(38,12)")
-    val (_, pre) = prefixBefore(s0, Nil, "__t",
-      Seq("ca" -> when(col("__ia"), 1L).otherwise(0L),
-        "sa" -> when(col("__ia"), vq).otherwise(zero),
-        "cb" -> when(!col("__ia"), 1L).otherwise(0L),
-        "sb" -> when(!col("__ia"), vq).otherwise(zero)))
-    val na = d(col("n_a")); val nb = d(col("n_b"))
-    val vt = lit(sigma2) * (lit(1.0) / na + lit(1.0) / nb)
-    pre
-      .crossJoin(broadcast(chk))
-      .withColumn("__ok", when(col("__cn") === col("__cd"), lit(1))
-        .otherwise(raise_error(lit("msprtTwoSampleTest: duplicate t " +
+    val vt = lit(sigma2) * (lit(1.0) / col("n_a").cast("double") +
+      lit(1.0) / col("n_b").cast("double"))
+    armPrefix(df, tCol, groupCol, valueCol, groupA, groupB,
+        col(valueCol).cast("double").cast("decimal(38,12)"),
+        lit(0).cast("decimal(38,12)"), "msprtTwoSampleTest: duplicate t " +
           "values — a sequential test needs an unambiguous " +
-          "observation order; pre-aggregate to one row per time point"))))
-      .withColumn("n_a", col("__cum_ca") +
-        when(col("__ia"), 1L).otherwise(0L))
-      .withColumn("n_b", col("__cum_cb") +
-        when(!col("__ia"), 1L).otherwise(0L))
-      .withColumn("__sa", coalesce(col("__cum_sa"), zero) +
-        when(col("__ia"), vq).otherwise(zero))
-      .withColumn("__sb", coalesce(col("__cum_sb"), zero) +
-        when(!col("__ia"), vq).otherwise(zero))
-      .withColumn("mean_a", when(col("n_a") > 0, d(col("__sa")) / na))
-      .withColumn("mean_b", when(col("n_b") > 0, d(col("__sb")) / nb))
-      .withColumn("__delta", col("mean_a") - col("mean_b"))
+          "observation order; pre-aggregate to one row per time point")
       .withColumn("e_log", when(col("n_a") > 0 && col("n_b") > 0,
         lit(0.5) * log(vt / (vt + lit(tau2))) +
           (col("__delta") * col("__delta") * lit(tau2)) /
             (lit(2.0) * vt * (vt + lit(tau2)))))
       .withColumn("crossed", when(col("e_log").isNotNull,
         col("e_log") >= lit(math.log(1.0 / alpha))))
-      .filter(col("__ok") === 1)
       .select(col("__t").as("t"), col("n_a"), col("n_b"),
         col("mean_a"), col("mean_b"), col("e_log"), col("crossed"))
       .orderBy("t")
@@ -6541,26 +6568,10 @@ object Analytics {
     require(sigma2 > 0, s"sigma2 must be > 0, got $sigma2")
     require(tau2 > 0, s"tau2 must be > 0, got $tau2")
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
-    def d(c: Column) = c.cast("double")
-    val s0 = df.filter(col(tCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(tCol).cast("long").as("__t"),
-        col(valueCol).cast("double").as("__v"))
-    val chk = s0.agg(count(lit(1)).as("__cn"),
-      count_distinct(col("__t")).as("__cd"))
-    val (_, pre) = prefixBefore(s0, Nil, "__t",
-      Seq("c" -> lit(1L), "s" -> col("__v").cast("decimal(38,12)")))
-    val nd = d(col("n"))
-    val vt = lit(sigma2) / nd
-    pre
-      .crossJoin(broadcast(chk))
-      .withColumn("n", when(col("__cn") === col("__cd"),
-        col("__cum_c") + lit(1L))
-        .otherwise(raise_error(lit("meanConfidenceSequence: duplicate " +
-          "t values — a confidence sequence needs an unambiguous " +
-          "observation order; pre-aggregate to one row per time point"))))
-      .withColumn("__s", coalesce(col("__cum_s"),
-        lit(0).cast("decimal(38,12)")) + col("__v").cast("decimal(38,12)"))
-      .withColumn("mean_v", d(col("__s")) / nd)
+    val vt = lit(sigma2) / col("n").cast("double")
+    meanPrefix(df, tCol, valueCol, "meanConfidenceSequence: duplicate " +
+        "t values — a confidence sequence needs an unambiguous " +
+        "observation order; pre-aggregate to one row per time point")
       .withColumn("radius",
         sqrt((vt * (vt + lit(tau2)) / lit(tau2)) *
           (log((vt + lit(tau2)) / vt) - lit(2.0) * log(lit(alpha)))))
@@ -6599,46 +6610,19 @@ object Analytics {
     require(sigma2 > 0, s"sigma2 must be > 0, got $sigma2")
     require(tau2 > 0, s"tau2 must be > 0, got $tau2")
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
-    def d(c: Column) = c.cast("double")
-    val s0 = df.filter(col(tCol).isNotNull && col(valueCol).isNotNull &&
-        col(groupCol).isin(groupA, groupB))
-      .select(col(tCol).cast("long").as("__t"),
-        (col(groupCol) === groupA).as("__ia"),
-        col(valueCol).cast("double").as("__v"))
-    val chk = s0.agg(count(lit(1)).as("__cn"),
-      count_distinct(col("__t")).as("__cd"))
-    val vq = col("__v").cast("decimal(38,12)")
-    val zero = lit(0).cast("decimal(38,12)")
-    val (_, pre) = prefixBefore(s0, Nil, "__t",
-      Seq("ca" -> when(col("__ia"), 1L).otherwise(0L),
-        "sa" -> when(col("__ia"), vq).otherwise(zero),
-        "cb" -> when(!col("__ia"), 1L).otherwise(0L),
-        "sb" -> when(!col("__ia"), vq).otherwise(zero)))
-    val na = d(col("n_a")); val nb = d(col("n_b"))
-    val vt = lit(sigma2) * (lit(1.0) / na + lit(1.0) / nb)
-    pre
-      .crossJoin(broadcast(chk))
-      .withColumn("__ok", when(col("__cn") === col("__cd"), lit(1))
-        .otherwise(raise_error(lit("diffConfidenceSequence: duplicate " +
+    val vt = lit(sigma2) * (lit(1.0) / col("n_a").cast("double") +
+      lit(1.0) / col("n_b").cast("double"))
+    armPrefix(df, tCol, groupCol, valueCol, groupA, groupB,
+        col(valueCol).cast("double").cast("decimal(38,12)"),
+        lit(0).cast("decimal(38,12)"), "diffConfidenceSequence: duplicate " +
           "t values — a confidence sequence needs an unambiguous " +
-          "observation order; pre-aggregate to one row per time point"))))
-      .withColumn("n_a", col("__cum_ca") +
-        when(col("__ia"), 1L).otherwise(0L))
-      .withColumn("n_b", col("__cum_cb") +
-        when(!col("__ia"), 1L).otherwise(0L))
-      .withColumn("__sa", coalesce(col("__cum_sa"), zero) +
-        when(col("__ia"), vq).otherwise(zero))
-      .withColumn("__sb", coalesce(col("__cum_sb"), zero) +
-        when(!col("__ia"), vq).otherwise(zero))
-      .withColumn("mean_a", when(col("n_a") > 0, d(col("__sa")) / na))
-      .withColumn("mean_b", when(col("n_b") > 0, d(col("__sb")) / nb))
-      .withColumn("diff", col("mean_a") - col("mean_b"))
+          "observation order; pre-aggregate to one row per time point")
+      .withColumnRenamed("__delta", "diff")
       .withColumn("radius", when(col("n_a") > 0 && col("n_b") > 0,
         sqrt((vt * (vt + lit(tau2)) / lit(tau2)) *
           (log((vt + lit(tau2)) / vt) - lit(2.0) * log(lit(alpha))))))
       .withColumn("ci_lo", col("diff") - col("radius"))
       .withColumn("ci_hi", col("diff") + col("radius"))
-      .filter(col("__ok") === 1)
       .select(col("__t").as("t"), col("n_a"), col("n_b"),
         col("mean_a"), col("mean_b"), col("diff"), col("radius"),
         col("ci_lo"), col("ci_hi"))
@@ -7758,38 +7742,14 @@ object Analytics {
     require(tau2 > 0, s"tau2 must be > 0, got $tau2")
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
     def d(c: Column) = c.cast("double")
-    val s0 = df.filter(col(tCol).isNotNull && col(successCol).isNotNull &&
-        col(groupCol).isin(groupA, groupB))
-      .select(col(tCol).cast("long").as("__t"),
-        (col(groupCol) === groupA).as("__ia"),
-        col(successCol).cast("int").cast("long").as("__s"))
-    val chk = s0.agg(count(lit(1)).as("__cn"),
-      count_distinct(col("__t")).as("__cd"))
-    val (_, pre) = prefixBefore(s0, Nil, "__t",
-      Seq("ca" -> when(col("__ia"), 1L).otherwise(0L),
-        "xa" -> when(col("__ia"), col("__s")).otherwise(0L),
-        "cb" -> when(!col("__ia"), 1L).otherwise(0L),
-        "xb" -> when(!col("__ia"), col("__s")).otherwise(0L)))
     val na = d(col("n_a")); val nb = d(col("n_b"))
-    val pPool = (d(col("__xa")) + d(col("__xb"))) / (na + nb)
+    val pPool = (d(col("__sa")) + d(col("__sb"))) / (na + nb)
     val vt = pPool * (lit(1.0) - pPool) * (lit(1.0) / na + lit(1.0) / nb)
-    pre
-      .crossJoin(broadcast(chk))
-      .withColumn("__ok", when(col("__cn") === col("__cd"), lit(1))
-        .otherwise(raise_error(lit("msprtTwoProportionTest: duplicate " +
-          "t values — a sequential test needs an unambiguous " +
-          "observation order; pre-aggregate to one row per time point"))))
-      .withColumn("n_a", col("__cum_ca") +
-        when(col("__ia"), 1L).otherwise(0L))
-      .withColumn("n_b", col("__cum_cb") +
-        when(!col("__ia"), 1L).otherwise(0L))
-      .withColumn("__xa", coalesce(col("__cum_xa"), lit(0L)) +
-        when(col("__ia"), col("__s")).otherwise(0L))
-      .withColumn("__xb", coalesce(col("__cum_xb"), lit(0L)) +
-        when(!col("__ia"), col("__s")).otherwise(0L))
-      .withColumn("p_a", when(col("n_a") > 0, d(col("__xa")) / na))
-      .withColumn("p_b", when(col("n_b") > 0, d(col("__xb")) / nb))
-      .withColumn("__delta", col("p_a") - col("p_b"))
+    armPrefix(df, tCol, groupCol, successCol, groupA, groupB,
+        col(successCol).cast("int").cast("long"), lit(0L),
+        "msprtTwoProportionTest: duplicate t values — a sequential test " +
+          "needs an unambiguous observation order; pre-aggregate to one " +
+          "row per time point")
       .withColumn("e_log", when(col("n_a") > 0 && col("n_b") > 0 &&
           vt > lit(0.0),
         lit(0.5) * log(vt / (vt + lit(tau2))) +
@@ -7797,9 +7757,9 @@ object Analytics {
             (lit(2.0) * vt * (vt + lit(tau2)))))
       .withColumn("crossed", when(col("e_log").isNotNull,
         col("e_log") >= lit(math.log(1.0 / alpha))))
-      .filter(col("__ok") === 1)
       .select(col("__t").as("t"), col("n_a"), col("n_b"),
-        col("p_a"), col("p_b"), col("e_log"), col("crossed"))
+        col("mean_a").as("p_a"), col("mean_b").as("p_b"), col("e_log"),
+        col("crossed"))
       .orderBy("t")
   }
 
@@ -7987,31 +7947,18 @@ object Analytics {
       .select(col(tCol).cast("long").as("__t"),
         col(countCol).cast("decimal(38,0)").as("__x"),
         col(exposureCol).cast("double").as("__e"))
-    val chk = s0.agg(count(lit(1)).as("__cn"),
-      count_distinct(col("__t")).as("__cd"),
-      sum(when(col("__e").isNull || col("__e") <= 0.0, 1L)
-        .otherwise(0L)).as("__bad"))
-    val zeroX = lit(0).cast("decimal(38,0)")
-    val zeroE = lit(0).cast("decimal(38,12)")
-    val (_, pre) = prefixBefore(s0, Nil, "__t",
-      Seq("c" -> lit(1L), "x" -> col("__x"),
-        "e" -> col("__e").cast("decimal(38,12)")))
     val et = d(col("__et"))
     val vt = lit(lambda0) / et
-    pre
-      .crossJoin(broadcast(chk))
-      .withColumn("__ok", when(col("__bad") > 0,
-        raise_error(lit("msprtRateTest: NULL or nonpositive exposure " +
-          "— every observation must carry positive exposure; fix " +
-          "upstream")))
-        .otherwise(when(col("__cn") === col("__cd"), lit(1))
-          .otherwise(raise_error(lit("msprtRateTest: duplicate t " +
-            "values — a sequential test needs an unambiguous " +
-            "observation order; pre-aggregate to one row per time " +
-            "point")))))
-      .withColumn("__xt", coalesce(col("__cum_x"), zeroX) + col("__x"))
-      .withColumn("__et", coalesce(col("__cum_e"), zeroE) +
-        col("__e").cast("decimal(38,12)"))
+    sequentialPrefix(s0, "msprtRateTest: duplicate t values — a " +
+        "sequential test needs an unambiguous observation order; " +
+        "pre-aggregate to one row per time point",
+        counts = Nil,
+        sums = Seq(("xt", col("__x"), lit(0).cast("decimal(38,0)")),
+          ("et", col("__e").cast("decimal(38,12)"),
+            lit(0).cast("decimal(38,12)"))),
+        guards = Seq((col("__e").isNull || col("__e") <= 0.0) ->
+          ("msprtRateTest: NULL or nonpositive exposure — every " +
+            "observation must carry positive exposure; fix upstream")))
       .withColumn("rate", d(col("__xt")) / et)
       .withColumn("__dev", col("rate") - lit(lambda0))
       .withColumn("e_log",
@@ -8019,7 +7966,6 @@ object Analytics {
           (col("__dev") * col("__dev") * lit(tau2)) /
             (lit(2.0) * vt * (vt + lit(tau2))))
       .withColumn("crossed", col("e_log") >= lit(math.log(1.0 / alpha)))
-      .filter(col("__ok") === 1)
       .select(col("__t").as("t"), d(col("__xt")).as("x_total"),
         col("__et").cast("double").as("e_total"), col("rate"),
         col("e_log"), col("crossed"))

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.functions.Sketches
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
@@ -25,6 +26,53 @@ object Streams {
   def parquetStream(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     spark.readStream.schema(schema).parquet(dir)
 
+  /** The event-time preamble of every windowed operator: `ts_us` (µs
+    * since epoch) becomes the timestamp `tstamp`, which carries the
+    * watermark. */
+  private def eventTime(events: DataFrame, watermark: String): DataFrame =
+    events.withColumn("tstamp", timestamp_micros(col("ts_us")))
+      .withWatermark("tstamp", watermark)
+
+  /** One row per (tumbling event-time window × `keys`): `aggs` over the
+    * window's rows, led by `bucket_us`, the window start in µs, in place
+    * of Spark's `window` struct. */
+  private def windowAgg(events: DataFrame, watermark: String,
+                        window_ : String, keys: Column*)(
+      aggs: Column*): DataFrame = {
+    val g = eventTime(events, watermark)
+      .groupBy(window(col("tstamp"), window_) +: keys: _*)
+      .agg(aggs.head, aggs.tail: _*)
+    g.select(unix_micros(col("window.start")).as("bucket_us") +:
+      g.columns.tail.map(col): _*)
+  }
+
+  /** The ordered single-key walk behind every closed-window monitor
+    * (stage 2 of [[windowedPsiLive]], whose CONTRACT it carries): the
+    * closed-window rows of the whole stream meet in ONE group, are
+    * visited in `bucket` order, and `step` folds each into the state
+    * (None before the stream's first row), emitting at most one output
+    * row; the state after the last row carries to the next micro-batch.
+    * State never expires, so only metadata-sized rows may flow through
+    * it. */
+  private def walkClosed[R: Encoder, S: Encoder, O: Encoder](
+      closed: Dataset[R], bucket: R => Long)(
+      step: (Option[S], R) => (S, Option[O])): Dataset[O] = {
+    import closed.sparkSession.implicits._
+    closed.groupByKey(_ => 1)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (_: Int, rows: Iterator[R], state: GroupState[S]) =>
+          var st = state.getOption
+          val out = rows.toSeq.sortBy(bucket).flatMap { r =>
+            val (next, o) = step(st, r)
+            st = Some(next)
+            o
+          }
+          st.foreach(state.update)
+          out.iterator
+      }
+  }
+
   /** Watermarked tumbling-window aggregation of the events shape:
     * (ts_us long, event_type string, value double) → per-(window, type)
     * counts and sums — the streaming twin of SparkEntry q39. The sum
@@ -35,14 +83,9 @@ object Streams {
     * exact batch-parity gate (q121). */
   def windowedAgg(events: DataFrame, watermark: String = "10 minutes",
                   window_ : String = "1 hour"): DataFrame =
-    events
-      .withColumn("tstamp", timestamp_micros(col("ts_us")))
-      .withWatermark("tstamp", watermark)
-      .groupBy(window(col("tstamp"), window_), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
-      .select(unix_micros(col("window.start")).as("bucket_us"),
-        col("event_type"), col("n"), col("sum_value"))
+    windowAgg(events, watermark, window_, col("event_type"))(
+      count(lit(1)).as("n"),
+      sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
 
   /** Watermarked SESSION-window aggregation — gap-based sessionization as
     * an always-on query, via Spark's native `session_window` (the batch
@@ -60,9 +103,7 @@ object Streams {
     * the batch sessionStats row exactly — that identity is the q130 gate. */
   def sessionAgg(events: DataFrame, watermark: String = "10 minutes",
                  gap: String = "12 hours"): DataFrame =
-    events
-      .withColumn("tstamp", timestamp_micros(col("ts_us")))
-      .withWatermark("tstamp", watermark)
+    eventTime(events, watermark)
       .groupBy(session_window(col("tstamp"), gap), col("user_id"))
       .agg(max(unix_micros(col("tstamp"))).as("session_end_us"),
         count(lit(1)).as("n_events"),
@@ -188,22 +229,17 @@ object Streams {
   def windowedQuantiles(events: DataFrame, watermark: String = "10 minutes",
                         window_ : String = "1 hour", k: Int = 64,
                         qs: Seq[Double] = Seq(0.5, 0.9)): DataFrame = {
-    import graft.functions.Sketches
     val names = qs.map(q => f"p${math.round(q * 100)}%02d")
     require(names.distinct.length == names.length,
       s"quantiles $qs collide on output names $names (named by rounded " +
         "percent) — a colliding pair would silently drop one quantile")
-    val base = events
-      .withColumn("tstamp", timestamp_micros(col("ts_us")))
-      .withWatermark("tstamp", watermark)
-      .groupBy(window(col("tstamp"), window_), col("event_type"))
-      .agg(count(lit(1)).as("n"), Sketches.khistCol(k)(col("value")).as("sketch"))
+    val base = windowAgg(events, watermark, window_, col("event_type"))(
+      count(lit(1)).as("n"), Sketches.khistCol(k)(col("value")).as("sketch"))
     val withQs = qs.zip(names).foldLeft(base) { case (df, (q, name)) =>
       df.withColumn(name, Sketches.khistQuantileCol(q)(col("sketch")))
     }
     withQs.select(
-      unix_micros(col("window.start")).as("bucket_us") +: col("event_type") +:
-        col("n") +: names.map(col): _*)
+      col("bucket_us") +: col("event_type") +: col("n") +: names.map(col): _*)
   }
 
   /** Streaming windowed heavy hitters — per event-time window, the
@@ -224,17 +260,12 @@ object Streams {
                            watermark: String = "0 seconds",
                            window_ : String = "1 hour",
                            capacity: Int = 64, k: Int = 10): DataFrame = {
-    import graft.functions.Sketches
     require(k >= 1 && capacity >= k, s"need capacity >= k >= 1, got " +
       s"capacity=$capacity k=$k")
-    events
-      .withColumn("tstamp", timestamp_micros(col("ts_us")))
-      .withWatermark("tstamp", watermark)
-      .groupBy(window(col("tstamp"), window_))
-      .agg(count(lit(1)).as("n"),
+    windowAgg(events, watermark, window_)(count(lit(1)).as("n"),
         Sketches.spaceSavingCol(capacity)(col("key").cast("string"))
           .as("__hh"))
-      .select(unix_micros(col("window.start")).as("bucket_us"), col("n"),
+      .select(col("bucket_us"), col("n"),
         posexplode(slice(col("__hh"), 1, k)).as(Seq("__i", "__e")))
       .select(col("bucket_us"), col("n"),
         (col("__i") + 1).cast("long").as("rank"),
@@ -262,32 +293,49 @@ object Streams {
                   lo: Double, hi: Double,
                   watermark: String = "0 seconds",
                   window_ : String = "1 hour"): DataFrame = {
-    import graft.functions.Sketches
     val bins = refCounts.length
     require(bins >= 1 && hi > lo, "need >= 1 reference bin and hi > lo")
     require(refCounts.forall(_ >= 0), "negative reference count")
-    val nr = refCounts.sum
-    val base = events
-      .withColumn("tstamp", timestamp_micros(col("ts_us")))
-      .withWatermark("tstamp", watermark)
-      .groupBy(window(col("tstamp"), window_))
-      .agg(count(lit(1)).as("n"),
-        Sketches.histCol(lo, hi, bins)(col("value")).as("counts"))
+    binnedDrift(events, Nil, lo, hi, bins, watermark, window_, "psi")(
+      refShare(refCounts))(psiTerm)
+  }
+
+  /** The windowed binned-drift monitors' one body (the batch model is
+    * `Analytics.binnedDivergenceBy`): per (window × `keys`) the window's
+    * fixed-grid HistAgg counts, each bin's Laplace-smoothed window share
+    * scored against `ref(i)`, the bin's reference share, through
+    * `term(ref, window)`; every term is pinned to decimal(28,12) and the
+    * terms are summed exactly. Output: (bucket_us, keys…, n, `stat`). */
+  private def binnedDrift(events: DataFrame, keys: Seq[String],
+      lo: Double, hi: Double, bins: Int, watermark: String,
+      window_ : String, stat: String)(ref: Int => Column)(
+      term: (Column, Column) => Column): DataFrame = {
     val terms = (0 until bins).map { i =>
       val pb = (element_at(col("counts"), i + 1) + 1).cast("double") /
         (col("n") + bins).cast("double")
-      val pa = lit((refCounts(i) + 1).toDouble / (nr + bins).toDouble)
-      ((pb - pa) * log(pb / pa)).cast("decimal(28,12)")
+      term(ref(i), pb).cast("decimal(28,12)")
     }
     // re-cast after every add: naive chaining grows decimal precision
     // by 1 per term, hits the 38 cap around 10 bins, and Spark then
     // SACRIFICES SCALE to fit (observed: psi rounded to 6 dp at 20
     // bins). Inputs are exact at scale 12 and |psi| bounded, so the
     // re-cast is lossless and the chain equals the oracle's SUM
-    val psiSum = terms.reduce((a, b) => (a + b).cast("decimal(28,12)"))
-    base.select(unix_micros(col("window.start")).as("bucket_us"),
-      col("n"), psiSum.cast("double").as("psi"))
+    val total = terms.reduce((a, b) => (a + b).cast("decimal(28,12)"))
+    windowAgg(events, watermark, window_, keys.map(col): _*)(
+        count(lit(1)).as("n"),
+        Sketches.histCol(lo, hi, bins)(col("value")).as("counts"))
+      .select(col("bucket_us") +: keys.map(col) :+ col("n") :+
+        total.cast("double").as(stat): _*)
   }
+
+  /** Bin i's Laplace-smoothed share of a constant reference histogram,
+    * a driver-side double literal. */
+  private def refShare(refCounts: Seq[Long])(i: Int): Column =
+    lit((refCounts(i) + 1).toDouble /
+      (refCounts.sum + refCounts.length).toDouble)
+
+  private def psiTerm(pa: Column, pb: Column): Column =
+    (pb - pa) * log(pb / pa)
 
   /** Streaming windowed Jensen–Shannon drift — [[windowedPsi]]'s
     * BOUNDED symmetric twin (PSI is unbounded and spikes on
@@ -306,27 +354,14 @@ object Streams {
                   lo: Double, hi: Double,
                   watermark: String = "0 seconds",
                   window_ : String = "1 hour"): DataFrame = {
-    import graft.functions.Sketches
     val bins = refCounts.length
     require(bins >= 1 && hi > lo, "need >= 1 reference bin and hi > lo")
     require(refCounts.forall(_ >= 0), "negative reference count")
-    val nr = refCounts.sum
-    val base = events
-      .withColumn("tstamp", timestamp_micros(col("ts_us")))
-      .withWatermark("tstamp", watermark)
-      .groupBy(window(col("tstamp"), window_))
-      .agg(count(lit(1)).as("n"),
-        Sketches.histCol(lo, hi, bins)(col("value")).as("counts"))
-    val terms = (0 until bins).map { i =>
-      val pb = (element_at(col("counts"), i + 1) + 1).cast("double") /
-        (col("n") + bins).cast("double")
-      val pa = lit((refCounts(i) + 1).toDouble / (nr + bins).toDouble)
+    binnedDrift(events, Nil, lo, hi, bins, watermark, window_, "jsd")(
+      refShare(refCounts)) { (pa, pb) =>
       val m = (pa + pb) / 2
-      ((pa * log(pa / m) + pb * log(pb / m)) * 0.5).cast("decimal(28,12)")
+      (pa * log(pa / m) + pb * log(pb / m)) * 0.5
     }
-    val jsdSum = terms.reduce((a, b) => (a + b).cast("decimal(28,12)"))
-    base.select(unix_micros(col("window.start")).as("bucket_us"),
-      col("n"), jsdSum.cast("double").as("jsd"))
   }
 
   /** Per-SLICE streaming PSI — [[windowedPsi]] with the key column in
@@ -347,7 +382,6 @@ object Streams {
                     lo: Double, hi: Double,
                     watermark: String = "0 seconds",
                     window_ : String = "1 hour"): DataFrame = {
-    import graft.functions.Sketches
     require(refCounts.nonEmpty, "need at least one slice reference")
     val bins = refCounts.head._2.length
     require(bins >= 1 && hi > lo, "need >= 1 reference bin and hi > lo")
@@ -360,24 +394,12 @@ object Streams {
       Seq(lit(k), array(refCounts(k).map(lit(_)): _*)) }: _*)
     val nrMap = map(refKeys.flatMap { k =>
       Seq(lit(k), lit(refCounts(k).sum)) }: _*)
-    val base = events
-      .withColumn("tstamp", timestamp_micros(col("ts_us")))
-      .withWatermark("tstamp", watermark)
-      .groupBy(window(col("tstamp"), window_), col(keyCol))
-      .agg(count(lit(1)).as("n"),
-        Sketches.histCol(lo, hi, bins)(col("value")).as("counts"))
-      .withColumn("__ref", element_at(refMap, col(keyCol)))
-      .withColumn("__nr", element_at(nrMap, col(keyCol)))
-    val terms = (0 until bins).map { i =>
-      val pb = (element_at(col("counts"), i + 1) + 1).cast("double") /
-        (col("n") + bins).cast("double")
-      val pa = (element_at(col("__ref"), i + 1) + 1).cast("double") /
-        (col("__nr") + bins).cast("double")
-      ((pb - pa) * log(pb / pa)).cast("decimal(28,12)")
-    }
-    val psiSum = terms.reduce((a, b) => (a + b).cast("decimal(28,12)"))
-    base.select(unix_micros(col("window.start")).as("bucket_us"),
-      col(keyCol), col("n"), psiSum.cast("double").as("psi"))
+    binnedDrift(events, Seq(keyCol), lo, hi, bins, watermark, window_,
+        "psi") { i =>
+      (element_at(element_at(refMap, col(keyCol)), i + 1) + 1)
+        .cast("double") /
+        (element_at(nrMap, col(keyCol)) + bins).cast("double")
+    }(psiTerm)
   }
 
   /** [[windowedPsi]] with a LIVE reference refresh — closes the "refresh
@@ -427,18 +449,12 @@ object Streams {
                       lo: Double, hi: Double,
                       watermark: String = "0 seconds",
                       window_ : String = "1 hour"): DataFrame = {
-    import graft.functions.Sketches
     val bins = initialRef.length
     require(bins >= 1 && hi > lo, "need >= 1 reference bin and hi > lo")
     require(initialRef.forall(_ >= 0), "negative reference count")
-    val spark = events.sparkSession
-    import spark.implicits._
+    import events.sparkSession.implicits._
     val isData = col("ref").isNull
-    val closed = events
-      .withColumn("tstamp", timestamp_micros(col("ts_us")))
-      .withWatermark("tstamp", watermark)
-      .groupBy(window(col("tstamp"), window_))
-      .agg(
+    val closed = windowAgg(events, watermark, window_)(
         sum(when(isData, 1L).otherwise(0L)).as("n"),
         Sketches.histCol(lo, hi, bins)(
           when(isData, col("value")).otherwise(lit(Double.NaN))).as("counts"),
@@ -447,43 +463,33 @@ object Streams {
         // the applied reference never depends on partition visit order
         max_by(col("ref"), when(!isData, struct(col("ts_us"), col("ref"))))
           .as("ctrl"))
-      .select(unix_micros(col("window.start")).as("bucket_us"),
-        col("n"), col("counts"), col("ctrl"))
-    closed.as[(Long, Long, Seq[Long], Option[Seq[Long]])]
-      .groupByKey(_ => 1)
-      .flatMapGroupsWithState[Seq[Long], (Long, Long, Double)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Int, rows: Iterator[(Long, Long, Seq[Long], Option[Seq[Long]])],
-         state: GroupState[Seq[Long]]) =>
-          var ref = state.getOption.getOrElse(initialRef)
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-          rows.toSeq.sortBy(_._1).foreach { case (b, n, counts, ctrl) =>
-            if (n > 0) {
-              val nr = ref.sum
-              // the windowedPsi term chain verbatim: double term,
-              // scale-12 HALF_UP decimal, exact sum, one final double
-              var acc = java.math.BigDecimal.ZERO
-              var i = 0
-              while (i < bins) {
-                val pb = (counts(i) + 1).toDouble / (n + bins).toDouble
-                val pa = (ref(i) + 1).toDouble / (nr + bins).toDouble
-                val t = (pb - pa) * math.log(pb / pa)
-                acc = acc.add(java.math.BigDecimal.valueOf(t)
-                  .setScale(12, java.math.RoundingMode.HALF_UP))
-                i += 1
-              }
-              out += ((b, n, acc.doubleValue))
-            }
-            ctrl.foreach { c =>
-              require(c.length == bins && c.forall(_ >= 0),
-                s"control row: need $bins non-negative counts, got $c")
-              ref = c
-            }
+    walkClosed[(Long, Long, Seq[Long], Option[Seq[Long]]), Seq[Long],
+      (Long, Long, Double)](
+      closed.as[(Long, Long, Seq[Long], Option[Seq[Long]])], _._1) {
+      case (st, (b, n, counts, ctrl)) =>
+        val ref = st.getOrElse(initialRef)
+        val score = if (n > 0) Some {
+          val nr = ref.sum
+          // the windowedPsi term chain verbatim: double term,
+          // scale-12 HALF_UP decimal, exact sum, one final double
+          var acc = java.math.BigDecimal.ZERO
+          var i = 0
+          while (i < bins) {
+            val pb = (counts(i) + 1).toDouble / (n + bins).toDouble
+            val pa = (ref(i) + 1).toDouble / (nr + bins).toDouble
+            val t = (pb - pa) * math.log(pb / pa)
+            acc = acc.add(java.math.BigDecimal.valueOf(t)
+              .setScale(12, java.math.RoundingMode.HALF_UP))
+            i += 1
           }
-          state.update(ref)
-          out.iterator
-      }
-      .toDF("bucket_us", "n", "psi")
+          (b, n, acc.doubleValue)
+        } else None
+        ctrl.foreach { c =>
+          require(c.length == bins && c.forall(_ >= 0),
+            s"control row: need $bins non-negative counts, got $c")
+        }
+        (ctrl.getOrElse(ref), score)
+    }.toDF("bucket_us", "n", "psi")
   }
 
   /** Streaming EWMA control chart over window means — the live
@@ -518,43 +524,20 @@ object Streams {
                           window_ : String = "1 day"): DataFrame = {
     require(alpha > 0.0 && alpha < 1.0, s"alpha must be in (0,1): $alpha")
     require(threshold > 0.0, s"threshold must be > 0: $threshold")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val closed = events
-      .withColumn("tstamp", timestamp_micros(col("ts_us")))
-      .withWatermark("tstamp", watermark)
-      .groupBy(window(col("tstamp"), window_))
-      .agg(count(lit(1)).as("n"),
-        (sum(col("value").cast("decimal(18,2)")).cast("double") /
-          count(lit(1)).cast("double")).as("mean"))
-      .select(unix_micros(col("window.start")).as("bucket_us"),
-        col("n"), col("mean"))
-    closed.as[(Long, Long, Double)]
-      .groupByKey(_ => 1)
-      .flatMapGroupsWithState[(Double, Double),
-        (Long, Long, Double, Option[Double])](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Int, rows: Iterator[(Long, Long, Double)],
-         state: GroupState[(Double, Double)]) =>
-          var st = state.getOption
-          val out = scala.collection.mutable
-            .ArrayBuffer.empty[(Long, Long, Double, Option[Double])]
-          rows.toSeq.sortBy(_._1).foreach { case (b, n, x) =>
-            st match {
-              case None =>
-                out += ((b, n, x, None))
-                st = Some((x, 0.0))
-              case Some((m, v)) =>
-                val z = if (v > 0) Some((x - m) / math.sqrt(v)) else None
-                out += ((b, n, x, z))
-                val d = x - m
-                st = Some((m + alpha * d, (1.0 - alpha) * (v + alpha * d * d)))
-            }
-          }
-          st.foreach(state.update)
-          out.iterator
-      }
-      .toDF("bucket_us", "n", "mean", "z")
+    import events.sparkSession.implicits._
+    val closed = windowAgg(events, watermark, window_)(count(lit(1)).as("n"),
+      (sum(col("value").cast("decimal(18,2)")).cast("double") /
+        count(lit(1)).cast("double")).as("mean"))
+    walkClosed[(Long, Long, Double), (Double, Double),
+      (Long, Long, Double, Option[Double])](
+      closed.as[(Long, Long, Double)], _._1) {
+      case (None, (b, n, x)) => ((x, 0.0), Some((b, n, x, None)))
+      case (Some((m, v)), (b, n, x)) =>
+        val z = if (v > 0) Some((x - m) / math.sqrt(v)) else None
+        val d = x - m
+        ((m + alpha * d, (1.0 - alpha) * (v + alpha * d * d)),
+          Some((b, n, x, z)))
+    }.toDF("bucket_us", "n", "mean", "z")
       .withColumn("is_anomaly", when(col("z").isNotNull,
         abs(col("z")) > threshold))
   }
@@ -592,52 +575,17 @@ object Streams {
     require(sigma2 > 0, s"sigma2 must be > 0, got $sigma2")
     require(tau2 > 0, s"tau2 must be > 0, got $tau2")
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val closed = events
-      .withColumn("tstamp", timestamp_micros(col("ts_us")))
-      .withWatermark("tstamp", watermark)
-      .groupBy(window(col("tstamp"), window_))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(28,12)")).as("s"))
-      .select(unix_micros(col("window.start")).as("bucket_us"),
-        col("n"), col("s").cast("string").as("s"))
-    // the window sum and the carried state cross the encoder as plain
-    // decimal STRINGS: the tuple encoder's default java BigDecimal type
-    // is decimal(38,18), which would silently cut the batch operator's
-    // decimal(38,12) integer headroom by 10^6 — the string round-trip
-    // (cast above, toPlainString below) is exact at any magnitude and
-    // the rows are metadata-sized by construction (r18 advisor)
-    closed.as[(Long, Long, String)]
-      .groupByKey(_ => 1)
-      .flatMapGroupsWithState[(Long, String),
-        (Long, Long, Long, Double, Double, Boolean)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Int, rows: Iterator[(Long, Long, String)],
-         state: GroupState[(Long, String)]) =>
-          val st0 = state.getOption.getOrElse((0L, "0"))
-          var nTot = st0._1
-          var sTot = new java.math.BigDecimal(st0._2)
-          val out = scala.collection.mutable
-            .ArrayBuffer.empty[(Long, Long, Long, Double, Double, Boolean)]
-          rows.toSeq.sortBy(_._1).foreach { case (b, n, s) =>
-            nTot += n
-            sTot = sTot.add(new java.math.BigDecimal(s))
-            // the batch msprtMeanTest double chain, term for term
-            val nd = nTot.toDouble
-            val mean = sTot.doubleValue / nd
-            val dev = mean - mu0
-            val mix = sigma2 + nd * tau2
-            val eLog = 0.5 * math.log(sigma2 / mix) +
-              (nd * nd * tau2 * (dev * dev)) / (2.0 * sigma2 * mix)
-            out += ((b, n, nTot, mean, eLog,
-              eLog >= math.log(1.0 / alpha)))
-          }
-          state.update((nTot, sTot.toPlainString))
-          out.iterator
-      }
-      .toDF("bucket_us", "n_window", "n_total", "mean_total", "e_log",
-        "crossed")
+    import events.sparkSession.implicits._
+    meanWalk(events, watermark, window_) { (b, n, nTot, mean) =>
+      // the batch msprtMeanTest double chain, term for term
+      val nd = nTot.toDouble
+      val dev = mean - mu0
+      val mix = sigma2 + nd * tau2
+      val eLog = 0.5 * math.log(sigma2 / mix) +
+        (nd * nd * tau2 * (dev * dev)) / (2.0 * sigma2 * mix)
+      (b, n, nTot, mean, eLog, eLog >= math.log(1.0 / alpha))
+    }.toDF("bucket_us", "n_window", "n_total", "mean_total", "e_log",
+      "crossed")
   }
 
   /** Streaming ALWAYS-VALID CONFIDENCE SEQUENCE — the live error-bar
@@ -667,46 +615,39 @@ object Streams {
     require(sigma2 > 0, s"sigma2 must be > 0, got $sigma2")
     require(tau2 > 0, s"tau2 must be > 0, got $tau2")
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val closed = events
-      .withColumn("tstamp", timestamp_micros(col("ts_us")))
-      .withWatermark("tstamp", watermark)
-      .groupBy(window(col("tstamp"), window_))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(28,12)")).as("s"))
-      .select(unix_micros(col("window.start")).as("bucket_us"),
-        col("n"), col("s").cast("string").as("s"))
-    closed.as[(Long, Long, String)]
-      .groupByKey(_ => 1)
-      .flatMapGroupsWithState[(Long, String),
-        (Long, Long, Long, Double, Double, Double, Double)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Int, rows: Iterator[(Long, Long, String)],
-         state: GroupState[(Long, String)]) =>
-          val st0 = state.getOption.getOrElse((0L, "0"))
-          var nTot = st0._1
-          var sTot = new java.math.BigDecimal(st0._2)
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, Long, Double, Double, Double, Double)]
-          rows.toSeq.sortBy(_._1).foreach { case (b, n, s) =>
-            nTot += n
-            sTot = sTot.add(new java.math.BigDecimal(s))
-            // the batch meanConfidenceSequence double chain, term for
-            // term
-            val nd = nTot.toDouble
-            val mean = sTot.doubleValue / nd
-            val vt = sigma2 / nd
-            val radius = math.sqrt((vt * (vt + tau2) / tau2) *
-              (math.log((vt + tau2) / vt) - 2.0 * math.log(alpha)))
-            out += ((b, n, nTot, mean, radius, mean - radius,
-              mean + radius))
-          }
-          state.update((nTot, sTot.toPlainString))
-          out.iterator
-      }
-      .toDF("bucket_us", "n_window", "n_total", "mean_total", "radius",
-        "ci_lo", "ci_hi")
+    import events.sparkSession.implicits._
+    meanWalk(events, watermark, window_) { (b, n, nTot, mean) =>
+      // the batch meanConfidenceSequence double chain, term for term
+      val vt = sigma2 / nTot.toDouble
+      val radius = math.sqrt((vt * (vt + tau2) / tau2) *
+        (math.log((vt + tau2) / vt) - 2.0 * math.log(alpha)))
+      (b, n, nTot, mean, radius, mean - radius, mean + radius)
+    }.toDF("bucket_us", "n_window", "n_total", "mean_total", "radius",
+      "ci_lo", "ci_hi")
+  }
+
+  /** The walk of [[windowedMsprt]] and [[windowedMeanCs]]: per closed
+    * window its count and exact decimal(28,12) value sum, folded in
+    * bucket order into the running (N, S), the sum carried as its plain
+    * string (the tuple encoder's default decimal(38,18) would cut the
+    * batch operators' decimal(38,12) integer headroom by 10^6; the
+    * string round-trip is exact at any magnitude). `emit` gets
+    * (bucket_us, n_window, N, S/N). */
+  private def meanWalk[O: Encoder](events: DataFrame, watermark: String,
+      window_ : String)(emit: (Long, Long, Long, Double) => O): Dataset[O] = {
+    import events.sparkSession.implicits._
+    val closed = windowAgg(events, watermark, window_)(count(lit(1)).as("n"),
+      sum(col("value").cast("decimal(28,12)")).as("s"))
+      .withColumn("s", col("s").cast("string"))
+    walkClosed[(Long, Long, String), (Long, String), O](
+      closed.as[(Long, Long, String)], _._1) {
+      case (st, (b, n, s)) =>
+        val (n0, s0) = st.getOrElse((0L, "0"))
+        val nTot = n0 + n
+        val sTot = new java.math.BigDecimal(s0).add(new java.math.BigDecimal(s))
+        ((nTot, sTot.toPlainString),
+          Some(emit(b, n, nTot, sTot.doubleValue / nTot.toDouble)))
+    }
   }
 
   /** Streaming TWO-SAMPLE always-valid monitor — the live twin of
@@ -740,65 +681,20 @@ object Streams {
     require(sigma2 > 0, s"sigma2 must be > 0, got $sigma2")
     require(tau2 > 0, s"tau2 must be > 0, got $tau2")
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val zero = lit(0).cast("decimal(28,12)")
-    def armAgg(isA: Boolean, sfx: String) = {
-      val in = if (isA) col(groupCol) === groupA else col(groupCol) === groupB
-      Seq(sum(when(in, 1L).otherwise(0L)).as(s"n_$sfx"),
-        coalesce(sum(when(in, col("value").cast("decimal(28,12)"))
-          .otherwise(zero)), zero).cast("string").as(s"s_$sfx"))
-    }
-    val aggs = armAgg(isA = true, "a") ++ armAgg(isA = false, "b")
-    // NULL values excluded up front (the batch operator's filter): a
-    // NULL must not count in n while sum() skips it
-    val closed = events
-      .filter(col(groupCol).isin(groupA, groupB) &&
-        col("value").isNotNull)
-      .withColumn("tstamp", timestamp_micros(col("ts_us")))
-      .withWatermark("tstamp", watermark)
-      .groupBy(window(col("tstamp"), window_))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(unix_micros(col("window.start")).as("bucket_us"),
-        col("n_a"), col("s_a"), col("n_b"), col("s_b"))
-    closed.as[(Long, Long, String, Long, String)]
-      .groupByKey(_ => 1)
-      .flatMapGroupsWithState[(Long, String, Long, String),
-        (Long, Long, Long, Long, Long, Option[Double], Option[Double],
-          Option[Double], Option[Boolean])](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Int, rows: Iterator[(Long, Long, String, Long, String)],
-         state: GroupState[(Long, String, Long, String)]) =>
-          val st0 = state.getOption.getOrElse((0L, "0", 0L, "0"))
-          var nA = st0._1; var nB = st0._3
-          var sA = new java.math.BigDecimal(st0._2)
-          var sB = new java.math.BigDecimal(st0._4)
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, Long, Long, Long, Option[Double],
-              Option[Double], Option[Double], Option[Boolean])]
-          rows.toSeq.sortBy(_._1).foreach { case (b, na, sa, nb, sb) =>
-            nA += na; nB += nb
-            sA = sA.add(new java.math.BigDecimal(sa))
-            sB = sB.add(new java.math.BigDecimal(sb))
-            // the batch msprtTwoSampleTest double chain, term for term
-            val meanA = if (nA > 0) Some(sA.doubleValue / nA.toDouble)
-              else None
-            val meanB = if (nB > 0) Some(sB.doubleValue / nB.toDouble)
-              else None
-            val eLog = for (ma <- meanA; mb <- meanB) yield {
-              val vt = sigma2 * (1.0 / nA.toDouble + 1.0 / nB.toDouble)
-              val delta = ma - mb
-              0.5 * math.log(vt / (vt + tau2)) +
-                (delta * delta * tau2) / (2.0 * vt * (vt + tau2))
-            }
-            out += ((b, na, nb, nA, nB, meanA, meanB, eLog,
-              eLog.map(_ >= math.log(1.0 / alpha))))
-          }
-          state.update((nA, sA.toPlainString, nB, sB.toPlainString))
-          out.iterator
-      }
-      .toDF("bucket_us", "n_a_window", "n_b_window", "n_a", "n_b",
-        "mean_a", "mean_b", "e_log", "crossed")
+    import events.sparkSession.implicits._
+    armWalk(events, groupCol, groupA, groupB, watermark, window_) {
+      (b, na, nb, nA, nB, meanA, meanB) =>
+        // the batch msprtTwoSampleTest double chain, term for term
+        val eLog = for (ma <- meanA; mb <- meanB) yield {
+          val vt = sigma2 * (1.0 / nA.toDouble + 1.0 / nB.toDouble)
+          val delta = ma - mb
+          0.5 * math.log(vt / (vt + tau2)) +
+            (delta * delta * tau2) / (2.0 * vt * (vt + tau2))
+        }
+        (b, na, nb, nA, nB, meanA, meanB, eLog,
+          eLog.map(_ >= math.log(1.0 / alpha)))
+    }.toDF("bucket_us", "n_a_window", "n_b_window", "n_a", "n_b",
+      "mean_a", "mean_b", "e_log", "crossed")
   }
 
   /** Streaming TWO-SAMPLE CONFIDENCE SEQUENCE — the anytime-valid
@@ -828,67 +724,69 @@ object Streams {
     require(sigma2 > 0, s"sigma2 must be > 0, got $sigma2")
     require(tau2 > 0, s"tau2 must be > 0, got $tau2")
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val zero = lit(0).cast("decimal(28,12)")
-    def armAgg(isA: Boolean, sfx: String) = {
-      val in = if (isA) col(groupCol) === groupA else col(groupCol) === groupB
+    import events.sparkSession.implicits._
+    armWalk(events, groupCol, groupA, groupB, watermark, window_) {
+      (b, na, nb, nA, nB, meanA, meanB) =>
+        // the batch diffConfidenceSequence double chain, term for term
+        val diff = for (ma <- meanA; mb <- meanB) yield ma - mb
+        val radius = if (nA > 0 && nB > 0) Some {
+          val vt = sigma2 * (1.0 / nA.toDouble + 1.0 / nB.toDouble)
+          math.sqrt((vt * (vt + tau2) / tau2) *
+            (math.log((vt + tau2) / vt) - 2.0 * math.log(alpha)))
+        } else None
+        (b, na, nb, nA, nB, meanA, meanB, diff, radius,
+          for (d0 <- diff; r <- radius) yield d0 - r,
+          for (d0 <- diff; r <- radius) yield d0 + r)
+    }.toDF("bucket_us", "n_a_window", "n_b_window", "n_a", "n_b",
+      "mean_a", "mean_b", "diff", "radius", "ci_lo", "ci_hi")
+  }
+
+  /** Stage 1 of the two-arm monitors: rows of either arm whose
+    * `valueCol` is not NULL, and per closed window each arm's row count
+    * (`n_a`, `n_b`) and sum of `v` (`s_a`, `s_b`; `zero` for an arm with
+    * no row in the window). */
+  private def armWindows(events: DataFrame, groupCol: String,
+      groupA: String, groupB: String, valueCol: String, v: Column,
+      zero: Column, watermark: String, window_ : String): DataFrame = {
+    def arm(group: String, sfx: String) = {
+      val in = col(groupCol) === group
       Seq(sum(when(in, 1L).otherwise(0L)).as(s"n_$sfx"),
-        coalesce(sum(when(in, col("value").cast("decimal(28,12)"))
-          .otherwise(zero)), zero).cast("string").as(s"s_$sfx"))
+        coalesce(sum(when(in, v).otherwise(zero)), zero).as(s"s_$sfx"))
     }
-    val aggs = armAgg(isA = true, "a") ++ armAgg(isA = false, "b")
-    val closed = events
-      .filter(col(groupCol).isin(groupA, groupB) &&
-        col("value").isNotNull)
-      .withColumn("tstamp", timestamp_micros(col("ts_us")))
-      .withWatermark("tstamp", watermark)
-      .groupBy(window(col("tstamp"), window_))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(unix_micros(col("window.start")).as("bucket_us"),
-        col("n_a"), col("s_a"), col("n_b"), col("s_b"))
-    closed.as[(Long, Long, String, Long, String)]
-      .groupByKey(_ => 1)
-      .flatMapGroupsWithState[(Long, String, Long, String),
-        (Long, Long, Long, Long, Long, Option[Double], Option[Double],
-          Option[Double], Option[Double], Option[Double],
-          Option[Double])](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Int, rows: Iterator[(Long, Long, String, Long, String)],
-         state: GroupState[(Long, String, Long, String)]) =>
-          val st0 = state.getOption.getOrElse((0L, "0", 0L, "0"))
-          var nA = st0._1; var nB = st0._3
-          var sA = new java.math.BigDecimal(st0._2)
-          var sB = new java.math.BigDecimal(st0._4)
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, Long, Long, Long, Option[Double],
-              Option[Double], Option[Double], Option[Double],
-              Option[Double], Option[Double])]
-          rows.toSeq.sortBy(_._1).foreach { case (b, na, sa, nb, sb) =>
-            nA += na; nB += nb
-            sA = sA.add(new java.math.BigDecimal(sa))
-            sB = sB.add(new java.math.BigDecimal(sb))
-            // the batch diffConfidenceSequence double chain, term for
-            // term
-            val meanA = if (nA > 0) Some(sA.doubleValue / nA.toDouble)
-              else None
-            val meanB = if (nB > 0) Some(sB.doubleValue / nB.toDouble)
-              else None
-            val diff = for (ma <- meanA; mb <- meanB) yield ma - mb
-            val radius = if (nA > 0 && nB > 0) Some {
-              val vt = sigma2 * (1.0 / nA.toDouble + 1.0 / nB.toDouble)
-              math.sqrt((vt * (vt + tau2) / tau2) *
-                (math.log((vt + tau2) / vt) - 2.0 * math.log(alpha)))
-            } else None
-            out += ((b, na, nb, nA, nB, meanA, meanB, diff, radius,
-              for (d0 <- diff; r <- radius) yield d0 - r,
-              for (d0 <- diff; r <- radius) yield d0 + r))
-          }
-          state.update((nA, sA.toPlainString, nB, sB.toPlainString))
-          out.iterator
-      }
-      .toDF("bucket_us", "n_a_window", "n_b_window", "n_a", "n_b",
-        "mean_a", "mean_b", "diff", "radius", "ci_lo", "ci_hi")
+    windowAgg(events.filter(col(groupCol).isin(groupA, groupB) &&
+        col(valueCol).isNotNull), watermark, window_)(
+      arm(groupA, "a") ++ arm(groupB, "b"): _*)
+  }
+
+  /** The walk of [[windowedMsprtTwoSample]] and [[windowedDiffCs]]: each
+    * arm's window counts and exact decimal(28,12) value sums folded in
+    * bucket order into per-arm (N, S), the sums carried as plain strings
+    * (the [[meanWalk]] encoder-width rule; NULL values excluded up front,
+    * the batch operators' filter: a NULL must not count in n while sum()
+    * skips it). `emit` gets (bucket_us, n_a_window, n_b_window, N_A, N_B,
+    * mean_A, mean_B), a mean None while its arm has no row. */
+  private def armWalk[O: Encoder](events: DataFrame, groupCol: String,
+      groupA: String, groupB: String, watermark: String, window_ : String)(
+      emit: (Long, Long, Long, Long, Long, Option[Double],
+        Option[Double]) => O): Dataset[O] = {
+    import events.sparkSession.implicits._
+    val zero = lit(0).cast("decimal(28,12)")
+    val closed = armWindows(events, groupCol, groupA, groupB, "value",
+        col("value").cast("decimal(28,12)"), zero, watermark, window_)
+      .select(col("bucket_us"), col("n_a"), col("s_a").cast("string"),
+        col("n_b"), col("s_b").cast("string"))
+    val mean = (n: Long, s: java.math.BigDecimal) =>
+      if (n > 0) Some(s.doubleValue / n.toDouble) else None
+    walkClosed[(Long, Long, String, Long, String), (Long, String, Long, String),
+      O](closed.as[(Long, Long, String, Long, String)], _._1) {
+      case (st, (b, na, sa, nb, sb)) =>
+        val (nA0, sA0, nB0, sB0) = st.getOrElse((0L, "0", 0L, "0"))
+        val (nA, nB) = (nA0 + na, nB0 + nb)
+        val sA = new java.math.BigDecimal(sA0).add(new java.math.BigDecimal(sa))
+        val sB = new java.math.BigDecimal(sB0).add(new java.math.BigDecimal(sb))
+        ((nA, sA.toPlainString, nB, sB.toPlainString),
+          Some(emit(b, na, nb, nA, nB, mean(nA, sA), mean(nB, sB))))
+    }
   }
 
   /** Streaming TWO-PROPORTION always-valid monitor — the live
@@ -926,63 +824,35 @@ object Streams {
                                  window_ : String = "1 day"): DataFrame = {
     require(tau2 > 0, s"tau2 must be > 0, got $tau2")
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val s01 = col(successCol).cast("int").cast("long")
-    def armAgg(isA: Boolean, sfx: String) = {
-      val in = if (isA) col(groupCol) === groupA else col(groupCol) === groupB
-      Seq(sum(when(in, 1L).otherwise(0L)).as(s"n_$sfx"),
-        coalesce(sum(when(in, s01).otherwise(0L)), lit(0L)).as(s"x_$sfx"))
-    }
-    val aggs = armAgg(isA = true, "a") ++ armAgg(isA = false, "b")
-    val closed = events
-      .filter(col(groupCol).isin(groupA, groupB) &&
-        col(successCol).isNotNull)
-      .withColumn("tstamp", timestamp_micros(col("ts_us")))
-      .withWatermark("tstamp", watermark)
-      .groupBy(window(col("tstamp"), window_))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(unix_micros(col("window.start")).as("bucket_us"),
-        col("n_a"), col("x_a"), col("n_b"), col("x_b"))
-    closed.as[(Long, Long, Long, Long, Long)]
-      .groupByKey(_ => 1)
-      .flatMapGroupsWithState[(Long, Long, Long, Long),
-        (Long, Long, Long, Long, Long, Option[Double], Option[Double],
-          Option[Double], Option[Boolean])](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Int, rows: Iterator[(Long, Long, Long, Long, Long)],
-         state: GroupState[(Long, Long, Long, Long)]) =>
-          val st0 = state.getOption.getOrElse((0L, 0L, 0L, 0L))
-          var nA = st0._1; var xA = st0._2
-          var nB = st0._3; var xB = st0._4
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, Long, Long, Long, Option[Double],
-              Option[Double], Option[Double], Option[Boolean])]
-          rows.toSeq.sortBy(_._1).foreach { case (b, na, xa, nb, xb) =>
-            nA += na; xA += xa; nB += nb; xB += xb
-            val pA = if (nA > 0) Some(xA.toDouble / nA.toDouble) else None
-            val pB = if (nB > 0) Some(xB.toDouble / nB.toDouble) else None
-            val eLog = for (pa <- pA; pb <- pB;
-                            pPool = (xA.toDouble + xB.toDouble) /
-                              (nA.toDouble + nB.toDouble);
-                            vt = pPool * (1.0 - pPool) *
-                              (1.0 / nA.toDouble + 1.0 / nB.toDouble)
-                            if vt > 0.0) yield {
-              val delta = pa - pb
-              0.5 * StrictMath.log(vt / (vt + tau2)) +
-                (delta * delta * tau2) / (2.0 * vt * (vt + tau2))
-            }
-            // threshold via math.log: the batch operator bakes it as a
-            // driver-side literal (lit(math.log(1/alpha))), not via the
-            // engine's StrictMath-backed log expression
-            out += ((b, na, nb, nA, nB, pA, pB, eLog,
-              eLog.map(_ >= math.log(1.0 / alpha))))
-          }
-          state.update((nA, xA, nB, xB))
-          out.iterator
-      }
-      .toDF("bucket_us", "n_a_window", "n_b_window", "n_a", "n_b",
-        "p_a", "p_b", "e_log", "crossed")
+    import events.sparkSession.implicits._
+    val closed = armWindows(events, groupCol, groupA, groupB, successCol,
+      col(successCol).cast("int").cast("long"), lit(0L), watermark, window_)
+    walkClosed[(Long, Long, Long, Long, Long), (Long, Long, Long, Long),
+      (Long, Long, Long, Long, Long, Option[Double], Option[Double],
+        Option[Double], Option[Boolean])](
+      closed.as[(Long, Long, Long, Long, Long)], _._1) {
+      case (st, (b, na, xa, nb, xb)) =>
+        val (nA0, xA0, nB0, xB0) = st.getOrElse((0L, 0L, 0L, 0L))
+        val (nA, xA, nB, xB) = (nA0 + na, xA0 + xa, nB0 + nb, xB0 + xb)
+        val pA = if (nA > 0) Some(xA.toDouble / nA.toDouble) else None
+        val pB = if (nB > 0) Some(xB.toDouble / nB.toDouble) else None
+        val eLog = for (pa <- pA; pb <- pB;
+                        pPool = (xA.toDouble + xB.toDouble) /
+                          (nA.toDouble + nB.toDouble);
+                        vt = pPool * (1.0 - pPool) *
+                          (1.0 / nA.toDouble + 1.0 / nB.toDouble)
+                        if vt > 0.0) yield {
+          val delta = pa - pb
+          0.5 * StrictMath.log(vt / (vt + tau2)) +
+            (delta * delta * tau2) / (2.0 * vt * (vt + tau2))
+        }
+        // threshold via math.log: the batch operator bakes it as a
+        // driver-side literal (lit(math.log(1/alpha))), not via the
+        // engine's StrictMath-backed log expression
+        ((nA, xA, nB, xB), Some((b, na, nb, nA, nB, pA, pB, eLog,
+          eLog.map(_ >= math.log(1.0 / alpha)))))
+    }.toDF("bucket_us", "n_a_window", "n_b_window", "n_a", "n_b",
+      "p_a", "p_b", "e_log", "crossed")
   }
 
   /** Stateful streaming dedup: emit each key's row only the first time it

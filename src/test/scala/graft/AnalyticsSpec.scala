@@ -6510,6 +6510,33 @@ class AnalyticsSpec extends SparkSpec {
     // and a clean pair returns both results
     assert(Analytics.concurrently(spark.sparkContext)(1, "two") == (1, "two"))
   }
+  test("sequential tests: each duplicate-t raise names its own operator") {
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).mkString(" | ")
+    val one = Seq((1L, 1.0), (1L, 2.0)).toDF("t", "v")
+    val two = Seq((1L, "a", 1.0), (1L, "b", 2.0)).toDF("t", "g", "v")
+    val bin = Seq((1L, "a", 1), (1L, "b", 0)).toDF("t", "g", "s")
+    val rate = Seq((1L, 1L, 1.0), (1L, 2L, 1.0)).toDF("t", "x", "e")
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "msprtMeanTest" -> (() =>
+        Analytics.msprtMeanTest(one, "t", "v", 0.0, 1.0, 1.0)),
+      "meanConfidenceSequence" -> (() =>
+        Analytics.meanConfidenceSequence(one, "t", "v", 1.0, 1.0)),
+      "msprtTwoSampleTest" -> (() => Analytics.msprtTwoSampleTest(two, "t",
+        "g", "v", "a", "b", 1.0, 1.0)),
+      "diffConfidenceSequence" -> (() => Analytics.diffConfidenceSequence(
+        two, "t", "g", "v", "a", "b", 1.0, 1.0)),
+      "msprtTwoProportionTest" -> (() => Analytics.msprtTwoProportionTest(
+        bin, "t", "g", "s", "a", "b", 0.05)),
+      "msprtRateTest" -> (() =>
+        Analytics.msprtRateTest(rate, "t", "x", "e", 1.0, 1.0))
+    ).foreach { case (op, run) =>
+      val e = intercept[Exception](run().collect())
+      assert(messages(e).contains(s"$op: duplicate t values"),
+        s"$op raised: ${messages(e)}")
+    }
+  }
 }
 
 /** Cross-thread latch for the `concurrently` doll: local-mode tasks run

@@ -545,6 +545,22 @@ class CoreSpec extends SparkSpec {
     assert(timings.summary.contains("tasks:"))
   }
 
+  test("tracktime: codegen deltas — a new query shape compiles, the " +
+      "same query run again in the session compiles nothing") {
+    // a literal no earlier query used makes the generated source new
+    val k = 1000003L + scala.util.Random.nextInt(1 << 30)
+    def q() = spark.range(0, 64, 1, 2)
+      .select((col("id") * lit(k) + lit(k % 97)).as("x"))
+      .groupBy(col("x") % 5).agg(sum("x")).collect().length
+    val (n1, first) = Diagnostics.tracktime(spark)(q())
+    val (n2, again) = Diagnostics.tracktime(spark)(q())
+    assert(n1 >= 1 && n2 == n1)
+    assert(first.codegenClasses >= 1 && first.codegenCompileMs > 0.0,
+      first.summary)
+    assert(again.codegenClasses == 0L, again.summary)
+    assert(first.summary.contains("codegen:"))
+  }
+
   test("analyze: static plan summary — scan pushdown/pruning, exchange + join census") {
     val lineitem = spark.read.parquet(s"$sf/lineitem.parquet")
     val agg = lineitem.filter(col("l_quantity") > 40)

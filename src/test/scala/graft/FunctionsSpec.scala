@@ -2217,6 +2217,44 @@ class FunctionsSpec extends SparkSpec {
     // maxHops=0: just the seeds
     assert(Graphs.bfsDistances(e, seeds1, 0).collect().map(
       r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 0L)))
+    // seeded random graphs against a driver-side BFS: several components,
+    // self-loops, repeated edges in either orientation (most edges listed
+    // one way only), duplicate seeds and an isolated seed, and hop bounds
+    // from 0 past the diameter
+    def model(edges: Seq[(Long, Long)], seeds: Seq[Long],
+              maxHops: Int): Map[Long, Long] = {
+      val adj = edges.filter { case (a, b) => a != b }
+        .flatMap { case (a, b) => Seq(a -> b, b -> a) }
+        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).distinct }
+      var dist = seeds.distinct.map(_ -> 0L).toMap
+      var front = seeds.distinct
+      (1 to maxHops).foreach { h =>
+        front = front.flatMap(adj.getOrElse(_, Nil)).distinct
+          .filterNot(dist.contains)
+        dist ++= front.map(_ -> h.toLong)
+      }
+      dist
+    }
+    (1 to 3).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      // two components on 0..29 and 40..59, self-loops, repeats
+      val edges = (0 until 45).map { _ =>
+        val base = if (rnd.nextBoolean()) 0L else 40L
+        val span = if (base == 0L) 30 else 20
+        (base + rnd.nextInt(span), base + rnd.nextInt(span))
+      } ++ Seq((5L, 5L), (41L, 41L))
+      val seeds = Seq(rnd.nextInt(30).toLong, 41L, 41L, 99L)
+      val edf = edges.toDF("i", "j")
+      val sdf = seeds.toDF("node")
+      Seq(0, 1, 2, 40).foreach { hops =>
+        val got = Graphs.bfsDistances(edf, sdf, hops).collect()
+          .map(r => (r.getLong(0), r.getLong(1)))
+        assert(got.map(_._1).distinct.length == got.length,
+          s"seed $seed hops $hops: a node appears twice")
+        assert(got.toMap == model(edges, seeds, hops),
+          s"seed $seed hops $hops")
+      }
+    }
   }
 
   test("dotTopK: exact MIPS vs driver model; magnitude beats direction") {

@@ -740,6 +740,161 @@ class IOStreamsSpec extends SparkSpec {
       r.getDouble(2) <= math.log(2.0)), "JSD must sit inside [0, ln 2]")
   }
 
+  test("windowedPsiBy: each slice equals windowedPsi on that slice's " +
+      "rows under the same reference, bit for bit; an unknown slice " +
+      "scores NULL") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val hourUs = 3600L * 1000000L
+    val rnd = new scala.util.Random(7)
+    val refs = Map("x" -> Seq(40L, 40L, 40L, 40L),
+      "y" -> Seq(5L, 20L, 30L, 70L))
+    // three hourly windows; slice y skews toward the low bins, slice z
+    // has no reference; values span past the grid on both sides
+    val rows = (0 until 3).flatMap { w =>
+      Seq("x", "y", "z").flatMap { k =>
+        (0 until 30).map { i =>
+          val v = if (k == "y") rnd.nextDouble() * 2.5 - 0.3
+            else rnd.nextDouble() * 4.6 - 0.3
+          (w * hourUs + i * 1000L, k, v)
+        }
+      }
+    }
+    def drive(name: String, df: org.apache.spark.sql.DataFrame,
+              ms: MemoryStream[(Long, String, Double)]) = {
+      val q = df.writeStream.outputMode("append").format("memory")
+        .queryName(name).start()
+      try {
+        ms.addData(rows); q.processAllAvailable()
+        // one flush row per slice: a stream fed one slice still closes
+        ms.addData(Seq("x", "y", "z").map(k => (10L * hourUs, k, 0.5)))
+        q.processAllAvailable()
+      } finally q.stop()
+      spark.table(name).filter(col("bucket_us") < 3 * hourUs)
+    }
+    val msBy = MemoryStream[(Long, String, Double)](spark)
+    val by = drive("psiby_spec_sink", Streams.windowedPsiBy(
+      msBy.toDS().toDF("ts_us", "k", "value"), "k", refs, lo = 0.0,
+      hi = 4.0), msBy)
+    refs.foreach { case (k, ref) =>
+      val ms = MemoryStream[(Long, String, Double)](spark)
+      val one = drive(s"psiby_spec_sink_$k", Streams.windowedPsi(
+        ms.toDS().toDF("ts_us", "k", "value").filter(col("k") === k), ref,
+        lo = 0.0, hi = 4.0), ms)
+        .orderBy("bucket_us").collect().map(r =>
+          (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      val slice = by.filter(col("k") === k).orderBy("bucket_us").collect()
+        .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3))).toSeq
+      assert(one.length == 3 && slice == one,
+        s"slice $k: windowedPsiBy $slice vs windowedPsi $one")
+    }
+    assert(by.filter(col("k") === "z").collect()
+      .forall(r => r.getLong(2) == 30L && r.isNullAt(3)),
+      "a slice with no reference must score NULL")
+  }
+
+  test("sequential monitors: output schema (names, types, nullability) " +
+      "of the 10 streaming monitors and the 6 batch tests") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.operators.Analytics
+    def shape(df: org.apache.spark.sql.DataFrame): String =
+      df.schema.fields.map(f =>
+        s"${f.name}:${f.dataType.simpleString}${if (f.nullable) "?" else ""}")
+        .mkString(" ")
+    val ev = MemoryStream[(Long, Double)](spark).toDS().toDF("ts_us", "value")
+    val live = MemoryStream[(Long, Double, Option[Seq[Long]])](spark).toDS()
+      .toDF("ts_us", "value", "ref")
+    val arms = MemoryStream[(Long, String, Double)](spark).toDS()
+      .toDF("ts_us", "g", "value")
+    val conv = MemoryStream[(Long, String, Int)](spark).toDS()
+      .toDF("ts_us", "g", "s")
+    val one = Seq((1L, 1.0), (2L, 3.0), (3L, 2.0)).toDF("t", "v")
+    val two = Seq((1L, "a", 1.0), (2L, "b", 3.0), (3L, "a", 2.0))
+      .toDF("t", "g", "v")
+    val bin = Seq((1L, "a", 1), (2L, "b", 0), (3L, "a", 1)).toDF("t", "g", "s")
+    val rate = Seq((1L, 2L, 1.0), (2L, 0L, 0.5)).toDF("t", "x", "e")
+    val ref = Seq(3L, 4L)
+    val got = Seq(
+      "windowedPsi" -> Streams.windowedPsi(ev, ref, 0.0, 1.0),
+      "windowedJsd" -> Streams.windowedJsd(ev, ref, 0.0, 1.0),
+      "windowedPsiBy" -> Streams.windowedPsiBy(arms, "g", Map("a" -> ref),
+        0.0, 1.0),
+      "windowedPsiLive" -> Streams.windowedPsiLive(live, ref, 0.0, 1.0),
+      "windowedEwmaAnomaly" -> Streams.windowedEwmaAnomaly(ev),
+      "windowedMsprt" -> Streams.windowedMsprt(ev, 0.0, 1.0, 1.0),
+      "windowedMeanCs" -> Streams.windowedMeanCs(ev, 1.0, 1.0),
+      "windowedMsprtTwoSample" -> Streams.windowedMsprtTwoSample(arms, "g",
+        "a", "b", 1.0, 1.0),
+      "windowedDiffCs" -> Streams.windowedDiffCs(arms, "g", "a", "b", 1.0,
+        1.0),
+      "windowedMsprtTwoProportion" -> Streams.windowedMsprtTwoProportion(
+        conv, "g", "s", "a", "b", 0.05),
+      "msprtMeanTest" -> Analytics.msprtMeanTest(one, "t", "v", 0.0, 1.0,
+        1.0),
+      "meanConfidenceSequence" -> Analytics.meanConfidenceSequence(one, "t",
+        "v", 1.0, 1.0),
+      "msprtTwoSampleTest" -> Analytics.msprtTwoSampleTest(two, "t", "g",
+        "v", "a", "b", 1.0, 1.0),
+      "diffConfidenceSequence" -> Analytics.diffConfidenceSequence(two, "t",
+        "g", "v", "a", "b", 1.0, 1.0),
+      "msprtTwoProportionTest" -> Analytics.msprtTwoProportionTest(bin, "t",
+        "g", "s", "a", "b", 0.05),
+      "msprtRateTest" -> Analytics.msprtRateTest(rate, "t", "x", "e", 1.0,
+        1.0)).map { case (n, df) => n -> shape(df) }
+    val want = Seq(
+      "windowedPsi" ->
+        "bucket_us:bigint? n:bigint psi:double?",
+      "windowedJsd" ->
+        "bucket_us:bigint? n:bigint jsd:double?",
+      "windowedPsiBy" ->
+        "bucket_us:bigint? g:string? n:bigint psi:double?",
+      "windowedPsiLive" ->
+        "bucket_us:bigint n:bigint psi:double",
+      "windowedEwmaAnomaly" ->
+        ("bucket_us:bigint n:bigint mean:double z:double? " +
+         "is_anomaly:boolean?"),
+      "windowedMsprt" ->
+        ("bucket_us:bigint n_window:bigint n_total:bigint " +
+         "mean_total:double e_log:double crossed:boolean"),
+      "windowedMeanCs" ->
+        ("bucket_us:bigint n_window:bigint n_total:bigint " +
+         "mean_total:double radius:double ci_lo:double ci_hi:double"),
+      "windowedMsprtTwoSample" ->
+        ("bucket_us:bigint n_a_window:bigint n_b_window:bigint " +
+         "n_a:bigint n_b:bigint mean_a:double? mean_b:double? " +
+         "e_log:double? crossed:boolean?"),
+      "windowedDiffCs" ->
+        ("bucket_us:bigint n_a_window:bigint n_b_window:bigint " +
+         "n_a:bigint n_b:bigint mean_a:double? mean_b:double? " +
+         "diff:double? radius:double? ci_lo:double? ci_hi:double?"),
+      "windowedMsprtTwoProportion" ->
+        ("bucket_us:bigint n_a_window:bigint n_b_window:bigint " +
+         "n_a:bigint n_b:bigint p_a:double? p_b:double? e_log:double? " +
+         "crossed:boolean?"),
+      "msprtMeanTest" ->
+        ("t:bigint n:bigint? mean_v:double? e_log:double? " +
+         "crossed:boolean?"),
+      "meanConfidenceSequence" ->
+        ("t:bigint n:bigint? mean_v:double? radius:double? " +
+         "ci_lo:double? ci_hi:double?"),
+      "msprtTwoSampleTest" ->
+        ("t:bigint n_a:bigint? n_b:bigint? mean_a:double? " +
+         "mean_b:double? e_log:double? crossed:boolean?"),
+      "diffConfidenceSequence" ->
+        ("t:bigint n_a:bigint? n_b:bigint? mean_a:double? " +
+         "mean_b:double? diff:double? radius:double? ci_lo:double? " +
+         "ci_hi:double?"),
+      "msprtTwoProportionTest" ->
+        ("t:bigint n_a:bigint? n_b:bigint? p_a:double? p_b:double? " +
+         "e_log:double? crossed:boolean?"),
+      "msprtRateTest" ->
+        ("t:bigint x_total:double e_total:double? rate:double? " +
+         "e_log:double? crossed:boolean?"))
+    assert(got == want, got.map { case (n, s) => s"\"$n\" -> \"$s\"" }
+      .mkString("\n"))
+  }
+
   test("windowedPsiLive: mid-stream reference swap via a control row — " +
       "effective strictly after its window; no-control windows bit-equal " +
       "to windowedPsi; control-only windows emit nothing") {
