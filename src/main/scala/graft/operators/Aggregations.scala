@@ -526,7 +526,7 @@ object Aggregations {
     * key group: appends `__s` = rows strictly below `__v` and `__n` =
     * the group's row total. Both ride ONE distributed prefix pass
     * ([[graft.operators.Analytics.prefixBefore]] with totals): the
-    * group total is a fold of the offset table, so it costs no
+    * group total comes from the same per-slice fold, so it costs no
     * aggregate or join of its own. */
   private def valueRanks(counts: DataFrame,
       keyCols: Seq[String]): DataFrame =

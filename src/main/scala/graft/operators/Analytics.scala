@@ -273,205 +273,91 @@ object Analytics {
     * matching `orderBy(asc)` window semantics). `keyCols = Nil` is the
     * global prefix — one implementation, one contract, one guard.
     *
-    * PLAN. The single-task global window this replaces serialized
-    * |distinct| values through one task — fine at 5M, a ceiling at 1e9+
-    * raw continuous values. Here: repartitionByRange on (keys..., key)
-    * (contiguous ascending slices, ascending partition ids), a
-    * PARTITIONED cumulative window per (slice, group) — parallel across
-    * slices — and an offset table aggregated per (pid, keys) and
-    * prefix-summed per keys over pid order (group slices are contiguous
-    * in pid by construction), joined back. The range exchange is
-    * COMPOUND for the keyed form, so a hot group splits across
-    * contiguous slices like the global form's values do: a plain
-    * per-key window (partitionBy keys, orderBy value) would serialize
-    * each group through one task — fine for many small slices, the r13
-    * single-task ceiling all over again the moment ONE slice holds 1e8+
-    * distinct values (a per-language length profile where one language
-    * is 80% of the corpus). The sampled range bounds affect only WHERE
-    * a key lands, never its prefix mass (slices are contiguous and keys
-    * distinct), so the output is deterministic. Cost: two exchanges of
-    * the distinct-key table (one range, one pid-hash for the window) +
-    * the offset join (for the global form a broadcast of #partitions
-    * rows) — every stage bounded by |distinct| / #partitions.
-    * Any number of weights rides the one range exchange, one per-slice
-    * window and one offset table (ksTest needs both groups' prefixes on
-    * the same distinct-value rows).
+    * PLAN: one fold per prefix (Blelloch's scan-then-propagate over
+    * range slices — JuliaDB's per-chunk operator plus a merge of
+    * per-chunk summaries). repartitionByRange on (keys..., key) gives
+    * contiguous ascending slices in partition order; each slice is
+    * sorted within itself on the same columns and PINNED to one
+    * execution; ONE summary job returns, per slice, its row count, its
+    * first and last group and those groups' weight sums; the driver
+    * folds these #slices rows into each slice's carry; and a per-slice
+    * fold over the pinned partitions emits the prefix as a `LogicalRDD`
+    * ([[org.apache.spark.sql.graftbridge.PrefixFold]]). No window, no
+    * offset table, no broadcast, no join above the pin. The range
+    * exchange is COMPOUND for the keyed form, so a hot group splits
+    * across contiguous slices like the global form's values do — a
+    * plain per-key window would serialize each group through one task,
+    * the r13 single-task ceiling the moment ONE group holds 1e8+
+    * distinct values. A group's slices are contiguous, so the driver's
+    * carry needs only the #slices summary rows, never a groups-sized
+    * collect. The sampled range bounds affect only WHERE a key lands,
+    * never its prefix mass (slices are contiguous and keys distinct),
+    * so the output is deterministic. Cost: one range exchange of the
+    * distinct-key table, two in-slice sorts (summary and fold), every
+    * task bounded by |distinct| / #slices. Any number of weights rides
+    * the one pass (ksTest needs both groups' prefixes on the same
+    * distinct-value rows). Weights must be integral or decimal — a
+    * float or double sum would depend on where the slices fall — and
+    * sum with Spark's semantics (exact decimals; long overflow raises
+    * under ANSI); each output keeps the type of
+    * `coalesce(Σ slice sums, 0) + coalesce(Σ in-slice, 0)`.
     *
-    * CONSISTENCY CONTRACT: the offset-table branch and the local-window
-    * branch each derive `spark_partition_id()` over the ranged frame,
-    * and a RangePartitioner samples its bounds per EXECUTION — so both
-    * branches MUST read one materialization. Until round 15 that leaned
-    * on ReuseExchange deduping the identical subtree; the r14 advisor
-    * called the lean optimizer-dependent, and the 50M pettitt stress
-    * arm (a prefix whose input contains ANOTHER prefix + joins) then
-    * broke it in practice — AQE's runtime decisions diverged between
-    * the two executions, the branches sliced differently, and the
-    * guard below aborted the query. Since round 15 single execution is
-    * STRUCTURAL, not an optimizer courtesy: the ranged+pid frame is
-    * pinned to ONE RDD lineage via
+    * CONSISTENCY CONTRACT: the summary and the fold must see the SAME
+    * slices, and a RangePartitioner samples its bounds per EXECUTION —
+    * the r14 design leaned on ReuseExchange to dedupe two executions,
+    * and the 50M pettitt stress arm (a prefix whose input contains
+    * ANOTHER prefix + joins) broke that in practice. Single execution
+    * is STRUCTURAL: the sorted frame is pinned to ONE RDD lineage via
     * [[org.apache.spark.sql.graftbridge.RddShareBridge]] (one
-    * ShuffleDependency — both branches fetch the same shuffle files;
-    * the localCheckpoint alternative is structural too but WRITES the
-    * frame to block storage, measured 2.3× slower on the 50M
-    * percentile arm). Note the bridge executes EAGERLY at
-    * operator-construction time (AQE materializes the range exchange
-    * inside `toRdd`) — see the bridge's scaladoc. The guard
-    * stays as the backstop: the offset table records each slice's
-    * (min,max) key range from ITS execution, and every output row's
-    * cumulative is guarded by `key ∈ [min,max]` of the (slice, group) it
-    * joined — any future divergence (a bridge regression on a Spark
-    * upgrade, an edit reintroducing the double execution) FAILS LOUDLY
-    * via raise_error instead of returning a silently-wrong prefix.
-    * NULL keys skip the range check (they sort first into slice 0
-    * under every sampling; min/max ignore them).
+    * ShuffleDependency; the summary job and the fold both read it, and
+    * the summary runs inside the pin's SQL execution id). The pin and
+    * the summary execute EAGERLY at operator-construction time — see
+    * the bridge's scaladoc. The guard stays as the backstop: the fold
+    * re-checks every slice's row count, first/last group and first/last
+    * non-null key against its summary, so any divergence (a bridge regression on a Spark
+    * upgrade, an edit reintroducing a second execution) FAILS the task
+    * with "range-slice mismatch" instead of returning a silently-wrong
+    * prefix. NULL keys sort first, NULL groups form their own group,
+    * NULL weights add nothing.
     *
     * `shared` is the PINNED ranged frame (dv's columns, one row per
-    * input row, the very execution both prefix branches read). Callers
-    * that ALSO need an aggregate of `dv` (a broadcast grand total, a
-    * per-group total, a max key) must derive it from `shared`, not from
-    * `dv`: the bridge compiles a separate physical plan, so a second
-    * reference to `dv` RE-EXECUTES dv's whole lineage (scan + distinct
-    * aggregation — ReuseExchange cannot dedupe across plan
-    * compilations), while an aggregate of `shared` merely re-fetches the
-    * already-written range shuffle files (round 16; quantilesCont's
-    * total was a full second pass over the corpus before this).
+    * input row, the very execution the fold reads). Callers that ALSO
+    * need an aggregate of `dv` (a broadcast grand total, a per-group
+    * total, a max key) must derive it from `shared`, not from `dv`: the
+    * bridge compiles a separate physical plan, so a second reference to
+    * `dv` RE-EXECUTES dv's whole lineage (scan + distinct aggregation —
+    * ReuseExchange cannot dedupe across plan compilations), while an
+    * aggregate of `shared` merely re-fetches the already-written range
+    * shuffle files (round 16; quantilesCont's total was a full second
+    * pass over the corpus before this).
     *
     * TOTALS RIDING (`withTotals`): `result` ADDITIONALLY carries, on
     * every row, `__tot_<name>` = the total of each weight and
     * `__keymin`/`__keymax` = the min/max of `key` (all per group for
-    * the keyed form) — computed as unordered windows over the
-    * ALREADY-BUILT offset table (a #partitions- or groups-sized frame)
-    * and delivered by the SAME broadcast/join the offsets ride
-    * (round 20). A separate
-    * `shared.agg(...)` costs one more plan compilation, one more job,
-    * one more broadcast (or, keyed, a groups-sized aggregate joined
-    * back), and one more scan of the pinned shuffle files per call; the
-    * totals are a windowed fold of numbers the offset branch has
-    * already aggregated, so they are free here and identical by
-    * associativity (long/decimal sums of per-slice sums). */
+    * the keyed form). A group touching a slice boundary takes its
+    * totals from the driver's fold of the summaries; a group that
+    * starts and ends inside one slice is buffered (spillably) until it
+    * ends. A separate `shared.agg(...)` would cost one more plan
+    * compilation, one more job and one more scan of the pinned shuffle
+    * files per call. */
   private[graft] def prefixBefore(dv: DataFrame, keyCols: Seq[String],
       key: String, weights: Seq[(String, Column)],
       withTotals: Boolean = false): (DataFrame, DataFrame) = {
     require(weights.nonEmpty, "need at least one weight")
     val keys = keyCols.map(col)
-    // width discipline (round 16): a weight that is ALREADY a plain
-    // column of dv rides the exchange as-is — materializing `__w_<n>`
-    // copies would widen the range shuffle and the pinned RDD by one
-    // duplicate column per weight (the common single-weight callers
-    // all pass col("__c"))
-    val wSrc: Seq[(String, Column, Option[String])] = weights.map {
-      case (n, w) =>
-        val src = org.apache.spark.sql.graftbridge.ColumnBridge
-          .expression(w) match {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            if a.nameParts.length == 1 &&
-              dv.columns.contains(a.nameParts.head) =>
-            Some(a.nameParts.head)
-          case a: org.apache.spark.sql.catalyst.expressions.AttributeReference
-            if dv.columns.contains(a.name) => Some(a.name)
-          case _ => None
-        }
-        (n, w, src)
-    }
-    def wcol(n: String, src: Option[String]): Column =
-      src.fold(col(s"__w_$n"))(col)
-    val p0 = wSrc.foldLeft(
-      dv.repartitionByRange(keys.map(_.asc) :+ col(key).asc: _*)) {
-      case (d, (n, w, None)) => d.withColumn(s"__w_$n", w)
-      case (d, _) => d
-    }
-    // single execution of the ranged+pid frame: see the CONSISTENCY
-    // CONTRACT above.
-    //
-    // GLOBAL path (round 16): the pinned leaf additionally CLAIMS
-    // clustering on __pid (every row of partition i carries pid = i by
-    // construction), so the per-slice window and the offset aggregate
-    // run directly on the pinned partitions instead of hash-exchanging
-    // the full frame a second time. The claim is safe here because the
-    // only join against the claimed frame is the broadcast-hinted
-    // #partitions-row offset table (see the bridge's scaladoc for why
-    // a planner-chosen shuffled join would NOT be). The KEYED path's
-    // offset join is planner-chosen (groups-sized offsets must be
-    // allowed to shuffle), so it keeps the unclaimed bridge and pays
-    // the (pid, keys) exchange the window needs anyway.
-    val withPid = p0.withColumn("__pid", spark_partition_id())
-    val p =
-      if (keyCols.isEmpty)
-        org.apache.spark.sql.graftbridge.RddShareBridge
-          .sharedExecutionClusteredBy(withPid, Seq("__pid"))
-      else org.apache.spark.sql.graftbridge.RddShareBridge
-        .sharedExecution(withPid)
-    val wLocal = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__pid") +: keys: _*).orderBy(col(key).asc)
-      .rowsBetween(Long.MinValue, -1)
-    val wOff = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys: _*).orderBy(col("__pid").asc)
-      .rowsBetween(Long.MinValue, -1)
-    val offAggs = wSrc.map { case (n, _, src) =>
-      sum(wcol(n, src)).as(s"__pw_$n") } ++
-      Seq(min(col(key)).as("__gmin"), max(col(key)).as("__gmax"))
-    // totals as UNORDERED windows over the offset frame (withTotals):
-    // the per-slice sums are already aggregated here, so the grand
-    // total is a fold over a #partitions-/groups-sized frame — no new
-    // pass over the pinned data, no extra plan compile, no broadcast
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys: _*)
-    val totCols: Seq[Column] =
-      if (!withTotals) Nil
-      else weights.map { case (n, _) =>
-        sum(col(s"__pw_$n")).over(wAll).as(s"__tot_$n") } ++
-        Seq(min(col("__gmin")).over(wAll).as("__keymin"),
-          max(col("__gmax")).over(wAll).as("__keymax"))
-    val offs = p.groupBy(col("__pid") +: keys: _*)
-      .agg(offAggs.head, offAggs.tail: _*)
-      .select(col("__pid") +: col("__gmin") +: col("__gmax") +:
-        (keyCols.zipWithIndex.map { case (c, i) => col(c).as(s"__gk$i") } ++
-          weights.map { case (n, _) =>
-            coalesce(sum(col(s"__pw_$n")).over(wOff), lit(0L))
-              .as(s"__off_$n") } ++ totCols): _*)
-    val local = wSrc.foldLeft(p) { case (d, (n, _, src)) =>
-      d.withColumn(s"__lc_$n",
-        coalesce(sum(wcol(n, src)).over(wLocal), lit(0L)))
-    }
-    // LEFT join + guard: an inner join would silently DROP a slice whose
-    // (pid, group) is missing from a divergent offset table; the guard
-    // turns both divergence modes (missing row, key outside its slice's
-    // recorded range) into a loud failure. Keys join null-safe — a NULL
-    // group is its own slice.
-    val joinCond = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__gk$i") }
-      .foldLeft(col("__pid") === col("__opid"))(_ && _)
-    // global form: offs is #partitions rows — broadcast (ALSO a safety
-    // requirement of the clustered-claim path above, not merely an
-    // optimization). Keyed form: offs is ≤ (#partitions + #groups)
-    // rows, groups-sized at scale (millions of domains) — leave the
-    // join strategy to the planner (AQE broadcasts small ones; big
-    // ones shuffle on (pid, keys))
-    val offsR = offs.withColumnRenamed("__pid", "__opid")
-    val joined = local.join(
-      if (keyCols.isEmpty) broadcast(offsR) else offsR, joinCond, "left")
-    val consistent = col(key).isNull ||
-      (col("__gmin").isNotNull &&
-        col(key) >= col("__gmin") && col(key) <= col("__gmax"))
-    val withCums = weights.foldLeft(joined) { case (d, (n, _)) =>
-      d.withColumn(s"__cum_$n",
-        when(consistent, col(s"__off_$n") + col(s"__lc_$n"))
-          .otherwise(raise_error(lit("prefixBeforeMulti: range-slice " +
-            "mismatch between the offset and window branches — the " +
-            "RddShareBridge shared-RDD mechanism must have regressed " +
-            "(both branches are built over ONE pinned LogicalRDD; a " +
-            "Spark upgrade changing its semantics, or an edit " +
-            "reintroducing a per-branch execution of the ranged frame, " +
-            "are the ways this fires)"))))
-    }
-    val shared = p.drop("__pid" +:
-      wSrc.collect { case (n, _, None) => s"__w_$n" }: _*)
-    val result = withCums.drop("__pid" +: "__opid" +: "__gmin" +: "__gmax" +:
-      (keyCols.indices.map(i => s"__gk$i") ++
-        wSrc.flatMap { case (n, _, src) =>
-          (if (src.isEmpty) Seq(s"__w_$n") else Nil) ++
-            Seq(s"__lc_$n", s"__off_$n") }): _*)
-    (shared, result)
+    // each weight rides as a `__w_<n>` column, added after the range
+    // exchange so the shuffle carries only dv's columns
+    val named = weights.map { case (n, _) => n -> s"__w_$n" }
+    val order = keys.map(_.asc) :+ col(key).asc
+    val sorted = weights.foldLeft(dv.repartitionByRange(order: _*)) {
+      case (d, (n, w)) => d.withColumn(s"__w_$n", w)
+    }.sortWithinPartitions(order: _*)
+    // one pinned execution, one summary job, one per-slice fold: see
+    // the PLAN and CONSISTENCY CONTRACT above
+    val (pinned, folded) = org.apache.spark.sql.graftbridge.PrefixFold(
+      sorted, keyCols, key, named, withTotals)
+    val hidden = named.map(_._2)
+    (pinned.drop(hidden: _*), folded.drop(hidden: _*))
   }
 
   /** Spearman rank correlation of two columns — the monotone-association
@@ -4161,13 +4047,13 @@ object Analytics {
     * order, distributed — the suffix-cummin machinery for
     * [[bhAdjust]]: appends `__rmin` = min(value) over rows whose key
     * sorts at-or-after (key DESC, so "this row and everything with a
-    * larger key"). Same three-step structure and branch-consistency
-    * tripwire as [[prefixBefore]] (range exchange on key DESC →
-    * per-slice inclusive window min → #partitions-row offset table of
-    * strictly-preceding-slice mins, broadcast back), min instead of
-    * sum. NULL keys sort LAST under desc and skip the range check.
-    * Round 16 (r15 advisor): the ranged+pid frame is PINNED exactly as
-    * prefixBefore's — this operator had kept the
+    * larger key"). Three steps with a branch-consistency tripwire
+    * (range exchange on key DESC → per-slice inclusive window min →
+    * #partitions-row offset table of strictly-preceding-slice mins,
+    * broadcast back) — the shape [[prefixBefore]] had before its fold,
+    * min instead of sum. NULL keys sort LAST under desc and skip the
+    * range check. Round 16 (r15 advisor): the ranged+pid frame is
+    * PINNED — this operator had kept the
     * optimizer-courtesy double execution the pettitt arm proved can
     * diverge; with complex upstream lineage (bhAdjust feeds it a
     * prefix + joins) the guard could abort here too. Global form, offs
@@ -4934,7 +4820,7 @@ object Analytics {
     *     input, collapsed by multiplicity).
     *  2. Dense ranks rx, ry from DISTINCT-value tables via
     *     [[prefixBefore]] (the spearman marginal machinery): range
-    *     slices ranked IN PARALLEL + a broadcast offset table — no
+    *     slices ranked IN PARALLEL + a driver-side carry — no
     *     single-task sort even at 1e9+ raw continuous values.
     *  3. x-RANGE buckets ⌊(rx−1)·B/|X|⌋ — monotone in x and equal x
     *     never splits, so every cross-bucket pair is strictly x-ordered

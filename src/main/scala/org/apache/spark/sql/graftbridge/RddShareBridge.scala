@@ -1,22 +1,28 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.classic.Dataset
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.classic.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** Pin ONE physical execution of a DataFrame that several branches of a
   * downstream plan will consume, WITHOUT materializing it to storage.
   *
-  * Why it exists (round 15): `Analytics.prefixBefore*` derives
-  * `spark_partition_id()` over a range-exchanged frame and consumes the
-  * result in two plan branches (the per-slice window and the offset
-  * table). When Catalyst plans the shared subtree twice, each instance
-  * re-executes the range exchange, and a RangePartitioner samples its
-  * bounds per execution — at 50M rows with a complex upstream lineage,
-  * AQE's runtime decisions diverged between the two instances and the
-  * branches sliced the keys differently (caught live by the operator's
-  * range-slice guard). `ReuseExchange` usually dedupes the subtree, but
-  * that is an optimizer courtesy, not a contract.
+  * Why it exists (round 15): the prefix family read one range-exchanged
+  * frame from two plan branches, and when Catalyst plans a shared
+  * subtree twice, each instance re-executes the range exchange — a
+  * RangePartitioner samples its bounds per execution, so at 50M rows
+  * with a complex upstream lineage AQE's runtime decisions diverged
+  * between the two instances and the branches sliced the keys
+  * differently (caught live by the operator's range-slice guard).
+  * `ReuseExchange` usually dedupes the subtree, but that is an
+  * optimizer courtesy, not a contract. Today `Analytics.prefixBefore`
+  * pins its slice-sorted frame here and runs its summary job and its
+  * per-slice fold ([[PrefixFold]]) over the ONE pinned RDD;
+  * `runningMinDescIncl` and several callers still consume a pinned
+  * frame from several plan branches.
   *
   * `localCheckpoint` fixes it structurally but WRITES the frame to block
   * storage (measured 2.3× on the 50M-distinct percentile stress arm).
@@ -36,10 +42,11 @@ import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
   * stage synchronously — the range exchange's map job RUNS here, before
   * the caller's first action (and even without AQE the RangePartitioner
   * sampling job would). Consequences callers accept: (1) every
-  * prefixBefore*-family operator launches Spark jobs at DataFrame
-  * BUILD time and snapshots its input as of that moment; (2) those jobs
-  * are attributed to their own SQL execution (the `withNewExecutionId`
-  * wrap below) rather than dangling outside any execution id. This is
+  * prefix-family operator launches Spark jobs at DataFrame BUILD time
+  * (the pin's, plus the fold's one summary job) and snapshots its
+  * input as of that moment; (2) those jobs are attributed to their own
+  * SQL execution (the `withNewExecutionId` wrap in [[pin]]) rather
+  * than dangling outside any execution id. This is
   * the right trade for the internal operators that use the bridge —
   * they build the frame and consume it immediately.
   *
@@ -50,7 +57,8 @@ import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
   *
   * THE WHOLE CONTRACT IS EXECUTABLE: `graft.BridgeContractSpec`
   * (round 17) asserts eager-once execution, the one-RDD-lineage
-  * guarantee, the clustered claim's exchange elision, and SQL
+  * guarantee (the prefix fold's summary and fold over one
+  * ShuffleDependency), the clustered claim's exchange elision, and SQL
   * execution-id attribution in one suite — a Spark version bump that
   * breaks any clause flares there first — and its misuse-doll test
   * proves the shuffled-join-against-claimed-leaf walker fires on the
@@ -82,37 +90,53 @@ object RddShareBridge {
     * columns): the other side would land at hash(i) % n while this
     * side sits at i, and matches silently miss. Callers therefore only
     * use this variant when every join against the claimed frame is
-    * structurally broadcast (prefixBefore's GLOBAL path — the
-    * #partitions-row offset table is broadcast-hinted; the KEYED path,
-    * whose groups-sized offset join is planner-chosen, uses the
-    * unclaimed [[sharedExecution]]). The prefix family's (min,max)
-    * range guard remains the loud backstop: a missed offset row
-    * surfaces as raise_error, never as a silently wrong prefix. */
+    * structurally broadcast (`runningMinDescIncl` — its #partitions-row
+    * offset table is broadcast-hinted). Its (min,max) range guard
+    * remains the loud backstop: a missed offset row surfaces as
+    * raise_error, never as a silently wrong running min. */
   def sharedExecutionClusteredBy(df: org.apache.spark.sql.DataFrame,
       clusterCols: Seq[String]): org.apache.spark.sql.DataFrame =
     shared(df, Some(clusterCols))
 
   private def shared(df: org.apache.spark.sql.DataFrame,
       clusterCols: Option[Seq[String]]): org.apache.spark.sql.DataFrame = {
+    val (p, _) = pin(df)(_ => ())
+    p.frame(clusterCols match {
+      case Some(cols) if p.rdd.getNumPartitions > 0 =>
+        HashPartitioning(
+          cols.map(c => p.output.find(_.name == c).getOrElse(throw
+            new IllegalArgumentException(
+              s"sharedExecutionClusteredBy: no column '$c' in " +
+                p.output.map(_.name).mkString("[", ",", "]")))),
+          p.rdd.getNumPartitions)
+      case _ => UnknownPartitioning(0)
+    })
+  }
+
+  /** One pinned execution: its session, output attributes and RDD. */
+  private[graftbridge] final case class Pinned(spark: SparkSession,
+      output: Seq[Attribute], rdd: RDD[InternalRow]) {
+    /** A `LogicalRDD` leaf over `rdd` declaring `partitioning`. */
+    def frame(partitioning: Partitioning): org.apache.spark.sql.DataFrame =
+      Dataset.ofRows(spark, LogicalRDD(output, rdd, partitioning)(spark))
+  }
+
+  /** Pin `df`'s execution: the eager `toRdd` (its upstream stages run
+    * now) under a `graft-shared-exec` SQL execution id. `within` runs
+    * inside that SAME execution id on the pinned RDD, so jobs it
+    * launches (the prefix fold's summary) are attributed with the
+    * pin's. */
+  private[graftbridge] def pin[T](df: org.apache.spark.sql.DataFrame)(
+      within: RDD[InternalRow] => T): (Pinned, T) = {
     val classic = df.asInstanceOf[Dataset[org.apache.spark.sql.Row]]
-    val spark = classic.sparkSession
     val qe = classic.queryExecution
     // attribute the eagerly-materialized AQE stages to an execution id
     // (nested-execution contexts restore the outer id on exit)
-    val rdd = SQLExecution.withNewExecutionId(qe, Some("graft-shared-exec")) {
-      qe.toRdd
-    }
-    val out = qe.analyzed.output
-    val part: Partitioning = clusterCols match {
-      case Some(cols) if rdd.getNumPartitions > 0 =>
-        HashPartitioning(
-          cols.map(c => out.find(_.name == c).getOrElse(throw
-            new IllegalArgumentException(
-              s"sharedExecutionClusteredBy: no column '$c' in " +
-                out.map(_.name).mkString("[", ",", "]")))),
-          rdd.getNumPartitions)
-      case _ => UnknownPartitioning(0)
-    }
-    Dataset.ofRows(spark, LogicalRDD(out, rdd, part)(spark))
+    val (rdd, t) =
+      SQLExecution.withNewExecutionId(qe, Some("graft-shared-exec")) {
+        val rdd = qe.toRdd
+        (rdd, within(rdd))
+      }
+    (Pinned(classic.sparkSession, qe.analyzed.output, rdd), t)
   }
 }

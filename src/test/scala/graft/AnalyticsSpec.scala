@@ -415,24 +415,23 @@ class AnalyticsSpec extends SparkSpec {
       Analytics.spearman(df.repartition(n), "x", "y")
         .collect().map(_.toSeq).toSeq
     }
-    // the r11 VERDICT contract: no window over ROW-level data — every
-    // logical Window's input subtree must contain an Aggregate (the
-    // distinct-value marginal) OR the checkpointed pid frame
-    // (LogicalRDD — prefixBefore materializes the AGGREGATED
-    // distinct-value frame once for both branches since round 15, so
-    // the Aggregate sits behind the checkpoint boundary; the frame is
-    // distinct-value-bounded by construction), so window size is
-    // bounded by value cardinality, never by corpus rows
+    // the r11 VERDICT contract: no window over ROW-level data. The two
+    // marginal cumulatives are prefix folds over the AGGREGATED
+    // distinct-value frames (pinned LogicalRDD leaves carrying
+    // `__cum_w`, distinct-value-bounded by construction), and every
+    // logical Window left must have an Aggregate or such a fold
+    // beneath it, so window size is bounded by value cardinality,
+    // never by corpus rows
     import org.apache.spark.sql.catalyst.plans.logical
     val lp = Analytics.spearman(df, "x", "y").queryExecution.optimizedPlan
-    val wins = lp.collect { case w: logical.Window => w }
-    assert(wins.nonEmpty, "expected the two marginal cumulative windows")
-    wins.foreach { w =>
+    def fold(p: logical.LogicalPlan) = p.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD
+        if r.output.exists(_.name == "__cum_w") => r }
+    assert(fold(lp).length == 2, "expected the two marginal prefix folds")
+    lp.collect { case w: logical.Window => w }.foreach { w =>
       val bounded =
         w.child.collectFirst { case a: logical.Aggregate => a }.isDefined ||
-          w.child.collectFirst {
-            case r: org.apache.spark.sql.execution.LogicalRDD
-              if r.output.exists(_.name == "__pid") => r }.isDefined
+          fold(w.child).nonEmpty
       assert(bounded,
         s"row-level window found (no Aggregate or checkpointed " +
           s"distinct-value frame beneath):\n$w")
@@ -1108,23 +1107,30 @@ class AnalyticsSpec extends SparkSpec {
     val r = shared.collect().head
     assert(r.getLong(0) == 2L && r.getLong(1) == 2L)
     assert(math.abs(r.getDouble(2) - 1.0) < 1e-12, s"W1 ${r.getDouble(2)}")
-    // share=false rescans the source instead of checkpointing the cum
+    // share=false rescans the prefix instead of checkpointing the cum
     // frame — must be bit-equal, and the checkpoint must actually
-    // collapse the duplicated prefix pipeline. Assert on WINDOW nodes,
-    // not exchange counts (round 16: totals-from-pinned-frame + the
-    // pid-clustered claim dropped share=false's exchange count below
-    // share=true's, inverting the old comparison): the checkpoint hides
-    // the cumulative windows inside its leaf (0 in the outer plan),
-    // while the rescan rebuilds them once per consumer branch.
+    // collapse the duplicated prefix pipeline. Count the outer plan's
+    // scans of the PINNED source (a leaf whose RDD lineage still
+    // reaches the range shuffle): the checkpoint's leaf reads its
+    // stored blocks (0 such scans), while the rescan reads the pinned
+    // prefix once per consumer branch.
     val rescan = Analytics.wasserstein1(g, "grp", "v", "a", "b",
       share = false)
     assert(rescan.collect().head.toSeq == r.toSeq)
-    def nWin(d: org.apache.spark.sql.DataFrame): Int =
-      d.queryExecution.executedPlan.toString
-        .linesIterator.count(_.contains("Window ["))
-    assert(nWin(shared) < nWin(rescan),
-      s"checkpoint must collapse the duplicated window pipeline: " +
-        s"${nWin(shared)} vs ${nWin(rescan)}")
+    def readsShuffle(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
+      rdd.dependencies.exists {
+        case _: org.apache.spark.ShuffleDependency[_, _, _] => true
+        case d => readsShuffle(d.rdd)
+      }
+    def nPinned(d: org.apache.spark.sql.DataFrame): Int =
+      Diagnostics.planNodes(d.queryExecution.executedPlan).count {
+        case s: org.apache.spark.sql.execution.RDDScanExec =>
+          readsShuffle(s.rdd)
+        case _ => false
+      }
+    assert(nPinned(shared) < nPinned(rescan),
+      s"checkpoint must collapse the duplicated prefix pipeline: " +
+        s"${nPinned(shared)} vs ${nPinned(rescan)}")
     val rows = Seq( // (slice, grp, v)
       ("s1", "a", 0L), ("s1", "a", 4L), ("s1", "b", 2L), ("s1", "b", 4L),
       ("s2", "a", 1L), ("s2", "a", 3L), ("s2", "b", 5L), // W1 = 3.0
@@ -1704,41 +1710,54 @@ class AnalyticsSpec extends SparkSpec {
     }
   }
 
-  test("prefixBefore: the offset and window branches read ONE " +
-    "checkpointed pid frame (structural single-execution — the r14 " +
-    "ReuseExchange lean broke for real at the 50M pettitt arm), and " +
-    "the range-guard tripwire fails loudly rather than silently when " +
-    "fed a divergent offset table") {
-    import spark.implicits._
-    // 1. plan assertion: the ranged+pid frame both branches consume is
-    //    a localCheckpoint (one materialization by construction — the
-    //    two spark_partition_id() derivations can no longer diverge,
-    //    whatever AQE/ReuseExchange decide)
+  test("prefixBefore: ONE pinned RDD feeds both the summary job and the " +
+    "per-slice fold (structural single execution — the r14 ReuseExchange " +
+    "lean broke for real at the 50M pettitt arm), and a summary that " +
+    "disagrees with the fold fails loudly, never silently") {
+    // 1. lineage: the fold's leaf is a one-to-one map over the pinned
+    //    leaf `shared` exposes — the summary ran over that same RDD at
+    //    construction, so the two can only slice identically
     val dv = spark.range(0, 100000).select(col("id").cast("double").as("v"))
-    val pb = Analytics.prefixBefore(dv, Nil, "v", Seq("w" -> lit(1L)))._2
-    spark.sparkContext.runJob(pb.queryExecution.toRdd,
-      (it: Iterator[_]) => it.foreach(_ => ()))
-    val optimized = pb.queryExecution.optimizedPlan.toString
-    assert(optimized.contains("LogicalRDD"),
-      s"expected the checkpointed pid frame (LogicalRDD) under both " +
-        s"branches:\n$optimized")
-    // the tripwire is WIRED: the operator's own plan carries the guard
-    val analyzed = pb.queryExecution.analyzed.toString
-    assert(analyzed.contains("raise_error"),
-      s"expected the range-guard raise_error in the operator plan:\n$analyzed")
-    // 2. the guard itself: simulate branch divergence by evaluating the
-    //    guarded cum expression against an offset row whose recorded
-    //    (min,max) range excludes the key — raise_error must fire (this
-    //    is the failure mode spark.sql.exchange.reuse=false would cause)
-    val guarded = when(lit(5.0).isNull ||
-        (lit(10.0).isNotNull && lit(5.0) >= lit(10.0) && lit(5.0) <= lit(20.0)),
-      lit(1L)).otherwise(raise_error(lit("prefixBeforeMulti: range-slice " +
-      "mismatch")))
-    val e = intercept[Exception] {
-      spark.range(1).select(guarded.as("c")).collect()
+    val (shared, pb) = Analytics.prefixBefore(dv, Nil, "v", Seq("w" -> lit(1L)))
+    def leafRdd(d: org.apache.spark.sql.DataFrame) = {
+      val l = d.queryExecution.optimizedPlan.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
+      assert(l.length == 1, s"expected ONE pinned leaf:\n" +
+        d.queryExecution.optimizedPlan)
+      l.head
     }
-    assert(e.getMessage != null && e.getMessage.contains("range-slice mismatch"),
-      s"expected the raise_error message, got: ${e.getMessage}")
+    assert(leafRdd(pb).dependencies.map(_.rdd.id) == Seq(leafRdd(shared).id),
+      "the fold must read the pinned RDD itself, not a re-execution")
+    assert(pb.count() == 100000L)
+    // 2. the guard: a slice whose second execution differs from the
+    //    first must fail the task with the range-slice mismatch, not
+    //    emit a wrong prefix. `doll` puts a non-deterministic step after
+    //    the range exchange, so the summary (calls 1..1000) and the fold
+    //    (calls 1001..) see different slices
+    def doll(step: (org.apache.spark.sql.DataFrame,
+        () => org.apache.spark.sql.Column) =>
+        org.apache.spark.sql.DataFrame): Unit = {
+      AnalyticsSpec.dollCalls.set(0L)
+      val firstRun = udf(() =>
+        AnalyticsSpec.dollCalls.incrementAndGet() <= 1000L)
+        .asNondeterministic()
+      val sorted = step(spark.range(0, 1000).select(col("id").as("v"),
+          lit(1L).as("w")).repartitionByRange(4, col("v")),
+        () => firstRun()).sortWithinPartitions("v")
+      val (_, folded) = org.apache.spark.sql.graftbridge.PrefixFold(sorted,
+        Nil, "v", Seq("w" -> "w"), withTotals = false)
+      val e = intercept[Exception](folded.collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage)
+          .contains("range-slice mismatch")),
+        s"expected the range-slice mismatch, got: $e")
+    }
+    // the summary sees every row and the fold none
+    doll((d, first) => d.filter(first()))
+    // every slice keeps its row count and its one (global) group, but
+    // the fold sees each key one higher: only the key ends can tell
+    doll((d, first) => d.withColumn("v",
+      when(first(), col("v")).otherwise(col("v") + 1)))
   }
 
   test("cohenD / cohenDBy: hand pooled-SD case + Hedges J; n<2 side " +
@@ -2080,10 +2099,9 @@ class AnalyticsSpec extends SparkSpec {
     }
   }
 
-  test("prefixBefore (global): the pid-clustered claim elides the " +
-    "window-side hash exchange — no hashpartitioning(__pid) anywhere " +
-    "in the final plan (round 16), while results stay the proven " +
-    "prefix") {
+  test("prefixBefore (global): the fold runs ON the pinned partitions — " +
+    "no exchange of the pinned frame anywhere in the final plan, while " +
+    "results stay the proven prefix") {
     val dv = spark.range(0, 50000)
       .select(col("id").cast("double").as("v"))
     val pb = Analytics.prefixBefore(dv, Nil, "v", Seq("w" -> lit(1L)))._2
@@ -2092,9 +2110,9 @@ class AnalyticsSpec extends SparkSpec {
     val plan = pb.queryExecution.executedPlan.toString
     assert(plan.contains("Scan ExistingRDD"),
       s"expected the pinned LogicalRDD leaf:\n$plan")
-    assert(!plan.toLowerCase.contains("hashpartitioning(__pid"),
-      "the window/offset branches must run ON the pinned partitions " +
-        s"(clustering claim) — found a second exchange of the frame:\n$plan")
+    assert(PlanWalk.shuffleCount(pb.queryExecution.executedPlan) == 0 &&
+      !plan.toLowerCase.contains("hashpartitioning"),
+      s"the fold must run ON the pinned partitions — found an exchange:\n$plan")
     // spot-check values against the closed form (v = 0..N-1 distinct,
     // weight 1 → __cum_w = rank)
     val sample = pb.filter(col("v").isin(0.0, 1.0, 25000.0, 49999.0))
@@ -6544,4 +6562,10 @@ class AnalyticsSpec extends SparkSpec {
 private object ConcurrentlyDoll {
   @volatile var started = new java.util.concurrent.CountDownLatch(1)
   def reset(): Unit = started = new java.util.concurrent.CountDownLatch(1)
+}
+
+object AnalyticsSpec {
+  /** The guard doll's call counter (a static, so the non-deterministic
+    * UDF sees one count across its two executions in local mode). */
+  val dollCalls = new java.util.concurrent.atomic.AtomicLong(0L)
 }

@@ -22,9 +22,10 @@ import graft.operators.Analytics
   *     synchronously, and downstream branches only re-fetch shuffle
   *     files (never re-run the map side) — asserted with a row-scan
   *     accumulator through the input RDD.
-  *  2. ONE lineage: every branch of a prefix-family plan references
-  *     the SAME pinned RDD id (one ShuffleDependency, the structural
-  *     branch-consistency guarantee).
+  *  2. ONE lineage: the prefix fold's summary job and its per-slice
+  *     fold both read the SAME pinned RDD (one ShuffleDependency, the
+  *     structural slice-consistency guarantee), and the summary runs
+  *     once, under the pin's execution id.
   *  3. The pid-clustered CLAIM elides the consumer-side exchange: a
   *     window over `__pid` on a claimed frame plans with ZERO
   *     shuffles, while the same window on the unclaimed bridge pays
@@ -103,10 +104,10 @@ class BridgeContractSpec extends SparkSpec {
     import spark.implicits._
     val vals = (1 to 5000).map(i => ((i * 7 % 97).toDouble,
       (i * 13 % 89).toDouble)).toDF("x", "y")
-    // Analytics.scala global-path prefix (the :454 claim site) through
-    // four public faces, incl. the two-chained-prefix pettitt and the
-    // newest signed-rank family; bhAdjust covers runningMinDescIncl
-    // (the second claim site) plus a prefix in ONE plan.
+    // the prefix family through four public faces (incl. the
+    // two-chained-prefix pettitt and the signed-rank family) must stay
+    // claim-free now that the prefix is a fold; bhAdjust covers
+    // runningMinDescIncl, the claim site, plus a prefix in ONE plan.
     assertNoShuffledJoinAgainstClaimedLeaf("quantilesCont",
       graft.operators.Aggregations.quantilesCont(
         vals, "x", Seq(0.25, 0.5, 0.75)))
@@ -204,21 +205,59 @@ class BridgeContractSpec extends SparkSpec {
       s"branches must NOT re-run the map stage, saw ${acc.value}")
   }
 
-  test("contract 2: every branch of a prefix-family plan references " +
-    "ONE pinned RDD id (one ShuffleDependency under the whole family)") {
-    import spark.implicits._
-    val pb = Analytics.prefixBefore(
-      (1 to 3000).map(i => (i * 7 % 61).toDouble).toDF("v"), Nil, "v",
-      Seq("w" -> lit(1L)))._2
-    val ids = pb.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+  test("contract 1+2+4 (prefix fold): construction runs the map stage " +
+    "ONCE plus ONE summary job, all under the pin's execution id; the " +
+    "fold maps the pinned RDD itself (one ShuffleDependency) and never " +
+    "re-scans the input") {
+    val sc = spark.sparkContext
+    val acc = sc.longAccumulator("bridge-contract-fold-scans")
+    val rows = sc.parallelize(1L to 1000L, 8).map { i =>
+      acc.add(1)
+      org.apache.spark.sql.Row(i)
     }
-    assert(ids.length >= 2,
-      s"expected the window AND offset branches to reference the " +
-        s"pinned leaf, got ${ids.length} reference(s)")
-    assert(ids.distinct.length == 1,
-      s"branches reference DIFFERENT RDDs $ids - the one-lineage " +
-        "guarantee is broken")
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("v",
+        org.apache.spark.sql.types.LongType)))
+    val dv = spark.createDataFrame(rows, schema)
+    // the pin alone, on the frame prefixBefore pins, for the job count
+    val (_, pinOnly) = Diagnostics.tracktime(spark)(
+      RddShareBridge.sharedExecution(dv.repartitionByRange(col("v").asc)
+        .withColumn("__w_w", lit(1L)).sortWithinPartitions(col("v").asc)))
+    acc.reset()
+    val ((shared, result), timings) = Diagnostics.tracktime(spark)(
+      Analytics.prefixBefore(dv, Nil, "v", Seq("w" -> lit(1L))))
+    // EAGER and ONCE: sampling + map scans, no third
+    assert(acc.value == 2000L,
+      s"construction must scan the input exactly twice, saw ${acc.value}")
+    // ONE summary job beyond the pin's, inside the pin's execution id
+    assert(timings.jobs.length == pinOnly.jobs.length + 1,
+      s"expected the pin's ${pinOnly.jobs.length} job(s) plus ONE " +
+        s"summary job, saw ${timings.jobs.length}")
+    val execIds = timings.jobs.map(_.executionId.getOrElse("MISSING"))
+    assert(execIds.distinct.length == 1 && !execIds.contains("MISSING"),
+      s"every construction job (pin and summary) must run under the " +
+        s"pin's ONE execution id, saw $execIds")
+    // ONE lineage: the fold's leaf is a one-to-one map over the pinned
+    // RDD, so both sit over the same ShuffleDependency
+    def leaf(d: DataFrame) = d.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }
+    def shuffles(r: org.apache.spark.rdd.RDD[_]): Set[Int] =
+      r.dependencies.flatMap {
+        case d: org.apache.spark.ShuffleDependency[_, _, _] =>
+          Set(d.shuffleId) ++ shuffles(d.rdd)
+        case d => shuffles(d.rdd)
+      }.toSet
+    val (Seq(pinned), Seq(fold)) = (leaf(shared), leaf(result))
+    assert(fold.dependencies.map(_.rdd.id) == Seq(pinned.id),
+      "the fold must map the pinned RDD itself")
+    assert(shuffles(pinned).nonEmpty && shuffles(fold) == shuffles(pinned),
+      s"fold and pin must share ONE ShuffleDependency: " +
+        s"${shuffles(fold)} vs ${shuffles(pinned)}")
+    // the fold re-fetches the pinned shuffle files: still two scans
+    assert(result.count() == 1000L && shared.count() == 1000L)
+    assert(acc.value == 2000L,
+      s"the fold must NOT re-run the map stage, saw ${acc.value}")
   }
 
   test("contract 3: the pid-clustered claim elides the consumer " +

@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExprId}
+import org.apache.spark.sql.catalyst.plans.LeftOuter
+import org.apache.spark.sql.execution.{FilterExec, InputAdapter, LocalTableScanExec, ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.joins.CartesianProductExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** The plan-budget predicates shared by [[PlanBudgetSpec]] and the
@@ -59,9 +61,10 @@ object PlanWalk {
   }
 
   /** True iff the subtree aggregates by the bridge's `__pid` partition
-    * id somewhere on the way to its leaves — the prefix machinery's
-    * offsets frame, whose cardinality is the PARTITION COUNT (the
-    * documented per-partition-totals spine), not the corpus. */
+    * id somewhere on the way to its leaves — the running min's
+    * (`Analytics.runningMinDescIncl`) offsets frame, whose cardinality
+    * is the PARTITION COUNT (the documented per-partition-totals
+    * spine), not the corpus. */
   def hasPidAggregate(p: SparkPlan): Boolean =
     planNodes(p).exists {
       case a: BaseAggregateExec =>
@@ -69,6 +72,45 @@ object PlanWalk {
           _.name == "__pid"))
       case _ => false
     }
+
+  /** The first node under `p` that is not a pass-through (project,
+    * filter, sort, exchange, query stage, codegen wrapper), with the
+    * projection aliases met on the way (alias id → aliased attribute
+    * id). */
+  private def under(p: SparkPlan, aliases: Map[ExprId, ExprId] = Map.empty)
+      : (SparkPlan, Map[ExprId, ExprId]) = p match {
+    case a: AdaptiveSparkPlanExec => under(a.executedPlan, aliases)
+    case q: QueryStageExec => under(q.plan, aliases)
+    case pr: ProjectExec => under(pr.child, aliases ++ pr.projectList.collect {
+      case a @ Alias(r: Attribute, _) => a.exprId -> r.exprId })
+    case u @ (_: FilterExec | _: SortExec | _: ShuffleExchangeExec |
+              _: AQEShuffleReadExec | _: WholeStageCodegenExec |
+              _: InputAdapter) => under(u.children.head, aliases)
+    case other => (other, aliases)
+  }
+
+  /** True iff `p` is a driver-built spine LEFT-joined to an aggregate
+    * grouped on (a subset of) the join's right keys: each spine row
+    * meets at most one aggregate row, so the output is spine-sized —
+    * liftTable's `range(buckets)` joined to its per-bucket counts. */
+  def spineSized(p: SparkPlan): Boolean = under(p)._1 match {
+    case j: BaseJoinExec if j.joinType == LeftOuter &&
+        localOnlyLeaves(j.left) =>
+      under(j.right) match {
+        case (a: BaseAggregateExec, above) =>
+          // the aggregate may itself rename its grouping attribute
+          val aliases = above ++ a.resultExpressions.collect {
+            case al @ Alias(r: Attribute, _) => al.exprId -> r.exprId }
+          def resolve(id: ExprId): ExprId =
+            aliases.get(id).fold(id)(resolve)
+          val keys = j.rightKeys.collect {
+            case r: Attribute => resolve(r.exprId) }.toSet
+          a.groupingExpressions.nonEmpty &&
+            a.groupingExpressions.forall(g => keys(g.toAttribute.exprId))
+        case _ => false
+      }
+    case _ => false
+  }
 
   /** CARTESIAN products over unbounded input — the one join shape
     * with no 100 TB story. Legal bounded shapes: (a) all leaves are
@@ -88,15 +130,16 @@ object PlanWalk {
   /** Unpartitioned window operators over UNBOUNDED input —
     * `Window.orderBy` with no partitionBy moves all its input to one
     * task, so it is corpus-scale poison unless the input is already
-    * bounded: either literal-local, or the prefix machinery's
-    * `groupBy(__pid)` per-partition-totals frame (≤ one row per input
-    * partition, the documented bridge shape). Exported plans keep
+    * bounded: literal-local, a [[spineSized]] join, or the running
+    * min's `groupBy(__pid)` per-partition-totals frame (≤ one row per
+    * input partition, the documented bridge shape). Exported plans keep
     * exactly zero of the unbounded kind (spearmanRowWindow, the one
     * library site, is a test-only bit-equality reference). */
   def unboundedUnpartWindows(p: SparkPlan): Seq[SparkPlan] =
     planNodes(p).filter {
       case w: WindowExec if w.partitionSpec.isEmpty =>
-        !(localOnlyLeaves(w.child) || hasPidAggregate(w.child))
+        !(localOnlyLeaves(w.child) || hasPidAggregate(w.child) ||
+          spineSized(w.child))
       case _ => false
     }
 
